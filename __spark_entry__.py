@@ -1,37 +1,26 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract for the causal-KG job (PySpark target).
 
-entry(spark)   — flagship: the causal-KG span-extraction + entity-linking
-                 pipeline over the sf0.001 documents table adapted to the
-                 input_hint page schema; returns canonical mention
-                 entities with counts (guaranteed non-empty).
-queries()      — one entry per implemented operator from SURVEY.md §2
-                 plus the training-data-pipeline families (dedup,
-                 similarity, text analysis, linking, CC, multimodal,
-                 typed decode, grouping sets, IVF ANN, rel loose
-                 matching, gold-data eval, gazetteer extraction fitted
-                 on the reference train split, URL canonicalization
-                 dedup, graph 2-hop join + fixed-iteration PageRank,
-                 salted skew aggregation, cross-doc dup-ngram stats,
-                 benchmark decontamination, stratified sampling,
-                 hot-group skew profiling, KG negative sampling, DSIR
-                 importance weighting, temperature mixing weights,
-                 composite curation verdict, CC size histogram,
-                 fitted HMM span tagger + NB relation classifier on the
-                 reference gold splits, averaged-perceptron span tagger
-                 and relation classifier fitted by exact scaled-integer
-                 Iterative Parameter Mixing, seeded-flagship surface):
-                 111 queries, 109 with exact DuckDB oracles.
-oracle_sql()   — exact DuckDB twins for every relational operator; the
-                 two remaining UDF-backed pipeline queries
-                 (pipeline_spans, causal_triples) are rows-only by
-                 design — their golden correctness gate is the pytest
-                 oracle-parity suite (tests/test_pipeline_parity.py,
-                 tests/test_reference_math.py), which asserts exact
-                 span/relation/triple-set equality vs the independent
-                 single-process oracle, including on the driver's own
-                 testdata (empty and seeded). causal_triples_seeded is
-                 hash-gated via a frozen surface fixture keyed by the
-                 documents table fingerprint (tools/freeze_seeded.py).
+entry(spark)   — flagship: the production pages -> triples pipeline
+                 (run_pipeline) over the sf0.001 documents table adapted
+                 to the page schema with a deterministic causal seed mix;
+                 returns canonical mention entities with counts
+                 (non-empty by construction).
+queries()      — the registry (plans/entry_queries.py): the two
+                 benchmarked curation operators (dedup_minhash_lsh,
+                 curation_verdict), the operator queries with an
+                 oracle-parity gate in tests/test_entry_contract.py
+                 (span/metric algebra, dedup, similarity, doc-graph,
+                 temporal joins, sampling and corpus weighting), the
+                 gold-split quality families (gold_eval_*, gazetteer_*,
+                 fitted_*, ptron_*) and the flagship causal_triples /
+                 causal_triples_seeded.
+oracle_sql()   — exact DuckDB twins for every query except causal_triples,
+                 which is rows-only by design: its golden correctness gate
+                 is tests/test_pipeline_parity.py (exact triple-set
+                 equality vs the single-process oracle on the same
+                 testdata). causal_triples_seeded is hash-gated via a
+                 frozen surface fixture keyed by the documents table
+                 fingerprint (tools/freeze_seeded.py).
 """
 
 from __future__ import annotations
@@ -66,26 +55,25 @@ def _ensure_importable(spark: SparkSession) -> None:
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship on /root/testdata/sf0.001: extract mention spans with the
-    frozen tagger UDFs, link + canonicalize them, return the entity table."""
+    """Flagship on the sf0.001 testdata: seeded pages through the
+    production pipeline, then the linked entity table with mention and
+    surface-form counts."""
     _ensure_importable(spark)
-    from causalre_spark.config import DEFAULT_CONFIG
-    from causalre_spark.operators.linking import link_mentions
     from causalre_spark.functions.text import NORMALIZE_SQL
-    from causalre_spark.plans.entry_queries import q_pipeline_spans
+    from causalre_spark.pipeline import run_pipeline
+    from causalre_spark.plans.entry_queries import _seeded_pages_from_documents
 
     sf_dir = "/root/testdata/sf0.001"
-    mentions = q_pipeline_spans(spark, sf_dir)
-    entities = link_mentions(mentions.select("text"), DEFAULT_CONFIG)
+    res = run_pipeline(spark, _seeded_pages_from_documents(spark, sf_dir))
     # the ONE frozen normalizer (functions.text.NORMALIZE_SQL) on both
     # sides of the join — a second inline normalization here would
     # silently drop any mention whose surface normalizes differently
     # (e.g. non-ASCII, which NORMALIZE_SQL passes through)
-    counts = mentions.select(
+    counts = res["spans"].select(
         F.expr(NORMALIZE_SQL.format(x="text")).alias("form")
     ).groupBy("form").agg(F.count(F.lit(1)).alias("n_mentions"))
     return (
-        entities.join(counts, "form")
+        res["entities"].join(counts, "form")
         .groupBy("canonical_id", "canonical_form")
         .agg(F.sum("n_mentions").alias("n_mentions"),
              F.count(F.lit(1)).alias("n_surface_forms"))

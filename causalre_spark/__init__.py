@@ -13,10 +13,17 @@ dedup, graph materialization, checkpoint/resume, skew handling).
 Layout:
   functions/   portable scalar/hash expressions (identical in Spark & DuckDB)
   model/       frozen deterministic numeric model (NumPy; runs inside Arrow UDFs)
-  operators/   relational operators (spans, relations, metrics, dedup, linking, ...)
+  operators/   relational operators (dedup, linking, metrics, fitted taggers, ...)
   sources/     corpus generation + readers/writers (parquet now, Iceberg-shaped API)
   oracle/      single-process pure-Python golden pipeline for parity tests
   pipeline.py  end-to-end pages -> triples driver with checkpoint/resume
 """
 
+import os
+
 __version__ = "0.1.0"
+
+# committed oracle/model fixtures, resolved from the package location so
+# every checkout reads its own tree
+FIXTURES_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures")

@@ -4,38 +4,21 @@ determinism policy" rule 3).
 
 Why not round(): Spark rounds half-up (BigDecimal), DuckDB half-to-even,
 and real aggregates of ints/fixed-decimal values land EXACTLY on the
-half grid (avg of 24 two-decimal values = 51.51125 — caught live by the
-sf0.1 sweep on events_tumbling). Why not plain floor-truncation: the
-same finite-decimal rationals sit exactly on truncation boundaries,
-where a 1-ulp cross-engine summation-order difference flips the cell.
+half grid (avg of 24 two-decimal values = 51.51125). Why not plain
+floor-truncation: the same finite-decimal rationals sit exactly on
+truncation boundaries, where a 1-ulp cross-engine summation-order
+difference flips the cell.
 The irrational offset keeps every finite-decimal rational strictly off
 the cell boundary, so neither rounding mode nor ulp noise can disagree.
 
-Use ``grid_col`` (pyspark Column) / ``grid_sql`` (SQL text for both
-engines) for ANY new finite-decimal aggregate. Transcendental
+Quantize ANY new finite-decimal aggregate as
+``floor(x * 10^k + GRID_OFFSET) / 10^k`` on both engines. Transcendental
 aggregates (log sums, stddev, cosines) may keep round() — they cannot
 land on a tie. tests/test_properties.py lints the source tree so every
 inline occurrence of the constant uses the canonical digits and scale
-form (pre-existing inline sites are equivalent by construction; new
-code should call these helpers).
+form.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 GRID_OFFSET = 0.3141592653589793  # pi/10 — any irrational works
-
-
-def grid_col(c: Column, k: int = 4) -> Column:
-    """Quantize a pyspark Column on the 10^-k grid (engine-stable)."""
-    scale = float(10 ** k)
-    return F.floor(c * scale + F.lit(GRID_OFFSET)) / scale
-
-
-def grid_sql(expr: str, k: int = 4) -> str:
-    """SQL text twin of :func:`grid_col` — valid and value-identical in
-    Spark SQL and DuckDB."""
-    scale = 10 ** k
-    return f"floor(({expr}) * {scale}.0 + {GRID_OFFSET!r}) / {scale}.0"

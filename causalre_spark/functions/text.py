@@ -7,8 +7,6 @@ expressible with portable SQL (lower/regexp_replace/substring/md5).
 
 from __future__ import annotations
 
-import re
-
 from causalre_spark.functions.hashing import md5_long
 
 # Normalization v2 (FROZEN): lowercase; ASCII punctuation -> space;

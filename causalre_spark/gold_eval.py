@@ -9,7 +9,7 @@ weights with documented rule-derived decision surfaces
 (model/reference_math.py:31-41). This module quantifies what that
 stand-in actually scores on the reference's gold test splits — turning
 the "published-F1 claims don't transfer" footnote into a measured table
-(BENCH/GOLD_EVAL.md) next to the dissertation numbers in BASELINE.md.
+(GOLD_EVAL.md) next to the dissertation numbers in BASELINE.md.
 
 Everything downstream of the per-doc model call is DataFrame algebra:
 gold explode, strict A1 join-aggregate (operators.metrics.strict_prf),

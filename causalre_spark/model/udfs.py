@@ -1,9 +1,9 @@
-"""Arrow-batched UDF stages wrapping the frozen model math.
+"""Arrow-batched UDF stage wrapping the frozen model math.
 
-These are the ONLY Python-executed stages in the pipeline (input_hint:
+This is the ONLY Python-executed stage in the pipeline (input_hint:
 vectorized pandas/Arrow UDFs, no per-row Python in the relational plan).
 
-The main pipeline uses ONE fused stage per document —
+Every page goes through ONE fused stage per document —
 ``make_doc_extract_udf`` — which runs the reference's whole pruning
 cascade in a single Arrow crossing: extract -> tokenize -> encode ->
 tagger decode -> span filter -> top-k -> NMS -> pair gen -> rel score ->
@@ -14,10 +14,6 @@ per-document and bounded by k = max_top_k_spans, so shuffling the
 100 TB — the unit of distribution is the document. Cross-document
 operators (linking, dedup, triple aggregation) remain DataFrame algebra.
 
-The staged UDFs (score spans / score pairs separately) are kept for the
-operator registry and tests — they exercise the relational top-k / NMS /
-self-join operators in operators/.
-
 In production the frozen NumPy model is swapped for a broadcast torch
 model loaded once per Python worker (import-gated); interfaces unchanged.
 """
@@ -26,7 +22,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 
 from causalre_spark.config import DEFAULT_CONFIG, PipelineConfig
@@ -40,13 +35,6 @@ try:  # pragma: no cover - production path, torch not in sandbox
 except Exception:  # pragma: no cover
     HAS_TORCH = False
 
-DOCS_SCHEMA = "url string, text string, tokens array<string>, n_tokens int"
-SPANS_SCHEMA = (
-    "url string, start int, end int, tag_score float, filter_score float"
-)
-PAIRS_SCHEMA = (
-    "url string, h_start int, h_end int, t_start int, t_end int, rel_score float"
-)
 DOC_EXTRACT_SCHEMA = (
     "url string, n_tokens int, text_ok boolean, "
     "spans array<struct<start:int, end:int, tag_score:float, "
@@ -103,80 +91,5 @@ def make_doc_extract_udf(cfg: PipelineConfig = DEFAULT_CONFIG):
                 out["spans"].append(span_rows)
                 out["rels"].append(rel_rows)
             yield pd.DataFrame(out)
-
-    return udf
-
-
-def extract_docs_udf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """pages(url, html) -> docs(url, text, tokens, n_tokens)."""
-    for pdf in batches:
-        texts = [extract_text(bytes(h)) for h in pdf["html"]]
-        toks = [tokenize(t) for t in texts]
-        yield pd.DataFrame(
-            {
-                "url": pdf["url"].values,
-                "text": texts,
-                "tokens": toks,
-                "n_tokens": [len(t) for t in toks],
-            }
-        )
-
-
-def make_score_spans_udf(cfg: PipelineConfig = DEFAULT_CONFIG):
-    """docs -> ALL candidate spans with tagger + filter scores (staged
-    variant; the relational top-k/NMS operators consume this). The
-    O(L*W) lattice is never materialized — only B/E-decoded candidates
-    (SURVEY §2.2 P4 note)."""
-
-    def udf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("url", "start", "end", "tag_score", "filter_score")}
-            for url, tokens in zip(pdf["url"], pdf["tokens"]):
-                tokens = list(tokens)
-                enc = batch.DocEncoding(tokens, cfg)
-                b, e = batch.tagger_logits_batch(enc)
-                starts, ends, tag_scores = batch.decode_spans_batch(b, e, cfg)
-                fscores = batch.span_filter_scores_batch(enc, starts, ends)
-                n = starts.shape[0]
-                rows["url"].extend([url] * n)
-                rows["start"].extend(starts.tolist())
-                rows["end"].extend(ends.tolist())
-                rows["tag_score"].extend(tag_scores.tolist())
-                rows["filter_score"].extend(fscores.tolist())
-            yield pd.DataFrame(rows)
-
-    return udf
-
-
-def make_score_pairs_udf(cfg: PipelineConfig = DEFAULT_CONFIG):
-    """Grouped per document (applyInPandas over url): surviving spans +
-    tokens -> all ordered head/tail pairs (head != tail) with causal
-    logits (staged variant for the relational pipeline/tests)."""
-
-    def udf(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows: dict[str, list] = {k: [] for k in
-                                 ("url", "h_start", "h_end", "t_start", "t_end", "rel_score")}
-        if len(pdf) == 0:
-            return pd.DataFrame(rows)
-        url = pdf["url"].iloc[0]
-        tokens = list(pdf["tokens"].iloc[0])
-        enc = batch.DocEncoding(tokens, cfg)
-        spans = sorted(zip(pdf["start"].astype(int), pdf["end"].astype(int)))
-        keys = [(h[0], h[1], t[0], t[1])
-                for h in spans for t in spans if h != t]
-        if keys:
-            arr = np.array(keys, dtype=np.int64)
-            scores = batch.rel_scores_batch(enc, arr[:, 0], arr[:, 1], arr[:, 2], arr[:, 3])
-        else:
-            scores = []
-        for (hs, he, ts, te), sc in zip(keys, scores):
-            rows["url"].append(url)
-            rows["h_start"].append(hs)
-            rows["h_end"].append(he)
-            rows["t_start"].append(ts)
-            rows["t_end"].append(te)
-            rows["rel_score"].append(float(sc))
-        return pd.DataFrame(rows)
 
     return udf

@@ -246,35 +246,6 @@ def simhash16(docs: DataFrame, id_col: str = "doc_id",
     return votes.select("id", sim.cast("long").alias("simhash"))
 
 
-def simhash_wide(docs: DataFrame, bits: int = 60, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
-    """Wide SimHash for real-scale blocking (simhash16 is a demo width:
-    16 bits collide constantly at corpus scale). 60 bits from the first
-    15 md5 hex chars — the widest value that stays BIGINT-safe and
-    float64-exact in BOTH engines (64 would overflow DuckDB's signed
-    BIGINT sum). Same per-bit majority vote, pure relational aggregates.
-    Input spread before the token explode (functions.partitions)."""
-    assert bits <= 60
-    norm = NORMALIZE_SQL.format(x=text_col)
-    toks = spread(docs).select(
-        F.col(id_col).alias("id"),
-        F.explode(F.expr(f"split({norm}, ' ')")).alias("tok"),
-    ).filter(F.col("tok") != "")
-    h = toks.withColumn("th", F.expr(md5_long_sql_spark("tok", nhex=15)))
-    bit_aggs = [
-        F.sum(
-            F.when(F.expr(f"(th div {1 << b}) % 2 = 1"), 1).otherwise(-1)
-        ).alias(f"b{b}")
-        for b in range(bits)
-    ]
-    votes = h.groupBy("id").agg(*bit_aggs)
-    sim = None
-    for b in range(bits):
-        term = F.when(F.col(f"b{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
-        sim = term if sim is None else sim + term
-    return votes.select("id", sim.cast("long").alias("simhash"))
-
-
 def ngram_jaccard_pairs(
     shingles: DataFrame, thd_num: int, thd_den: int,
     cleanup: list | None = None,
@@ -439,6 +410,7 @@ def contamination_stats(eval_shingles: DataFrame,
         )
         .withColumn("contaminated", F.col("overlap_frac") > threshold)
     )
+
 
 def remove_dup_substrings(docs: DataFrame, k: int = 8, min_count: int = 2,
                           id_col: str = "doc_id",

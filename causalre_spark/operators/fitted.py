@@ -7,7 +7,7 @@ frozen-weight profile scores near-zero on gold and the gazetteer
 verbatim between splits — which never happens for the custom corpus's
 clause-level event spans. This module is the next rung on the
 fit-by-aggregation ladder, and lifts gold-eval rel F1 off zero
-(BENCH/GOLD_EVAL.md current numbers: conll04 rel F1 0.00 -> ~0.36,
+(GOLD_EVAL.md current numbers: conll04 rel F1 0.00 -> ~0.36,
 custom 0.00 -> ~0.23; spans 0.50 -> ~0.72 / 0.05 -> ~0.37).
 Protocol: every hyperparameter is selected on the VAL splits (never
 test), then the final model is refit on train ∪ val — the standard
@@ -33,7 +33,7 @@ select-then-refit recipe:
   NEIGHBOR tokens (preceding punctuation / connectives, following
   triggers), not the token itself — adding them roughly doubled custom
   span F1 and, downstream, lifted custom rel F1 ~4x
-  (BENCH/GOLD_EVAL.md has the current measured table).
+  (GOLD_EVAL.md has the current measured table).
 
 - **Relation classifier**: a 3-class (none / forward / backward) Naive
   Bayes over ordered candidate span pairs with lexical-structural
@@ -220,8 +220,7 @@ def fit_hmm(split_df: DataFrame) -> DataFrame:
 def collect_hmm_model(model_df: DataFrame) -> dict:
     """Materialize the fitted counts table into the plain-dict model the
     Viterbi UDF closes over. Driver-side by design: the model is a
-    train-vocabulary-bounded dimension (tens of k rows), the same
-    size-class as the k-means centroid collect (clustering.py)."""
+    train-vocabulary-bounded dimension (tens of k rows)."""
     em: dict = {}
     emsh: dict = {}
     ctx: dict = {p: {} for p in ("emprev", "emnext", "empsh", "emnsh")}
@@ -451,7 +450,7 @@ def pair_features(pairs: DataFrame, docs: DataFrame,
     per-kind projections, explode, distinct.
 
     ``extra_kinds`` appends val-split-selected extra kinds INSIDE the
-    same single docs join (tools/sweep_rel_feats.py; used by the rel
+    same single docs join (used by the rel
     perceptron via perceptron.REL_EXTRAS — the NB chain keeps the base
     set): ``fl`` first|last between-token conjunction, ``hltl`` head|
     tail last-token conjunction, ``hfsh``/``tfsh`` perceptron-shape of

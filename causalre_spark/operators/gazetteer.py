@@ -3,7 +3,7 @@
 VERDICT r02 "What's missing #3": the reference's trained decision
 surfaces (which spans are events, which pairs relate) live in an
 unportable torch checkpoint, so the repo's frozen-weight profile scores
-near-zero F1 on gold (BENCH/GOLD_EVAL.md). This module closes part of
+near-zero F1 on gold (GOLD_EVAL.md). This module closes part of
 that gap the *Spark-native* way: the decision surfaces are FITTED BY
 DATAFRAME AGGREGATION on the train split and APPLIED BY BROADCAST JOIN
 on the test split — training is a groupBy, inference is a map-join.

@@ -282,7 +282,7 @@ def _star_components(edges: DataFrame, max_iters: int, parts: int) -> DataFrame:
 
     def _fingerprint(df: DataFrame):
         # one cheap aggregate per round instead of two exceptAll
-        # shuffles (the r03 -> r04 cc_components regression fix):
+        # shuffles:
         # count + order-independent bit_xor digests of the edge set.
         # XOR cannot overflow (ANSI-safe) and is duplicate-safe here
         # because both operands are distinct()ed sets. A (vanishingly

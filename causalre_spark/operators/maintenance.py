@@ -10,7 +10,7 @@ machinery as everything else:
   - file inventory comes from the hidden `_metadata` column
     (file_path, file_size) — no filesystem listing code, works on any
     Hadoop-compatible store;
-  - bin assignment is the pack_sequences prefix-scan shape: files
+  - bin assignment is a prefix scan: files
     ordered deterministically, running byte offset per shard, bin =
     offset // target — so the plan is total-order deterministic and
     the planner is a pure DataFrame program;
@@ -45,8 +45,7 @@ def compaction_plan(files: DataFrame, target_bytes: int) -> DataFrame:
     of files into ~target_bytes output bins.
 
     Files are laid out as one byte stream in deterministic (file) order
-    and cut every target_bytes — identical algebra to
-    sampling.pack_sequences, so a bin's total size is bounded by
+    and cut every target_bytes, so a bin's total size is bounded by
     target_bytes + one file (a file that straddles a cut closes the
     bin it starts in). A single window is fine here: the inventory is
     one row per FILE (already ~10^6x smaller than the table); shard the

@@ -7,7 +7,7 @@ its emission/context tables cannot weigh features against each other, so
 it plateaus at conll04 span F1 ~0.72. A structured perceptron trains the
 SAME feature families discriminatively (token, shape, prev/next token and
 shape, prefix/suffix, two conjunctions) and reaches ~0.79 on the conll04
-test split (BENCH/GOLD_EVAL.md) with no external data — still far below
+test split (GOLD_EVAL.md) with no external data — still far below
 the dissertation's trained-checkpoint 89.02 (`CRE Model/config.yaml:47`,
 BASELINE.md quality rows) but the best decision surface this repo can fit
 from the reference's own train splits.
@@ -77,17 +77,16 @@ P_SHARDS = 8
 # epochs are selected per dataset under the dual val+CV gate (the
 # select-then-refit protocol of operators/fitted.py; test never read):
 # conll04 moved 50 -> 70 jointly with the suf4+wl extras adoption
-# (the adopted arm's best checkpoint on BOTH signals —
-# tools/cv_span_extras.py); custom moved 35 -> 70 in round 4 when
-# BOTH signals agreed (val 0.4227 -> 0.4299, 5-fold CV micro-F1
-# 0.3640 -> 0.3717 — tools/exp_gaz_stack.py / tools/cv_gaz_check.py).
+# (the adopted arm's best checkpoint on BOTH signals); custom moved
+# 35 -> 70 in round 4 when BOTH signals agreed (val 0.4227 -> 0.4299, 5-fold CV micro-F1
+# 0.3640 -> 0.3717).
 EPOCHS = {"conll04": 70, "custom": 70}
 
 # Extra span-feature kinds stacked on the 10 baseline families
 # (_feats), selected per dataset by greedy-forward rounds under the
 # DUAL val+CV gate deployment-matched to the shipped config — gaz
-# arms cross-fit, same fold protocol as cv_gaz_check
-# (tools/cv_span_extras.py, round 4). conll04: round 1 adopted
+# arms cross-fit, same 5-fold protocol as the gaz CV check
+# (round 4). conll04: round 1 adopted
 # suf4+wl (val span F1 0.8105 -> 0.8146 @70, 5-fold CV over train∪val
 # 0.8158 -> 0.8236 @70; each kind alone fails the val half), round 2
 # added psh2 (val 0.8146 -> 0.8185, CV 0.8236 -> 0.8244 — the only
@@ -100,7 +99,7 @@ EPOCHS = {"conll04": 70, "custom": 70}
 # signals (val/CV at checkpoints 100 and 140), and a rel-head
 # decision-margin sweep found m=0 (plain argmax) val-optimal on both
 # datasets. Round 5 also tried the last untried family —
-# token-conditioned transitions (TR_KINDS, tools/cv_span_trans.py,
+# token-conditioned transitions (TR_KINDS,
 # dual val+CV gate at checkpoints 35/50/70): custom all four kinds
 # REJECTED (closest: trpw val 0.4299->0.4388 but CV 0.3717->0.3714;
 # trpsh CV 0.3717->0.3738 but val 0.4299->0.4230); conll04 trw beats
@@ -114,7 +113,7 @@ EPOCHS = {"conll04": 70, "custom": 70}
 # tests/test_perceptron.py token-conditioned parity). The
 # SEMI-SUPERVISED lever (distributional word-cluster features, Koo et
 # al. 2008 — clusters fit-split-text-only, k-means over left/right
-# context signatures, tools/cv_span_wcl.py) was probed last and also
+# context signatures) was probed last and also
 # REJECTED on both datasets: wcl/wcl3 lose val outright (custom
 # 0.4299->0.4028/0.3777, conll04 0.8185->0.8090/0.8070 — custom wcl's
 # CV gain 0.3717->0.3800 fails the dual gate's val half), i.e. at
@@ -127,8 +126,8 @@ SPAN_EXTRAS = {"conll04": ("suf4", "wl", "psh2"), "custom": ()}
 # flags; fit_ipm gaz_folds / decode_spans gaz): selected per dataset by
 # the repo's DUAL val+CV gate (the model-choice discipline of
 # tools/freeze_perceptron.py) — conll04 val span F1 0.800 -> 0.8105
-# @50 epochs (tools/exp_gaz_stack.py) CONFIRMED by 5-fold CV over
-# train∪val 0.8040 -> 0.8136 micro-F1 (tools/cv_gaz_check.py); custom
+# @50 epochs CONFIRMED by 5-fold CV over
+# train∪val 0.8040 -> 0.8136 micro-F1; custom
 # val 0.4299 best baseline vs 0.4276 with gaz (reject). GAZ_FOLDS is
 # part of the frozen-weight identity (changing it re-partitions the
 # cross-fit and invalidates fixtures).
@@ -157,9 +156,8 @@ def _shape(w: str) -> str:
 
 # Engine twins of _shape for the rel-feature extras (REL_EXTRAS hfsh):
 # Unicode category classes valid IDENTICALLY in Java regex (Spark rlike)
-# and RE2 (DuckDB regexp_matches) — the pii_scrub portability
-# discipline. The classes APPROXIMATE the Python predicates (they are
-# not universally equal: '²' is str.isdigit but \p{Nd} rejects it;
+# and RE2 (DuckDB regexp_matches). The classes APPROXIMATE the Python
+# predicates (they are not universally equal: '²' is str.isdigit but \p{Nd} rejects it;
 # modifier letter 'ʰ' is str.islower but the lower-pattern rejects it),
 # so equivalence is CORPUS-exact, not universal — gated over every
 # distinct token of every G.REFERENCE_DATASETS corpus plus crafted edge
@@ -498,7 +496,7 @@ def fit_ipm(split_df: DataFrame, epochs: int,
     from the OTHER folds, so the feature generalizes instead of copying
     the doc's own annotation. Inference uses the FULL split lexicon
     (decode_spans gaz arg) — exactly what deployment sees. Val-selected
-    per dataset (SPAN_GAZ; tools/exp_gaz_stack.py). ``extras``: extra
+    per dataset (SPAN_GAZ). ``extras``: extra
     feature kinds stacked into every _feats call (SPAN_EXTRAS)."""
     fold_lexica = None
     if gaz_folds:
@@ -633,7 +631,7 @@ def fit_rel_ipm(split_df: DataFrame, epochs: int,
     epoch in (doc_id, pair-key) order, delta sum, exact //P mix,
     running average. Replaces NB where val selects it: val rel F1 over
     train-only-fit PREDICTED spans 0.361 vs 0.334 (conll04) and 0.222
-    vs 0.180 (custom) — see BENCH/GOLD_EVAL.md."""
+    vs 0.180 (custom) — see GOLD_EVAL.md."""
     from causalre_spark.operators import fitted as FT
 
     lab = FT._labeled_train_pairs(split_df)
@@ -792,14 +790,13 @@ def predict_rels_ptron(pred_spans: DataFrame, docs: DataFrame,
 # relation-perceptron epochs and extra feature kinds, selected on the
 # VAL splits by rel F1 over PREDICTED val spans from a train-only span
 # fit (the deployment-matched criterion): epochs argmax over
-# {8,12,20,30,40}; extras greedy-forward over the
-# tools/sweep_rel_feats.py candidate set (the sweep's scalar twin uses
-# the perceptron shape for hlsh/tlsh where production uses
-# SHAPE_RULES, so its scores are selection-grade, not
+# {8,12,20,30,40}; extras greedy-forward over a candidate set (the
+# search's scalar twin used the perceptron shape for hlsh/tlsh where
+# production uses SHAPE_RULES, so its scores were selection-grade, not
 # production-identical). Re-selected in round 4 after the suf4+wl+psh2
 # span adoption changed the predicted-span surface, and adopted via
-# the dual val+CV gate deployment-vs-deployment
-# (tools/rel_dual_check.py): conll04 swaps fl -> tf (val rel F1
+# the dual val+CV gate deployment-vs-deployment:
+# conll04 swaps fl -> tf (val rel F1
 # 0.4180 -> 0.4198 @40, 5-fold CV 0.4627 -> 0.4674 @40); custom adds
 # hf and moves 30 -> 40 epochs (val 0.2345 -> 0.2429, CV 0.1759 ->
 # 0.1781 at the deployed checkpoints).

@@ -1,9 +1,5 @@
-"""Embedding similarity search (training-data pipeline ops).
-
-Brute-force cosine top-k is the exactness baseline; the sign-LSH
-bucketed variant is the scale path (bucket on hyperplane sign bits ->
-candidate set shrinks by ~2^n_bits; at 100 TB the bucket join replaces
-the all-pairs cross join).
+"""Embedding similarity search (training-data pipeline ops): exact
+brute-force cosine top-k against one query row.
 
 All arithmetic is JVM-side (aggregate/zip_with over array<float>) — no
 Python UDFs in the hot path. Cosines are rounded before ranking so the
@@ -15,8 +11,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from causalre_spark.functions.partitions import spread
-
 
 def _dot(a: str, b: str) -> str:
     return (
@@ -27,28 +21,6 @@ def _dot(a: str, b: str) -> str:
 
 def _norm(a: str) -> str:
     return f"sqrt({_dot(a, a)})"
-
-
-def _dot_fixed(a: str, b: str, dim: int) -> str:
-    """Value-identical unrolled spelling of :func:`_dot` for fixed-width
-    vectors (the embeddings table's dim=64 contract). Same left-to-right
-    fold order — ((0.0 + a0·b0) + a1·b1) + … — so the resulting double
-    is bit-identical to the aggregate/zip_with spelling and a rounded
-    cosine cannot move. Why: higher-order lambdas never participate in
-    whole-stage codegen AND zip_with allocates the zipped intermediate
-    array per evaluation — in the quadratic pair loops (semantic dedup,
-    in-bucket cosine verify) that interpreted per-element path is the
-    inner loop. A plain arithmetic chain codegens flat. Only for arrays
-    known to carry >= dim elements: element j past the end is NULL and
-    NULLs the whole sum (ragged inputs must keep using :func:`_dot`)."""
-    terms = " + ".join(
-        f"(cast({a}[{j}] as double) * cast({b}[{j}] as double))"
-        for j in range(dim))
-    return f"(cast(0.0 as double) + {terms})"
-
-
-def _norm_fixed(a: str, dim: int) -> str:
-    return f"sqrt({_dot_fixed(a, a, dim)})"
 
 
 def _topk_ranked(scored: DataFrame, k: int, id_col: str) -> DataFrame:
@@ -101,477 +73,3 @@ def cosine_topk(
         ).alias("cosine"),
     )
     return _topk_ranked(scored, k, id_col)
-
-
-def lsh_sign_buckets(
-    emb: DataFrame, n_bits: int = 8, id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Sign-LSH bucket id from the first n_bits dimensions' signs.
-
-    (Axis-aligned hyperplanes — deterministic and portable; random
-    hyperplanes would need a broadcast projection matrix, same plan
-    shape.) Returns (id, bucket)."""
-    return emb.select(
-        F.col(id_col),
-        _lsh_sign_bucket_col(n_bits, vec_col).alias("bucket"),
-    )
-
-
-def _lsh_sign_bucket_col(n_bits: int, vec_col: str):
-    """Axis-aligned sign bucket as a COLUMN expression (see
-    _rh_bucket_col for why callers project rather than join it on)."""
-    terms = [
-        f"(case when {vec_col}[{d}] > 0 then {1 << d} else 0 end)"
-        for d in range(n_bits)
-    ]
-    return F.expr(" + ".join(terms)).cast("long")
-
-
-def lsh_bucket_stats(emb: DataFrame, n_bits: int = 8,
-                     id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Bucket occupancy histogram (the ANN index's balance diagnostic)."""
-    return (
-        lsh_sign_buckets(emb, n_bits, id_col, vec_col)
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n_vectors"))
-    )
-
-
-def cosine_near_dup_pairs(
-    emb: DataFrame, thd: float, n_bits: int = 4,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (dedup family): sign-LSH
-    bucket blocking -> in-bucket pairs -> exact rounded-cosine filter.
-
-    The bucket equi-join bounds candidates to ~n²/2^n_bits; at larger
-    scale raise n_bits (or use multiple probe tables) — same plan shape.
-    The bucket itself is a map-only projection, not an id-join.
-    """
-    # per-vector norm computed in the map-side projection, not per
-    # candidate pair after the join (see semantic_dedup_pairs — the
-    # same quadratic-term elision; bit-identical doubles); input spread
-    # so the in-bucket pair loop parallelizes past the one-row-group
-    # scan, and with `dim` the dot/norm take the unrolled fixed-width
-    # spelling (:func:`_dot_fixed`)
-    dot = (lambda a, b: _dot_fixed(a, b, dim)) if dim else _dot
-    nrm = (lambda a: _norm_fixed(a, dim)) if dim else _norm
-    # projection BEFORE the spread exchange: the exchange doubles as a
-    # codegen boundary keeping the bucket+norm chains out of the pair
-    # stage's generated method (see semantic_dedup_pairs rationale)
-    with_b = spread(emb.select(
-        F.col(id_col), F.col(vec_col),
-        _lsh_sign_bucket_col(n_bits, vec_col).alias("bucket"),
-        F.expr(nrm(vec_col)).alias("nrm")))
-    a = with_b.select("bucket", F.col(id_col).alias("id_a"),
-                      F.col(vec_col).alias("va"), F.col("nrm").alias("na"))
-    c = with_b.select("bucket", F.col(id_col).alias("id_b"),
-                      F.col(vec_col).alias("vb"), F.col("nrm").alias("nb"))
-    # explode(array(..)) Generate barrier around the cosine — keeps the
-    # unrolled chain to ONE copy in the stage (the filter cannot be
-    # pushed below the Generate that defines its input); see
-    # clustering.semantic_dedup_pairs for the measured rationale
-    return (
-        a.join(c, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b",
-            F.explode(F.array(
-                F.round(F.expr(dot("va", "vb"))
-                        / (F.col("na") * F.col("nb")), 4))).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= thd)
-    )
-
-
-def hyperplane_coeffs(plane: int, dim: int) -> list[float]:
-    """Frozen random-hyperplane coefficients in [-0.5, 0.5]: exact dyadic
-    rationals (md5_long / 2^48 - 0.5), so the decimal literals inlined
-    into SQL round-trip bit-exactly in both engines."""
-    from causalre_spark.functions.hashing import md5_long
-
-    return [md5_long(f"hp:{plane}:{j}") / float(1 << 48) - 0.5 for j in range(dim)]
-
-
-def _dot_literal(vec_elem_fn, coeffs: list[float]) -> str:
-    """Explicit left-to-right addition chain so Spark and DuckDB fold the
-    doubles in the IDENTICAL order -> bit-identical sums -> the >0 sign
-    test cannot flip between engines. vec_elem_fn(j) renders the j-th
-    (0-based) element access in the target dialect."""
-    terms = [f"({vec_elem_fn(j)} * CAST({c:.17e} AS DOUBLE))"
-             for j, c in enumerate(coeffs)]
-    return "(" + " + ".join(terms) + ")"
-
-
-def _rh_bucket_col(n_planes: int, dim: int, vec_col: str):
-    """Random-hyperplane sign-LSH bucket as a COLUMN expression, so
-    callers attach it with a map-only projection instead of joining the
-    id->bucket frame back onto the vectors (a self-join on the full
-    table — pure waste at 10^12 rows when the bucket is a row-local
-    function of the vector)."""
-    terms = []
-    for p in range(n_planes):
-        dot = _dot_literal(lambda j: f"{vec_col}[{j}]",
-                           hyperplane_coeffs(p, dim))
-        terms.append(f"(case when {dot} > 0 then {1 << p} else 0 end)")
-    return F.expr(" + ".join(terms)).cast("long")
-
-
-def random_hyperplane_buckets(
-    emb: DataFrame, n_planes: int = 8, dim: int = 16,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    """Sign-LSH with RANDOM (frozen md5-derived) hyperplanes — the
-    production upgrade over the axis-aligned variant: axis-aligned
-    planes only discriminate along raw coordinates, so correlated
-    embedding dimensions give badly skewed buckets; random hyperplanes
-    make bucket occupancy approach uniform and collision probability the
-    classic 1 - theta/pi per plane. Returns (id, bucket)."""
-    return emb.select(
-        F.col(id_col),
-        _rh_bucket_col(n_planes, dim, vec_col).alias("bucket"),
-    )
-
-
-def ann_topk_multiprobe(
-    emb: DataFrame, query_id: int, k: int, n_planes: int = 8,
-    n_probes: int = 2, dim: int = 16,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    """Multiprobe ANN: search the query's random-hyperplane bucket PLUS
-    the n_probes buckets at Hamming distance 1 (flipping the lowest
-    planes) — recovers most of the recall a single-bucket probe loses,
-    for (1 + n_probes)/2^n_planes of the scan cost. Candidates come from
-    a broadcast semi-join on the small probe-bucket set. The bucket is
-    attached as a map-only projection (_rh_bucket_col) — no
-    id-join back onto the vector table."""
-    with_b = emb.select(
-        F.col(id_col), F.col(vec_col),
-        _rh_bucket_col(n_planes, dim, vec_col).alias("bucket"))
-    qb = with_b.filter(F.col(id_col) == query_id).select(
-        "bucket", F.col(vec_col).alias("qvec"),
-        F.expr(_norm(vec_col)).alias("qn"))
-    probes = qb.select(
-        F.explode(F.array(
-            F.col("bucket"),
-            *[F.col("bucket").bitwiseXOR(F.lit(1 << p)) for p in range(n_probes)]
-        )).alias("bucket"), "qvec", "qn")
-    cands = with_b.join(F.broadcast(probes), "bucket").filter(
-        F.col(id_col) != query_id)
-    scored = cands.select(
-        F.col(id_col),
-        F.round(
-            F.expr(_dot(vec_col, "qvec"))
-            / (F.expr(_norm(vec_col)) * F.col("qn")), 4,
-        ).alias("cosine"),
-    )
-    return _topk_ranked(scored, k, id_col)
-
-
-def ivf_centroids(n_centroids: int, dim: int) -> list[list[float]]:
-    """Frozen IVF 'coarse quantizer' centroids: md5-derived unit vectors.
-    A trained IVF learns centroids with k-means; the INDEX STRUCTURE —
-    assign each vector to its nearest centroid, probe the query's nearest
-    lists — is identical, and frozen centroids keep the whole operator
-    deterministic and oracle-checkable. Components are plain Python
-    floats inlined as literals into both engines."""
-    import math
-
-    from causalre_spark.functions.hashing import md5_long
-
-    out = []
-    for c in range(n_centroids):
-        v = [md5_long(f"ivf:{c}:{j}") / float(1 << 48) - 0.5 for j in range(dim)]
-        n = math.sqrt(sum(x * x for x in v))
-        out.append([x / n for x in v])
-    return out
-
-
-def _centroid_dots(vec_elem_fn, n_centroids: int, dim: int) -> list[str]:
-    cents = ivf_centroids(n_centroids, dim)
-    return [_dot_literal(vec_elem_fn, c) for c in cents]
-
-
-def _ivf_centroid_col(n_centroids: int, dim: int, vec_col: str):
-    """Nearest-centroid id as a COLUMN expression (see _rh_bucket_col
-    for why callers project it instead of joining it back on)."""
-    dots = _centroid_dots(lambda j: f"{vec_col}[{j}]",
-                          n_centroids, dim)
-    # O(n) argmax: one (dot, -centroid) struct array + array_max —
-    # struct ordering takes the highest dot, ties toward the smallest
-    # centroid id (negated). Each dot chain evaluates exactly once and
-    # the expression count stays linear in n_centroids (the former
-    # n²-conjunct CASE was the k² cliff flagged in VERDICT r03).
-    entries = ", ".join(
-        f"named_struct('d', {dots[c]}, 'nc', {-c})"
-        for c in range(n_centroids))
-    return F.expr(f"-(array_max(array({entries})).nc)").cast("long")
-
-
-def ivf_assign(
-    emb: DataFrame, n_centroids: int = 8, dim: int = 16,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF list assignment: each vector goes to the centroid with the
-    max dot product (first-max tie-break). Bit-exact across engines —
-    the dots are explicit literal addition chains."""
-    return emb.select(
-        F.col(id_col),
-        _ivf_centroid_col(n_centroids, dim, vec_col).alias("centroid"))
-
-
-def ann_topk_ivf(
-    emb: DataFrame, query_id: int, k: int, n_centroids: int = 8,
-    n_probe: int = 2, dim: int = 16,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF ANN top-k: rank centroids by the query's dot product, probe
-    the best n_probe inverted lists, exact cosine top-k inside them.
-    At scale the assignment is a precomputed index column and the probe
-    is a partition-pruned scan of n_probe/n_centroids of the data; here
-    it is a map-only projection (_ivf_centroid_col), never an id-join
-    back onto the vector table."""
-    with_c = emb.select(
-        F.col(id_col), F.col(vec_col),
-        _ivf_centroid_col(n_centroids, dim, vec_col).alias("centroid"))
-    dots = _centroid_dots(lambda j: f"{vec_col}[{j}]",
-                          n_centroids, dim)
-    pairs = ", ".join(
-        f"struct(cast({c} as long) as centroid, {dots[c]} as d)"
-        for c in range(n_centroids))
-    q = (emb.filter(F.col(id_col) == query_id)
-         .select(F.col(vec_col).alias("qvec"),
-                 F.expr(_norm(vec_col)).alias("qn"),
-                 F.explode(F.expr(f"array({pairs})")).alias("cd"))
-         .select("qvec", "qn", F.col("cd.centroid").alias("centroid"), F.col("cd.d").alias("d")))
-    # TakeOrderedAndProject for the probe-list selection too (n_centroids
-    # rows, but the same no-single-partition-Window discipline)
-    probes = (q.orderBy(F.col("d").desc(), F.col("centroid").asc())
-              .limit(n_probe).select("centroid", "qvec", "qn"))
-    cands = with_c.join(F.broadcast(probes), "centroid").filter(
-        F.col(id_col) != query_id)
-    scored = cands.select(
-        F.col(id_col),
-        F.round(
-            F.expr(_dot(vec_col, "qvec"))
-            / (F.expr(_norm(vec_col)) * F.col("qn")), 4,
-        ).alias("cosine"),
-    )
-    return _topk_ranked(scored, k, id_col)
-
-
-def ann_topk_bucketed(
-    emb: DataFrame, query_id: int, k: int, n_bits: int = 4,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: search only the query's sign-LSH bucket.
-
-    The scale path for ANN: candidates = same-bucket rows (equi-join on
-    bucket, ~n/2^n_bits of the data) instead of a full scan."""
-    b = lsh_sign_buckets(emb, n_bits, id_col, vec_col)
-    with_b = emb.join(b, id_col)
-    qb = with_b.filter(F.col(id_col) == query_id).select(
-        F.col("bucket"), F.col(vec_col).alias("qvec"),
-        F.expr(_norm(vec_col)).alias("qn"))
-    cands = with_b.join(F.broadcast(qb), "bucket").filter(
-        F.col(id_col) != query_id)
-    scored = cands.select(
-        F.col(id_col),
-        F.round(
-            F.expr(_dot(vec_col, "qvec"))
-            / (F.expr(_norm(vec_col)) * F.col("qn")),
-            4,
-        ).alias("cosine"),
-    )
-    return _topk_ranked(scored, k, id_col)
-
-
-def pq_codebook(m: int, ksub: int, dsub: int) -> list[list[list[float]]]:
-    """Frozen product-quantization codebooks: cents[s][c] = dsub floats
-    in [-0.5, 0.5). A trained PQ learns per-subspace centroids with
-    k-means; the INDEX STRUCTURE — slice the vector into m subvectors,
-    quantize each to its nearest codeword, score queries against the
-    64-entry distance table instead of the raw floats — is identical,
-    and md5-derived codebooks keep the operator deterministic and
-    oracle-checkable (same policy as ivf_centroids)."""
-    from causalre_spark.functions.hashing import md5_long
-
-    return [[[md5_long(f"pq:{s}:{c}:{j}") / float(1 << 48) - 0.5
-              for j in range(dsub)]
-             for c in range(ksub)]
-            for s in range(m)]
-
-
-def _sqdist_literal(vec_elem_fn, offset: int, coeffs: list[float]) -> str:
-    """Explicit left-to-right squared-distance chain (same bit-identical
-    fold-order rationale as _dot_literal)."""
-    terms = [
-        f"(({vec_elem_fn(offset + j)} - CAST({c:.17e} AS DOUBLE))"
-        f" * ({vec_elem_fn(offset + j)} - CAST({c:.17e} AS DOUBLE)))"
-        for j, c in enumerate(coeffs)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
-def _pq_argmin(s: int, ksub: int) -> str:
-    """First-min argmin over the _d{s}_{c} columns: one (dist, code)
-    struct array + array_min — lexicographic struct ordering takes the
-    smallest distance, ties toward the smallest code. O(ksub) nodes per
-    subspace (mirrors ivf_assign's linear argmax; replaces the former
-    k²-conjunct CASE)."""
-    entries = ", ".join(f"named_struct('d', _d{s}_{c}, 'c', {c})"
-                        for c in range(ksub))
-    return f"array_min(array({entries})).c"
-
-
-def _pq_argmin_case(s: int, ksub: int) -> str:
-    """Oracle-side twin of :func:`_pq_argmin` (the DuckDB SQL in
-    entry_queries): the same first-min argmin spelled as a k²-conjunct
-    CASE — deliberately a DIFFERENT expression shape from the Spark
-    plan so the cross-engine hash compares two independent spellings of
-    the rule, and DuckDB (which has no struct array_min ordering
-    guarantee) stays on plain scalar compares."""
-    arms = []
-    for c in range(ksub):
-        cond = " AND ".join(f"_d{s}_{c} <= _d{s}_{o}"
-                            for o in range(ksub) if o != c)
-        arms.append(f"WHEN {cond} THEN {c}")
-    return "CASE " + " ".join(arms) + f" ELSE {ksub - 1} END"
-
-
-def pq_assign(
-    emb: DataFrame, m: int = 8, ksub: int = 16, dim: int = 64,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    """PQ code assignment: vector -> (code_0..code_{m-1}) + packed
-    BIGINT pq_code (the compressed representation: m*log2(ksub) bits,
-    e.g. 64-dim float32 -> 24 bits at m=8/ksub=8 — an ~85x compression).
-
-    At 10^12 vectors this is the one-off index build: a map-only
-    projection (no shuffle) whose output column is what every ADC query
-    scans instead of the raw embeddings."""
-    dsub = dim // m
-    book = pq_codebook(m, ksub, dsub)
-    # Vectorized Arrow assignment instead of the m·ksub literal
-    # squared-distance chains + per-subspace argmins: the generated
-    # projection for 64 chains exceeds what Janino/C2 handle cheaply
-    # and cost multi-second per-stage compiles per query (the codebook
-    # literals are frozen, but the compile still runs once per JVM).
-    # The numpy loop reproduces the chain arithmetic EXACTLY: x widened
-    # float32->float64 (same as cast), each (x-c)² chain folds
-    # left-to-right with the identical python-float codewords, and the
-    # argmin scans codes in ascending order keeping strict improvements
-    # — first min = smallest code, the array_min (d, c) struct rule.
-    # tests/test_similarity_pq.py asserts code-for-code equality with
-    # the expression spelling (kept below for the oracle builders).
-    in_fields = {f.name: f.dataType.simpleString() for f in emb.schema.fields}
-    schema = (f"{id_col} {in_fields[id_col]}, "
-              + ", ".join(f"code_{s} bigint" for s in range(m))
-              + ", pq_code bigint")
-
-    def _codes(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            out = {id_col: pdf[id_col].to_numpy()}
-            packed = np.zeros(len(X), dtype=np.int64)
-            for s in range(m):
-                off = s * dsub
-                best = None
-                bestc = None
-                for c in range(ksub):
-                    cs = book[s][c]
-                    d0 = X[:, off] - cs[0]
-                    acc = d0 * d0
-                    for j in range(1, dsub):
-                        dj = X[:, off + j] - cs[j]
-                        acc = acc + dj * dj
-                    if best is None:
-                        best = acc
-                        bestc = np.zeros(len(acc), dtype=np.int64)
-                    else:
-                        mmask = acc < best
-                        best = np.where(mmask, acc, best)
-                        bestc = np.where(mmask, np.int64(c), bestc)
-                out[f"code_{s}"] = bestc
-                packed = packed + bestc * (ksub ** (m - 1 - s))
-            out["pq_code"] = packed
-            yield pd.DataFrame(out)
-
-    return spread(emb.select(id_col, vec_col)).mapInPandas(
-        _codes, schema=schema)
-
-
-def ann_topk_pq(
-    emb: DataFrame, query_id: int, k: int, m: int = 8, ksub: int = 16,
-    dim: int = 64, id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    """PQ-ADC approximate top-k: build the query's (subspace, code) ->
-    squared-distance table (m*ksub entries — computed once, broadcast),
-    then score every vector as the SUM of table entries at its codes
-    and take the k smallest. The billion-scale ANN query shape (Jegou
-    et al. 2011, 'Product Quantization for Nearest Neighbor Search' —
-    public paper; IVF+PQ is the classic pairing with ann_topk_ivf's
-    list pruning): the scan reads only the 32-bit pq codes, never the
-    raw vectors, and the per-vector cost is m table lookups + adds.
-
-    Here the lookup is MAP-ONLY: the whole distance table is one wide
-    row (m array<double> columns of ksub entries each — 128 doubles at
-    the defaults), broadcast-cross-joined onto the code scan, and each
-    vector's score is the explicit s-ascending chain of
-    element_at(dt_s, code_s + 1) adds. No explode (the former long-form
-    spelling multiplied the scan by m rows), no equi-join, and no
-    re-aggregation shuffle — at 10^12 vectors the query is a pure
-    projection over the packed-code column feeding straight into the
-    TakeOrderedAndProject top-k; Catalyst keeps the whole thing
-    JVM-side. (The DuckDB oracle deliberately keeps the long-form
-    join+GROUP BY spelling — two independent spellings of the rule.)"""
-    dsub = dim // m
-    book = pq_codebook(m, ksub, dsub)
-    assign = pq_assign(emb, m, ksub, dim, id_col, vec_col)
-    # the distance table is a function of ONE row (the query vector):
-    # collect it (1-row driver transfer, the standard capped small-side
-    # cutover) and inline the m×ksub distances as array literals. The
-    # python fold ((q0-c0)² + (q1-c1)² + …) over the collected floats
-    # is the identical IEEE double sequence the former _sqdist_literal
-    # chains produced (collect widens float32 exactly), and dropping
-    # those 64 generated chains removes a multi-second per-query
-    # codegen+compile toll plus the broadcast cross-join build.
-    q = (emb.filter(F.col(id_col) == query_id)
-         .select(F.col(vec_col).alias("qvec")).collect())
-    qvec = [float(x) for x in q[0]["qvec"]]
-
-    def _sq(off: int, cs: list[float]) -> float:
-        acc = (qvec[off] - cs[0]) * (qvec[off] - cs[0])
-        for j in range(1, len(cs)):
-            d = qvec[off + j] - cs[j]
-            acc = acc + d * d
-        return acc
-
-    dt = [[_sq(s * dsub, book[s][c]) for c in range(ksub)]
-          for s in range(m)]
-    # explicit left-to-right s-ascending fold, same order the oracle's
-    # s-keyed join feeds its sum — bit-stable across partitionings
-    # because every term lives in the same row
-    adc = F.element_at(F.array(*[F.lit(v) for v in dt[0]]),
-                       F.col("code_0").cast("int") + 1)
-    for s in range(1, m):
-        adc = adc + F.element_at(F.array(*[F.lit(v) for v in dt[s]]),
-                                 F.col(f"code_{s}").cast("int") + 1)
-    scored = (
-        assign.filter(F.col(id_col) != query_id)
-        .select(F.col(id_col), F.round(adc, 4).alias("adc_dist"))
-    )
-    order = [F.col("adc_dist").asc(), F.col(id_col).asc()]
-    top = scored.orderBy(*order).limit(k)
-    w = Window.orderBy(*order)
-    return (
-        top.withColumn("rn", F.row_number().over(w))
-        .select(id_col, "adc_dist", F.col("rn").cast("long").alias("rank"))
-    )

@@ -1,143 +1,11 @@
-"""Span-level relational operators (SURVEY §2.5 T1/T3/T4, §2.2 P1/P4).
+"""Span display helper (SURVEY §2.7 F5).
 
-Everything here is DataFrame algebra except greedy NMS, which is
-inherently sequential per document (reference model.py:637-721) and runs
-as applyInPandas over ≤ max_top_k_spans rows per group.
+Span top-k, dedup and NMS run inside the fused per-document extraction
+UDF (model.udfs.make_doc_extract_udf); only the scalar marking helper
+lives here.
 """
 
 from __future__ import annotations
-
-import pandas as pd
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
-
-from causalre_spark.config import DEFAULT_CONFIG, PipelineConfig
-
-
-def topk_spans(spans: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """T1: binary-filter threshold + windowed top-k per document.
-
-    Reference: model.py:203-211 calc_top_k + :236-312 prune/filter. The
-    reference's old->new positional index remapping (merge_maps,
-    model.py:214-233) is deleted by design: rows keep natural keys
-    (url, start, end). Deterministic total order: score desc, start, end.
-    """
-    w = Window.partitionBy("url").orderBy(
-        F.col("filter_score").desc(), F.col("start").asc(), F.col("end").asc()
-    )
-    return (
-        spans.filter(F.col("filter_score") >= F.lit(cfg.span_thd))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= cfg.max_top_k_spans)
-        .drop("rn")
-    )
-
-
-def dedup_spans_max_score(spans: DataFrame) -> DataFrame:
-    """T3: unique (url,start,end) keeping max score
-    (layers_token_tagging.py:91-102 merge of tagger + teacher-forced)."""
-    return spans.groupBy("url", "start", "end").agg(
-        F.max("tag_score").alias("tag_score"),
-        F.max("filter_score").alias("filter_score"),
-    )
-
-
-def _iou_pd(s1, e1, s2, e2) -> float:
-    inter = max(0, min(e1, e2) - max(s1, s2))
-    union = (e1 - s1) + (e2 - s2) - inter
-    return inter / union if union else 0.0
-
-
-def nms_spans(spans: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """T4: greedy IoU suppression per document, longer-span preference
-    (model.py:637-721, overlap_thd config.yaml:139).
-
-    Order: filter_score desc, width desc, start, end — fixed so
-    distributed execution is reproducible (SURVEY §7.3). Each group holds
-    ≤ max_top_k_spans rows, so the greedy loop is O(k²) tiny.
-
-    Physical shape: hash-repartition by url + in-partition sort +
-    mapInPandas, NOT groupBy().applyInPandas. The grouped API invokes
-    the Python function once per GROUP — one pandas DataFrame
-    construction per document, ~0.25 ms of pure overhead × one group
-    per document dominated the stage (measured 11-14 s at 10x bench
-    scale on an AQE-coalesced 10-partition exchange). Here each task
-    walks its Arrow batches with numpy group boundaries instead, and
-    the explicit repartition keeps one partition per core (AQE never
-    coalesces a user repartition). The kept-row SET is identical: the
-    in-partition sort (url, filter_score desc, width desc, start, end)
-    is the same total order the per-group pandas sort produced, and a
-    group split across adjacent Arrow batches is stitched before
-    processing."""
-    thd = cfg.overlap_thd
-    out_schema = spans.schema
-    out_cols = [f.name for f in spans.schema]
-
-    def _nms_frame(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        urls = pdf["url"].values
-        starts = pdf["start"].values
-        ends = pdf["end"].values
-        keep = np.zeros(len(pdf), dtype=bool)
-        n = len(pdf)
-        b = 0
-        for i in range(n + 1):
-            if i < n and urls[i] == urls[b]:
-                continue
-            kept: list[tuple[int, int]] = []
-            for j in range(b, i):
-                s, e = int(starts[j]), int(ends[j])
-                ok = all(_iou_pd(s, e, ks, ke) < thd for ks, ke in kept)
-                keep[j] = ok
-                if ok:
-                    kept.append((s, e))
-            b = i
-        return pdf.loc[keep, out_cols]
-
-    def _nms_batches(batches):
-        import numpy as np
-
-        pending = None
-        for pdf in batches:
-            if pending is not None and len(pending):
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-            pending = None
-            if not len(pdf):
-                continue
-            # hold back the (possibly batch-spanning) last group
-            urls = pdf["url"].values
-            cut = int(np.flatnonzero(urls == urls[-1])[0])
-            pending = pdf.iloc[cut:]
-            if cut:
-                yield _nms_frame(pdf.iloc[:cut])
-        if pending is not None and len(pending):
-            yield _nms_frame(pending)
-
-    parts = spans.sparkSession.sparkContext.defaultParallelism
-    with_width = spans.withColumn("width", F.col("end") - F.col("start"))
-    return (
-        with_width.repartition(parts, "url")
-        .sortWithinPartitions(
-            F.col("url").asc(), F.col("filter_score").desc(),
-            F.col("width").desc(), F.col("start").asc(), F.col("end").asc())
-        .mapInPandas(_nms_batches, schema=out_schema)
-    )
-
-
-def span_text(spans: DataFrame, docs: DataFrame) -> DataFrame:
-    """F1: materialize span surface text relationally:
-    concat_ws(' ', slice(tokens, start+1, end-start)) (predictor.py:82)."""
-    return (
-        spans.join(docs.select("url", "tokens"), "url")
-        .withColumn(
-            "text",
-            F.concat_ws(
-                " ", F.slice(F.col("tokens"), F.col("start") + 1, F.col("end") - F.col("start"))
-            ),
-        )
-        .drop("tokens")
-    )
 
 
 def mark_spans(tokens: list[str], spans: list[dict], prefix: str = "s") -> list[str]:

@@ -1,6 +1,8 @@
 """Text analysis operators (training-data pipeline ops): quality
-scoring, token stats, language scoring, fingerprinting. Pure DataFrame
-algebra with portable SQL twins — exact DuckDB oracles exist for all.
+scoring and Gopher-style repetition signals, fingerprinting, a
+percentile quality gate, bigram LM perplexity, token-window chunking,
+fitted language ID and PII scrubbing. Pure DataFrame algebra with
+portable SQL twins.
 """
 
 from __future__ import annotations
@@ -9,17 +11,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from causalre_spark.functions.hashing import md5_long_sql_spark
-from causalre_spark.functions.grid import grid_col
 from causalre_spark.functions.partitions import spread
 from causalre_spark.functions.text import NORMALIZE_SQL
-
-# tiny deterministic marker lists (n-gram-heuristic language ID)
-LANG_MARKERS = {
-    "en": ["the", "and", "of", "to", "was", "is"],
-    "de": ["der", "die", "und", "wurde", "am", "bleibt"],
-    "es": ["el", "la", "fue", "sigue", "y", "de"],
-    "fr": ["le", "la", "ete", "et", "reste", "a"],
-}
 
 
 def quality_scores(docs: DataFrame, id_col: str = "doc_id",
@@ -75,54 +68,6 @@ def quality_scores(docs: DataFrame, id_col: str = "doc_id",
             + (1 - F.col("punct_ratio")) * 0.3
             + F.least(F.col("stopword_ratio") * 3, F.lit(1.0)) * 0.3, 5),
     )
-
-
-def token_stats_by_group(docs: DataFrame, group_col: str = "source",
-                         text_col: str = "text") -> DataFrame:
-    """Corpus token statistics per group (A6 dataset-stats analogue,
-    validator.py:60-103): doc count, token totals, vocab size."""
-    toks = docs.select(
-        F.col(group_col).alias("grp"),
-        F.expr(f"split({NORMALIZE_SQL.format(x=text_col)}, ' ')").alias("toks"),
-    )
-    per_doc = toks.select("grp", F.size("toks").cast("long").alias("n_tokens"), "toks")
-    agg = per_doc.groupBy("grp").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").alias("total_tokens"),
-        F.max("n_tokens").alias("max_tokens"),
-        # irrational-offset grid (see plans/entry_queries a6 comment):
-        # avg of ints can tie exactly on the 4dp rounding half grid
-        (grid_col(F.avg("n_tokens"), k=4)).alias("avg_tokens"),
-    )
-    vocab = (
-        per_doc.select("grp", F.explode("toks").alias("tok"))
-        .groupBy("grp")
-        .agg(F.countDistinct("tok").alias("vocab_size"))
-    )
-    return agg.join(vocab, "grp").withColumnRenamed("grp", group_col)
-
-
-def lang_scores(docs: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
-    """Marker-token language scores + argmax prediction (deterministic
-    tie-break by language code)."""
-    toks = f"split({NORMALIZE_SQL.format(x=text_col)}, ' ')"
-    cols = [F.col(id_col)]
-    for lang, markers in sorted(LANG_MARKERS.items()):
-        arr = "array(" + ",".join(f"'{m}'" for m in markers) + ")"
-        cols.append(
-            F.expr(f"size(filter({toks}, t -> array_contains({arr}, t)))")
-            .cast("long").alias(f"score_{lang}")
-        )
-    scored = docs.select(*cols)
-    # argmax with lexicographic tie-break
-    langs = sorted(LANG_MARKERS)
-    best = F.greatest(*[F.col(f"score_{lang}") for lang in langs])
-    pred = None
-    for lang in langs:
-        cond = F.col(f"score_{lang}") == best
-        pred = F.when(cond, lang) if pred is None else pred.when(cond, lang)
-    return scored.withColumn("predicted_lang", pred)
 
 
 def fingerprints(docs: DataFrame, id_col: str = "doc_id",

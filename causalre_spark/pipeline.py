@@ -418,7 +418,7 @@ def run_incremental(
     previous ∪ delta per-document outputs.
 
     Scale rationale: the per-document encoder UDF dominates pipeline
-    wall-clock (~80% in BENCH/BASELINE.md's stage decomposition), and a
+    wall-clock (~80% in the historical stage decomposition), and a
     web corpus arrives as monthly crawl deltas — re-encoding 10^12
     already-processed pages to absorb a 10^10-page delta is the
     difference between an overnight job and an impossible one. The
@@ -480,27 +480,6 @@ def run_incremental(
         "entities": entities,
         "triples": triples,
     }
-
-
-def _extract_verify_udf(batches):
-    """pages(url, html, expected_text) -> docs rows + text_ok flag (staged
-    variant used by the operator-registry queries)."""
-    import pandas as pd
-
-    from causalre_spark.extract import extract_text, tokenize
-
-    for pdf in batches:
-        texts = [extract_text(bytes(h)) for h in pdf["html"]]
-        toks = [tokenize(t) for t in texts]
-        yield pd.DataFrame(
-            {
-                "url": pdf["url"].values,
-                "text": texts,
-                "tokens": toks,
-                "n_tokens": [len(t) for t in toks],
-                "text_ok": [a == b for a, b in zip(texts, pdf["expected_text"])],
-            }
-        )
 
 
 def write_predictions_json(docs: DataFrame, path: str) -> None:

@@ -35,31 +35,42 @@ def get_spark(
     # submit command; hard-coding .master() here would silently hijack a
     # real cluster back to local mode. Only default to local[cores] when
     # no master was provided.
-    from pyspark import SparkConf
+    from pyspark import SparkConf, SparkContext
 
+    # Under spark-submit the driver JVM is already running (its gateway
+    # port is in the env): attach to it so SparkConf() sees the values
+    # from --conf and spark-defaults.conf. A plain python launch has no
+    # JVM yet and must not start one here — the SparkSession confs below
+    # size it at launch.
+    if os.environ.get("PYSPARK_GATEWAY_PORT"):
+        SparkContext._ensure_initialized()
+    submitted = SparkConf()
     b = SparkSession.builder
     # spark-submit surfaces --master as spark.master in the defaults
     # conf (cluster deployments) or as the MASTER env var (the pip
     # distribution's launcher); either way, leave it alone.
-    if not (os.environ.get("MASTER") or SparkConf().contains("spark.master")):
+    if not (os.environ.get("MASTER") or submitted.contains("spark.master")):
         b = b.master(f"local[{cores}]")
     # HotSpot refuses to JIT methods over 8000 bytecode bytes
     # (DontCompileHugeMethods, on by default): Catalyst's generated
     # whole-stage methods for wide literal chains (unrolled dot
-    # products, k-means assignment argmax, PQ distance tables) exceed
-    # that and would run in the BYTECODE INTERPRETER forever — measured
-    # 25x on the SemDeDup pair stage (51 s -> 2 s warm at 10x bench
-    # scale). Janino's own 64 KB limit still bounds method size; letting
-    # the JIT compile what Janino accepted is strictly better than
-    # interpreting it. Merged (not overwritten) with caller-supplied
-    # java options; executors on a real cluster get the same flag.
+    # products, long CASE chains) exceed that and would run in the
+    # BYTECODE INTERPRETER forever — measured 25x on a pair-scoring
+    # stage (51 s -> 2 s warm). Janino's own 64 KB limit still bounds
+    # method size; letting the JIT compile what Janino accepted is
+    # strictly better than interpreting it. Merged (not overwritten)
+    # with the java options already configured (spark-submit --conf,
+    # spark-defaults.conf) and the caller-supplied ones; executors on a
+    # real cluster get the same flag.
     _jit_flag = "-XX:-DontCompileHugeMethods"
     extra_conf = dict(extra_conf or {})
     for opt_key in ("spark.driver.extraJavaOptions",
                     "spark.executor.extraJavaOptions"):
-        supplied = extra_conf.pop(opt_key, None)
-        extra_conf[opt_key] = (f"{supplied} {_jit_flag}" if supplied
-                               else _jit_flag)
+        opts = [v for v in (submitted.get(opt_key, None),
+                            extra_conf.pop(opt_key, None)) if v]
+        if _jit_flag not in " ".join(opts).split():
+            opts.append(_jit_flag)
+        extra_conf[opt_key] = " ".join(opts)
     b = (
         b.appName(app)
         .config("spark.sql.shuffle.partitions", str(max(cfg.shuffle_partitions, cores)))

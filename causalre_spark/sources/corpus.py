@@ -197,11 +197,12 @@ def page_from_document(doc_id, source: str, text: str, lang: str,
                        seed_causal: bool = False) -> dict:
     """input_hint page row from a driver-testdata `documents` row.
 
-    Pure function shared by the Spark adapters in plans/entry_queries and
-    the single-process oracle in the parity tests, so both worlds build
-    byte-identical pages. The html wrap matches the relational
-    `_pages_from_documents` spelling exactly (driver testdata text is
-    html-safe: no & < > — asserted in tests).
+    Pure function shared by the seeded-pages adapter in
+    plans/entry_queries (behind causal_triples_seeded and
+    __spark_entry__.entry) and the single-process oracle in the parity
+    tests, so both worlds build byte-identical pages. The html wrap
+    matches the relational `_pages_from_documents` spelling exactly
+    (testdata text is html-safe: no & < > — asserted in tests).
 
     seed_causal sentence-izes the body (a period every 8 tokens) before
     appending the causal sentence: the driver corpus is punctuation-free

@@ -1,6 +1,8 @@
-"""Driver-contract smoke: entry() returns rows; a representative subset
-of queries() matches oracle_sql() via DuckDB at sf0.001 (the full sweep
-is tools/check_entry.py at sf0.01 — the round driver's own gate)."""
+"""Driver-contract smoke: entry() returns rows; every oracle-backed query
+that reads the sf tables matches oracle_sql() via DuckDB at sf0.001 (the
+sf0.01 sweep is tools/check_entry.py)."""
+
+import re
 
 import duckdb
 import pytest
@@ -10,20 +12,16 @@ import __spark_entry__ as entry_mod
 SF = "/root/testdata/sf0.001"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
-SUBSET = [
-    "t1_topk_spans", "j1_pair_gen", "a1_micro_prf", "a3_lost_rels",
-    "a2_loose_rels",
-    "dedup_exact", "dedup_simhash", "text_fingerprint",
-    "sim_cosine_topk", "cc_components", "events_sessionize",
-    "kg_2hop", "kg_pagerank", "skew_salted_agg",
-    "kg_triangles", "kg_degree_stats", "dedup_ngram_jaccard",
-    "asof_join_orders", "range_join_errors", "sample_hash",
-    "tfidf_topk", "group_quantiles",
-    "dedup_crossdoc", "decontaminate", "sample_stratified",
-    "domain_skew_stats", "kg_negative_samples", "dsir_weights",
-    "lang_mixing_weights", "curation_verdict", "cc_size_stats",
-    "bm25_topk", "dedup_compaction", "dedup_near_clusters",
-]
+# causal_triples_seeded's oracle pins frozen extraction scores, and one
+# sf0.001 max_score is a float32 ulp off on hosts whose OpenBLAS picks
+# other kernels (ROADMAP item 1). Its Spark-vs-oracle exactness is gated
+# on every host by tests/test_pipeline_parity.py, and its frozen pin by
+# tools/check_entry.py at sf0.01.
+HOST_DEPENDENT = {"causal_triples_seeded"}
+SF_ORACLES = sorted(
+    name for name, sql in entry_mod.oracle_sql().items()
+    if name not in HOST_DEPENDENT
+    and any(re.search(rf"\b(FROM|JOIN)\s+{t}\b", sql, re.I) for t in TABLES))
 
 
 @pytest.fixture(scope="module")
@@ -46,10 +44,20 @@ def _normalized(df):
 def test_entry_returns_rows(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
-    assert {"canonical_id", "canonical_form", "n_mentions"} <= set(df.columns)
+    assert set(df.columns) == {"canonical_id", "canonical_form", "n_mentions",
+                               "n_surface_forms"}
 
 
-@pytest.mark.parametrize("name", SUBSET)
+def test_every_query_but_the_flagship_has_an_oracle():
+    """causal_triples is the single rows-only query (its gate is
+    tests/test_pipeline_parity.py); any other query without an oracle
+    would silently drop out of the contract check."""
+    assert set(entry_mod.queries()) - set(entry_mod.oracle_sql()) == {"causal_triples"}
+    assert set(entry_mod.oracle_sql()) <= set(entry_mod.queries())
+    assert {"dedup_minhash_lsh", "curation_verdict"} <= set(SF_ORACLES)
+
+
+@pytest.mark.parametrize("name", SF_ORACLES)
 def test_query_matches_oracle(spark, duck, name):
     qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
     sdf = qs[name](spark, SF).toPandas()

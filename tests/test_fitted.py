@@ -7,12 +7,13 @@ with plain dicts/loops (no Spark, no shared code paths beyond the module
 constants) — exact span-set / rel-set equality proves the relational
 fit, the Arrow decode UDF and the integer-grid NB algebra all compute
 the documented model. The F1 gates pin the headline quality numbers in
-BENCH/GOLD_EVAL.md (VERDICT r03 next-round #1: rel F1 off zero)."""
+GOLD_EVAL.md (VERDICT r03 next-round #1: rel F1 off zero)."""
 
 from __future__ import annotations
 
 import collections
 import math
+import os
 import re
 
 import duckdb
@@ -20,10 +21,11 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from causalre_spark import FIXTURES_DIR
 from causalre_spark import gold_eval as G
 from causalre_spark.operators import fitted as FT
 
-FIX = "/root/repo/fixtures/gazetteer"
+FIX = os.path.join(FIXTURES_DIR, "gazetteer")
 GRID = 0.3141592653589793
 
 
@@ -332,7 +334,7 @@ def test_fitted_parity_and_gates(spark, ds):
     twin_rels = _twin_predict_rel(ttest, W, pri, twin_spans)
     assert spark_rels == twin_rels
 
-    # quality-regression gates (BENCH/GOLD_EVAL.md headline numbers)
+    # quality-regression gates (GOLD_EVAL.md headline numbers)
     gs = _twin_gold_spans(ttest)
     gr = _twin_gold_rels(ttest)
     stp, sfp, sfn, sf1 = _twin_prf(twin_spans, gs)

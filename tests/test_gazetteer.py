@@ -1,7 +1,7 @@
 """Gazetteer extractor (operators/gazetteer.py): fit/tag/prior unit
 semantics, fixture freshness for the DuckDB oracles, Spark-vs-DuckDB
 parity of the full eval chain, and the quality claim vs the frozen
-neural profile (BENCH/GOLD_EVAL.md)."""
+neural profile (GOLD_EVAL.md)."""
 
 import os
 
@@ -172,7 +172,7 @@ def test_gazetteer_beats_frozen_profile(spark):
     """The point of the exercise (VERDICT r02 missing #3): train-split
     fitted surfaces must lift strict span F1 far above the frozen
     neural stand-in's (custom 0.025 / conll04 0.051 strict span,
-    BENCH/GOLD_EVAL.md). conll04 entities recur verbatim, so the
+    GOLD_EVAL.md). conll04 entities recur verbatim, so the
     lexicon shines there; custom event spans are long unique clauses,
     so the lift is smaller but still strictly better."""
     from causalre_spark.plans.entry_queries import QUERIES

@@ -8,7 +8,7 @@ import pytest
 
 from causalre_spark import gold_eval as G
 
-# frozen measured values (tools/freeze_gold_eval.py; BENCH/GOLD_EVAL.md)
+# frozen measured values (tools/freeze_gold_eval.py; GOLD_EVAL.md)
 EXPECTED_CUSTOM = {
     ("span", "strict"): (27, 1931, 177),
     ("rel", "strict"): (0, 105, 87),
@@ -53,10 +53,14 @@ def test_per_doc_counts_sum_to_totals(spark, custom_eval):
 def test_fixtures_match_live(custom_eval):
     """The committed fixtures (DuckDB oracle inputs) must equal a live
     recompute — guards against stale fixtures after model changes."""
+    import os
+
     import pandas as pd
 
+    from causalre_spark import FIXTURES_DIR
+
     frozen = pd.read_parquet(
-        "/root/repo/fixtures/gold_eval/custom_pred_spans.parquet")
+        os.path.join(FIXTURES_DIR, "gold_eval", "custom_pred_spans.parquet"))
     got = custom_eval["pred_spans"].toPandas()
     key = ["url", "start", "end", "type"]
     assert (sorted(map(tuple, frozen[key].values.tolist()))

@@ -7,22 +7,24 @@ integer weight-dict equality proves the distributed fit (sharding,
 per-epoch applyInPandas, delta aggregation, exact //P mixing, running
 average) computes precisely the published IPM recipe, and exact span-set
 equality proves the Arrow decode UDF matches the scalar decoder. The F1
-gates pin the BENCH/GOLD_EVAL.md perceptron rows against silent fixture
+gates pin the GOLD_EVAL.md perceptron rows against silent fixture
 or code drift."""
 
 from __future__ import annotations
 
 import collections
+import os
 from collections import defaultdict
 
 import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from causalre_spark import FIXTURES_DIR
 from causalre_spark.operators import perceptron as PT
 
-FIX = "/root/repo/fixtures/gazetteer"
-PT_FIX = "/root/repo/fixtures/perceptron"
+FIX = os.path.join(FIXTURES_DIR, "gazetteer")
+PT_FIX = os.path.join(FIXTURES_DIR, "perceptron")
 
 _STATES = ["O", "B", "I", "E", "S"]
 _SI = {s: i for i, s in enumerate(_STATES)}
@@ -622,10 +624,9 @@ def test_ptron_shape_engine_twins_exact(spark):
 @pytest.mark.parametrize("ds,floor", [("conll04", 0.45), ("custom", 0.15)])
 def test_rel_perceptron_quality_gate(spark, ds, floor):
     """The oracle-gated all-perceptron eval clears the GOLD_EVAL.md rel
-    F1 floor (the recorded test F1s live in the BENCH/GOLD_EVAL.md
-    tables — REL_EXTRAS selected on val by tools/sweep_rel_feats.py +
-    val_rel_ab.py and re-confirmed under the gaz span chain; every
-    selection signal is val/CV only, never test)."""
+    F1 floor (the recorded test F1s live in the GOLD_EVAL.md tables —
+    REL_EXTRAS selected on val and re-confirmed under the gaz span
+    chain; every selection signal is val/CV only, never test)."""
     from causalre_spark.plans.entry_queries import QUERIES
 
     rows = {r.task: r for r in
@@ -637,7 +638,7 @@ def test_rel_perceptron_quality_gate(spark, ds, floor):
 def test_frozen_weights_quality_gate(spark, ds, floor):
     """Decode under the FROZEN weights reproduces the frozen prediction
     fixture exactly (catches stale fixtures after operator changes) and
-    clears the BENCH/GOLD_EVAL.md strict span F1 floor."""
+    clears the GOLD_EVAL.md strict span F1 floor."""
     W, Wt = PT.load_frozen_weights(f"{PT_FIX}/{ds}_weights.parquet")
     docs = spark.read.parquet(f"{FIX}/{ds}_test.parquet")
     got = {(r["url"], r["start"], r["end"])

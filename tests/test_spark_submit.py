@@ -28,18 +28,22 @@ def _spark_submit() -> str | None:
     return cand if os.path.exists(cand) else None
 
 
-def test_spark_submit_py_files_end_to_end(tmp_path):
+def _submit_setup(tmp_path):
+    """(spark-submit launcher, package zip, env without PYTHONPATH)."""
     submit = _spark_submit()
     if submit is None:  # pragma: no cover
         pytest.skip("spark-submit launcher not available")
-
-    zip_base = str(tmp_path / "causalre_spark_pkg")
-    zip_path = shutil.make_archive(zip_base, "zip", root_dir=REPO,
-                                   base_dir="causalre_spark")
-    out = str(tmp_path / "kg_run")
+    zip_path = shutil.make_archive(str(tmp_path / "causalre_spark_pkg"), "zip",
+                                   root_dir=REPO, base_dir="causalre_spark")
     env = dict(os.environ)
     env.pop("PYTHONPATH", None)  # the zip alone must satisfy imports
     env["PYSPARK_PYTHON"] = env["PYSPARK_DRIVER_PYTHON"] = sys.executable
+    return submit, zip_path, env
+
+
+def test_spark_submit_py_files_end_to_end(tmp_path):
+    submit, zip_path, env = _submit_setup(tmp_path)
+    out = str(tmp_path / "kg_run")
     cmd = [submit, "--master", "local[4]",
            "--conf", "spark.sql.shuffle.partitions=4",
            "--conf", "spark.driver.memory=3g",
@@ -67,3 +71,39 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
     summary2 = json.loads(
         [ln for ln in r2.stdout.splitlines() if ln.startswith("{")][-1])
     assert summary2["triples"] == summary["triples"]
+
+
+PROBE = """
+import json
+from causalre_spark.session import get_spark
+
+spark = get_spark(app="java_opts_probe", cores=2)
+conf = spark.sparkContext.getConf()
+print(json.dumps({
+    "driver": conf.get("spark.driver.extraJavaOptions", ""),
+    "executor": conf.get("spark.executor.extraJavaOptions", ""),
+    "probe_prop": spark._jvm.java.lang.System.getProperty("sparkcre.probe"),
+}))
+"""
+
+
+def test_spark_submit_keeps_submitted_java_options(tmp_path):
+    """get_spark appends its JIT flag to the java options a submit
+    already configured instead of replacing them."""
+    submit, zip_path, env = _submit_setup(tmp_path)
+    probe = tmp_path / "probe.py"
+    probe.write_text(PROBE)
+    cmd = [submit, "--master", "local[2]",
+           "--conf", "spark.driver.memory=1g",
+           "--conf", "spark.driver.extraJavaOptions=-Dsparkcre.probe=1",
+           "--conf", "spark.executor.extraJavaOptions=-Dcausalre.exec=1",
+           "--py-files", zip_path, str(probe)]
+    r = subprocess.run(cmd, capture_output=True, text=True, timeout=300,
+                       cwd=str(tmp_path), env=env)
+    assert r.returncode == 0, r.stderr[-4000:]
+    got = json.loads(
+        [ln for ln in r.stdout.splitlines() if ln.startswith("{")][-1])
+    assert got["probe_prop"] == "1"  # the submitted option reached the JVM
+    driver, executor = got["driver"].split(), got["executor"].split()
+    assert {"-Dsparkcre.probe=1", "-XX:-DontCompileHugeMethods"} <= set(driver), got
+    assert {"-Dcausalre.exec=1", "-XX:-DontCompileHugeMethods"} <= set(executor), got

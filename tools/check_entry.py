@@ -1,8 +1,7 @@
-"""Driver-mimicking checker: run every __spark_entry__ query at a given
-sf and compare against its DuckDB oracle — row count, column names,
-and an order-insensitive value hash (columns sorted by name, rows
-sorted, floats rounded) — the same comparison shape the round driver
-records into CORRECTNESS_r{N}.json.
+"""Contract checker: run every __spark_entry__ query at a given sf and
+compare against its DuckDB oracle — row count, column names, and an
+order-insensitive value hash (columns sorted by name, rows sorted,
+floats rounded). perfbench's curation gate reuses value_hash.
 
 Usage: python tools/check_entry.py [sf_dir] [only_query ...]
 """

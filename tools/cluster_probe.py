@@ -2,20 +2,18 @@
 
 The north_rule asks for the pipeline "run via spark-submit --py-files on
 a multi-executor cluster at two cluster sizes (N and 4N executors)".
-bench.py evidences the scaling criterion with local[N] threads (per the
-driver's sandbox guidance); this probe goes one step closer to the real
-thing: Spark's local-cluster master spawns SEPARATE Worker/Executor
-JVMs with real netty shuffle transfer, executor-side python workers and
+Thread-based local[N] runs only approximate that; this probe goes one
+step closer to the real thing: Spark's local-cluster master spawns
+SEPARATE Worker/Executor JVMs with real netty shuffle transfer, executor-side python workers and
 per-executor heaps — the same execution topology as a standalone
 cluster, minus the network. We submit the exact cluster shape:
 
     spark-submit --master local-cluster[W,2,mem] \
                  --py-files causalre_spark.zip tools/cluster_probe.py ...
 
-at W=1 and W=4 executors (2 cores each -> 2 vs 8 total cores, the
-band BENCH/BASELINE.md shows is uncontended on this shared VM), same
-warm-then-timed protocol as bench.py's scaling_run, interleaved
-min-of-N. Results land in BENCH/CLUSTER.md.
+at W=1 and W=4 executors (2 cores each -> 2 vs 8 total cores), with a
+warm-then-timed protocol, interleaved min-of-N. Results land in
+BENCH/CLUSTER.md.
 
 Parent mode:  python tools/cluster_probe.py            (orchestrates)
 Child mode:   spark-submit ... tools/cluster_probe.py --child --corpus P
@@ -155,6 +153,7 @@ def main() -> None:
               "efficiency_extract_stage": round(eff_extract, 3),
               "all_runs": {"low": lo_runs, "high": hi_runs}}
     md = os.path.join(REPO, "BENCH", "CLUSTER.md")
+    os.makedirs(os.path.dirname(md), exist_ok=True)
     with open(md, "a" if args.append else "w") as f:
         if args.append:
             f.write(
@@ -168,7 +167,7 @@ def main() -> None:
                 "shipped via --py-files — the standalone-cluster execution "
                 "topology minus the network (tools/cluster_probe.py). Same "
                 "corpus, warm-then-timed protocol and interleaved min-of-"
-                f"{args.pairs} as bench.py's thread-based legs.\n\n")
+                f"{args.pairs}.\n\n")
         f.write(
             "| executors | total cores | pages | triples | secs | "
             "extract secs | tail secs | docs/sec |\n"

@@ -77,7 +77,7 @@ def main() -> None:
         pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), out)
         print(f"froze {out}: {len(pdf)} spans")
 
-        # measured scores -> BENCH/GOLD_EVAL.md addendum (strict via the
+        # measured scores -> GOLD_EVAL.md addendum (strict via the
         # oracle-gated query, loose via the shared A2 operators)
         from causalre_spark.plans.entry_queries import QUERIES
         strict = {r.task: r
@@ -106,14 +106,14 @@ def main() -> None:
                          f"| {round(prec, 4)} | {round(rec, 4)} "
                          f"| {round(f1, 4)} |")
         pred_s.unpersist()
-    md = os.path.join(REPO, "BENCH", "GOLD_EVAL.md")
+    md = os.path.join(REPO, "GOLD_EVAL.md")
     text = open(md).read()
     marker = "\n## Fitted HMM + NB extractor"
     if marker in text:
         text = text.split(marker)[0]
     with open(md, "w") as f:
         f.write(text.rstrip("\n") + "\n" + "\n".join(lines) + "\n")
-    print("updated BENCH/GOLD_EVAL.md")
+    print("updated GOLD_EVAL.md")
 
 
 if __name__ == "__main__":

@@ -46,7 +46,7 @@ def main() -> None:
             pq.write_table(tbl, os.path.join(FIX, f"{ds}_{split}.parquet"))
             print(f"froze {ds}/{split}: {tbl.num_rows} docs")
 
-    # measured gazetteer scores -> BENCH/GOLD_EVAL.md addendum
+    # measured gazetteer scores -> GOLD_EVAL.md addendum
     lines = [
         "",
         "## Gazetteer extractor (train-split-fitted decision surfaces)",
@@ -96,14 +96,14 @@ def main() -> None:
                          f"| {round(prec, 4)} | {round(rec, 4)} "
                          f"| {round(f1, 4)} |")
         pred_s.unpersist()
-    md = os.path.join(REPO, "BENCH", "GOLD_EVAL.md")
+    md = os.path.join(REPO, "GOLD_EVAL.md")
     text = open(md).read()
     marker = "\n## Gazetteer extractor"
     if marker in text:
         text = text.split(marker)[0]
     with open(md, "w") as f:
         f.write(text.rstrip("\n") + "\n" + "\n".join(lines) + "\n")
-    print("updated BENCH/GOLD_EVAL.md")
+    print("updated GOLD_EVAL.md")
     spark.stop()
 
 

@@ -1,4 +1,4 @@
-"""Freeze the gold-eval fixtures + write BENCH/GOLD_EVAL.md.
+"""Freeze the gold-eval fixtures + write GOLD_EVAL.md.
 
 For each reference dataset (custom, conll04) this runs the frozen
 reference-profile model over the test split once and writes:
@@ -17,7 +17,7 @@ algebra end-to-end. Deterministic by construction (md5-derived frozen
 weights; no RNG anywhere), so the fixtures are reproducible artifacts —
 rerun this tool after any model change and commit the diff.
 
-Also writes BENCH/GOLD_EVAL.md: measured strict/loose span+rel P/R/F1
+Also writes GOLD_EVAL.md: measured strict/loose span+rel P/R/F1
 per dataset next to the dissertation's trained-model numbers
 (BASELINE.md) — the honest quantification of the frozen stand-in gap.
 """
@@ -99,7 +99,7 @@ def main() -> int:
         "and the model UDF. Hash equality = loader + frozen model +",
         "matching algebra all reproduce.",
     ]
-    out = os.path.join(REPO, "BENCH", "GOLD_EVAL.md")
+    out = os.path.join(REPO, "GOLD_EVAL.md")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
     print("wrote", out)

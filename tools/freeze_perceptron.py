@@ -46,17 +46,17 @@ HEADER = [
     "twin and any executor count produce byte-identical weights).",
     "Features: token, shape, prev/next token+shape, 3-suffix, 2-prefix,",
     "two conjunctions; conll04 adds the suf4+wl+psh2 extra kinds at",
-    "70 epochs (two greedy rounds of the dual val+CV gate,",
-    "tools/cv_span_extras.py: round 1 suf4+wl val span F1 0.8105 ->",
+    "70 epochs (two greedy rounds of the dual val+CV gate:",
+    "round 1 suf4+wl val span F1 0.8105 ->",
     "0.8146 / 5-fold CV 0.8158 -> 0.8236; round 2 +psh2 val -> 0.8185",
     "/ CV -> 0.8244; nine custom arms across both rounds all fail a",
     "half and custom stays at the baseline families) and stacked",
     "CROSS-FIT gazetteer",
     "membership flags (('gz', B|I|E|S) from 5-fold doc_id%5 lexica in",
     "the fit, the full train∪val lexicon at decode — adopted under the",
-    "dual val+CV gate: val 0.800 -> 0.8105 (tools/exp_gaz_stack.py)",
-    "AND 5-fold CV over train∪val 0.8040 -> 0.8136",
-    "(tools/cv_gaz_check.py); custom rejected, val 0.4299 vs 0.4276.",
+    "dual val+CV gate: val 0.800 -> 0.8105",
+    "AND 5-fold CV over train∪val 0.8040 -> 0.8136;",
+    "custom rejected, val 0.4299 vs 0.4276.",
     "The conll04 TEST rows under each refreeze are recorded only in",
     "the frozen tables below — test is never a selection signal; both",
     "selection signals improve on ~5x more eval data and neither ever",
@@ -130,7 +130,7 @@ def main() -> None:
                        sout)
         print(f"froze {sout}: {len(pdf)} spans")
 
-        # measured scores -> BENCH/GOLD_EVAL.md addendum (strict via the
+        # measured scores -> GOLD_EVAL.md addendum (strict via the
         # oracle-gated query, loose via the shared A2 operators)
         from causalre_spark.plans.entry_queries import QUERIES
         strict = {r.task: r for r in
@@ -160,14 +160,14 @@ def main() -> None:
                          f"| {round(prec, 4)} | {round(rec, 4)} "
                          f"| {round(f1, 4)} |")
         pred_s.unpersist()
-    md = os.path.join(REPO, "BENCH", "GOLD_EVAL.md")
+    md = os.path.join(REPO, "GOLD_EVAL.md")
     text = open(md).read()
     marker = "\n## Averaged-perceptron span tagger"
     if marker in text:
         text = text.split(marker)[0]
     with open(md, "w") as f:
         f.write(text.rstrip("\n") + "\n" + "\n".join(lines) + "\n")
-    print("updated BENCH/GOLD_EVAL.md")
+    print("updated GOLD_EVAL.md")
 
 
 if __name__ == "__main__":

@@ -1,6 +1,6 @@
 """Freeze the relation perceptron's weights for the ptron_full_eval_*
 DuckDB oracles, and append the all-perceptron section to
-BENCH/GOLD_EVAL.md.
+GOLD_EVAL.md.
 
 Writes fixtures/perceptron/{ds}_rel_weights.parquet
 (kind, val, w_neg, w_fwd, w_bwd). Only the iterative FIT is frozen —
@@ -12,10 +12,9 @@ Selection protocol (never test): rel classifier chosen over the NB on
 the VAL splits by rel F1 over PREDICTED val spans from a train-only
 span fit (rel-ptron 0.361 vs NB 0.334 conll04; 0.222 vs 0.180 custom);
 epochs = perceptron.REL_EPOCHS from the same sweep; final weights refit
-on train ∪ val. The REL_EXTRAS kinds (val-selected greedy-forward,
-tools/sweep_rel_feats.py) are CONFIRMED by the CV half of the dual
-gate (tools/cv_rel_extras.py, 5-fold over train∪val, deployment-
-matched chain INCLUDING the adopted suf4+wl+psh2 conll04 span
+on train ∪ val. The REL_EXTRAS kinds (val-selected greedy-forward)
+are CONFIRMED by the CV half of the dual gate (5-fold over
+train∪val, deployment-matched chain INCLUDING the adopted suf4+wl+psh2 conll04 span
 config): conll04 base 0.4431 -> shipped 0.4627, custom 0.1759 ->
 0.1782 — both arms improve, adoption stands (the confirmation also
 held under the two earlier span configs: 0.4301 -> 0.4480 and
@@ -44,12 +43,12 @@ HEADER = [
     "pair-adjacent and span-edge tokens/shapes/widths) plus a bias",
     "feature and the dataset's val-selected extra kinds",
     "(perceptron.REL_EXTRAS: conll04 tbow/hltl/hbow/tf, custom",
-    "hfsh+tfsh/hf/fl — greedy-forward over tools/sweep_rel_feats.py's",
-    "candidate set re-swept under the adopted suf4+wl+psh2 span",
-    "config, dual-gated val+CV by tools/rel_dual_check.py (conll04",
+    "hfsh+tfsh/hf/fl — greedy-forward over a candidate",
+    "set re-swept under the adopted suf4+wl+psh2 span",
+    "config, dual-gated val+CV (conll04",
     "val 0.4180 -> 0.4198 / CV 0.4627 -> 0.4674 @40; custom val",
     "0.2345 -> 0.2429 / CV 0.1759 -> 0.1781, epochs 30 -> 40) and",
-    "confirmed by the production-exact tools/val_rel_ab.py A/B",
+    "confirmed by a production-exact A/B",
     "(prior -> selected: conll04 0.4000 -> 0.4141, custom 0.2378 ->",
     "0.2411)), fitted with the same exact",
     "scaled-integer IPM as the span tagger. Selection on VAL by rel",
@@ -135,14 +134,14 @@ def main() -> None:
                          f"| {round(prec, 4)} | {round(rec, 4)} "
                          f"| {round(f1, 4)} |")
         pred_s.unpersist()
-    md = os.path.join(REPO, "BENCH", "GOLD_EVAL.md")
+    md = os.path.join(REPO, "GOLD_EVAL.md")
     text = open(md).read()
     marker = "\n## All-perceptron extractor"
     if marker in text:
         text = text.split(marker)[0]
     with open(md, "w") as f:
         f.write(text.rstrip("\n") + "\n" + "\n".join(lines) + "\n")
-    print("updated BENCH/GOLD_EVAL.md")
+    print("updated GOLD_EVAL.md")
 
 
 if __name__ == "__main__":

@@ -8,7 +8,7 @@ counts per scale factor, and statistically matched distributions
 rate, unit-norm embeddings, TPC-H-ish columns). Correctness is still
 gated on the real driver data at sf0.01 via the DuckDB oracles; this
 data is ONLY for before/after timing at the driver's measured scale
-(BENCH_r05.json recorded "sf": 1.0).
+(sf 1.0).
 
 Usage: python tools/gen_scaled_data.py --sf 1.0 --out /root/sfgen/sf1.0
 """

@@ -1,7 +1,7 @@
 """Shuffle-volume audit: run the full pipeline on a corpus and report
 per-stage shuffle read/write bytes from the Spark status REST API.
 
-Motivation (SCALE_MODEL.md, BENCH/CLUSTER.md): the scale argument for
+Motivation: the scale argument for
 the tail (linking + CC + canonical triples) is that its SHUFFLE VOLUME
 grows linearly in pages while the extract stage is map-only (zero
 shuffle), so at production scale the job is compute-bound in extract
