@@ -77,7 +77,7 @@ def minhash_lsh_pairs(
     """Candidate near-dup id pairs (id_a < id_b) via MinHash-LSH banding.
 
     max_bucket drops oversized band buckets before the quadratic
-    self-join — the same skew guard as linking.lsh_candidate_pairs: a
+    self-join — the same skew guard as linking._lsh_edges: a
     giant bucket is a non-discriminative collision (boilerplate/empty
     docs) that would explode to O(n²) pairs; true near-dups also collide
     in the other, small buckets, so recall is preserved.
@@ -182,8 +182,7 @@ def jaccard_verify(pairs: DataFrame, shingles: DataFrame, thd: float) -> DataFra
     collisions, which the DuckDB oracle reproduces identically (it
     hashes with the same expression).
 
-    Same physical shape as linking.verify_jaccard (see rationale there):
-    size prefilter before the explode-join — J >= t implies
+    Physical shape: size prefilter before the explode-join — J >= t implies
     min(n_a,n_b)/max(n_a,n_b) >= t; the 1e-4 slack keeps the filter
     exact-safe under the 4dp rounding of the reported jaccard
     (round-half-up can lift a true J of thd-5e-5 onto the threshold) — counts

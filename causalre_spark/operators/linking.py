@@ -6,24 +6,25 @@ with many variants, so triples must be keyed by canonical entity ids.
 
 Design (all DataFrame algebra, zero Python UDFs):
   1. normalize mention surface (portable SQL twin of functions.text.normalize)
-  2. char-k shingles, relationally (transform+sequence+substring, exploded)
-  3. MinHash signatures: one groupBy with n_hashes min() aggregates over
-     md5-derived portable hash families (functions.hashing)
-  4. LSH banding: band keys -> self-equi-join -> candidate pairs
-     (hash join on band key; the classic band trick keeps this linear-ish
-     instead of the quadratic all-pairs join)
-  5. exact Jaccard verification on collected shingle arrays
-  6. connected components: driver union-find for small graphs, else
+  2. per-form projection, no shuffle: md5-long of each distinct char-k
+     shingle, and the MinHash signature as array_min over Carter-Wegman
+     derivations of those hashes (functions.hashing)
+  3. LSH banding: band keys -> ONE exchange on (band, bkey); a window
+     count drops singleton and oversized buckets (lsh_max_bucket) before
+     the bucket members are collected
+  4. exact Jaccard verification inside each bucket over the BIGINT
+     shingle-hash arrays, then one distinct over the edge pairs
+  5. connected components: driver union-find for small graphs, else
      alternating large-star/small-star contraction (Kiveris et al.) with
      localCheckpoint() lineage cuts — O(log² n) rounds, diameter-free,
      loud failure if cc_max_iters exhausts before the star fixpoint
-  7. canonical id = min md5_long(form) in component (deterministic);
+  6. canonical id = min md5_long(form) in component (deterministic);
      canonical surface = the form carrying that minimum
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from causalre_spark.config import DEFAULT_CONFIG, PipelineConfig
@@ -68,172 +69,64 @@ def mention_form_map(mentions: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def form_shingles(forms: DataFrame, k: int, key: str = "form") -> DataFrame:
-    """(form, shingle) pairs — char k-shingles; short forms shingle to
-    themselves (matches functions.text.char_shingles).
+def _lsh_edges(fmap: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """Verified near-duplicate edges (form_a < form_b, BIGINT fids) over
+    the (form, fid) vocabulary, in exactly two shuffle exchanges.
 
-    `key` selects the column carried through as the output 'form' id
-    (the shingle text is always cut from the 'form' string column):
-    link_mentions passes key='fid' so every downstream shuffle joins on
-    a fixed-width BIGINT instead of the surface string."""
-    return forms.select(
-        F.col(key).alias("form"),
-        F.explode(
-            F.expr(
-                f"array_distinct(transform(sequence(1, greatest(1, length(form) - {k} + 1)),"
-                f" i -> substring(form, i, {k})))"
-            )
-        ).alias("shingle"),
-    )
-
-
-def minhash_signatures(shingles: DataFrame, n_hashes: int,
-                       base_col: str | None = None) -> DataFrame:
-    """form -> h0..h{n-1} minhash signature (one shuffle).
-
-    ONE md5 per shingle row projected as the base, then n_hashes cheap
-    Carter-Wegman integer derivations (functions.hashing rationale) —
-    the md5-per-row count is the dominant CPU constant of signature
-    computation at corpus scale.
-
-    base_col: name of an ALREADY-COMPUTED md5-long column to use as the
-    base hash (link_mentions materializes it once on the persisted
-    shingle frame and shares it with the jaccard-verify join keys —
-    signatures are bit-identical either way)."""
+    Everything that depends on one form string is a projection: the
+    md5-long of each distinct char-k shingle (`hs`, the same base hash
+    functions.text.minhash_signature uses) and the n_hashes Carter-Wegman
+    minima over it. The bands (dedup.band_key) then take ONE exchange on
+    (band, bkey): a window count applies the lsh_max_bucket skew guard
+    BEFORE anything is collected — an oversized bucket on a low-entropy
+    corpus is never materialized as one row — and the collect_list
+    aggregate reuses the window's hash partitioning. Pairs are emitted
+    inside each bucket and verified there: size prefilter (J >= t
+    implies min(n)/max(n) >= t), then exact Jaccard over the BIGINT
+    shingle-hash arrays (array_intersect on primitive arrays). The
+    second exchange is the distinct() over the edge pairs (a pair can
+    share several buckets)."""
     from causalre_spark.functions.hashing import cw_hash_sql
-
-    if base_col is None:
-        based = shingles.withColumn("_bh", F.expr(md5_long_sql_spark("shingle")))
-        base_col = "_bh"
-    else:
-        based = shingles
-    aggs = [
-        F.min(F.expr(cw_hash_sql(base_col, seed))).alias(f"h{seed}")
-        for seed in range(n_hashes)
-    ]
-    return based.groupBy("form").agg(*aggs)
-
-
-def lsh_candidate_pairs(
-    sigs: DataFrame, n_hashes: int, band_size: int, dedup: bool = True,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """LSH banding -> distinct candidate pairs (form_a < form_b).
-
-    Bands are emitted with one explode projection (not an n_bands-way
-    union) so the plan stays a single scan -> explode -> self-join.
-    max_bucket drops oversized buckets before the quadratic self-join —
-    the skew guard that keeps worst-case corpora (low-entropy text where
-    every form minhashes together) from exploding to O(n²) pairs."""
     from causalre_spark.operators.dedup import band_key
 
-    n_bands = n_hashes // band_size
-    # one BIGINT band key (dedup.band_key: injective packing at
-    # band_size <= 2, md5-long of the concat otherwise) instead of the
-    # h-value concat string — the banded table is shuffled three times
-    # under the max_bucket guard (sizes, semi-join, self-join), so the
-    # key width is paid on every one of them
-    band_structs = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            band_key([f"h{b * band_size + j}"
-                      for j in range(band_size)]).alias("bkey"),
-        )
-        for b in range(n_bands)
-    ])
-    banded = sigs.select("form", F.explode(band_structs).alias("bk")).select(
-        "form", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"))
-    if max_bucket:
-        sizes = banded.groupBy("band", "bkey").agg(F.count(F.lit(1)).alias("_n"))
-        banded = banded.join(
-            sizes.filter(F.col("_n") <= max_bucket).drop("_n"),
-            ["band", "bkey"], "left_semi")
-    a = banded.select("band", "bkey", F.col("form").alias("form_a"))
-    bb = banded.select("band", "bkey", F.col("form").alias("form_b"))
-    out = (
-        a.join(bb, ["band", "bkey"])
-        .filter(F.col("form_a") < F.col("form_b"))
-        .select("form_a", "form_b")
+    k, n_hashes, bsize = cfg.shingle_size, cfg.minhash_hashes, cfg.minhash_band_size
+    thd = cfg.link_jaccard_thd
+    shingles = (f"array_distinct(transform(sequence(1, greatest(1, length(form) - {k} + 1)),"
+                f" i -> substring(form, i, {k})))")
+    sigs = fmap.select(
+        "fid", F.expr(f"transform({shingles}, s -> {md5_long_sql_spark('s')})").alias("hs"),
+    ).select("fid", "hs", *[
+        F.expr(f"array_min(transform(hs, x -> {cw_hash_sql('x', i)}))").alias(f"h{i}")
+        for i in range(n_hashes)])
+    bands = F.array(*[
+        F.struct(F.lit(b).alias("band"),
+                 band_key([f"h{b * bsize + j}" for j in range(bsize)]).alias("bkey"))
+        for b in range(n_hashes // bsize)])
+    banded = (
+        sigs.select("fid", "hs", F.explode(bands).alias("bk"))
+        .select("fid", "hs", "bk.band", "bk.bkey")
+        .withColumn("_n", F.count(F.lit(1)).over(Window.partitionBy("band", "bkey")))
     )
-    # cross-band duplicates are harmless to downstream verification (it
-    # re-distincts) — dedup here only when the caller consumes raw pairs
-    return out.distinct() if dedup else out
-
-
-def verify_jaccard(
-    pairs: DataFrame, shingles: DataFrame, thd: float,
-    broadcast_max_forms: int = 200_000, n_forms: int | None = None,
-    cleanup: list | None = None,
-) -> DataFrame:
-    """Exact Jaccard via shared-shingle counting; keeps edges >= thd.
-
-    Explode-join formulation (same shape as dedup.jaccard_verify — the
-    one the 100-TB plan wants): distinct candidate pairs equi-join the
-    (form, shingle) stream on both endpoints, count shared shingles per
-    pair, and n_union = n_a + n_b - n_shared. Everything is codegen'd
-    hash joins + aggregates over narrow rows. The previous formulation
-    (broadcast collect_set arrays + array_intersect/array_union) builds
-    two SQLOpenHashSets and does ~|a|+|b| boxed element reads PER PAIR
-    in ArrayIntersect.nullSafeEval — interpreted, allocation-heavy, and
-    the hottest executor frames in thread dumps of the 2-core scaling
-    leg. Zero-overlap pairs drop out of the shared join, which is
-    correct for any thd > 0.
-
-    Pass n_forms when already known (kept for API compatibility; the
-    count side is a tiny broadcast either way). Frames persisted here
-    are appended to `cleanup` (if given) so the caller can unpersist
-    them after its terminal action — long sessions (run_sweep) must not
-    accumulate cached blocks.
-
-    Physical shape (measured on the 250k-page bench corpus, 8 cores —
-    1.07M LSH candidate pairs for 22k true edges, a 50:1 FP ratio):
-      * size prefilter FIRST: J(a,b) >= t implies min(|a|,|b|) /
-        max(|a|,|b|) >= t, so pairs failing the broadcast shingle-count
-        ratio check never reach the explode-join. Exact-safe (never
-        drops a true edge); prunes ~15% here, far more on corpora with
-        varied form lengths.
-      * counts are folded into the pre-join and CARRIED THROUGH the
-        groupBy — no post-aggregation join back to the count table.
-      * shuffle_hash hints on both shingle joins: Spark's default
-        sort-merge join sorts the ~25M-row pair×shingle stream twice;
-        the SMJ UnsafeExternalSorter's pointer-array growth was the
-        hottest frame in jstack samples of the scaling legs (and on
-        this VM each fresh sorter page pays slow first-touch
-        population). Build-side here is a shingle-stream partition,
-        uniformly keyed, which is exactly when SHJ beats SMJ."""
-    assert thd > 0.0, "explode-join verify requires a positive threshold"
-    counts = shingles.groupBy("form").agg(F.count(F.lit(1)).alias("n_sh"))
-    counts = counts.persist()
-    if cleanup is not None:
-        cleanup.append(counts)
-    # broadcast the count lookup only while the form vocabulary is known
-    # to be small; past the cap fall back to shuffled joins (AQE may
-    # still pick a broadcast at runtime from actual sizes)
-    small = n_forms is not None and n_forms <= broadcast_max_forms
-    ca = counts.select(F.col("form").alias("form_a"),
-                       F.col("n_sh").alias("n_a"))
-    cb = counts.select(F.col("form").alias("form_b"),
-                       F.col("n_sh").alias("n_b"))
-    p = (
-        pairs.select("form_a", "form_b").distinct()
-        .join(F.broadcast(ca) if small else ca, "form_a")
-        .join(F.broadcast(cb) if small else cb, "form_b")
-        .filter((F.least("n_a", "n_b") / F.greatest("n_a", "n_b")) >= thd)
+    keep = F.col("_n") >= 2
+    if cfg.lsh_max_bucket:
+        keep &= F.col("_n") <= cfg.lsh_max_bucket
+    buckets = (
+        banded.filter(keep)
+        .groupBy("band", "bkey")
+        .agg(F.collect_list(F.struct("fid", "hs")).alias("m"))
     )
-    shared = (
-        p.join(shingles.select(F.col("form").alias("form_a"), "shingle")
-               .hint("shuffle_hash"), "form_a")
-        .join(shingles.select(F.col("form").alias("form_b"), "shingle")
-              .hint("shuffle_hash"), ["form_b", "shingle"])
-        .groupBy("form_a", "form_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
+    pairs = buckets.select(F.expr(
+        "inline(flatten(transform(sequence(0, size(m) - 2), i ->"
+        " transform(slice(m, i + 2, size(m) - i - 1), y ->"
+        " named_struct('form_a', least(m[i].fid, y.fid),"
+        " 'form_b', greatest(m[i].fid, y.fid), 'ha', m[i].hs, 'hb', y.hs)))))"))
+    n_a, n_b = F.size("ha"), F.size("hb")
+    n_shared = F.size(F.array_intersect("ha", "hb"))
     return (
-        shared.withColumn("jaccard",
-                          F.col("n_shared")
-                          / (F.col("n_a") + F.col("n_b") - F.col("n_shared")))
-        .filter(F.col("jaccard") >= thd)
-        .select("form_a", "form_b", "jaccard")
+        pairs.filter(F.least(n_a, n_b) / F.greatest(n_a, n_b) >= thd)
+        .filter(n_shared / (n_a + n_b - n_shared) >= thd)
+        .select("form_a", "form_b")
+        .distinct()
     )
 
 
@@ -473,6 +366,7 @@ def link_forms_driver(forms: list[str], cfg: PipelineConfig = DEFAULT_CONFIG,
     from causalre_spark.functions.hashing import md5_long
     from causalre_spark.functions.text import (char_shingles, jaccard,
                                                minhash_signature)
+    from causalre_spark.operators.dedup import band_key_py
 
     forms = sorted(set(forms))
     sh = {f: char_shingles(f, cfg.shingle_size) for f in forms}
@@ -482,12 +376,14 @@ def link_forms_driver(forms: list[str], cfg: PipelineConfig = DEFAULT_CONFIG,
         sig = minhash_signature(sh[f], cfg.minhash_hashes)
         for band in range(n_bands):
             lo = band * cfg.minhash_band_size
-            key = (band, tuple(sig[lo:lo + cfg.minhash_band_size]))
+            # the distributed path's BIGINT band key, so a band_size > 2
+            # key collision merges the same buckets in every linker
+            key = (band, band_key_py(sig[lo:lo + cfg.minhash_band_size]))
             buckets.setdefault(key, []).append(f)
     edges: list[tuple[str, str]] = []
     for members in buckets.values():
         if cfg.lsh_max_bucket and len(members) > cfg.lsh_max_bucket:
-            continue  # same skew guard as lsh_candidate_pairs
+            continue  # same skew guard as _lsh_edges
         for i in range(len(members)):
             for j in range(i + 1, len(members)):
                 a, b = members[i], members[j]
@@ -508,13 +404,13 @@ def link_mentions(
 ) -> DataFrame:
     """Full linking stage: mentions -> (form, canonical_id, canonical_form).
 
-    forms/shingles are persisted: the distinct over the (much larger)
-    mention table must run once, not once per downstream consumer —
-    shingles alone is referenced three times (signatures + both sides of
-    the jaccard verification). All intermediates are unpersisted before
-    return: connected_components' output is materialized (driver
-    union-find or localCheckpoint), so nothing downstream re-reads them
-    — and long sweep sessions must not accumulate cached blocks.
+    forms and its (form, fid) projection are the only persisted
+    intermediates: the distinct over the (much larger) mention table must
+    run once, and fmap feeds the LSH edges (_lsh_edges), the CC node set
+    and the final fid -> form join. Both are unpersisted before return:
+    connected_components' output is materialized (driver union-find or
+    localCheckpoint), so nothing downstream re-reads them — and long
+    sweep sessions must not accumulate cached blocks.
 
     form_map: optional pre-built (text -> form) dictionary (the
     mention_form_map projection). The pipeline computes it ONCE and
@@ -530,7 +426,7 @@ def link_mentions(
         # adaptive small-vocabulary cutover (see link_forms_driver):
         # collecting |forms| short strings is a few MB; the whole
         # LSH/verify/CC/canonical chain on a vocabulary this size is
-        # otherwise ~50 tiny Spark jobs whose per-job scheduling latency
+        # otherwise ~20 tiny Spark jobs whose per-job scheduling latency
         # (measured ~150-250 ms each on this host) dominates the actual
         # work at any parallelism — the classic small-side cutover.
         form_list = [r["form"] for r in forms.select("form").collect()]
@@ -539,42 +435,14 @@ def link_mentions(
         return spark.createDataFrame(
             link_forms_driver(form_list, cfg),
             "form string, canonical_id long, canonical_form string")
-    # Int-keyed chain: every shuffle from here to CC — the signature
-    # groupBy, the band self-join, the three jaccard-verify joins, the
-    # star contraction — keys on the 60-bit md5-derived fid (the SAME
-    # id canonical_entities/CC already use) instead of the surface
-    # string. Measured motivation: at 250k pages the verify explode-join
-    # alone moved ~26M rows of (form_a, form_b, shingle) string triples
-    # through 3 exchanges and took 200 s of the 8-core leg; fixed-width
-    # BIGINT keys shrink those rows ~4x and make every sort/compare an
-    # integer op. Surface strings re-enter only at the final canonical
-    # join over |forms| rows.
+    # Int-keyed chain: the bucket exchange, the edge distinct and the
+    # star contraction key on the 48-bit md5-derived fid (the SAME id
+    # canonical_entities/CC already use) instead of the surface string;
+    # surface strings re-enter only at the final canonical join over
+    # |forms| rows.
     fmap = forms.select(
         "form", F.expr(md5_long_sql_spark("form")).alias("fid")).persist()
-    # the md5-long of each shingle is computed ONCE on the persisted
-    # frame and shared by (a) the minhash base hash and (b) the
-    # jaccard-verify join keys — the verify joins then move only
-    # (BIGINT, BIGINT) rows instead of carrying the shingle string
-    # (identical edges modulo 64-bit md5 collisions between distinct
-    # shingles of one candidate pair, ~2^-64 per pair; the minhash
-    # signatures are bit-identical since md5 was already their base)
-    sh = form_shingles(fmap, cfg.shingle_size, key="fid").withColumn(
-        "_bh", F.expr(md5_long_sql_spark("shingle"))).persist()
-    # persisted: the banded plan under the max_bucket guard references the
-    # signature aggregation THREE times (bucket sizes + both self-join
-    # sides) — without the cache the 8-way minhash groupBy runs 3x
-    sigs = minhash_signatures(sh, cfg.minhash_hashes, base_col="_bh").persist()
-    cleanup: list[DataFrame] = [forms, fmap, sh, sigs]
-    # persisted: the candidate stream feeds jaccard verification, whose
-    # output (edges) is itself consumed twice by connected_components
-    # (count gate + collect/contract) — without the cache an eviction or
-    # re-reference recomputes the banded self-join from scratch
-    cands = lsh_candidate_pairs(sigs, cfg.minhash_hashes, cfg.minhash_band_size,
-                                dedup=False, max_bucket=cfg.lsh_max_bucket).persist()
-    cleanup.append(cands)
-    edges = verify_jaccard(
-        cands, sh.select("form", F.col("_bh").alias("shingle")),
-        cfg.link_jaccard_thd, n_forms=n_forms, cleanup=cleanup)
+    edges = _lsh_edges(fmap, cfg)
     labels_fid = connected_components(
         fmap.select(F.col("fid").alias("form")), edges, cfg.cc_max_iters,
         n_nodes=n_forms, keyed=True)
@@ -587,6 +455,6 @@ def link_mentions(
         .select("form", "component")
         .localCheckpoint()
     )
-    for df_ in cleanup:
-        df_.unpersist()
+    forms.unpersist()
+    fmap.unpersist()
     return canonical_entities(labels)

@@ -230,8 +230,9 @@ def link_entities(mentions: list[str], cfg: PipelineConfig) -> dict[str, tuple[i
         for band in range(n_bands):
             lo = band * cfg.minhash_band_size
             # band_key_py = exact twin of the Spark side's BIGINT band
-            # key (linking.lsh_candidate_pairs), so a band_size>2 hash
-            # collision merges the same buckets in both implementations
+            # key (linking._lsh_edges, also used by link_forms_driver), so
+            # a band_size>2 hash collision merges the same buckets in
+            # every implementation
             key = (band, band_key_py(sig[f][lo : lo + cfg.minhash_band_size]))
             buckets[key].append(f)
     adj: dict[str, set[str]] = defaultdict(set)

@@ -240,3 +240,78 @@ def test_form_map_sharing_parity(spark):
         kept, rels, entities, form_map=rawmap).collect()}
     assert t_base == t_shared and len(t_shared) == 2
     rawmap.unpersist(); entities.unpersist()
+
+
+def _oracle_mentions(n_pages: int) -> list[str]:
+    from causalre_spark.oracle.pipeline import oracle_pipeline
+    from causalre_spark.sources.corpus import gen_page
+
+    out = oracle_pipeline([gen_page(i) for i in range(n_pages)])
+    return [s["text"] for s in out["spans"]]
+
+
+def _oversized_buckets(forms: list[str], cfg) -> int:
+    """LSH buckets with more than cfg.lsh_max_bucket members."""
+    from collections import Counter
+
+    from causalre_spark.functions.text import char_shingles, minhash_signature
+    from causalre_spark.operators.dedup import band_key_py
+
+    bs = cfg.minhash_band_size
+    sizes = Counter()
+    for f in forms:
+        sig = minhash_signature(char_shingles(f, cfg.shingle_size), cfg.minhash_hashes)
+        for band in range(cfg.minhash_hashes // bs):
+            sizes[(band, band_key_py(sig[band * bs:(band + 1) * bs]))] += 1
+    return sum(1 for n in sizes.values() if n > cfg.lsh_max_bucket)
+
+
+def test_linkers_agree_on_extracted_vocabulary(spark):
+    """Distributed link_mentions, link_forms_driver and the oracle's
+    link_entities assign identical labels on a real extracted vocabulary
+    (multi-member buckets, many edges) — at the default lsh_max_bucket
+    and at a cap small enough that oversized buckets are dropped."""
+    from dataclasses import replace
+
+    from causalre_spark.functions.text import normalize
+    from causalre_spark.operators.linking import link_forms_driver
+
+    mentions = _oracle_mentions(300)
+    forms = sorted({normalize(m) for m in mentions} - {""})
+    df = spark.createDataFrame([(m,) for m in mentions], "text string")
+    for max_bucket in (DEFAULT_CONFIG.lsh_max_bucket, 3):
+        cfg = replace(DEFAULT_CONFIG, lsh_max_bucket=max_bucket,
+                      link_driver_max_forms=0)
+        if max_bucket == 3:
+            assert _oversized_buckets(forms, cfg) > 0
+        dist = {r["form"]: (r["canonical_id"], r["canonical_form"])
+                for r in link_mentions(df, cfg).collect()}
+        drv = {f: (cid, cf) for f, cid, cf in link_forms_driver(forms, cfg)}
+        assert len(dist) == len(forms)
+        assert len(set(dist.values())) < len(forms)  # some forms merged
+        assert dist == drv == link_entities(mentions, cfg)
+
+
+def test_lsh_edges_plan_has_two_exchanges(spark):
+    """Regression lock for the linking job count: forms -> verified
+    edges shuffles exactly twice — once on the LSH bucket (band, bkey),
+    whose window count and collect_list share the partitioning, and once
+    for the edge distinct — with no join anywhere."""
+    import io
+    import re
+    from contextlib import redirect_stdout
+
+    from causalre_spark.functions.hashing import md5_long
+    from causalre_spark.operators.linking import _lsh_edges
+
+    fmap = spark.createDataFrame(
+        [(f, md5_long(f)) for f in ("heavy rain", "heavy rains", "budget cuts")],
+        "form string, fid long")
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        _lsh_edges(fmap, DEFAULT_CONFIG).explain()
+    plan = buf.getvalue()
+    keys = [re.sub(r"#\d+L?", "", k) for k in
+            re.findall(r"Exchange hashpartitioning\((.*?), \d+\)", plan)]
+    assert sorted(keys) == ["band, bkey", "form_a, form_b"], plan
+    assert "Join" not in plan, plan
