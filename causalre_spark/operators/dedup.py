@@ -4,16 +4,20 @@ Exact, MinHash-LSH, SimHash, and n-gram-Jaccard dedup over a document
 table — all pure DataFrame algebra on portable md5-derived hashes
 (functions.hashing), so each has an exact DuckDB oracle.
 
-Scale notes: every stage shuffles on content-derived keys (hash groups,
-LSH band keys, simhash blocks) — uniform by construction, no key skew.
-The LSH band join is the classic linear-ish alternative to the O(n²)
-all-pairs similarity join; the simhash block join bounds candidate pairs
-to same-block collisions.
+Scale notes: the shuffles key on content-derived values (hash groups,
+LSH band keys, simhash blocks) — uniform by construction, except for
+the low-entropy LSH buckets that :func:`lsh_bucket_pairs` caps before
+anything is collected. LSH banding is the classic linear-ish
+alternative to the O(n²) all-pairs similarity join: candidates are
+emitted and verified inside each (band, bkey) bucket, one exchange for
+the buckets and one for the pair distinct. Entity linking
+(linking._lsh_edges) runs on the same core. The simhash block join
+bounds candidate pairs to same-block collisions.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from causalre_spark.functions.hashing import md5_long_sql_spark
@@ -36,14 +40,28 @@ def exact_dedup_keepers(docs: DataFrame, key_col: str = "text",
     )
 
 
+def _doc_tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, _toks): the normalized token array of each doc, over the
+    spread input (functions.partitions: the n-gram fan-out multiplies
+    each doc row ~50x and the sf tables arrive as one unsplittable
+    parquet row group)."""
+    norm = NORMALIZE_SQL.format(x=text_col)
+    return spread(docs).select(
+        F.col(id_col).alias("id"),
+        F.expr(f"split({norm}, ' ')").alias("_toks"),
+    )
+
+
+def _word_ngrams_sql(n: int) -> str:
+    """Distinct word n-grams of ``_toks`` (a doc shorter than n yields
+    its whole token string once)."""
+    return (f"array_distinct(transform(sequence(1, greatest(1, size(_toks) - {n - 1})),"
+            f" i -> concat_ws(' ', slice(_toks, i, {n}))))")
+
+
 def word_shingles(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
                   text_col: str = "text") -> DataFrame:
     """(id, shingle) distinct word n-grams of the normalized text.
-
-    The input is spread to the session's parallelism first: the
-    normalize + split + n-gram fan-out multiplies each doc row ~50x,
-    and the driver tables arrive as one unsplittable parquet row group
-    (functions.partitions rationale).
 
     The token array is materialized as its OWN projection before the
     n-gram lambda (the repetition_row_signals discipline): a
@@ -53,89 +71,93 @@ def word_shingles(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
     multiply-referenced and non-cheap, so CollapseProject keeps the
     split to exactly one evaluation per row; the emitted shingles are
     the identical strings."""
-    norm = NORMALIZE_SQL.format(x=text_col)
-    base = spread(docs).select(
-        F.col(id_col).alias("id"),
-        F.expr(f"split({norm}, ' ')").alias("_toks"),
-    )
-    return base.select(
-        "id",
-        F.explode(
-            F.expr(
-                f"array_distinct(transform(sequence(1, greatest(1, size(_toks) - {n - 1})),"
-                f" i -> concat_ws(' ', slice(_toks, i, {n}))))"
-            )
-        ).alias("shingle"),
-    )
+    return _doc_tokens(docs, id_col, text_col).select(
+        "id", F.explode(F.expr(_word_ngrams_sql(n))).alias("shingle"))
 
 
-def minhash_lsh_pairs(
-    shingles: DataFrame, n_hashes: int, band_size: int,
-    max_bucket: int | None = 200, cleanup: list | None = None,
-    base_col: str | None = None,
-) -> DataFrame:
-    """Candidate near-dup id pairs (id_a < id_b) via MinHash-LSH banding.
+def lsh_bucket_pairs(sets: DataFrame, n_hashes: int, band_size: int,
+                     max_bucket: int | None, thd: float) -> DataFrame:
+    """MinHash-LSH candidate pairs with their set sizes and overlap, in
+    ONE shuffle exchange: the shared core of near-dup document dedup
+    (:func:`minhash_near_dups`) and entity linking (linking._lsh_edges).
 
-    max_bucket drops oversized band buckets before the quadratic
-    self-join — the same skew guard as linking._lsh_edges: a
-    giant bucket is a non-discriminative collision (boilerplate/empty
-    docs) that would explode to O(n²) pairs; true near-dups also collide
-    in the other, small buckets, so recall is preserved.
+    Input: one (id BIGINT, hs array<BIGINT>) row per item, hs the
+    md5-long hashes of its distinct shingles. Output: (id_a < id_b, n_a, n_b, n_shared)
+    per pair sharing a bucket, NOT deduplicated (a pair can share
+    several bands) — callers apply their exact threshold and a distinct.
 
-    ``base_col`` names a precomputed md5-long base-hash column so the
-    caller can evaluate one md5 per shingle row on a persisted frame and
-    share it with the jaccard-verify join keys (the linking.py
-    int-keyed-chain discipline, link_mentions rationale).
-
-    Shuffle width: the band key is a single BIGINT, not the h-value
-    concat string — for band_size 2 the exact positional packing
-    h_i * 2^31 + h_j (CW values are < 2^31 - 1, so this is injective
-    and < 2^62), else the md5-long of the concat (identical expression
-    in the DuckDB oracle, so hash collisions — which could only MERGE
-    buckets — are engine-identical). The bucket-size guard, the
-    semi-join and the band self-join all shuffle (int, long) rows.
-
-    Frames persisted here are appended to `cleanup` (if given) so the
-    caller can unpersist after its terminal action — otherwise cached
-    blocks accumulate across a long session (LRU-evicted under memory
-    pressure, but explicit release is the scale-correct habit)."""
-    # one md5 per shingle row + cheap CW derivations (hashing.py rationale)
+    Everything that depends on one item is a projection: the n_hashes
+    Carter-Wegman minima over hs and the band keys (:func:`band_key`).
+    The bands take ONE exchange on (band, bkey): a window count drops
+    singleton buckets and, when max_bucket is set, oversized ones BEFORE
+    anything is collected — a giant bucket is a non-discriminative
+    collision (boilerplate/empty docs) that would emit O(n²) pairs, and
+    true near-dups also collide in other, small buckets. The
+    collect_list aggregate reuses the window's hash partitioning.
+    Pairs are emitted inside each bucket; the size prefilter (J >= t
+    implies min(n)/max(n) >= t) keeps 1e-4 of slack so a caller that
+    reports a 4dp-rounded Jaccard (round-half-up can lift a true J of
+    t - 5e-5 onto t) loses no pair to it. n_shared is array_intersect
+    over the primitive hash arrays."""
     from causalre_spark.functions.hashing import cw_hash_sql
 
-    if base_col is None:
-        based = shingles.withColumn(
-            "_bh", F.expr(md5_long_sql_spark("shingle")))
-        base_col = "_bh"
-    else:
-        based = shingles
-    aggs = [F.min(F.expr(cw_hash_sql(base_col, s))).alias(f"h{s}")
-            for s in range(n_hashes)]
-    sigs = based.groupBy("id").agg(*aggs)
-    if max_bucket:
-        # the guard makes the banded plan a 3-way consumer of the
-        # signature aggregation (sizes + both join sides) — cache it
-        sigs = sigs.persist()
-        if cleanup is not None:
-            cleanup.append(sigs)
-    n_bands = n_hashes // band_size
-    # one explode projection (single pass over sigs), BIGINT band keys
-    band_structs = F.array(*[
+    sigs = sets.select("id", "hs", *[
+        F.expr(f"array_min(transform(hs, x -> {cw_hash_sql('x', i)}))").alias(f"h{i}")
+        for i in range(n_hashes)])
+    bands = F.array(*[
         F.struct(F.lit(b).alias("band"),
-                 band_key([f"h{b * band_size + j}"
-                            for j in range(band_size)]).alias("bkey"))
-        for b in range(n_bands)
-    ])
-    banded = sigs.select("id", F.explode(band_structs).alias("bk")).select(
-        "id", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"))
+                 band_key([f"h{b * band_size + j}" for j in range(band_size)]).alias("bkey"))
+        for b in range(n_hashes // band_size)])
+    banded = (
+        sigs.select("id", "hs", F.explode(bands).alias("bk"))
+        .select("id", "hs", "bk.band", "bk.bkey")
+        .withColumn("_n", F.count(F.lit(1)).over(Window.partitionBy("band", "bkey")))
+    )
+    keep = F.col("_n") >= 2
     if max_bucket:
-        sizes = banded.groupBy("band", "bkey").agg(F.count(F.lit(1)).alias("_n"))
-        banded = banded.join(
-            sizes.filter(F.col("_n") <= max_bucket).drop("_n"),
-            ["band", "bkey"], "left_semi")
-    a = banded.select("band", "bkey", F.col("id").alias("id_a"))
-    b2 = banded.select("band", "bkey", F.col("id").alias("id_b"))
-    return (a.join(b2, ["band", "bkey"]).filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b").distinct())
+        keep &= F.col("_n") <= max_bucket
+    buckets = (
+        banded.filter(keep)
+        .groupBy("band", "bkey")
+        .agg(F.collect_list(F.struct("id", "hs")).alias("m"))
+    )
+    pairs = buckets.select(F.expr(
+        "inline(flatten(transform(sequence(0, size(m) - 2), i ->"
+        " transform(slice(m, i + 2, size(m) - i - 1), y ->"
+        " IF(m[i].id < y.id,"
+        " named_struct('id_a', m[i].id, 'id_b', y.id, 'ha', m[i].hs, 'hb', y.hs),"
+        " named_struct('id_a', y.id, 'id_b', m[i].id, 'ha', y.hs, 'hb', m[i].hs))))))"))
+    n_a, n_b = F.size("ha"), F.size("hb")
+    return (
+        pairs.filter(F.least(n_a, n_b) / F.greatest(n_a, n_b) >= thd - 1e-4)
+        .select("id_a", "id_b", n_a.alias("n_a"), n_b.alias("n_b"),
+                F.size(F.array_intersect("ha", "hb")).alias("n_shared"))
+    )
+
+
+def minhash_near_dups(docs: DataFrame, n: int, n_hashes: int, band_size: int,
+                      thd: float, max_bucket: int | None = 200) -> DataFrame:
+    """Verified near-dup doc pairs (id_a < id_b, jaccard) by MinHash-LSH
+    over distinct word n-grams of the normalized text; jaccard is the
+    exact set Jaccard over the shingle hashes, rounded to 4dp, kept at
+    >= thd.
+
+    One per-doc projection feeds :func:`lsh_bucket_pairs`: hs is the
+    md5-long of each distinct n-gram string (distinct on the strings,
+    so size(hs) is the doc's shingle count). Jaccard over the hashes
+    equals Jaccard over the strings modulo 48-bit md5 collisions, which
+    the DuckDB oracle reproduces (it hashes with the same expression).
+    Two exchanges: the (band, bkey) buckets and the pair distinct."""
+    sets = _doc_tokens(docs, "doc_id", "text").select(
+        "id", F.expr(f"transform({_word_ngrams_sql(n)}, s -> {md5_long_sql_spark('s')})")
+        .alias("hs"))
+    jac = F.round(F.col("n_shared") / (F.col("n_a") + F.col("n_b") - F.col("n_shared")), 4)
+    return (
+        lsh_bucket_pairs(sets, n_hashes, band_size, max_bucket, thd)
+        .select("id_a", "id_b", jac.alias("jaccard"))
+        .filter(F.col("jaccard") >= thd)
+        .distinct()
+    )
 
 
 def band_key(hcols: list) -> "F.Column":
@@ -165,59 +187,6 @@ def band_key_py(hvals) -> int:
     if len(hvals) == 2:
         return int(hvals[0]) * (1 << 31) + int(hvals[1])
     return md5_long("|".join(str(int(h)) for h in hvals))
-
-
-def jaccard_verify(pairs: DataFrame, shingles: DataFrame, thd: float) -> DataFrame:
-    """Exact n-gram Jaccard on candidate pairs (explode-join formulation —
-    no array collection, scales to large shingle sets).
-
-    The ``shingle`` column may be the md5-long BIGINT of the shingle
-    instead of the surface string — the joins and counts are
-    type-agnostic, and passing the precomputed base hash (the same
-    column minhash_lsh_pairs consumes via ``base_col``) shrinks the
-    pair×shingle shuffle rows to fixed-width (BIGINT, BIGINT) — the
-    linking.py int-keyed-chain rewrite, measured ~4× shuffle-row shrink
-    at 250k pages (linking.py link_mentions rationale). Jaccard over
-    the hashes equals Jaccard over the strings modulo 48-bit md5
-    collisions, which the DuckDB oracle reproduces identically (it
-    hashes with the same expression).
-
-    Physical shape: size prefilter before the explode-join — J >= t implies
-    min(n_a,n_b)/max(n_a,n_b) >= t; the 1e-4 slack keeps the filter
-    exact-safe under the 4dp rounding of the reported jaccard
-    (round-half-up can lift a true J of thd-5e-5 onto the threshold) — counts
-    folded through the groupBy, and shuffle_hash hints so the wide
-    pair×shingle stream is hash-joined instead of sorted twice. The
-    per-doc count table is NOT broadcast (doc ids are unbounded at
-    corpus scale, unlike linking's form vocabulary)."""
-    counts = shingles.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    p = (
-        pairs.join(counts.withColumnRenamed("id", "id_a")
-                   .withColumnRenamed("n_sh", "n_a"), "id_a")
-        .join(counts.withColumnRenamed("id", "id_b")
-              .withColumnRenamed("n_sh", "n_b"), "id_b")
-        .filter((F.least("n_a", "n_b") / F.greatest("n_a", "n_b"))
-                >= thd - 1e-4)
-    )
-    shared = (
-        p.join(shingles.withColumnRenamed("id", "id_a").hint("shuffle_hash"),
-               "id_a")
-        .join(shingles.withColumnRenamed("id", "id_b")
-              .withColumnRenamed("shingle", "shingle_b").hint("shuffle_hash"),
-              "id_b")
-        .filter(F.col("shingle") == F.col("shingle_b"))
-        .groupBy("id_a", "id_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    return (
-        shared.withColumn(
-            "jaccard",
-            F.round(F.col("n_shared") /
-                    (F.col("n_a") + F.col("n_b") - F.col("n_shared")), 4),
-        )
-        .filter(F.col("jaccard") >= thd)
-        .select("id_a", "id_b", "jaccard")
-    )
 
 
 def simhash16(docs: DataFrame, id_col: str = "doc_id",
@@ -274,8 +243,6 @@ def ngram_jaccard_pairs(
     Returns (id_a, id_b, n_shared, n_union) with id_a < id_b and
     thd_den * n_shared >= thd_num * n_union.
     """
-    from pyspark.sql import Window
-
     sizes = shingles.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     freq = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("id").orderBy(F.col("df").asc(), F.col("shingle").asc())

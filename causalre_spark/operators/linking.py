@@ -7,11 +7,13 @@ with many variants, so triples must be keyed by canonical entity ids.
 Design (all DataFrame algebra, zero Python UDFs):
   1. normalize mention surface (portable SQL twin of functions.text.normalize)
   2. per-form projection, no shuffle: md5-long of each distinct char-k
-     shingle, and the MinHash signature as array_min over Carter-Wegman
-     derivations of those hashes (functions.hashing)
-  3. LSH banding: band keys -> ONE exchange on (band, bkey); a window
-     count drops singleton and oversized buckets (lsh_max_bucket) before
-     the bucket members are collected
+     shingle
+  3. LSH banding in the core shared with document dedup
+     (dedup.lsh_bucket_pairs): MinHash signature as array_min over
+     Carter-Wegman derivations of those hashes (functions.hashing),
+     band keys -> ONE exchange on (band, bkey); a window count drops
+     singleton and oversized buckets (lsh_max_bucket) before the bucket
+     members are collected
   4. exact Jaccard verification inside each bucket over the BIGINT
      shingle-hash arrays, then one distinct over the edge pairs
   5. connected components: driver union-find for small graphs, else
@@ -24,7 +26,7 @@ Design (all DataFrame algebra, zero Python UDFs):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from causalre_spark.config import DEFAULT_CONFIG, PipelineConfig
@@ -73,59 +75,28 @@ def _lsh_edges(fmap: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Verified near-duplicate edges (form_a < form_b, BIGINT fids) over
     the (form, fid) vocabulary, in exactly two shuffle exchanges.
 
-    Everything that depends on one form string is a projection: the
-    md5-long of each distinct char-k shingle (`hs`, the same base hash
-    functions.text.minhash_signature uses) and the n_hashes Carter-Wegman
-    minima over it. The bands (dedup.band_key) then take ONE exchange on
-    (band, bkey): a window count applies the lsh_max_bucket skew guard
-    BEFORE anything is collected — an oversized bucket on a low-entropy
-    corpus is never materialized as one row — and the collect_list
-    aggregate reuses the window's hash partitioning. Pairs are emitted
-    inside each bucket and verified there: size prefilter (J >= t
-    implies min(n)/max(n) >= t), then exact Jaccard over the BIGINT
-    shingle-hash arrays (array_intersect on primitive arrays). The
-    second exchange is the distinct() over the edge pairs (a pair can
-    share several buckets)."""
-    from causalre_spark.functions.hashing import cw_hash_sql
-    from causalre_spark.operators.dedup import band_key
+    The per-form projection is the md5-long of each distinct char-k
+    shingle (`hs`, the same base hash functions.text.minhash_signature
+    uses); dedup.lsh_bucket_pairs, the core shared with document dedup,
+    bands it in ONE (band, bkey) exchange with the lsh_max_bucket cap
+    applied before anything is collected, and emits the in-bucket
+    candidate pairs with their shingle counts. The exact Jaccard check
+    follows, and the second exchange is the distinct() over the edge
+    pairs (a pair can share several buckets)."""
+    from causalre_spark.operators.dedup import lsh_bucket_pairs
 
-    k, n_hashes, bsize = cfg.shingle_size, cfg.minhash_hashes, cfg.minhash_band_size
-    thd = cfg.link_jaccard_thd
+    k, thd = cfg.shingle_size, cfg.link_jaccard_thd
     shingles = (f"array_distinct(transform(sequence(1, greatest(1, length(form) - {k} + 1)),"
                 f" i -> substring(form, i, {k})))")
-    sigs = fmap.select(
-        "fid", F.expr(f"transform({shingles}, s -> {md5_long_sql_spark('s')})").alias("hs"),
-    ).select("fid", "hs", *[
-        F.expr(f"array_min(transform(hs, x -> {cw_hash_sql('x', i)}))").alias(f"h{i}")
-        for i in range(n_hashes)])
-    bands = F.array(*[
-        F.struct(F.lit(b).alias("band"),
-                 band_key([f"h{b * bsize + j}" for j in range(bsize)]).alias("bkey"))
-        for b in range(n_hashes // bsize)])
-    banded = (
-        sigs.select("fid", "hs", F.explode(bands).alias("bk"))
-        .select("fid", "hs", "bk.band", "bk.bkey")
-        .withColumn("_n", F.count(F.lit(1)).over(Window.partitionBy("band", "bkey")))
-    )
-    keep = F.col("_n") >= 2
-    if cfg.lsh_max_bucket:
-        keep &= F.col("_n") <= cfg.lsh_max_bucket
-    buckets = (
-        banded.filter(keep)
-        .groupBy("band", "bkey")
-        .agg(F.collect_list(F.struct("fid", "hs")).alias("m"))
-    )
-    pairs = buckets.select(F.expr(
-        "inline(flatten(transform(sequence(0, size(m) - 2), i ->"
-        " transform(slice(m, i + 2, size(m) - i - 1), y ->"
-        " named_struct('form_a', least(m[i].fid, y.fid),"
-        " 'form_b', greatest(m[i].fid, y.fid), 'ha', m[i].hs, 'hb', y.hs)))))"))
-    n_a, n_b = F.size("ha"), F.size("hb")
-    n_shared = F.size(F.array_intersect("ha", "hb"))
+    sets = fmap.select(
+        F.col("fid").alias("id"),
+        F.expr(f"transform({shingles}, s -> {md5_long_sql_spark('s')})").alias("hs"))
+    pairs = lsh_bucket_pairs(sets, cfg.minhash_hashes, cfg.minhash_band_size,
+                             cfg.lsh_max_bucket, thd)
+    n_shared = F.col("n_shared")
     return (
-        pairs.filter(F.least(n_a, n_b) / F.greatest(n_a, n_b) >= thd)
-        .filter(n_shared / (n_a + n_b - n_shared) >= thd)
-        .select("form_a", "form_b")
+        pairs.filter(n_shared / (F.col("n_a") + F.col("n_b") - n_shared) >= thd)
+        .select(F.col("id_a").alias("form_a"), F.col("id_b").alias("form_b"))
         .distinct()
     )
 

@@ -355,21 +355,12 @@ FROM keyed GROUP BY content_key
 
 
 def q_dedup_minhash_lsh(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    # persisted: consumed by the signature aggregation AND both sides of
-    # the jaccard verification — without the cache the normalize+shingle
-    # projection over the full corpus runs three times. The md5-long
-    # base hash is computed ONCE here and shared by the minhash base and
-    # the verify join keys, so every downstream shuffle moves fixed-width
-    # BIGINTs instead of shingle strings (linking int-keyed-chain
-    # discipline; VERDICT r4 next-round #3).
-    sh = (dedup.word_shingles(docs, n=3)
-          .withColumn("_bh", F.expr(md5_long_sql_spark("shingle")))
-          .persist())
-    pairs = dedup.minhash_lsh_pairs(sh, n_hashes=6, band_size=2,
-                                    base_col="_bh")
-    return dedup.jaccard_verify(
-        pairs, sh.select("id", F.col("_bh").alias("shingle")), thd=0.3)
+    """(id_a, id_b, jaccard) verified near-dup pairs: word 3-grams,
+    6 hashes in 3 bands of 2, J >= 0.3 — the parameters every
+    _duck_minhash_cte(3, 6, 2) oracle spells. The two cluster queries
+    below build on it."""
+    return dedup.minhash_near_dups(_t(spark, sf_dir, "documents"),
+                                   n=3, n_hashes=6, band_size=2, thd=0.3)
 
 
 def q_dedup_near_clusters(spark, sf_dir):
@@ -390,14 +381,7 @@ def q_dedup_near_clusters(spark, sf_dir):
     the CC fixpoint (cc_components' oracle is the other)."""
     from causalre_spark.operators import linking
 
-    docs = _t(spark, sf_dir, "documents")
-    sh = (dedup.word_shingles(docs, n=3)
-          .withColumn("_bh", F.expr(md5_long_sql_spark("shingle")))
-          .persist())
-    pairs = dedup.jaccard_verify(
-        dedup.minhash_lsh_pairs(sh, n_hashes=6, band_size=2,
-                                base_col="_bh"),
-        sh.select("id", F.col("_bh").alias("shingle")), thd=0.3)
+    pairs = q_dedup_minhash_lsh(spark, sf_dir)
     edges = pairs.select(F.col("id_a").alias("form_a"),
                          F.col("id_b").alias("form_b"))
     nodes = (edges.select(F.col("form_a").alias("form"))
@@ -414,7 +398,7 @@ def q_dedup_near_clusters(spark, sf_dir):
 
 
 def _duck_band_key(hcols: list, band_size: int) -> str:
-    """DuckDB twin of dedup._band_key: exact positional BIGINT packing
+    """DuckDB twin of dedup.band_key: exact positional BIGINT packing
     for band_size <= 2 (CW values < 2^31 - 1), md5-long of the concat
     otherwise — identical expression family to the Spark side, so any
     hash collision merges the same buckets in both engines."""
@@ -427,10 +411,11 @@ def _duck_band_key(hcols: list, band_size: int) -> str:
 
 
 def _duck_minhash_cte(n: int, n_hashes: int, band_size: int) -> str:
-    # int-keyed twin of the Spark chain (q_dedup_minhash_lsh): the
-    # md5-long base hash is projected ONCE (shk), feeds the CW minhash
-    # aggregates AND the shared-shingle join keys; band keys are packed
-    # BIGINTs (_duck_band_key).
+    # explode-join spelling of dedup.minhash_near_dups, independent of
+    # the Spark side's in-bucket arrays: the md5-long base hash is
+    # projected ONCE (shk), feeds the CW minhash aggregates AND the
+    # shared-shingle join keys; band keys are packed BIGINTs
+    # (_duck_band_key); the bucket cap is a size join.
     from causalre_spark.functions.hashing import cw_hash_sql
 
     norm = NORMALIZE_SQL_DUCK.format(x="text")
@@ -547,23 +532,15 @@ def q_dedup_compaction(spark, sf_dir):
     min-id document per duplicate cluster. Output is the full per-doc
     verdict (doc_id, component, kept); a production run would semi-join
     `kept` back onto the corpus to write the surviving 10^12-doc table.
-    Composes three already-oracle-gated stages (LSH blocking with
-    bucket caps, explode-join Jaccard verify, star-contraction CC), so
+    Composes two already-oracle-gated stages (LSH blocking with bucket
+    caps and in-bucket Jaccard verify, star-contraction CC), so
     the gate here proves the COMPOSITION agrees cross-engine — the
     DuckDB oracle resolves the same clusters with a recursive-CTE
     transitive closure, a completely different CC algorithm."""
     from causalre_spark.operators.linking import _star_components
 
     docs = _t(spark, sf_dir, "documents")
-    # persisted: the shingle projection feeds the signature agg AND both
-    # Jaccard-verify sides (same 3-way fan-out as q_dedup_minhash_lsh)
-    sh = (dedup.word_shingles(docs, n=3)
-          .withColumn("_bh", F.expr(md5_long_sql_spark("shingle")))
-          .persist())
-    pairs = dedup.jaccard_verify(
-        dedup.minhash_lsh_pairs(sh, n_hashes=6, band_size=2,
-                                base_col="_bh"),
-        sh.select("id", F.col("_bh").alias("shingle")), thd=0.3)
+    pairs = q_dedup_minhash_lsh(spark, sf_dir)
     comp = _star_components(
         pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b")),
         max_iters=15, parts=8)

@@ -316,3 +316,79 @@ def test_remove_dup_substrings(spark):
     assert "alpha" not in got[1][2] and "alpha" not in got[3][2]
     assert got[4] == (5, 0, "unique words only here today")
     assert got[5] == (2, 0, "tiny doc")
+
+
+def _near_dup_docs():
+    """Low-entropy documents table: 210 copies of one boilerplate text
+    (one bucket per band over the cap of 200), 200 copies of another
+    (exactly at the cap, so kept), two one-word variants of the first
+    boilerplate, and six true near-duplicate pairs."""
+    words = [f"w{i}" for i in range(400)]
+    rows = [(i, "cookie notice accept all cookies to continue browsing this site")
+            for i in range(210)]
+    rows += [(1000 + i, "subscribe to our newsletter for weekly updates and offers")
+             for i in range(200)]
+    rows += [(2000, "cookie notice accept all cookies to continue browsing this page"),
+             (2001, "cookie banner accept all cookies to continue browsing this site")]
+    for p in range(6):
+        base = words[p * 40:p * 40 + 30]
+        rows.append((3000 + 2 * p, " ".join(base)))
+        rows.append((3001 + 2 * p, " ".join(base[:-2] + ["edit", str(p)])))
+    return rows
+
+
+def test_minhash_near_dups_plan_has_two_exchanges(spark):
+    """Regression lock for the dedup job count: docs -> verified pairs
+    shuffles exactly twice — once on the LSH bucket (band, bkey), whose
+    window-count cap and collect_list share the partitioning, and once
+    for the pair distinct — with no join anywhere (the shared core of
+    tests/test_linking.py::test_lsh_edges_plan_has_two_exchanges)."""
+    import io
+    import re
+    from contextlib import redirect_stdout
+
+    docs = spark.createDataFrame(_near_dup_docs(), "doc_id long, text string")
+    # as wide as the session, so spread() adds no round-robin exchange
+    assert docs.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        dedup.minhash_near_dups(docs, n=3, n_hashes=6, band_size=2,
+                                thd=0.3).explain()
+    plan = buf.getvalue()
+    keys = [re.sub(r"#\d+L?", "", k) for k in
+            re.findall(r"Exchange hashpartitioning\((.*?), \d+\)", plan)]
+    assert sorted(keys) == ["band, bkey", "id_a, id_b, jaccard"], plan
+    assert "Exchange" not in plan.replace("Exchange hashpartitioning", ""), plan
+    assert "Join" not in plan, plan
+
+
+def test_dedup_minhash_lsh_matches_oracle_past_the_bucket_cap(spark, tmp_path):
+    """dedup_minhash_lsh equals its DuckDB oracle on a table where the
+    lsh bucket cap decides the answer: the 210-copy boilerplate fills
+    buckets past 200 (dropped: without the cap Spark would emit its
+    21,945 pairs), the 200-copy one sits exactly at the cap (kept)."""
+    import duckdb
+    import pandas as pd
+
+    from causalre_spark.plans.entry_queries import (
+        SQL_DEDUP_MINHASH, _duck_minhash_cte, q_dedup_minhash_lsh)
+    from tools.check_entry import value_hash
+
+    pd.DataFrame(_near_dup_docs(), columns=["doc_id", "text"]).to_parquet(
+        tmp_path / "documents.parquet", index=False)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM "
+                f"'{tmp_path / 'documents.parquet'}'")
+    sizes = con.execute(f"WITH {_duck_minhash_cte(3, 6, 2)} "
+                        "SELECT max(n), count(*) FILTER (WHERE n = 200) "
+                        "FROM bsizes").fetchone()
+    assert sizes[0] > 200 and sizes[1] > 0, sizes
+    want = con.execute(SQL_DEDUP_MINHASH).df()
+    got = q_dedup_minhash_lsh(spark, str(tmp_path)).toPandas()
+    assert sorted(got.columns) == sorted(want.columns)
+    assert len(got) == len(want)
+    assert value_hash(got) == value_hash(want)
+    # the at-cap group (19,900 pairs) and the near-dup pairs both survive
+    ids = set(got["id_a"]) | set(got["id_b"])
+    assert {1000, 1199} <= ids and not ids & set(range(210))
+    assert len(ids & set(range(3000, 3012))) >= 6, sorted(ids & set(range(3000, 3012)))
