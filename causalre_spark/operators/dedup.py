@@ -75,6 +75,34 @@ def word_shingles(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
         "id", F.explode(F.expr(_word_ngrams_sql(n))).alias("shingle"))
 
 
+def word_ngram_hashes(docs: DataFrame, n: int, extra_cols: tuple = ()) -> DataFrame:
+    """(doc_id, *extra_cols, gh): one row per distinct word n-gram of
+    each doc's normalized text, gh its md5-long — word_shingles'
+    grams, hashed after the explode so the md5 runs in codegen.
+
+    explode_outer, not explode: the n-gram array is never NULL or empty
+    (a doc shorter than n yields its whole token string), so both emit
+    the same rows. But a plain explode of an array column lets Catalyst
+    infer a size(grams) > 0 filter and push it through the token
+    projection and below spread()'s exchange, where split(normalize(text))
+    is re-derived inside the n-gram lambda once per element; an outer
+    explode never infers it.
+
+    Not spread: the caller widens its input once, before all of its
+    per-doc work (spread() probes its input's partition count, and
+    under AQE that probe runs any exchange already in the input as a
+    job of its own)."""
+    norm = NORMALIZE_SQL.format(x="text")
+    return (
+        docs.select("doc_id", *extra_cols,
+                    F.expr(f"split({norm}, ' ')").alias("_toks"))
+        .select("doc_id", *extra_cols,
+                F.explode_outer(F.expr(_word_ngrams_sql(n))).alias("shingle"))
+        .select("doc_id", *extra_cols,
+                F.expr(md5_long_sql_spark("shingle")).alias("gh"))
+    )
+
+
 def lsh_bucket_pairs(sets: DataFrame, n_hashes: int, band_size: int,
                      max_bucket: int | None, thd: float) -> DataFrame:
     """MinHash-LSH candidate pairs with their set sizes and overlap, in

@@ -15,6 +15,13 @@ from causalre_spark.functions.partitions import spread
 from causalre_spark.functions.text import NORMALIZE_SQL
 
 
+def _norm_sql(text_col: str) -> str:
+    """normalize(text) with a NULL text spelled '' — the DuckDB twin's
+    spelling (functions.text_duck), so a NULL text yields the same
+    single empty token, and the same signals, on both engines."""
+    return f"coalesce({NORMALIZE_SQL.format(x=text_col)}, '')"
+
+
 def quality_scores(docs: DataFrame, id_col: str = "doc_id",
                    text_col: str = "text",
                    extra_cols: tuple = ()) -> DataFrame:
@@ -28,7 +35,7 @@ def quality_scores(docs: DataFrame, id_col: str = "doc_id",
     composing projections without a join)."""
     stop = "array('the','a','of','to','and','in','is','was')"
     # The token array is materialized once per row in its own
-    # projection (the repetition_row_signals discipline) — the previous
+    # projection (the repetition_stats discipline) — the previous
     # inline spelling evaluated split(normalize(text)) in FOUR sibling
     # expressions per row; the alias is multiply-referenced and
     # non-cheap, so CollapseProject keeps it to one evaluation. Same
@@ -40,7 +47,7 @@ def quality_scores(docs: DataFrame, id_col: str = "doc_id",
         F.col(id_col),
         *[F.col(c) for c in extra_cols],
         F.col(text_col),
-        F.expr(f"split({NORMALIZE_SQL.format(x=text_col)}, ' ')").alias("_toks"),
+        F.expr(f"split({_norm_sql(text_col)}, ' ')").alias("_toks"),
     )
     return base.select(
         F.col(id_col),
@@ -85,7 +92,8 @@ def fingerprints(docs: DataFrame, id_col: str = "doc_id",
 
 
 def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+                     text_col: str = "text",
+                     extra_cols: tuple = ()) -> DataFrame:
     """Gopher/MassiveText-style intra-document repetition signals
     (Rae et al. 2021, table A1 — public paper), adapted to word
     structure since the corpus text carries no line breaks:
@@ -98,26 +106,44 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
                           (top_bigram_frac <= 0.20 per the paper's
                           top-2-gram rule; dup_trigram_frac <= 0.60)
 
-    Scale shape: the n-gram families are per-doc array expressions
-    (whole-stage codegen); only the top-bigram argmax leaves the row —
-    an explode + two hash aggregations keyed by doc_id (uniform key,
-    map-side partial agg), no window. Tie-break for the top bigram is
-    (count desc, bigram desc) via max(struct(cnt, bigram)) so the
-    result is total-order deterministic under any partitioning.
-    """
-    norm = NORMALIZE_SQL.format(x=text_col)
-    base = spread(docs).select(
-        F.col(id_col),
-        F.expr(f"split({norm}, ' ')").alias("toks"),
-        F.length(F.expr(norm)).alias("n_norm_chars"),
+    A pure projection: every signal is a per-row array expression, so
+    it applies unchanged to a streaming frame and composes with the
+    other per-doc projections through `extra_cols` (passed through
+    unchanged) instead of a join. The top bigram is a fold over
+    array_sort(bigrams): equal bigrams are adjacent, the fold counts
+    each run and keeps the longest, and a tie goes to the later —
+    lexicographically larger — bigram, i.e. (count desc, bigram desc),
+    total-order deterministic and the DuckDB twin's tie-break. The
+    fold is a higher-order function (no codegen); it costs one sort of
+    the doc's bigrams.
+
+    A NULL text tokenizes like '' (one empty token), as the DuckDB
+    normalize twin coalesces NULL to ''."""
+    trunc5 = "floor(({x}) * 100000) / 100000"
+    # normalize runs once: its alias feeds both the split and the char
+    # count, so CollapseProject keeps it in its own projection
+    normed = docs.select(
+        F.col(id_col), *[F.col(c) for c in extra_cols],
+        F.expr(_norm_sql(text_col)).alias("_norm"),
+    )
+    # toks is materialized as its own projection step: the alias is
+    # non-cheap and multiply referenced, so CollapseProject will NOT
+    # inline it — without this the n-gram lambdas would re-evaluate
+    # split(normalize(text)) several times PER ELEMENT (measured:
+    # +1.6 ms/page, 8x the whole ungated extract stage at the fast
+    # profile).
+    base = normed.select(
+        id_col, *extra_cols,
+        F.expr("split(_norm, ' ')").alias("toks"),
+        F.length("_norm").alias("n_norm_chars"),
     )
     grams = base.select(
-        id_col, "n_norm_chars",
+        id_col, *extra_cols, "n_norm_chars",
         F.expr("size(toks)").cast("long").alias("n_words"),
         F.expr("size(array_distinct(toks))").cast("long").alias("n_distinct_words"),
         # sequence(1, n) is DESCENDING when n < 1, so guard short docs
         F.expr(
-            "case when size(toks) < 2 then array() else "
+            "case when size(toks) < 2 then cast(array() as array<string>) else "
             "transform(sequence(1, size(toks) - 1),"
             " i -> concat(toks[i-1], ' ', toks[i])) end"
         ).alias("bigrams"),
@@ -127,15 +153,15 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
             " i -> concat(toks[i-1], ' ', toks[i], ' ', toks[i+1])) end"
         ).alias("trigrams"),
     )
+    run = "if(b = acc.cur, acc.run + 1, 1L)"
     # fractions are FLOOR-truncated at 5dp (floor(x*1e5)/1e5) instead of
     # round()ed: both engines compute the same IEEE double for d/n, and
     # floor of that double is engine-independent, while round() goes
     # through Spark's BigDecimal/Double.toString path and can flip a
     # .xxxxx5 tie against DuckDB's C round (same trap quality_score's
     # 5dp comment documents — truncation removes the tie entirely).
-    trunc5 = "floor(({x}) * 100000) / 100000"
     per_doc = grams.select(
-        id_col, "n_norm_chars", "n_words",
+        id_col, *extra_cols, "n_norm_chars", "n_words",
         F.expr(trunc5.format(
             x="1.0 - n_distinct_words / greatest(n_words, 1)"))
         .alias("dup_word_frac"),
@@ -143,18 +169,17 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
             x="case when size(trigrams) = 0 then 0.0 else "
               "1.0 - size(array_distinct(trigrams)) / size(trigrams) end"))
         .alias("dup_trigram_frac"),
-        F.explode_outer("bigrams").alias("bigram"),
+        F.expr(
+            "aggregate(array_sort(bigrams),"
+            " named_struct('cur', cast(null as string), 'run', 0L,"
+            " 'bigram', cast(null as string), 'cnt', 0L),"
+            f" (acc, b) -> named_struct('cur', b, 'run', {run},"
+            f" 'bigram', if({run} >= acc.cnt, b, acc.bigram),"
+            f" 'cnt', greatest({run}, acc.cnt)))"
+        ).alias("t"),
     )
-    counts = (per_doc
-              .groupBy(id_col, "n_norm_chars", "n_words",
-                       "dup_word_frac", "dup_trigram_frac", "bigram")
-              .agg(F.count(F.lit(1)).alias("cnt")))
-    top = (counts
-           .groupBy(id_col, "n_norm_chars", "n_words",
-                    "dup_word_frac", "dup_trigram_frac")
-           .agg(F.max(F.struct(F.col("cnt"), F.col("bigram"))).alias("t")))
-    return top.select(
-        id_col, "n_words", "dup_word_frac", "dup_trigram_frac",
+    return per_doc.select(
+        id_col, *extra_cols, "n_words", "dup_word_frac", "dup_trigram_frac",
         F.col("t.bigram").alias("top_bigram"),
         F.when(F.col("t.bigram").isNull(), F.lit(0.0))
         .otherwise(F.expr(trunc5.format(
@@ -169,49 +194,12 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
 def repetition_row_signals(docs: DataFrame, id_col: str = "doc_id",
                            text_col: str = "text",
                            extra_cols: tuple = ()) -> DataFrame:
-    """Row-local subset of repetition_stats: dup_word_frac and
-    dup_trigram_frac with IDENTICAL values (same frozen expressions,
-    same 5dp floor-truncation), but NO aggregation — a pure projection,
-    so it applies unchanged to a STREAMING frame (stateless, no
-    watermark/state needed). top_bigram_frac is deliberately absent:
-    its codegen-friendly form is repetition_stats' explode + two hash
-    aggs (row-local HOF counting never participates in codegen), which
-    is the batch shape; the in-stream gate's discriminative power comes
-    from the dup fractions, and the full Gopher gate runs in the
-    periodic batch bridge (streaming/ingest.py module docstring)."""
-    norm = NORMALIZE_SQL.format(x=text_col)
-    trunc5 = "floor(({x}) * 100000) / 100000"
-    # toks is materialized as its own projection step, exactly like
-    # repetition_stats' `base`: the alias is non-cheap and multiply
-    # referenced, so CollapseProject will NOT inline it — without this
-    # the trigram lambda would re-evaluate split(normalize(text)) THREE
-    # TIMES PER ELEMENT (measured: +1.6 ms/page, 8x the whole ungated
-    # extract stage at the fast profile).
-    base = docs.select(
-        F.col(id_col), *[F.col(c) for c in extra_cols],
-        F.expr(f"split({norm}, ' ')").alias("toks"),
-    )
-    grams = base.select(
-        id_col, *extra_cols,
-        F.expr("size(toks)").cast("long").alias("n_words"),
-        F.expr("size(array_distinct(toks))")
-        .cast("long").alias("n_distinct_words"),
-        F.expr(
-            "case when size(toks) < 3 then cast(array() as array<string>) else "
-            "transform(sequence(1, size(toks) - 2),"
-            " i -> concat(toks[i-1], ' ', toks[i], ' ', toks[i+1])) end"
-        ).alias("trigrams"),
-    )
-    return grams.select(
-        id_col, *extra_cols, "n_words",
-        F.expr(trunc5.format(
-            x="1.0 - n_distinct_words / greatest(n_words, 1)"))
-        .alias("dup_word_frac"),
-        F.expr(trunc5.format(
-            x="case when size(trigrams) = 0 then 0.0 else "
-              "1.0 - size(array_distinct(trigrams)) / size(trigrams) end"))
-        .alias("dup_trigram_frac"),
-    )
+    """The streaming gate's subset of repetition_stats: n_words,
+    dup_word_frac and dup_trigram_frac, the same values from the same
+    projection. Column pruning drops the top-bigram sort and fold,
+    which the gate (streaming.curation_gate_stream) does not read."""
+    return repetition_stats(docs, id_col, text_col, extra_cols).select(
+        id_col, *extra_cols, "n_words", "dup_word_frac", "dup_trigram_frac")
 
 
 def quality_percentile_gate(docs: DataFrame, lo: float = 0.1,

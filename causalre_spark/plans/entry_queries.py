@@ -2675,49 +2675,75 @@ FROM t
 """
 
 
-def q_curation_verdict(spark, sf_dir):
+def curation_verdict(docs: DataFrame) -> DataFrame:
     """The composite per-doc curation decision a production corpus
     pipeline materializes before training: quality gate (5dp composite
     score), Gopher repetition gate, cross-doc duplicated-ngram gate,
     and benchmark-contamination gate, each as an explicit reason flag
     plus the final `keep` — so downstream can both filter and audit WHY
-    a doc was dropped. Thresholds chosen to split the synthetic corpus
-    non-vacuously (lowq ~10%, dup ~10%, repetitive ~2%; contamination
-    is all-clear on this corpus, which is itself the common real-world
-    outcome).
+    a doc was dropped. Docs with doc_id % 97 == 0 are the benchmark
+    slice (q_decontaminate); the verdict covers the others. Thresholds
+    chosen to split the synthetic corpus non-vacuously (lowq ~10%, dup
+    ~10%, repetitive ~2%; contamination is all-clear on this corpus,
+    which is itself the common real-world outcome).
 
-    Scale shape: every signal frame is keyed on doc_id, so after the
-    first shuffle the 4-way join is co-partitioned (AQE reuses the
-    exchange); the shingle projection is persisted once and feeds both
-    the cross-doc counts and the two contamination sides. All component
-    operators are themselves oracle-gated — this query proves their
-    COMPOSITION agrees cross-engine too."""
-    docs = _t(spark, sf_dir, "documents")
-    ev = docs.filter(F.col("doc_id") % 97 != 0)
-    sh = dedup.word_shingles(docs, n=4).persist()
-    q = textstats.quality_scores(ev).select(
-        "doc_id", (F.col("quality_score") < 0.72).alias("flag_lowq"))
-    r = textstats.repetition_stats(ev).select(
-        "doc_id", (~F.col("keep")).alias("flag_repetitive"))
-    cd = (
-        dedup.crossdoc_ngram_stats(sh)
-        .filter(F.col("doc_id") % 97 != 0)
-        .select("doc_id", (F.col("dup_frac") > 0.15).alias("flag_dup"))
+    Scale shape: two hash exchanges and no join.
+      - One per-doc projection over the spread docs: quality_scores ->
+        repetition_stats (both pure projections, chained through
+        extra_cols) -> the two row flags and the distinct word-4-gram
+        rows (dedup.word_ngram_hashes, one row per (doc, gram hash)).
+      - Exchange 1, on gh: a window count of the docs holding each
+        gram and whether a benchmark doc holds it. A hot boilerplate
+        gram is one large window partition, which sorts and spills; no
+        skewed join back, no broadcast, no collect_list.
+      - Exchange 2, on doc_id: the eval docs' gram rows fold into
+        n_grams, n_dup and n_overlap (dedup_crossdoc's and
+        decontaminate's counts) next to the carried row flags.
+    Equal to the join of the four operator queries, which is what the
+    DuckDB oracle computes."""
+    docs = spread(docs)
+    q = textstats.quality_scores(docs, extra_cols=("text",))
+    r = textstats.repetition_stats(q, extra_cols=("quality_score", "text"))
+    flags = r.select(
+        "doc_id", "text",
+        (F.col("quality_score") < 0.72).alias("flag_lowq"),
+        (~F.col("keep")).alias("flag_repetitive"),
     )
-    ct = dedup.contamination_stats(
-        sh.filter(F.col("id") % 97 != 0),
-        sh.filter(F.col("id") % 97 == 0),
-    ).select("doc_id", F.col("contaminated").alias("flag_contaminated"))
-    return (
-        q.join(r, "doc_id").join(cd, "doc_id").join(ct, "doc_id")
-        .select(
-            "doc_id", "flag_lowq", "flag_repetitive", "flag_dup",
-            "flag_contaminated",
-            (~(F.col("flag_lowq") | F.col("flag_repetitive")
-               | F.col("flag_dup") | F.col("flag_contaminated")))
-            .alias("keep"),
+    w = Window.partitionBy("gh")
+    grams = (
+        dedup.word_ngram_hashes(flags, n=4,
+                                extra_cols=("flag_lowq", "flag_repetitive"))
+        .select("doc_id", "flag_lowq", "flag_repetitive",
+                F.count(F.lit(1)).over(w).alias("n_docs"),
+                F.max(F.col("doc_id") % 97 == 0).over(w).alias("in_bench"))
+    )
+    per_doc = (
+        grams.filter(F.col("doc_id") % 97 != 0)
+        .groupBy("doc_id")
+        .agg(
+            F.max("flag_lowq").alias("flag_lowq"),
+            F.max("flag_repetitive").alias("flag_repetitive"),
+            F.count(F.lit(1)).alias("n_grams"),
+            F.count_if(F.col("n_docs") >= 2).alias("n_dup"),
+            F.count_if("in_bench").alias("n_overlap"),
         )
     )
+    dup_frac = F.round(F.col("n_dup") / F.col("n_grams"), 4)
+    overlap_frac = F.round(F.col("n_overlap") / F.col("n_grams"), 4)
+    return (
+        per_doc.select(
+            "doc_id", "flag_lowq", "flag_repetitive",
+            (dup_frac > 0.15).alias("flag_dup"),
+            (overlap_frac > 0.5).alias("flag_contaminated"),
+        )
+        .withColumn("keep", ~(F.col("flag_lowq") | F.col("flag_repetitive")
+                              | F.col("flag_dup") | F.col("flag_contaminated")))
+    )
+
+
+def q_curation_verdict(spark, sf_dir):
+    """curation_verdict over the documents table."""
+    return curation_verdict(_t(spark, sf_dir, "documents"))
 
 
 SQL_CURATION_VERDICT = f"""

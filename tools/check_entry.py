@@ -22,14 +22,26 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 
 
 def value_hash(df) -> str:
-    import pandas as pd  # noqa: F401
+    """Order-insensitive hash of a result frame. Float columns are
+    rounded to 6dp. In every other column a missing value is spelled
+    "None" whatever its pandas form: Spark's toPandas() gives a NULL
+    boolean as None, DuckDB's .df() as nan."""
+    import pandas as pd
 
     cols = sorted(df.columns)
     d = df[cols].copy()
-    for c in cols:
-        if d[c].dtype.kind == "f":
+    is_float = [d[c].dtype.kind == "f" for c in cols]
+    for c, f in zip(cols, is_float):
+        if f:
             d[c] = d[c].round(6)
-    rows = sorted(tuple(str(v) for v in row) for row in d.itertuples(index=False))
+
+    def spell(v, f: bool) -> str:
+        if not f and pd.api.types.is_scalar(v) and pd.isna(v):
+            return "None"
+        return str(v)
+
+    rows = sorted(tuple(spell(v, f) for v, f in zip(row, is_float))
+                  for row in d.itertuples(index=False))
     h = hashlib.md5()
     for r in rows:
         h.update("\x1f".join(r).encode())
