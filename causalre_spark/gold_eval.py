@@ -14,16 +14,23 @@ the "published-F1 claims don't transfer" footnote into a measured table
 Everything downstream of the per-doc model call is DataFrame algebra:
 gold explode, strict A1 join-aggregate (operators.metrics.strict_prf),
 greedy A2 loose matching (operators.metrics.loose_match_spans/_rels).
+
+Gold splits come from the reference JSON where it is present
+(load_reference_split) and otherwise from the committed filtered splits
+under fixtures/gazetteer/ (load_gold_split), which hold what the JSON
+yields at the default limits L=200, W=80.
 """
 
 from __future__ import annotations
 
+import os
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from causalre_spark import FIXTURES_DIR
 from causalre_spark.config import DEFAULT_CONFIG, PipelineConfig
 from causalre_spark.operators import metrics as M
 from causalre_spark.sources.corpus_json import filter_valid_spans, load_corpus_json
@@ -80,12 +87,49 @@ def make_predict_udf(cfg: PipelineConfig):
     return udf
 
 
-def load_gold_split(spark: SparkSession, dataset: str, split: str = "test",
-                    cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """One reference dataset split, valid-span filtered (P1+P2) — the
-    same preprocessing the reference trains/evals against."""
+# the limits tools/freeze_gazetteer.py filters the committed splits at
+# (fixtures/gazetteer/{dataset}_{split}.parquet); a looser limit needs
+# spans those files no longer hold
+FIXTURE_MAX_SEQ_LEN = 200
+FIXTURE_MAX_SPAN_WIDTH = 80
+
+
+def load_reference_split(spark: SparkSession, dataset: str,
+                         split: str = "test",
+                         cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
+    """One split read from the reference JSON itself, valid-span
+    filtered (P1+P2) — the same preprocessing the reference trains/evals
+    against. Raises FileNotFoundError where the reference is absent."""
     _, splits = load_corpus_json(spark, REFERENCE_DATASETS[dataset])
     return filter_valid_spans(splits[split], cfg.max_seq_len, cfg.max_span_width)
+
+
+def load_gold_split(spark: SparkSession, dataset: str, split: str = "test",
+                    cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
+    """One gold split, valid-span filtered (P1+P2) at `cfg`'s limits.
+
+    Reads the reference JSON (load_reference_split) when it exists, else
+    the committed fixtures/gazetteer/{dataset}_{split}.parquet, which
+    tools/freeze_gazetteer.py froze from the JSON after filtering at
+    L=200, W=80, re-filtered here at `cfg`'s limits. Tighter limits are
+    exact; looser ones raise ValueError rather than return a split
+    missing the spans the freeze dropped. From the fixtures,
+    `n_lost_rels` counts only what the re-filter drops (0 at the default
+    limits), not what the freeze dropped."""
+    ref = REFERENCE_DATASETS[dataset]
+    if os.path.exists(ref):
+        return load_reference_split(spark, dataset, split, cfg)
+    if (cfg.max_seq_len > FIXTURE_MAX_SEQ_LEN
+            or cfg.max_span_width > FIXTURE_MAX_SPAN_WIDTH):
+        raise ValueError(
+            f"{ref} not found, and the committed {dataset} splits are "
+            f"filtered at max_seq_len={FIXTURE_MAX_SEQ_LEN}, "
+            f"max_span_width={FIXTURE_MAX_SPAN_WIDTH}: cannot serve "
+            f"max_seq_len={cfg.max_seq_len}, "
+            f"max_span_width={cfg.max_span_width}")
+    df = spark.read.parquet(
+        os.path.join(FIXTURES_DIR, "gazetteer", f"{dataset}_{split}.parquet"))
+    return filter_valid_spans(df, cfg.max_seq_len, cfg.max_span_width)
 
 
 # val doc_ids are offset into their own id space when train and val are

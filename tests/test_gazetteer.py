@@ -135,13 +135,16 @@ def test_rel_priors_and_prediction(spark, tiny):
 @pytest.mark.parametrize("dataset", ["custom", "conll04"])
 @pytest.mark.parametrize("split", ["train", "test"])
 def test_fixture_matches_live_split(spark, dataset, split):
-    """The frozen oracle inputs must equal the live-loaded filtered
-    split — otherwise the gazetteer oracles silently verify stale data."""
+    """The frozen oracle inputs must equal the filtered split read from
+    the reference JSON — otherwise the gazetteer oracles silently verify
+    stale data. load_reference_split never falls back to the fixtures,
+    so where the reference is absent this fails with FileNotFoundError
+    instead of comparing the fixtures with themselves."""
     from causalre_spark import gold_eval as G
 
     path = os.path.join(FIX, f"{dataset}_{split}.parquet")
     assert os.path.exists(path), "run tools/freeze_gazetteer.py"
-    live = G.load_gold_split(spark, dataset, split)
+    live = G.load_reference_split(spark, dataset, split)
     froz = spark.read.parquet(path)
     key = [F.col("doc_id")]
     digest = lambda df: (  # noqa: E731
@@ -155,9 +158,10 @@ def test_fixture_matches_live_split(spark, dataset, split):
 
 
 def test_gazetteer_eval_spark_duckdb_parity(spark):
-    """Full fit+tag+prior+eval chain: Spark (live JSON) vs DuckDB
-    (frozen fixtures) must agree row-for-row — the same comparison the
-    driver's correctness harness runs."""
+    """Full fit+tag+prior+eval chain: Spark (reference JSON, or the
+    frozen fixtures where it is absent) vs DuckDB (frozen fixtures) must
+    agree row-for-row — the same comparison the driver's correctness
+    harness runs."""
     from causalre_spark.plans.entry_queries import ORACLES, QUERIES
 
     for name in ("gazetteer_eval_custom", "gazetteer_lexicon",

@@ -65,3 +65,35 @@ def test_fixtures_match_live(custom_eval):
     key = ["url", "start", "end", "type"]
     assert (sorted(map(tuple, frozen[key].values.tolist()))
             == sorted(map(tuple, got[key].values.tolist())))
+
+
+def test_gold_split_falls_back_to_fixtures(spark, monkeypatch, tmp_path):
+    """Without the reference JSON, load_gold_split serves the committed
+    filtered split, refuses limits looser than the freeze's, and
+    load_reference_split still fails rather than read the fixtures."""
+    import os
+    import re
+
+    import pyarrow.parquet as pq
+
+    from causalre_spark import FIXTURES_DIR
+    from causalre_spark.config import PipelineConfig
+
+    missing = str(tmp_path / "missing.json")
+    monkeypatch.setitem(G.REFERENCE_DATASETS, "custom", missing)
+
+    cols = ["doc_id", "tokens", "spans", "relations"]
+    got = [r.asDict(recursive=True) for r in
+           G.load_gold_split(spark, "custom", "test")
+           .select(*cols).orderBy("doc_id").collect()]
+    frozen = pq.read_table(
+        os.path.join(FIXTURES_DIR, "gazetteer", "custom_test.parquet"),
+        columns=cols).sort_by("doc_id").to_pylist()
+    assert len(got) == 88
+    assert got == frozen
+
+    with pytest.raises(ValueError, match=re.escape(missing)):
+        G.load_gold_split(spark, "custom", "test",
+                          PipelineConfig(max_span_width=81))
+    with pytest.raises(FileNotFoundError):
+        G.load_reference_split(spark, "custom", "test")

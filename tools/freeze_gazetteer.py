@@ -9,7 +9,10 @@ inputs: the oracle SQL recomputes lexicon fit, candidate generation,
 dominance suppression, rel priors and strict metrics END-TO-END from
 these tables, so a hash match certifies the whole gazetteer algebra,
 not just the final numbers. tests/test_gazetteer.py asserts fixture ==
-live-loaded split so the frozen copies cannot rot silently.
+the split read from the reference JSON so the frozen copies cannot rot
+silently. The same files are gold_eval.load_gold_split's source where
+the reference is absent, so this tool reads only the reference JSON
+(load_reference_split) and fails without it.
 
 Run: python tools/freeze_gazetteer.py
 """
@@ -24,7 +27,8 @@ FIX = os.path.join(REPO, "fixtures", "gazetteer")
 
 
 def main() -> None:
-    from causalre_spark.gold_eval import REFERENCE_DATASETS, load_gold_split
+    from causalre_spark.config import PipelineConfig
+    from causalre_spark.gold_eval import REFERENCE_DATASETS, load_reference_split
     from causalre_spark.session import get_spark
 
     import pyarrow.parquet as pq
@@ -36,9 +40,11 @@ def main() -> None:
 
     spark = get_spark(app="freeze_gazetteer", cores=2)
     os.makedirs(FIX, exist_ok=True)
+    cfg = PipelineConfig(max_seq_len=G.FIXTURE_MAX_SEQ_LEN,
+                         max_span_width=G.FIXTURE_MAX_SPAN_WIDTH)
     for ds in REFERENCE_DATASETS:
         for split in ("train", "val", "test"):
-            df = load_gold_split(spark, ds, split)
+            df = load_reference_split(spark, ds, split, cfg)
             # single-file parquet with the exact nested schema (NOT a
             # Spark part-file directory) so DuckDB reads it by path
             tbl = (df.select("doc_id", "tokens", "spans", "relations")
@@ -74,8 +80,8 @@ def main() -> None:
                          f"| {r.fn} | {r.precision} | {r.recall} "
                          f"| {r.f1} |")
         # loose via the shared A2 operators
-        train = load_gold_split(spark, ds, "train")
-        test = load_gold_split(spark, ds, "test")
+        train = load_reference_split(spark, ds, "train")
+        test = load_reference_split(spark, ds, "test")
         lex = GZ.fit_span_lexicon(train)
         pred_s = GZ.tag_spans(test, lex).persist()
         pred_r = GZ.predict_rels_triggers(
