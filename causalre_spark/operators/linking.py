@@ -211,15 +211,15 @@ def connected_components(
     nodes: DataFrame, edges: DataFrame, max_iters: int = 20,
     rows_per_partition: int = 10_000, n_nodes: int | None = None,
     driver_max_nodes: int = 2_000_000, driver_max_edges: int = 5_000_000,
-    keyed: bool = False,
 ) -> DataFrame:
-    """Connected components over (form_a, form_b) edges.
+    """Connected components over (form_a, form_b) edges of BIGINT node
+    ids.
 
-    Returns (form, component) where component = min md5_long(form) over
-    the component. With `keyed=True` the node column already IS the
-    md5-derived BIGINT id (link_mentions' int-keyed chain): labels are
-    identical, the id conversion joins are skipped, and the returned
-    'form' column is the BIGINT key.
+    Returns (form, component) where component = min node id over the
+    component. Callers key nodes by an id whose order is the canonical
+    one: link_mentions passes md5_long(form) (its int-keyed chain), so
+    the component is the min md5_long over the component;
+    dedup_near_clusters passes doc ids, so it is the min doc id.
 
     Adaptive physical strategy (same spirit as Catalyst's broadcast-vs-
     shuffle join selection): a mention graph that fits on the driver is
@@ -227,14 +227,12 @@ def connected_components(
     per round — while larger graphs take the distributed min-label
     propagation loop. Labels are identical either way.
 
-    Distributed path: large-star/small-star contraction over md5_long
-    node ids (see _star_components) — O(log² n) rounds independent of
+    Distributed path: large-star/small-star contraction over the node
+    ids (see _star_components) — O(log² n) rounds independent of
     component diameter, loud RuntimeError if max_iters exhausts before
     the star fixpoint (never silently-wrong labels). Partition count is
     sized from the node count.
     """
-    from causalre_spark.functions.hashing import md5_long
-
     if n_nodes is None:
         n_nodes = nodes.count()
     spark = nodes.sparkSession
@@ -257,38 +255,19 @@ def connected_components(
             edge_list = [(r["form_a"], r["form_b"]) for r in edge_rows]
             edges.unpersist()
             assigned = _union_find_components(
-                node_list, edge_list, (lambda x: x) if keyed else md5_long)
-            return spark.createDataFrame(
-                assigned,
-                f"form {'long' if keyed else 'string'}, component long")
+                node_list, edge_list, lambda x: x)
+            return spark.createDataFrame(assigned,
+                                         "form long, component long")
     max_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     parts = max(1, min(max_parts, n_nodes // rows_per_partition + 1))
-    # node id space = md5_long(form): star contraction needs a totally
-    # ordered id, and min-id == min-hash keeps the canonical-id contract
-    fh_expr = (F.col("form") if keyed
-               else F.expr(md5_long_sql_spark("form")))
-    with_h = (
-        nodes.select("form", fh_expr.alias("fh"))
-        .repartition(parts, "form")
-        .localCheckpoint()
-    )
-    if keyed:
-        edge_ids = edges.select(F.col("form_a").alias("a"),
-                                F.col("form_b").alias("b"))
-    else:
-        edge_ids = (
-            edges.select("form_a", "form_b")
-            .join(with_h.select(F.col("form").alias("form_a"),
-                                F.col("fh").alias("a")), "form_a")
-            .join(with_h.select(F.col("form").alias("form_b"),
-                                F.col("fh").alias("b")), "form_b")
-            .select("a", "b")
-        )
-    comp = _star_components(edge_ids, max_iters, parts)
+    ids = nodes.select("form").repartition(parts, "form").localCheckpoint()
+    comp = _star_components(
+        edges.select(F.col("form_a").alias("a"), F.col("form_b").alias("b")),
+        max_iters, parts)
     edges.unpersist()
     return (
-        with_h.join(comp, with_h["fh"] == comp["node"], "left")
-        .select("form", F.coalesce("component", "fh").alias("component"))
+        ids.join(comp, ids["form"] == comp["node"], "left")
+        .select("form", F.coalesce("component", "form").alias("component"))
     )
 
 
@@ -416,7 +395,7 @@ def link_mentions(
     edges = _lsh_edges(fmap, cfg)
     labels_fid = connected_components(
         fmap.select(F.col("fid").alias("form")), edges, cfg.cc_max_iters,
-        n_nodes=n_forms, keyed=True)
+        n_nodes=n_forms)
     # materialize the (tiny, |forms|-row) string labels BEFORE releasing
     # the caches: the returned plan must not re-derive forms/fmap after
     # unpersist (the forms distinct is the expensive upstream job)

@@ -99,7 +99,7 @@ def dsir_log_weights(source_tokens: DataFrame, target_tokens: DataFrame,
     is shuffled once, on the doc id, which AQE coalesces with the final
     aggregate. Nothing Python; ln() stays in codegen. 4dp rounding
     absorbs float-summation-order and last-ulp libm differences across
-    engines (same policy as pagerank/group_quantiles).
+    engines (same policy as mixing_weights).
     """
     spark = source_tokens.sparkSession
     bexpr = (F.expr(md5_long_sql_spark("tok")) % n_buckets).alias("b")

@@ -1,8 +1,8 @@
 """Query registry: the curation operators, the relational operator
-queries (span/metric algebra, dedup, similarity, doc-graph, temporal
-joins, sampling), the flagship pages->triples queries and the gold-split
-quality families, each as a (Spark query function, DuckDB oracle SQL)
-pair over the testdata tables.
+queries (span/metric algebra, dedup, sampling and corpus weighting),
+the flagship pages->triples queries and the gold-split quality
+families, each as a (Spark query function, DuckDB oracle SQL) pair.
+Every query that reads the testdata reads only its `documents` table.
 
 Design rules that make the value-hash comparison exact:
   - every cross-engine hash is the portable md5-derived bigint
@@ -29,7 +29,7 @@ from causalre_spark.functions.hashing import md5_long_sql, md5_long_sql_spark
 from causalre_spark.functions.partitions import spread
 from causalre_spark.functions.text import NORMALIZE_SQL
 from causalre_spark.functions.text_duck import NORMALIZE_SQL_DUCK
-from causalre_spark.operators import dedup, sampling, similarity, textstats
+from causalre_spark.operators import dedup, sampling, textstats
 
 
 # --------------------------------------------------------------------------
@@ -373,12 +373,12 @@ def q_dedup_near_clusters(spark, sf_dir):
     Deleting `keep = false` rows is the actual dedup action.
 
     Scale shape: pairs are the LSH-banded verified set (never
-    all-pairs), components reuse linking.connected_components with
-    keyed BIGINT doc ids (driver union-find under caps, else
+    all-pairs), components reuse linking.connected_components over
+    the BIGINT doc ids (driver union-find under caps, else
     large/small-star contraction), and the keeper rule is pure
     integer algebra. The oracle recomputes the components with a
     recursive label-closure CTE — an independent second spelling of
-    the CC fixpoint (cc_components' oracle is the other)."""
+    the CC fixpoint."""
     from causalre_spark.operators import linking
 
     pairs = q_dedup_minhash_lsh(spark, sf_dir)
@@ -387,7 +387,7 @@ def q_dedup_near_clusters(spark, sf_dir):
     nodes = (edges.select(F.col("form_a").alias("form"))
              .unionByName(edges.select(F.col("form_b").alias("form")))
              .distinct())
-    comp = linking.connected_components(nodes, edges, keyed=True)
+    comp = linking.connected_components(nodes, edges)
     sizes = comp.groupBy("component").agg(
         F.count(F.lit(1)).alias("cluster_size"))
     return (comp.join(sizes, "component")
@@ -685,498 +685,9 @@ FROM documents
 
 
 # --------------------------------------------------------------------------
-# similarity family (embeddings)
+# sampling, layout and corpus weighting (scale patterns a training-data
+# pipeline needs beyond the reference's own operators)
 # --------------------------------------------------------------------------
-
-
-def q_sim_cosine_topk(spark, sf_dir):
-    return similarity.cosine_topk(_t(spark, sf_dir, "embeddings"),
-                                  query_id=0, k=20, dim=EMB_DIM)
-
-
-_DUCK_COS = """
-WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-pairs AS (SELECT e.vec_id, e.embedding, q.qvec FROM embeddings e, q
-          WHERE e.vec_id != 0),
-terms AS (SELECT vec_id,
-                 sum(embedding[i] * qvec[i]) AS dot,
-                 sum(embedding[i] * embedding[i]) AS na,
-                 sum(qvec[i] * qvec[i]) AS nb
-          FROM (SELECT vec_id, embedding, qvec,
-                       unnest(generate_series(1, len(embedding))) AS i
-                FROM pairs) t
-          GROUP BY vec_id),
-scored AS (SELECT vec_id, round(dot / (sqrt(na) * sqrt(nb)), 4) AS cosine
-           FROM terms)
-"""
-
-SQL_SIM_COSINE_TOPK = f"""
-{_DUCK_COS}
-SELECT vec_id, cosine, CAST(rn AS BIGINT) AS rank
-FROM (SELECT *, row_number() OVER (ORDER BY cosine DESC, vec_id) AS rn FROM scored) r
-WHERE rn <= 20
-"""
-
-
-EMB_DIM = 64  # driver embeddings table dimensionality
-
-
-def q_cc_components(spark, sf_dir):
-    """Connected components over a doc graph (edges: doc -> min doc of
-    its (lang, first-token) group and of its (source, first-token)
-    group; overlapping groups merge into multi-hop components)."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "source",
-        F.element_at(F.split("text", " "), 1).alias("tok1"))
-    # window-min spelling — same values, half the exchanges of the
-    # groupBy+self-join form (see _doc_graph_edges)
-    e1 = docs.select(
-        F.col("doc_id").alias("src"),
-        F.min("doc_id").over(Window.partitionBy("lang", "tok1")).alias("dst"))
-    e2 = docs.select(
-        F.col("doc_id").alias("src"),
-        F.min("doc_id").over(Window.partitionBy("source", "tok1")).alias("dst"))
-    edges = e1.unionByName(e2).filter(F.col("src") != F.col("dst")).distinct()
-    # ADAPTIVE CC (linking.connected_components, keyed BIGINT ids):
-    # graphs under the node+edge caps solve with one collect +
-    # union-find — the previous unconditional large-star/small-star
-    # loop spent ~30 iterative-join stages of fixed scheduling/codegen
-    # latency on a graph whose edge list fits on the driver (the same
-    # small-side cutover dedup_near_clusters already uses); larger
-    # graphs take the identical-label star-contraction path, loud
-    # RuntimeError on non-convergence. Component = min doc_id either
-    # way.
-    from causalre_spark.operators.linking import connected_components
-
-    # persisted: the adaptive CC gate runs several actions (node count,
-    # edge count, the two collects) and without the cache each one
-    # re-derives the full doc-graph join DAG (~6 exchanges per action,
-    # measured 4 re-derivations per query)
-    edges2 = edges.select(F.col("src").alias("form_a"),
-                          F.col("dst").alias("form_b")).persist()
-    nodes = (edges2.select(F.col("form_a").alias("form"))
-             .union(edges2.select(F.col("form_b").alias("form")))
-             .distinct())
-    comp = connected_components(nodes, edges2, keyed=True)
-    return (
-        docs.join(comp, docs["doc_id"] == comp["form"], "left")
-        .select("doc_id", F.coalesce("component", "doc_id").alias("component"))
-    )
-
-
-SQL_CC_COMPONENTS = """
-WITH RECURSIVE docs AS (SELECT doc_id, lang, source, string_split(text, ' ')[1] AS tok1
-              FROM documents),
-e1 AS (SELECT d.doc_id AS src, m.dst
-       FROM docs d JOIN (SELECT lang, tok1, min(doc_id) AS dst
-                         FROM docs GROUP BY lang, tok1) m
-       ON d.lang = m.lang AND d.tok1 = m.tok1),
-e2 AS (SELECT d.doc_id AS src, m.dst
-       FROM docs d JOIN (SELECT source, tok1, min(doc_id) AS dst
-                         FROM docs GROUP BY source, tok1) m
-       ON d.source = m.source AND d.tok1 = m.tok1),
-edges AS (SELECT DISTINCT src, dst FROM (SELECT * FROM e1 UNION ALL SELECT * FROM e2) u
-          WHERE src != dst),
-sym AS (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
-reach(a, b) AS (
-    SELECT src, dst FROM sym
-    UNION
-    SELECT reach.a, s.dst FROM reach JOIN sym s ON reach.b = s.src)
-SELECT d.doc_id, least(d.doc_id, coalesce(min(r.b), d.doc_id)) AS component
-FROM docs d LEFT JOIN reach r ON r.a = d.doc_id
-GROUP BY d.doc_id
-"""
-
-
-def q_kg_2hop(spark, sf_dir):
-    """KG graph-join shape: distinct 2-hop neighbor counts over the same
-    deterministic doc graph cc_components uses. This is the workload the
-    bucketed graph table exists for (pipeline.write_bucketed_graph): at
-    10^12 triples the self-join on the edge key runs exchange-free over
-    co-bucketed files; here the identical join semantics are validated
-    against an exact DuckDB oracle at test scale."""
-    edges = _doc_graph_edges(spark, sf_dir)
-    two = (
-        edges.alias("x")
-        .join(edges.alias("y"), F.col("x.dst") == F.col("y.src"))
-        .filter(F.col("x.src") != F.col("y.dst"))
-        .select(F.col("x.src").alias("src"), F.col("y.dst").alias("dst2"))
-        .distinct()
-    )
-    return two.groupBy("src").agg(F.count(F.lit(1)).alias("n_2hop"))
-
-
-SQL_KG_2HOP = """
-WITH docs AS (SELECT doc_id, lang, source, string_split(text, ' ')[1] AS tok1
-              FROM documents),
-e1 AS (SELECT d.doc_id AS src, m.dst
-       FROM docs d JOIN (SELECT lang, tok1, min(doc_id) AS dst
-                         FROM docs GROUP BY lang, tok1) m
-       ON d.lang = m.lang AND d.tok1 = m.tok1),
-e2 AS (SELECT d.doc_id AS src, m.dst
-       FROM docs d JOIN (SELECT source, tok1, min(doc_id) AS dst
-                         FROM docs GROUP BY source, tok1) m
-       ON d.source = m.source AND d.tok1 = m.tok1),
-edges AS (SELECT DISTINCT src, dst FROM (SELECT * FROM e1 UNION ALL SELECT * FROM e2) u
-          WHERE src != dst),
-two AS (SELECT DISTINCT x.src, y.dst AS dst2
-        FROM edges x JOIN edges y ON x.dst = y.src
-        WHERE x.src != y.dst)
-SELECT src, count(*) AS n_2hop FROM two GROUP BY src
-"""
-
-
-def q_kg_pagerank(spark, sf_dir):
-    """Fixed-iteration PageRank (3 rounds, d=0.85, dangling mass
-    dropped) over the deterministic doc graph — the iterative-join graph
-    workload shape. Each round is one equi-join + hash aggregation on
-    the edge key; on the bucketed graph table
-    (pipeline.write_bucketed_graph) the join side of every round reads
-    pre-partitioned, so the per-round shuffle is halved. Ranks are
-    N-normalized (~1.0 scale) and rounded to 4dp so the cross-engine
-    comparison is insensitive to float summation order."""
-    D = 0.85
-    edges = _doc_graph_edges(spark, sf_dir)
-    nodes = _t(spark, sf_dir, "documents").select(F.col("doc_id").alias("node"))
-    n = nodes.count()  # one scalar action; the iteration itself is lazy
-    outdeg = edges.groupBy("src").agg(
-        F.count(F.lit(1)).cast("double").alias("outdeg"))
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    for _ in range(3):
-        contrib = (
-            edges.join(ranks, edges["src"] == ranks["node"])
-            .join(outdeg, "src")
-            .groupBy("dst").agg(F.sum(F.col("rank") / F.col("outdeg")).alias("s"))
-        )
-        ranks = (
-            nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
-            .select(
-                "node",
-                (F.lit(0.15 / n) + F.lit(D) * F.coalesce("s", F.lit(0.0))).alias("rank"),
-            )
-        )
-    # Cross-engine-stable quantization. round() is out: Spark rounds
-    # half-up, DuckDB half-to-even, and PageRank on a small graph
-    # produces EXACT half-grid decimals (0.59625). floor(x*1e4 + 0.5)
-    # is out too: those same half-grid values make the floor boundary
-    # coincide with a point where the two engines' aggregation orders
-    # disagree by one ulp. So quantize on a grid shifted by an
-    # IRRATIONAL offset: no finite-decimal (or small-rational) rank can
-    # land on the boundary, and a 1-ulp cross-engine difference can
-    # never flip the cell. Output stays ~4dp-accurate.
-    _OFF = 0.3141592653589793
-    return ranks.select(
-        F.col("node").alias("doc_id"),
-        (F.floor(F.col("rank") * F.lit(float(n)) * F.lit(10000.0) + F.lit(_OFF))
-         / F.lit(10000.0)).alias("pagerank"))
-
-
-def _duck_pagerank() -> str:
-    graph = """
-docs AS (SELECT doc_id, lang, source, string_split(text, ' ')[1] AS tok1
-         FROM documents),
-e1 AS (SELECT d.doc_id AS src, m.dst
-       FROM docs d JOIN (SELECT lang, tok1, min(doc_id) AS dst
-                         FROM docs GROUP BY lang, tok1) m
-       ON d.lang = m.lang AND d.tok1 = m.tok1),
-e2 AS (SELECT d.doc_id AS src, m.dst
-       FROM docs d JOIN (SELECT source, tok1, min(doc_id) AS dst
-                         FROM docs GROUP BY source, tok1) m
-       ON d.source = m.source AND d.tok1 = m.tok1),
-edges AS (SELECT DISTINCT src, dst FROM (SELECT * FROM e1 UNION ALL SELECT * FROM e2) u
-          WHERE src != dst),
-nodes AS (SELECT doc_id AS node FROM docs),
-nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
-outd AS (SELECT src, CAST(count(*) AS DOUBLE) AS outdeg FROM edges GROUP BY src),
-r0 AS (SELECT node, 1.0 / (SELECT n FROM nn) AS rank FROM nodes)"""
-    steps = []
-    for i in range(3):
-        steps.append(f"""
-r{i + 1} AS (SELECT nd.node,
-        0.15 / (SELECT n FROM nn) + 0.85 * coalesce(c.s, 0.0) AS rank
-      FROM nodes nd LEFT JOIN (
-        SELECT e.dst AS node, sum(r.rank / o.outdeg) AS s
-        FROM edges e JOIN r{i} r ON e.src = r.node
-        JOIN outd o ON e.src = o.src
-        GROUP BY e.dst) c ON nd.node = c.node)""")
-    return ("WITH " + graph + "," + ",".join(steps) +
-            "\nSELECT node AS doc_id, "
-            "floor(rank * (SELECT n FROM nn) * 10000.0 + 0.3141592653589793)"
-            " / 10000.0 AS pagerank FROM r3")
-
-
-def _doc_graph_edges(spark, sf_dir) -> DataFrame:
-    """The deterministic doc graph shared by cc_components / kg_2hop /
-    kg_pagerank / kg_triangles / kg_degree_stats: directed distinct
-    edges doc -> min doc of its (lang, tok1) and (source, tok1) groups.
-
-    min(doc_id) is attached as a WINDOW over the grouping keys instead
-    of a groupBy + self-join: identical values, but one exchange+sort
-    per edge family instead of an aggregation exchange plus a join of
-    two shuffled sides (guide §2.4 — two operations keyed the same way
-    share one exchange). Measured 5.9 -> 2.4 s cold on the derivation
-    at 10x bench scale; the DuckDB oracles keep the join spelling, so
-    the cross-engine comparison covers two independent spellings.
-
-    "Identical values" assumes non-NULL lang, source and text (true of
-    every testdata sf): a window keeps a NULL key as its own group and
-    emits edges for it, where the oracle's null-unsafe join drops it."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "source",
-        F.element_at(F.split("text", " "), 1).alias("tok1"))
-    e1 = docs.select(
-        F.col("doc_id").alias("src"),
-        F.min("doc_id").over(Window.partitionBy("lang", "tok1")).alias("dst"))
-    e2 = docs.select(
-        F.col("doc_id").alias("src"),
-        F.min("doc_id").over(Window.partitionBy("source", "tok1")).alias("dst"))
-    return e1.unionByName(e2).filter(F.col("src") != F.col("dst")).distinct()
-
-
-_DUCK_GRAPH_CTE = """
-docs AS (SELECT doc_id, lang, source, string_split(text, ' ')[1] AS tok1
-         FROM documents),
-e1 AS (SELECT d.doc_id AS src, m.dst
-       FROM docs d JOIN (SELECT lang, tok1, min(doc_id) AS dst
-                         FROM docs GROUP BY lang, tok1) m
-       ON d.lang = m.lang AND d.tok1 = m.tok1),
-e2 AS (SELECT d.doc_id AS src, m.dst
-       FROM docs d JOIN (SELECT source, tok1, min(doc_id) AS dst
-                         FROM docs GROUP BY source, tok1) m
-       ON d.source = m.source AND d.tok1 = m.tok1),
-edges AS (SELECT DISTINCT src, dst FROM (SELECT * FROM e1 UNION ALL SELECT * FROM e2) u
-          WHERE src != dst)
-"""
-
-
-def q_kg_triangles(spark, sf_dir):
-    """Degree-ordered triangle enumeration (Cohen's MapReduce algorithm /
-    Suri & Vassilvitskii WWW'11): direct every undirected edge from the
-    lower-(degree, id) endpoint to the higher one, join wedges on the
-    middle node, close against the directed edge set. Each triangle is
-    enumerated EXACTLY once, and wedge fan-out is bounded by the
-    out-degree under the degree order — O(m^{3/2}) work instead of the
-    naive per-node neighborhood square; at 10^12-edge scale this
-    ordering is the difference between a runnable join and a hot-node
-    explosion (a celebrity node of degree d contributes d² wedges naive,
-    but only out-deg² ≈ sqrt(m)² ordered). The oracle is the naive
-    id-ordered 3-way join — same triangle set, proving the ordered plan
-    lossless. Output is id-canonical (a < b < c)."""
-    from causalre_spark.operators import graph
-
-    return graph.triangles(graph.undirected(_doc_graph_edges(spark, sf_dir)))
-
-
-SQL_KG_TRIANGLES = f"""
-WITH {_DUCK_GRAPH_CTE},
-und AS (SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v FROM edges)
-SELECT x.u AS a, x.v AS b, y.v AS c
-FROM und x JOIN und y ON x.v = y.u
-JOIN und z ON z.u = x.u AND z.v = y.v
-"""
-
-
-def q_kg_degree_stats(spark, sf_dir):
-    """Degree-distribution histogram of the doc graph (undirected):
-    degree -> node count. The scan-shape every graph-pipeline health
-    check runs first at scale — two hash aggregations, no joins."""
-    from causalre_spark.operators import graph
-
-    return graph.degree_histogram(
-        graph.undirected(_doc_graph_edges(spark, sf_dir)))
-
-
-SQL_KG_DEGREE_STATS = f"""
-WITH {_DUCK_GRAPH_CTE},
-und AS (SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v FROM edges),
-deg AS (SELECT node, count(*) AS deg
-        FROM (SELECT u AS node FROM und UNION ALL SELECT v AS node FROM und) n
-        GROUP BY node)
-SELECT deg, count(*) AS n_nodes FROM deg GROUP BY deg
-"""
-
-
-def q_skew_salted_agg(spark, sf_dir):
-    """Skew handling as checkable algebra (north rule: 'skew from hot
-    domains handled with salted repartitioning'): two-phase salted
-    aggregation over the skewed `source` key. Phase 1 aggregates
-    (source, salt-of-doc_id) so a hot domain's rows fan out across 16
-    reducers instead of one; phase 2 combines the <=16 partials per key.
-    The oracle IS the direct GROUP BY — proving the salted plan computes
-    identical results. (The pipeline's opt-in input salting is
-    pipeline.py cfg.salt_input; this registers the pattern itself under
-    the exact-correctness gate.)"""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", "source", F.length("text").cast("long").alias("n_chars"))
-    salted = docs.withColumn("_salt", F.pmod(F.xxhash64("doc_id"), F.lit(16)))
-    partial = (
-        salted.groupBy("source", "_salt")
-        .agg(F.count(F.lit(1)).alias("pn"),
-             F.sum("n_chars").alias("pchars"),
-             F.max("n_chars").alias("pmax"))
-    )
-    return (
-        partial.groupBy("source")
-        .agg(F.sum("pn").alias("n_docs"),
-             F.sum("pchars").alias("total_chars"),
-             F.max("pmax").alias("max_chars"))
-    )
-
-
-SQL_SKEW_SALTED_AGG = """
-SELECT source, count(*) AS n_docs,
-       CAST(sum(length(text)) AS BIGINT) AS total_chars,
-       CAST(max(length(text)) AS BIGINT) AS max_chars
-FROM documents GROUP BY source
-"""
-
-
-def q_events_sessionize(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id", "event_id", F.col("ts").cast("timestamp").cast("long").alias("epoch"))
-    w = Window.partitionBy("user_id").orderBy("epoch", "event_id")
-    return (
-        ev.withColumn("prev", F.lag("epoch").over(w))
-        .withColumn(
-            "new_session",
-            F.when(F.col("prev").isNull() | (F.col("epoch") - F.col("prev") > 1800), 1)
-            .otherwise(0),
-        )
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             F.sum("new_session").alias("n_sessions"))
-    )
-
-
-SQL_EVENTS_SESSIONIZE = """
-WITH ev AS (SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS epoch
-            FROM events),
-lagged AS (SELECT user_id, epoch,
-                  lag(epoch) OVER (PARTITION BY user_id ORDER BY epoch, event_id) AS prev
-           FROM ev)
-SELECT user_id, count(*) AS n_events,
-       CAST(sum(CASE WHEN prev IS NULL OR epoch - prev > 1800 THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions
-FROM lagged GROUP BY user_id
-"""
-
-
-# --------------------------------------------------------------------------
-# Temporal joins + sampling + corpus weighting (scale patterns a
-# training-data pipeline needs beyond the reference's own operators)
-# --------------------------------------------------------------------------
-
-
-def q_asof_join_orders(spark, sf_dir):
-    """As-of join: each event picks the user's most recent order at or
-    before the event date. Spark lacks a native ASOF JOIN; the scalable
-    formulation is union-tag + running `last(ignorenulls)` over a
-    per-key window — ONE shuffle by join key, no per-event probe join,
-    no range explosion. The oracle uses DuckDB's native ASOF JOIN, so
-    the two engines reach the same answer by entirely different
-    algorithms. Ties inside a day are removed up front (max orderkey
-    per (custkey, date)) so the as-of pick is deterministic."""
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id",
-        F.unix_date(F.to_date(F.col("ts").cast("timestamp"))).alias("t"))
-    dim = (
-        _t(spark, sf_dir, "orders")
-        .groupBy(F.col("o_custkey"),
-                 F.to_date("o_orderdate").alias("o_date"))
-        .agg(F.max("o_orderkey").alias("o_orderkey"),
-             F.max_by("o_totalprice", "o_orderkey").alias("o_totalprice"))
-    )
-    d = dim.select(
-        F.col("o_custkey").alias("user_id"),
-        F.unix_date("o_date").alias("t"),
-        F.lit(0).alias("kind"),
-        F.lit(None).cast("long").alias("event_id"),
-        "o_orderkey", "o_totalprice")
-    e = ev.select(
-        "user_id", "t", F.lit(1).alias("kind"), "event_id",
-        F.lit(None).cast("long").alias("o_orderkey"),
-        F.lit(None).cast("double").alias("o_totalprice"))
-    # kind orders dim rows before event rows at equal date: the as-of
-    # predicate is inclusive (event date >= order date)
-    w = (Window.partitionBy("user_id").orderBy("t", "kind", "event_id")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    return (
-        d.unionByName(e)
-        .withColumn("last_orderkey",
-                    F.last("o_orderkey", ignorenulls=True).over(w))
-        .withColumn("last_totalprice",
-                    F.last("o_totalprice", ignorenulls=True).over(w))
-        .withColumn("last_t",
-                    F.last(F.when(F.col("kind") == 0, F.col("t")),
-                           ignorenulls=True).over(w))
-        .filter((F.col("kind") == 1) & F.col("last_orderkey").isNotNull())
-        .select("event_id", "user_id", "last_orderkey",
-                F.round("last_totalprice", 4).alias("last_totalprice"),
-                (F.col("t") - F.col("last_t")).cast("long")
-                .alias("days_since_order"))
-    )
-
-
-SQL_ASOF_JOIN_ORDERS = """
-WITH dim AS (
-  SELECT o_custkey, CAST(o_orderdate AS DATE) AS o_date,
-         max(o_orderkey) AS o_orderkey,
-         max_by(o_totalprice, o_orderkey) AS o_totalprice
-  FROM orders GROUP BY 1, 2)
-SELECT e.event_id, e.user_id, d.o_orderkey AS last_orderkey,
-       round(d.o_totalprice, 4) AS last_totalprice,
-       CAST(date_diff('day', d.o_date, CAST(e.ts AS DATE)) AS BIGINT)
-         AS days_since_order
-FROM events e ASOF JOIN dim d
-  ON e.user_id = d.o_custkey AND CAST(e.ts AS DATE) >= d.o_date
-"""
-
-_RANGE_WIN_US = 300_000_000  # 5 minutes in microseconds
-
-
-def q_range_join_errors(spark, sf_dir):
-    """Bucketed range join: events falling in the 5-minute window after
-    each error event. A naive theta-join (t0 < t <= t0+W) is a
-    cartesian at scale; the classic fix is to replicate each window
-    into the fixed-width time buckets it overlaps (<= 2 when bucket
-    width == window width) and equi-join on the bucket id, keeping the
-    exact range predicate as a post-filter. Each event lives in exactly
-    one bucket, so no dedup pass is needed. The oracle runs the plain
-    inequality join — same answer, different plan."""
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id", "event_type", "value",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("t"))
-    win = F.lit(_RANGE_WIN_US)
-    errors = (ev.filter(F.col("event_type") == "error")
-              .select(F.col("event_id").alias("error_id"),
-                      F.col("t").alias("t0")))
-    w = errors.select(
-        "error_id", "t0",
-        F.explode(F.array(F.floor(F.col("t0") / win),
-                          F.floor(F.col("t0") / win) + 1)).alias("b"))
-    e = ev.withColumn("b", F.floor(F.col("t") / win))
-    return (
-        F.broadcast(w).join(e, "b")
-        .filter((F.col("t") > F.col("t0"))
-                & (F.col("t") <= F.col("t0") + win)
-                & (F.col("event_id") != F.col("error_id")))
-        .groupBy("error_id")
-        .agg(F.count(F.lit(1)).alias("n_hits"),
-             F.round(F.sum("value"), 4).alias("sum_value"),
-             F.min("event_id").alias("first_hit"))
-    )
-
-
-SQL_RANGE_JOIN_ERRORS = f"""
-WITH w AS (SELECT event_id AS error_id, epoch_us(ts) AS t0
-           FROM events WHERE event_type = 'error')
-SELECT w.error_id, count(*) AS n_hits,
-       round(sum(e.value), 4) AS sum_value,
-       min(e.event_id) AS first_hit
-FROM w JOIN events e
-  ON epoch_us(e.ts) > w.t0 AND epoch_us(e.ts) <= w.t0 + {_RANGE_WIN_US}
-     AND e.event_id <> w.error_id
-GROUP BY w.error_id
-"""
 
 
 def _zorder_interleave_sql(x: str, y: str, bits: int = 8) -> str:
@@ -1365,37 +876,6 @@ w AS (SELECT tf.doc_id,
 SELECT doc_id, count(*) AS n_terms, round(sum(w), 5) AS bm25
 FROM w GROUP BY doc_id
 ORDER BY bm25 DESC, doc_id LIMIT 10
-"""
-
-
-def q_group_quantiles(spark, sf_dir):
-    """Exact per-group quantiles (linear interpolation) — the eval-side
-    distribution summary. Spark's exact `percentile` and DuckDB's
-    `quantile_cont` implement the same estimator, so values agree to
-    rounding. (The 100-TB variant swaps in percentile_approx — a
-    mergeable sketch — which has no cross-engine oracle by design;
-    tests/test_approx_distinct.py covers the sketch-accuracy gate
-    pattern.)"""
-    return (
-        _t(spark, sf_dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(F.round(F.percentile("l_extendedprice", F.lit(0.25)), 4)
-             .alias("p25"),
-             F.round(F.percentile("l_extendedprice", F.lit(0.50)), 4)
-             .alias("p50"),
-             F.round(F.percentile("l_extendedprice", F.lit(0.75)), 4)
-             .alias("p75"),
-             F.count(F.lit(1)).alias("n_rows"))
-    )
-
-
-SQL_GROUP_QUANTILES = """
-SELECT l_returnflag,
-       round(quantile_cont(l_extendedprice, 0.25), 4) AS p25,
-       round(quantile_cont(l_extendedprice, 0.50), 4) AS p50,
-       round(quantile_cont(l_extendedprice, 0.75), 4) AS p75,
-       count(*) AS n_rows
-FROM lineitem GROUP BY l_returnflag
 """
 
 
@@ -2766,26 +2246,6 @@ WHERE q.doc_id % 97 <> 0
 """
 
 
-def q_cc_size_stats(spark, sf_dir):
-    """Component-size histogram of the entity-linking CC output — the
-    diagnostic an entity-resolution engineer reads to catch blocking
-    pathologies (a giant component = over-merged canon; all-singletons
-    = under-blocking). Two hash aggregations on top of the hardened
-    large-star/small-star labels."""
-    cc = q_cc_components(spark, sf_dir)
-    sizes = cc.groupBy("component").agg(F.count(F.lit(1)).alias("size"))
-    return sizes.groupBy("size").agg(
-        F.count(F.lit(1)).alias("n_components"))
-
-
-SQL_CC_SIZE_STATS_TMPL = """
-SELECT size, count(*) AS n_components FROM (
-  SELECT component, count(*) AS size
-  FROM ({cc}) c GROUP BY component) s
-GROUP BY size
-"""
-
-
 def q_lang_mixing_weights(spark, sf_dir):
     """Temperature-sampling mixing weights per language (alpha=0.7,
     the XLM-R/mT5 multilingual rule) — see sampling.mixing_weights for
@@ -2850,36 +2310,6 @@ GROUP BY pb.id
 """
 
 
-def q_kg_negative_samples(spark, sf_dir):
-    """Deterministic filtered tail-corruption negatives over the doc
-    graph (KG-embedding training data; see graph.negative_samples for
-    the anti-join scale shape). n_nodes is one scalar count action; the
-    sampling itself is lazy relational algebra."""
-    from causalre_spark.operators import graph
-
-    docs = _t(spark, sf_dir, "documents")
-    return graph.negative_samples(
-        _doc_graph_edges(spark, sf_dir),
-        docs.select("doc_id"),
-        n_nodes=docs.count(),
-    )
-
-
-SQL_KG_NEGATIVE_SAMPLES = f"""
-WITH {_DUCK_GRAPH_CTE},
-prop AS (SELECT src,
-                ({md5_long_sql("concat(CAST(src AS VARCHAR), '#', CAST(dst AS VARCHAR))")})
-                % (SELECT count(*) FROM documents) AS dst_neg
-         FROM edges),
-valid AS (SELECT p.src, p.dst_neg
-          FROM prop p JOIN documents d ON d.doc_id = p.dst_neg
-          WHERE p.dst_neg <> p.src)
-SELECT DISTINCT v.src, v.dst_neg
-FROM valid v LEFT JOIN edges e ON e.src = v.src AND e.dst = v.dst_neg
-WHERE e.src IS NULL
-"""
-
-
 # --------------------------------------------------------------------------
 # registry
 # --------------------------------------------------------------------------
@@ -2902,22 +2332,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "decontaminate": q_decontaminate,
     # text analysis family
     "text_fingerprint": q_text_fingerprint,
-    # similarity family
-    "sim_cosine_topk": q_sim_cosine_topk,
-    # entity linking pieces + CC
-    "cc_components": q_cc_components,
-    # graph-join + skew-handling shapes (kg_construct scale patterns)
-    "kg_2hop": q_kg_2hop,
-    "kg_pagerank": q_kg_pagerank,
-    "kg_triangles": q_kg_triangles,
-    "kg_degree_stats": q_kg_degree_stats,
-    "kg_negative_samples": q_kg_negative_samples,
-    "skew_salted_agg": q_skew_salted_agg,
-    # classic relational + events
-    "events_sessionize": q_events_sessionize,
-    # temporal joins + sampling + corpus weighting
-    "asof_join_orders": q_asof_join_orders,
-    "range_join_errors": q_range_join_errors,
+    # sampling + layout + corpus weighting
     "sample_hash": q_sample_hash,
     "zorder_key": q_zorder_key,
     "sample_stratified": q_sample_stratified,
@@ -2925,11 +2340,9 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dsir_weights": q_dsir_weights,
     "lang_mixing_weights": q_lang_mixing_weights,
     "curation_verdict": q_curation_verdict,
-    "cc_size_stats": q_cc_size_stats,
     "tfidf_topk": q_tfidf_topk,
     "bm25_topk": q_bm25_topk,
     "dedup_compaction": q_dedup_compaction,
-    "group_quantiles": q_group_quantiles,
     # gold-data eval on the reference's own test splits (ignores sf_dir)
     "gold_eval_custom": q_gold_eval_custom,
     "gold_eval_conll04": q_gold_eval_conll04,
@@ -2972,17 +2385,6 @@ ORACLES: dict[str, str] = {
     "dedup_crossdoc": SQL_DEDUP_CROSSDOC,
     "decontaminate": SQL_DECONTAMINATE,
     "text_fingerprint": SQL_TEXT_FINGERPRINT,
-    "sim_cosine_topk": SQL_SIM_COSINE_TOPK,
-    "cc_components": SQL_CC_COMPONENTS,
-    "kg_2hop": SQL_KG_2HOP,
-    "kg_pagerank": _duck_pagerank(),
-    "kg_triangles": SQL_KG_TRIANGLES,
-    "kg_degree_stats": SQL_KG_DEGREE_STATS,
-    "kg_negative_samples": SQL_KG_NEGATIVE_SAMPLES,
-    "skew_salted_agg": SQL_SKEW_SALTED_AGG,
-    "events_sessionize": SQL_EVENTS_SESSIONIZE,
-    "asof_join_orders": SQL_ASOF_JOIN_ORDERS,
-    "range_join_errors": SQL_RANGE_JOIN_ERRORS,
     "sample_hash": SQL_SAMPLE_HASH,
     "zorder_key": SQL_ZORDER_KEY,
     "sample_stratified": SQL_SAMPLE_STRATIFIED,
@@ -2990,11 +2392,9 @@ ORACLES: dict[str, str] = {
     "dsir_weights": SQL_DSIR_WEIGHTS,
     "lang_mixing_weights": SQL_LANG_MIXING_WEIGHTS,
     "curation_verdict": SQL_CURATION_VERDICT,
-    "cc_size_stats": SQL_CC_SIZE_STATS_TMPL.format(cc=SQL_CC_COMPONENTS),
     "tfidf_topk": SQL_TFIDF_TOPK,
     "bm25_topk": SQL_BM25_TOPK,
     "dedup_compaction": SQL_DEDUP_COMPACTION,
-    "group_quantiles": SQL_GROUP_QUANTILES,
     "gold_eval_custom": SQL_GOLD_EVAL_CUSTOM,
     "gold_eval_conll04": SQL_GOLD_EVAL_CONLL04,
     "gazetteer_lexicon": SQL_GAZETTEER_LEXICON,

@@ -269,8 +269,7 @@ def join_crawl_events_stream(pages: DataFrame, events: DataFrame,
     events (url, fetch_ts, status) to pages (url, warc_ts) when the
     fetch landed within +-`skew` of the page's warc timestamp — the
     standard enrich-while-ingesting shape (page stream x fetch-log
-    stream) that batch pipelines do with an as-of/range join
-    (q_asof_join_orders / q_range_join_errors are the batch twins).
+    stream) that batch pipelines do with an as-of/range join.
 
     Scale shape: both sides carry watermarks and the join condition
     bounds event time in BOTH directions, so Spark can evict state — a

@@ -1,14 +1,13 @@
 """Unit tests for the round-3 corpus-curation operators: cross-doc
 duplicated-ngram stats, benchmark decontamination, exact-quota
-stratified sampling, hot-group skew profiling, and KG negative
-sampling. Hand-built inputs with hand-computed expectations (the
+stratified sampling and hot-group skew profiling. Hand-built inputs with hand-computed expectations (the
 sf-scale oracle gates live in test_entry_contract / check_entry)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from causalre_spark.functions.hashing import md5_long
-from causalre_spark.operators import dedup, graph, sampling
+from causalre_spark.operators import dedup, sampling
 
 
 def _shingles(spark, rows):
@@ -70,24 +69,6 @@ def test_group_skew_stats(spark):
         "C": (1, 0.1, False, 2),
     }
 
-
-def test_negative_samples_filters(spark):
-    n = 10
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 3), (3, 4), (5, 6)], "src long, dst long")
-    nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    got = {(r["src"], r["dst_neg"])
-           for r in graph.negative_samples(edges, nodes, n).collect()}
-    pos = {(0, 1), (1, 2), (2, 3), (3, 4), (5, 6)}
-    expect = set()
-    for s, d in pos:
-        neg = md5_long(f"{s}#{d}") % n
-        if neg != s and (s, neg) not in pos:
-            expect.add((s, neg))
-    assert got == expect
-    assert got  # non-vacuous on this seed set
-    assert not (got & pos)
-    assert all(0 <= d < n and d != s for s, d in got)
 
 
 def test_dsir_log_weights_vs_python_twin(spark):

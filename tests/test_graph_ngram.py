@@ -1,66 +1,14 @@
-"""Tests for operators/graph.py (degree-ordered triangles) and
-dedup.ngram_jaccard_pairs (prefix-filtered exact set-similarity join).
-
-Both are verified against independent brute-force Python computations
-on randomized-but-seeded inputs: the Spark plan is the scale shape, the
-brute force is the semantics.
+"""Tests for dedup.ngram_jaccard_pairs (prefix-filtered exact
+set-similarity join), verified against an independent brute-force
+Python computation on randomized-but-seeded inputs: the Spark plan is
+the scale shape, the brute force is the semantics.
 """
 
 import itertools
 import random
 
-from pyspark.sql import functions as F
-
 from causalre_spark.functions.text import normalize
-from causalre_spark.operators import dedup, graph
-
-
-def _brute_triangles(edge_list):
-    adj = {}
-    for u, v in edge_list:
-        if u == v:
-            continue
-        adj.setdefault(u, set()).add(v)
-        adj.setdefault(v, set()).add(u)
-    tris = set()
-    for a, b, c in itertools.combinations(sorted(adj), 3):
-        if b in adj[a] and c in adj[a] and c in adj[b]:
-            tris.add((a, b, c))
-    return tris
-
-
-def test_triangles_match_bruteforce_random(spark):
-    rng = random.Random(7)
-    for trial in range(3):
-        n = 40
-        edges = {(rng.randrange(n), rng.randrange(n)) for _ in range(150)}
-        df = spark.createDataFrame(
-            [(int(a), int(b)) for a, b in edges], "src long, dst long")
-        got = {tuple(r) for r in
-               graph.triangles(graph.undirected(df)).collect()}
-        assert got == _brute_triangles(edges), f"trial {trial}"
-
-
-def test_triangles_skewed_hub(spark):
-    # a degree-hub star + a few closing edges: the shape the degree
-    # ordering exists for; every star edge directs INTO the hub
-    star = [(0, i) for i in range(1, 30)]
-    closing = [(1, 2), (3, 4), (5, 6), (1, 3)]
-    edges = star + closing
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {tuple(r) for r in graph.triangles(graph.undirected(df)).collect()}
-    assert got == _brute_triangles(edges)
-    assert (0, 1, 2) in got and (0, 5, 6) in got
-
-
-def test_degree_histogram(spark):
-    df = spark.createDataFrame(
-        [(0, 1), (0, 2), (0, 3), (1, 2), (1, 0), (2, 0)],  # dup directions collapse
-        "src long, dst long")
-    hist = {r["deg"]: r["n_nodes"]
-            for r in graph.degree_histogram(graph.undirected(df)).collect()}
-    # und = {01,02,03,12}; deg: 0->3, 1->2, 2->2, 3->1
-    assert hist == {3: 1, 2: 2, 1: 1}
+from causalre_spark.operators import dedup
 
 
 def _brute_jaccard_pairs(texts, n, thd_num, thd_den):
@@ -105,30 +53,3 @@ def test_ngram_jaccard_exact_dup_and_disjoint(spark):
     rows = dedup.ngram_jaccard_pairs(sh, 1, 2).collect()
     assert [(r["id_a"], r["id_b"], r["n_shared"], r["n_union"])
             for r in rows] == [(1, 2, 4, 4)]
-
-
-def test_label_propagation_two_triangles_bridge(spark):
-    """Hand-traced LPA on two triangles joined by one bridge edge
-    (0-1-2, 10-11-12, bridge 2-10): after 3 deterministic rounds each
-    triangle converges to one community and the bridge does NOT merge
-    them (unlike connected components, which would). Isolated nodes
-    keep their own label; result is partitioning-invariant."""
-    from causalre_spark.operators.graph import label_propagation
-
-    edges = spark.createDataFrame(
-        [(0, 1), (0, 2), (1, 2), (10, 11), (10, 12), (11, 12), (2, 10)],
-        "src long, dst long")
-    nodes = spark.createDataFrame(
-        [(i,) for i in (0, 1, 2, 10, 11, 12, 99)], "node long")
-    out = {r["node"]: r["label"]
-           for r in label_propagation(nodes, edges, rounds=3).collect()}
-    # round-by-round trace (count desc, label asc tie-break):
-    # r1: 0->1 1->0 2->0 10->2 11->10 12->10
-    # r2: 0->0 1->0 2->0 10->10 11->2 12->2
-    # r3: 0->0 1->0 2->0 10->2 11->2 12->2
-    assert out == {0: 0, 1: 0, 2: 0, 10: 2, 11: 2, 12: 2, 99: 99}
-    again = {r["node"]: r["label"]
-             for r in label_propagation(
-                 nodes.repartition(5), edges.repartition(3), rounds=3
-             ).collect()}
-    assert again == out

@@ -61,16 +61,27 @@ def test_canonicalization_idempotent():
     assert c1 == c2
 
 
+def _id_graph(spark, names, pairs):
+    """(nodes, edges, name_of): the named graph over md5_long(name)
+    BIGINT ids — link_mentions' id space — and the map back to names."""
+    from causalre_spark.functions.hashing import md5_long
+
+    nodes = spark.createDataFrame([(md5_long(x),) for x in names],
+                                  "form long")
+    edges = spark.createDataFrame(
+        [(md5_long(a), md5_long(b)) for a, b in pairs],
+        "form_a long, form_b long")
+    return nodes, edges, {md5_long(x): x for x in names}
+
+
 def test_cc_distributed_path_matches_union_find(spark):
     from causalre_spark.operators.linking import connected_components
 
-    nodes = spark.createDataFrame([("a",), ("b",), ("c",), ("d",), ("e",)],
-                                  "form string")
-    edges = spark.createDataFrame([("a", "b"), ("b", "c"), ("d", "e")],
-                                  "form_a string, form_b string")
-    fast = {(r.form, r.component)
+    nodes, edges, name_of = _id_graph(
+        spark, ["a", "b", "c", "d", "e"], [("a", "b"), ("b", "c"), ("d", "e")])
+    fast = {(name_of[r.form], r.component)
             for r in connected_components(nodes, edges).collect()}
-    dist = {(r.form, r.component)
+    dist = {(name_of[r.form], r.component)
             for r in connected_components(nodes, edges, driver_max_nodes=0).collect()}
     assert fast == dist
     comp = dict(fast)
@@ -108,15 +119,13 @@ def test_cc_long_path_converges_within_log_rounds(spark):
     from causalre_spark.operators.linking import connected_components
 
     names = [f"n{i:03d}" for i in range(41)]
-    nodes = spark.createDataFrame([(x,) for x in names], "form string")
-    edges = spark.createDataFrame(
-        [(names[i], names[i + 1]) for i in range(40)],
-        "form_a string, form_b string")
+    nodes, edges, name_of = _id_graph(
+        spark, names, [(names[i], names[i + 1]) for i in range(40)])
     got = connected_components(nodes, edges, max_iters=10,
                                driver_max_nodes=0).collect()
     comps = {r.component for r in got}
     assert comps == {min(md5_long(x) for x in names)}
-    assert len({r.form for r in got}) == 41
+    assert len({name_of[r.form] for r in got}) == 41
 
 
 def test_cc_raises_loudly_when_unconverged(spark):
@@ -127,10 +136,8 @@ def test_cc_raises_loudly_when_unconverged(spark):
     from causalre_spark.operators.linking import connected_components
 
     names = [f"m{i:02d}" for i in range(30)]
-    nodes = spark.createDataFrame([(x,) for x in names], "form string")
-    edges = spark.createDataFrame(
-        [(names[i], names[i + 1]) for i in range(29)],
-        "form_a string, form_b string")
+    nodes, edges, _ = _id_graph(
+        spark, names, [(names[i], names[i + 1]) for i in range(29)])
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(nodes, edges, max_iters=1, driver_max_nodes=0)
 
@@ -167,12 +174,10 @@ def test_cc_random_graphs_match_union_find(spark):
     cases.append((fnodes, fedges))
 
     for nodes, edges in cases:
-        ndf = spark.createDataFrame([(n,) for n in nodes], "form string")
-        edf = spark.createDataFrame(edges or [("z", "z")],
-                                    "form_a string, form_b string")
-        got = {(r.form, r.component) for r in connected_components(
+        ndf, edf, name_of = _id_graph(spark, nodes, edges or [("z", "z")])
+        got = {(name_of[r.form], r.component) for r in connected_components(
             ndf, edf, max_iters=12, driver_max_nodes=0).collect()
-            if r.form in set(nodes)}
+            if r.form in name_of}
         want = set(_union_find_components(nodes, edges, md5_long))
         assert got == want, (nodes[:3], len(edges))
 

@@ -227,11 +227,12 @@ def test_grid_constant_lint():
             hits += 1
             # where a scale multiplier precedes the constant on the same
             # statement, it must be one of the two sanctioned powers of
-            # ten (constant DEFINITIONS like pagerank's _OFF have none)
+            # ten (constant DEFINITIONS like GRID_OFFSET have none)
             window = src[max(0, m.start() - 200):m.start()]
             scales = re.findall(r"\* (\d+)\.0", window)
             if scales:
                 assert set(scales[-1:]) <= {"100", "10000"}, (py.name, scales)
-    # the policy is in force across the tree: the canonical definition,
-    # kg_pagerank's offset and its SQL twin, and the NB-weight SQL twin
-    assert hits >= 4
+    # the policy is in force across the tree: the canonical definition
+    # in functions/grid.py and the NB-weight SQL twin in
+    # plans/entry_queries._duck_rel_nb_chain
+    assert hits >= 2

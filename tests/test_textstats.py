@@ -1,10 +1,9 @@
 """Edge-case units for the Gopher-style repetition signals and the
-percentile quality gate (the oracle queries cover the bulk semantics;
+token-window chunker (the oracle queries cover the bulk semantics;
 these lock the short-doc / tie-break corners the synthetic corpus may
 never hit)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from causalre_spark.operators import textstats
 
@@ -46,72 +45,12 @@ def test_repetition_fracs_and_tiebreak(spark):
     assert out[1]["top_bigram"] == "z y"
 
 
-def test_quality_percentile_gate(spark):
-    docs = spark.createDataFrame(
-        [(i, ("the and of to in is was " * (1 + i % 7))[: 20 + 13 * i],
-          "en" if i % 2 == 0 else "de", "web", 0)
-         for i in range(40)],
-        "doc_id long, text string, lang string, source string, n_chars long")
-    out = {r["lang"]: r.asDict()
-           for r in textstats.quality_percentile_gate(docs).collect()}
-    assert set(out) == {"en", "de"}
-    for lang, r in out.items():
-        assert r["p_lo"] <= r["p_hi"]
-        assert 0 < r["n_kept"] <= r["n_docs"] == 20
-    # determinism under different partitioning
-    out2 = {r["lang"]: r.asDict() for r in
-            textstats.quality_percentile_gate(docs.repartition(7)).collect()}
-    assert out == out2
-
 
 def _docs(spark, texts):
     return spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)],
         "doc_id long, text string")
 
-
-def test_lm_perplexity_hand_computed(spark):
-    """Exact check against a hand-built bigram model: one training doc,
-    two scored docs — one repeating the training bigrams (low ppl), one
-    of unseen tokens (high ppl, every bigram backs off to the
-    0-count smoothed floor)."""
-    import math
-
-    from causalre_spark.functions.hashing import md5_long
-
-    B, C, a = 4096, 256, 0.5
-    # 50 copies push the seen-bigram counts past the smoothing floor
-    # (1 copy: P = 1.5/2049 for seen vs 0.5/2048 unseen — only 3x apart)
-    train = ["the cat sat"] * 50
-    score = ["the cat sat", "zq xk vv"]
-    out = {r["doc_id"]: r.asDict()
-           for r in textstats.lm_perplexity(
-               _docs(spark, score), _docs(spark, train),
-               n_ctx_buckets=C, n_bigram_buckets=B, alpha=a).collect()}
-
-    # python twin of the hashed-bigram model
-    def buckets(text):
-        toks = text.split(" ")
-        prevs = ["<s>"] + toks[:-1]
-        return [(md5_long(p) % C, md5_long(f"{p} {t}") % B)
-                for p, t in zip(prevs, toks)]
-
-    c_big: dict = {}
-    c_ctx: dict = {}
-    for doc in train:
-        for bc, bb in buckets(doc):
-            c_ctx[bc] = c_ctx.get(bc, 0) + 1
-            c_big[bb] = c_big.get(bb, 0) + 1
-    for i, text in enumerate(score):
-        lps = [math.log((c_big.get(bb, 0) + a) / (c_ctx.get(bc, 0) + a * B))
-               for bc, bb in buckets(text)]
-        avg = sum(lps) / len(lps)
-        assert out[i]["n_bigrams"] == len(lps)
-        assert out[i]["avg_logp"] == pytest.approx(round(avg, 4), abs=1e-9)
-        assert out[i]["ppl"] == pytest.approx(round(math.exp(-avg), 4), abs=1e-9)
-    # the training-identical doc must score dramatically lower ppl than
-    # the unseen-token doc (the CCNet keep-the-head property)
-    assert out[0]["ppl"] < out[1]["ppl"] / 10
 
 
 def test_chunk_documents_windows(spark):
@@ -153,56 +92,3 @@ def test_chunk_documents_no_shuffle(spark):
     df = textstats.chunk_documents(_docs(spark, ["a b c"]), size=2, stride=1)
     explained = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in explained
-
-
-def test_langid_fitted_perfect_on_real_language_text(spark):
-    """Fitted char-trigram language ID must be perfectly diagonal on a
-    corpus whose languages have genuinely distinct text (the synthetic
-    pages corpus) — in-sample, 5 languages, no off-diagonal cells."""
-    from causalre_spark.sources.corpus import synth_pages_df
-
-    pages = synth_pages_df(spark, 200, partitions=4)
-    rows = textstats.langid_fitted_confusion(
-        pages, id_col="url", text_col="text", lang_col="lang").collect()
-    assert all(r.true_lang == r.pred_lang for r in rows), rows
-    assert sum(r.n_docs for r in rows) == 200
-
-
-def test_pii_scrub_crafted_examples(spark):
-    """Counts and redaction against python re on crafted PII text (the
-    corpus oracle proves cross-engine plumbing; this proves the actual
-    match semantics)."""
-    import re
-
-    from causalre_spark.functions.hashing import md5_long
-    from causalre_spark.operators.textstats import PII_PATTERNS
-
-    texts = [
-        "contact bob.smith+x@example.co.uk or call +1-555-123-4567 now",
-        "server at 10.0.0.1 and 192.168.001.200 but not 1.2.3",
-        "no pii here at all",
-        "a@b.io c@d.org 8.8.8.8",
-    ]
-    texts.append("192.168.0.1@mail.example.com overlap case")
-    out = {r["doc_id"]: r.asDict()
-           for r in textstats.pii_scrub(_docs(spark, texts)).collect()}
-    for i, t in enumerate(texts):
-        # twin of the sequential semantics: each class counts on the
-        # text with the previous classes already redacted, so counts
-        # always equal placeholders inserted (no double-counting of
-        # overlapping classes)
-        red, n_pii = t, 0
-        for name, pat in PII_PATTERNS.items():
-            n = len(re.findall(pat, red))
-            assert out[i][f"n_{name}"] == n, (i, name, red)
-            n_pii += n
-            red = re.sub(pat, f"<{name.upper()}>", red)
-        assert out[i]["n_pii"] == n_pii
-        assert out[i]["redacted_md5"] == md5_long(red), (i, red)
-    # the overlap case: the email regex consumes the whole address, so
-    # ipv4 must NOT also claim a redaction that never happened
-    ov = out[len(texts) - 1]
-    assert ov["n_email"] == 1 and ov["n_ipv4"] == 0 and ov["n_pii"] == 1
-    assert out[0]["n_email"] == 1 and out[0]["n_phone"] == 1
-    assert out[1]["n_ipv4"] == 2 and out[2]["n_pii"] == 0
-    assert out[3]["n_email"] == 2 and out[3]["n_ipv4"] == 1
