@@ -16,12 +16,17 @@ Design (all DataFrame algebra, zero Python UDFs):
      members are collected
   4. exact Jaccard verification inside each bucket over the BIGINT
      shingle-hash arrays, then one distinct over the edge pairs
-  5. connected components: driver union-find for small graphs, else
-     alternating large-star/small-star contraction (Kiveris et al.) with
+  5. connected components over the BIGINT fids: a graph within the
+     driver caps (DRIVER_MAX_NODES / DRIVER_MAX_EDGES) is collected and
+     solved by driver union-find; larger graphs take alternating
+     large-star/small-star contraction (Kiveris et al.) with
      localCheckpoint() lineage cuts — O(log² n) rounds, diameter-free,
      loud failure if cc_max_iters exhausts before the star fixpoint
   6. canonical id = min md5_long(form) in component (deterministic);
-     canonical surface = the form carrying that minimum
+     canonical surface = the form carrying that minimum. On the driver
+     path the pick runs on the driver too (_canonical_rows) and the
+     result goes back to Spark as one Arrow-built LocalRelation; past
+     the caps it is canonical_entities' aggregate and join
 """
 
 from __future__ import annotations
@@ -32,6 +37,16 @@ from pyspark.sql import functions as F
 from causalre_spark.config import DEFAULT_CONFIG, PipelineConfig
 from causalre_spark.functions.hashing import md5_long_sql_spark
 from causalre_spark.functions.text import NONEMPTY_FORM_SQL, NORMALIZE_SQL
+from causalre_spark.session import driver_frame
+
+# Driver caps of the connected-components step, shared by
+# connected_components and link_mentions: a graph within both is
+# collected and solved on the driver, a larger one takes star
+# contraction. Read at call time, so tests can force the star path.
+DRIVER_MAX_NODES = 2_000_000
+DRIVER_MAX_EDGES = 5_000_000
+
+ENTITY_SCHEMA = "form string, canonical_id long, canonical_form string"
 
 
 def normalized_forms(mentions: DataFrame, text_col: str = "text") -> DataFrame:
@@ -101,12 +116,12 @@ def _lsh_edges(fmap: DataFrame, cfg: PipelineConfig) -> DataFrame:
     )
 
 
-def _union_find_components(nodes: list[str], edges: list[tuple[str, str]],
-                           label_of) -> list[tuple[str, int]]:
+def _union_find_components(nodes: list, edges: list[tuple],
+                           label_of) -> list[tuple]:
     """Driver-side union-find; component = min label over members."""
-    parent: dict[str, str] = {n: n for n in nodes}
+    parent = {n: n for n in nodes}
 
-    def find(x: str) -> str:
+    def find(x):
         while parent[x] != x:
             parent[x] = parent[parent[x]]
             x = parent[x]
@@ -116,13 +131,38 @@ def _union_find_components(nodes: list[str], edges: list[tuple[str, str]],
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[ra] = rb
-    best: dict[str, int] = {}
+    best: dict = {}
     for n in nodes:
         r = find(n)
         lab = label_of(n)
         if r not in best or lab < best[r]:
             best[r] = lab
     return [(n, best[find(n)]) for n in nodes]
+
+
+def _canonical_rows(form_fids: list[tuple[str, int]],
+                    edges: list[tuple[int, int]]) -> list[tuple[str, int, str]]:
+    """Driver linking tail shared by link_forms_driver and link_mentions:
+    union-find over the fid edges, component = min fid, canonical form =
+    min (fid, form) over the component — the labels canonical_entities
+    gives the star path. Rows come back in form_fids order."""
+    comp = dict(_union_find_components(
+        [fid for _, fid in form_fids], edges, lambda x: x))
+    canon: dict[int, tuple[int, str]] = {}
+    for form, fid in form_fids:
+        c = comp[fid]
+        if c not in canon or (fid, form) < canon[c]:
+            canon[c] = (fid, form)
+    return [(form, comp[fid], canon[comp[fid]][1]) for form, fid in form_fids]
+
+
+def _collect_edges(edges: DataFrame, cap: int) -> list[tuple[int, int]] | None:
+    """The (form_a, form_b) edges as driver tuples, or None when there are
+    more than `cap`. One bounded limit(cap + 1).collect(): a graph over
+    the cap never lands on the driver whole, and one under it is fetched
+    by the same job that measures it."""
+    rows = edges.select("form_a", "form_b").limit(cap + 1).collect()
+    return None if len(rows) > cap else [(r[0], r[1]) for r in rows]
 
 
 def _star_components(edges: DataFrame, max_iters: int, parts: int) -> DataFrame:
@@ -210,61 +250,54 @@ def _star_components(edges: DataFrame, max_iters: int, parts: int) -> DataFrame:
 def connected_components(
     nodes: DataFrame, edges: DataFrame, max_iters: int = 20,
     rows_per_partition: int = 10_000, n_nodes: int | None = None,
-    driver_max_nodes: int = 2_000_000, driver_max_edges: int = 5_000_000,
+    driver_max_nodes: int | None = None, driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Connected components over (form_a, form_b) edges of BIGINT node
     ids.
 
     Returns (form, component) where component = min node id over the
     component. Callers key nodes by an id whose order is the canonical
-    one: link_mentions passes md5_long(form) (its int-keyed chain), so
-    the component is the min md5_long over the component;
+    one: link_mentions' star path passes md5_long(form), so the
+    component is the min md5_long over the component;
     dedup_near_clusters passes doc ids, so it is the min doc id.
 
     Adaptive physical strategy (same spirit as Catalyst's broadcast-vs-
-    shuffle join selection): a mention graph that fits on the driver is
-    solved with one collect + union-find — O(E α(N)) and zero Spark jobs
-    per round — while larger graphs take the distributed min-label
-    propagation loop. Labels are identical either way.
+    shuffle join selection): a graph within the driver caps
+    (driver_max_nodes / driver_max_edges, default DRIVER_MAX_NODES /
+    DRIVER_MAX_EDGES) is collected — the edges through one bounded
+    limit(cap + 1).collect() — and solved by union-find, O(E α(N)) with
+    zero Spark jobs per round; the labels return as one Arrow-built
+    LocalRelation. Larger graphs take star contraction, recomputing the
+    edges from their lazy plan. Labels are identical either way.
 
-    Distributed path: large-star/small-star contraction over the node
-    ids (see _star_components) — O(log² n) rounds independent of
-    component diameter, loud RuntimeError if max_iters exhausts before
-    the star fixpoint (never silently-wrong labels). Partition count is
-    sized from the node count.
+    Star path: large-star/small-star contraction over the node ids (see
+    _star_components) — O(log² n) rounds independent of component
+    diameter, loud RuntimeError if max_iters exhausts before the star
+    fixpoint (never silently-wrong labels). Partition count is sized
+    from the node count.
     """
+    if driver_max_nodes is None:
+        driver_max_nodes = DRIVER_MAX_NODES
+    if driver_max_edges is None:
+        driver_max_edges = DRIVER_MAX_EDGES
     if n_nodes is None:
         n_nodes = nodes.count()
     spark = nodes.sparkSession
     if n_nodes <= driver_max_nodes:
         # gate on BOTH node and edge counts before taking the driver
-        # path: a dense near-dup graph can have edges >> nodes, and an
-        # unconditional edge collect would land the whole graph on the
-        # driver. A FULL count (no py4j row transfer) rather than a
-        # bounded limit+count: the limit's incremental-job strategy only
-        # materializes the partitions it touches, so the persisted edge
-        # cache could be left partial and the follow-up collect would
-        # recompute the jaccard-verify subtree; the full count both
-        # measures and completes the cache in one pass. (Counting all
-        # edges is work the distributed path would do anyway.)
-        edges = edges.persist()
-        n_edges_bounded = edges.count()
-        if n_edges_bounded <= driver_max_edges:
-            edge_rows = edges.select("form_a", "form_b").collect()
-            node_list = [r["form"] for r in nodes.select("form").collect()]
-            edge_list = [(r["form_a"], r["form_b"]) for r in edge_rows]
-            edges.unpersist()
-            assigned = _union_find_components(
-                node_list, edge_list, lambda x: x)
-            return spark.createDataFrame(assigned,
-                                         "form long, component long")
+        # path: a dense near-dup graph can have edges >> nodes
+        edge_list = _collect_edges(edges, driver_max_edges)
+        if edge_list is not None:
+            node_list = [r[0] for r in nodes.select("form").collect()]
+            return driver_frame(
+                spark, _union_find_components(node_list, edge_list, lambda x: x),
+                "form long, component long")
     max_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     parts = max(1, min(max_parts, n_nodes // rows_per_partition + 1))
     ids = nodes.select("form").repartition(parts, "form").localCheckpoint()
     comp = _star_components(
         edges.select(F.col("form_a").alias("a"), F.col("form_b").alias("b")),
         max_iters, parts)
-    edges.unpersist()
     return (
         ids.join(comp, ids["form"] == comp["node"], "left")
         .select("form", F.coalesce("component", "form").alias("component"))
@@ -274,7 +307,9 @@ def connected_components(
 def canonical_entities(labels: DataFrame) -> DataFrame:
     """(form, canonical_id, canonical_form): canonical = the form whose
     md5_long equals the component minimum (deterministic; tie-broken by
-    form for the astronomically-unlikely 48-bit collision).
+    form for the astronomically-unlikely 48-bit collision). This is the
+    star path's pick; within the driver caps link_mentions applies the
+    same rule on the driver (_canonical_rows).
 
     min_by aggregation, not a row_number window: the agg partial-combines
     map-side (each input partition contributes one candidate per
@@ -310,6 +345,8 @@ def link_forms_driver(forms: list[str], cfg: PipelineConfig = DEFAULT_CONFIG,
     the driver links in O(E α(N)) with zero Spark jobs per step, and the
     labels are defined to be identical to the distributed path's
     (component id = min md5_long(form); canonical form = its carrier).
+    Its union-find and canonical pick are the driver tail link_mentions
+    also runs (_canonical_rows); the LSH and verify steps are its own.
     Deliberately implemented with union-find rather than the oracle's
     min-label propagation so oracle-vs-driver parity tests compare two
     independent algorithms, not one function with two names."""
@@ -330,7 +367,8 @@ def link_forms_driver(forms: list[str], cfg: PipelineConfig = DEFAULT_CONFIG,
             # key collision merges the same buckets in every linker
             key = (band, band_key_py(sig[lo:lo + cfg.minhash_band_size]))
             buckets.setdefault(key, []).append(f)
-    edges: list[tuple[str, str]] = []
+    fid = {f: md5_long(f) for f in forms}
+    edges: list[tuple[int, int]] = []
     for members in buckets.values():
         if cfg.lsh_max_bucket and len(members) > cfg.lsh_max_bucket:
             continue  # same skew guard as _lsh_edges
@@ -338,14 +376,8 @@ def link_forms_driver(forms: list[str], cfg: PipelineConfig = DEFAULT_CONFIG,
             for j in range(i + 1, len(members)):
                 a, b = members[i], members[j]
                 if jaccard(sh[a], sh[b]) >= cfg.link_jaccard_thd:
-                    edges.append((a, b))
-    labeled = _union_find_components(forms, edges, md5_long)
-    by_comp: dict[int, list[str]] = {}
-    for f, comp in labeled:
-        by_comp.setdefault(comp, []).append(f)
-    canon = {comp: min(members, key=lambda f: (md5_long(f), f))
-             for comp, members in by_comp.items()}
-    return [(f, comp, canon[comp]) for f, comp in labeled]
+                    edges.append((fid[a], fid[b]))
+    return _canonical_rows([(f, fid[f]) for f in forms], edges)
 
 
 def link_mentions(
@@ -354,19 +386,33 @@ def link_mentions(
 ) -> DataFrame:
     """Full linking stage: mentions -> (form, canonical_id, canonical_form).
 
-    forms and its (form, fid) projection are the only persisted
-    intermediates: the distinct over the (much larger) mention table must
-    run once, and fmap feeds the LSH edges (_lsh_edges), the CC node set
-    and the final fid -> form join. Both are unpersisted before return:
-    connected_components' output is materialized (driver union-find or
-    localCheckpoint), so nothing downstream re-reads them — and long
-    sweep sessions must not accumulate cached blocks.
+    A vocabulary within cfg.link_driver_max_forms links wholly on the
+    driver (link_forms_driver). Otherwise the LSH edges are built in
+    Spark (_lsh_edges) over the persisted (form, fid) projection `fmap`,
+    and the rest depends on the graph's size:
+
+    - within DRIVER_MAX_NODES forms and DRIVER_MAX_EDGES edges, the
+      edges come back through one bounded limit(cap + 1).collect() and
+      fmap through one collect; union-find and the canonical pick run
+      on the driver (_canonical_rows, shared with link_forms_driver),
+      and the result is one Arrow-built LocalRelation;
+    - past either cap, star contraction (connected_components with the
+      driver path off) labels the fids and canonical_entities picks the
+      canonical forms. That path recomputes the edges from the
+      persisted fmap; the labels are localCheckpointed before the
+      caches go.
+
+    forms and fmap are the only persisted intermediates (the distinct
+    over the much larger mention table must run once) and both are
+    unpersisted before return — nothing downstream re-reads them, and
+    long sweep sessions must not accumulate cached blocks.
 
     form_map: optional pre-built (text -> form) dictionary (the
     mention_form_map projection). The pipeline computes it ONCE and
     shares it here and with canonical_triples — otherwise each stage
     re-runs the raw-mention distinct + normalization, the single most
     expensive relational pass of the tail."""
+    spark = mentions.sparkSession
     if form_map is not None:
         forms = form_map.select("form").distinct().persist()
     else:
@@ -381,23 +427,28 @@ def link_mentions(
         # work at any parallelism — the classic small-side cutover.
         form_list = [r["form"] for r in forms.select("form").collect()]
         forms.unpersist()
-        spark = mentions.sparkSession
-        return spark.createDataFrame(
-            link_forms_driver(form_list, cfg),
-            "form string, canonical_id long, canonical_form string")
+        return driver_frame(spark, link_forms_driver(form_list, cfg), ENTITY_SCHEMA)
     # Int-keyed chain: the bucket exchange, the edge distinct and the
     # star contraction key on the 48-bit md5-derived fid (the SAME id
     # canonical_entities/CC already use) instead of the surface string;
-    # surface strings re-enter only at the final canonical join over
-    # |forms| rows.
+    # surface strings re-enter only at the canonical pick over |forms|
+    # rows.
     fmap = forms.select(
         "form", F.expr(md5_long_sql_spark("form")).alias("fid")).persist()
     edges = _lsh_edges(fmap, cfg)
+    edge_list = (_collect_edges(edges, DRIVER_MAX_EDGES)
+                 if n_forms <= DRIVER_MAX_NODES else None)
+    if edge_list is not None:
+        form_fids = [(r[0], r[1]) for r in fmap.collect()]
+        forms.unpersist()
+        fmap.unpersist()
+        return driver_frame(spark, _canonical_rows(form_fids, edge_list),
+                            ENTITY_SCHEMA)
     labels_fid = connected_components(
         fmap.select(F.col("fid").alias("form")), edges, cfg.cc_max_iters,
-        n_nodes=n_forms)
-    # materialize the (tiny, |forms|-row) string labels BEFORE releasing
-    # the caches: the returned plan must not re-derive forms/fmap after
+        n_nodes=n_forms, driver_max_nodes=0)
+    # materialize the (|forms|-row) string labels BEFORE releasing the
+    # caches: the returned plan must not re-derive forms/fmap after
     # unpersist (the forms distinct is the expensive upstream job)
     labels = (
         labels_fid.withColumnRenamed("form", "fid")

@@ -34,6 +34,10 @@ from causalre_spark.config import DEFAULT_CONFIG, PipelineConfig
 from causalre_spark.functions.hashing import md5_long_sql_spark
 from causalre_spark.model.udfs import DOC_EXTRACT_SCHEMA, make_doc_extract_udf
 from causalre_spark.operators import linking
+from causalre_spark.session import driver_frame
+
+TRIPLE_SCHEMA = ("cause_id long, cause string, predicate string, "
+                 "effect_id long, effect string, n_evidence long, max_score float")
 
 
 class StageIO:
@@ -119,14 +123,19 @@ class StageIO:
             self._lineage(name, out)
             return out
         path = self._path(name)
+        reader = self.spark.read
         if not self.done(name):
             df = df_fn()
             if partition_expr:
-                df.withColumn("_p", F.expr(partition_expr)) \
-                    .write.mode("overwrite").partitionBy("_p").parquet(path)
+                df = df.withColumn("_p", F.expr(partition_expr))
+                df.write.mode("overwrite").partitionBy("_p").parquet(path)
             else:
                 df.write.mode("overwrite").parquet(path)
-        out = self.spark.read.parquet(path)
+            # read back with the schema just written (the _p partition
+            # column included): parquet schema inference is a footer-
+            # reading job of its own. A resumed stage still infers.
+            reader = reader.schema(df.schema)
+        out = reader.parquet(path)
         if "_p" in out.columns:
             out = out.drop("_p")
         self._lineage(name, out)
@@ -147,10 +156,12 @@ class StageIO:
         if self.workdir is None or not self.metrics:
             return
         (
-            self.spark.createDataFrame(
+            driver_frame(
+                self.spark,
                 [(m["stage"], m["partition"], m["rows"]) for m in self.metrics],
-                schema="stage string, partition int, rows long",
+                "stage string, partition int, rows long",
             )
+            .coalesce(1)  # a few dozen rows: one file, not one per core
             .write.mode("overwrite")
             .parquet(self._path("_metrics"))
         )
@@ -360,11 +371,10 @@ def _link_and_materialize(spark, io: StageIO, kept: DataFrame, rels: DataFrame,
     triple-set equality vs the single-process oracle on driver testdata.
     """
     if rels.isEmpty():
-        entities = io.checkpoint("entities", lambda: spark.createDataFrame(
-            [], "form string, canonical_id long, canonical_form string"))
-        triples = io.checkpoint("triples", lambda: spark.createDataFrame(
-            [], "cause_id long, cause string, predicate string, "
-                "effect_id long, effect string, n_evidence long, max_score float"))
+        entities = io.checkpoint("entities", lambda: driver_frame(
+            spark, [], linking.ENTITY_SCHEMA))
+        triples = io.checkpoint("triples", lambda: driver_frame(
+            spark, [], TRIPLE_SCHEMA))
         return entities, triples
 
     _stage_caches: list[DataFrame] = []

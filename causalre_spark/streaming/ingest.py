@@ -176,18 +176,15 @@ def link_streamed_batch(
 
     Returns {'entities', 'triples'} DataFrames."""
     from causalre_spark.operators import linking
-    from causalre_spark.pipeline import canonical_triples
+    from causalre_spark.pipeline import TRIPLE_SCHEMA, canonical_triples
+    from causalre_spark.session import driver_frame
 
     kept = spark.read.parquet(sinks["spans"])
     rels = spark.read.parquet(sinks["relations"])
     if rels.isEmpty():
         return {
-            "entities": spark.createDataFrame(
-                [], "form string, canonical_id long, canonical_form string"),
-            "triples": spark.createDataFrame(
-                [], "cause_id long, cause string, predicate string, "
-                    "effect_id long, effect string, n_evidence long, "
-                    "max_score float"),
+            "entities": driver_frame(spark, [], linking.ENTITY_SCHEMA),
+            "triples": driver_frame(spark, [], TRIPLE_SCHEMA),
         }
     # one (text -> form) dictionary shared by linking and the canonical
     # triple join, exactly like the batch pipeline's tail. Intermediates

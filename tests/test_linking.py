@@ -34,17 +34,67 @@ def test_driver_path_matches_distributed_path(spark):
     assert fast == dist and len(fast) > 0
 
 
-def test_distributed_path_matches_oracle(spark):
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString().strip()
+
+
+# link_mentions' graph-size tails: the driver union-find tail at the
+# default caps, and star contraction + canonical_entities with the caps
+# monkeypatched to 0 (past the edge cap alone, or both caps)
+STAR_CAPS = {"DRIVER_MAX_NODES": 0, "DRIVER_MAX_EDGES": 0}
+TAILS = [{}, {"DRIVER_MAX_EDGES": 0}, STAR_CAPS]
+
+
+def _link_with_caps(df, cfg, caps, monkeypatch):
+    """link_mentions labels {form: (canonical_id, canonical_form)} with
+    the driver caps patched to `caps`; a patched run must take the star
+    path, whose canonical pick is an aggregate."""
+    from causalre_spark.operators import linking
+
+    with monkeypatch.context() as m:
+        for name, cap in caps.items():
+            m.setattr(linking, name, cap)
+        out = link_mentions(df, cfg)
+        assert ("Aggregate" in _optimized_plan(out)) == bool(caps)
+        return {r["form"]: (r["canonical_id"], r["canonical_form"])
+                for r in out.collect()}
+
+
+def test_distributed_path_matches_oracle(spark, monkeypatch):
     """Force the distributed path (cutover disabled) against the oracle —
     test_spark_matches_oracle now exercises the driver path by default,
-    so this keeps the star-contraction chain oracle-gated too."""
+    so this keeps the Spark LSH chain oracle-gated too, through both the
+    driver tail and the star-contraction tail."""
     from dataclasses import replace
 
     cfg = replace(DEFAULT_CONFIG, link_driver_max_forms=0)
     df = spark.createDataFrame([(m,) for m in MENTIONS], "text string")
-    got = {r["form"]: (r["canonical_id"], r["canonical_form"])
-           for r in link_mentions(df, cfg).collect()}
-    assert got == link_entities(MENTIONS, DEFAULT_CONFIG)
+    for caps in TAILS:
+        got = _link_with_caps(df, cfg, caps, monkeypatch)
+        assert got == link_entities(MENTIONS, DEFAULT_CONFIG), caps
+
+
+def test_driver_tail_plans_as_one_local_relation(spark):
+    """Regression lock for the driver tail: a graph within the driver
+    caps comes back from link_mentions and connected_components as one
+    Arrow-built LocalRelation — no Spark join, aggregate or
+    Python-row RDD left between the labels and the caller."""
+    from dataclasses import replace
+
+    from causalre_spark.operators.linking import connected_components
+
+    df = spark.createDataFrame([(m,) for m in MENTIONS], "text string")
+    ents = link_mentions(df, replace(DEFAULT_CONFIG, link_driver_max_forms=0))
+    nodes, edges, _ = _id_graph(
+        spark, ["a", "b", "c", "d", "e"], [("a", "b"), ("b", "c"), ("d", "e")])
+    comps = connected_components(nodes, edges)
+    for out in (ents, comps):
+        plan = _optimized_plan(out)
+        assert plan.startswith("LocalRelation") and plan.count("\n") == 0, plan
+        for node in ("LogicalRDD", "Join", "Aggregate"):
+            assert node not in plan, plan
+    assert ents.count() == len(link_entities(MENTIONS, DEFAULT_CONFIG))
+    assert comps.count() == 5
 
 
 def test_variants_cluster_together():
@@ -271,11 +321,13 @@ def _oversized_buckets(forms: list[str], cfg) -> int:
     return sum(1 for n in sizes.values() if n > cfg.lsh_max_bucket)
 
 
-def test_linkers_agree_on_extracted_vocabulary(spark):
+def test_linkers_agree_on_extracted_vocabulary(spark, monkeypatch):
     """Distributed link_mentions, link_forms_driver and the oracle's
     link_entities assign identical labels on a real extracted vocabulary
     (multi-member buckets, many edges) — at the default lsh_max_bucket
-    and at a cap small enough that oversized buckets are dropped."""
+    and at a cap small enough that oversized buckets are dropped. The
+    distributed run takes both graph tails: driver union-find at the
+    default driver caps, star contraction with them patched to 0."""
     from dataclasses import replace
 
     from causalre_spark.functions.text import normalize
@@ -289,12 +341,13 @@ def test_linkers_agree_on_extracted_vocabulary(spark):
                       link_driver_max_forms=0)
         if max_bucket == 3:
             assert _oversized_buckets(forms, cfg) > 0
-        dist = {r["form"]: (r["canonical_id"], r["canonical_form"])
-                for r in link_mentions(df, cfg).collect()}
         drv = {f: (cid, cf) for f, cid, cf in link_forms_driver(forms, cfg)}
-        assert len(dist) == len(forms)
-        assert len(set(dist.values())) < len(forms)  # some forms merged
-        assert dist == drv == link_entities(mentions, cfg)
+        want = link_entities(mentions, cfg)
+        for caps in ({}, STAR_CAPS):
+            dist = _link_with_caps(df, cfg, caps, monkeypatch)
+            assert len(dist) == len(forms)
+            assert len(set(dist.values())) < len(forms)  # some forms merged
+            assert dist == drv == want, caps
 
 
 def test_lsh_edges_plan_has_two_exchanges(spark):

@@ -35,6 +35,8 @@ def test_resume_identical_and_fast(spark):
     assert third == first
 
     metrics = spark.read.parquet(os.path.join(WD, "_metrics"))
+    assert [(f.name, f.dataType.simpleString()) for f in metrics.schema] == [
+        ("stage", "string"), ("partition", "int"), ("rows", "bigint")]
     stages = {r["stage"] for r in metrics.select("stage").distinct().collect()}
     assert {"docs", "spans", "relations", "entities", "triples"} <= stages
 
