@@ -1,9 +1,9 @@
 """Table-maintenance operators: small-file compaction.
 
-A long-running ingest (the streaming sinks, incremental delta runs,
-per-partition triple writes) accretes many small parquet files; at
-Iceberg scale the table needs periodic OPTIMIZE/rewrite — scans pay a
-per-file open cost, and 10^6 tiny files can dominate a 10^12-row read.
+A long-running ingest (the streaming sinks, incremental delta runs)
+accretes many small parquet files; at Iceberg scale the table needs
+periodic OPTIMIZE/rewrite — scans pay a per-file open cost, and 10^6
+tiny files can dominate a 10^12-row read.
 This module plans and executes that rewrite with the same relational
 machinery as everything else:
 

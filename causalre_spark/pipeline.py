@@ -20,7 +20,9 @@ Scale design (local[32] here; reasoning at 1000 executors):
     component labels) — uniform by construction.
   - checkpointed stage boundaries (parquet + _SUCCESS) give resume;
     per-stage, per-partition lineage rows go to a metrics table
-    (north_rule).
+    (north_rule). Each sink is one unpartitioned table; the triples
+    sink is sorted by (cause_id, effect_id) inside each file, so an
+    entity lookup skips row groups by their min/max statistics.
 """
 
 from __future__ import annotations
@@ -86,20 +88,16 @@ class StageIO:
         except Exception:  # pragma: no cover — non-JVM fallback
             return os.path.exists(marker)
 
-    def checkpoint(self, name: str, df_fn, partition_expr: str | None = None,
-                   table_format: str = "parquet") -> DataFrame:
+    def checkpoint(self, name: str, df_fn, table_format: str = "parquet") -> DataFrame:
         """Materialize a stage boundary; skip if already done (resume).
 
-        partition_expr: optional SQL expression for a derived partition
-        column (S5 partitioned sink — e.g. a cause-id bucket for the
-        triples table). The column is written as `_p`, used only for
-        physical layout (partition pruning on downstream reads), and
-        dropped from the returned DataFrame.
+        Every sink is one unpartitioned table whose files AQE sizes to
+        the data; a stage that wants an order inside each file (the
+        triples sink) sorts in df_fn.
 
-        table_format 'iceberg' maps to df.writeTo(...).partitionedBy(...)
-        on a cluster with an Iceberg catalog; this sandbox has no
-        catalog jars, so the parquet path carries the same physical
-        layout (directory-partitioned by the bucket expression).
+        table_format 'iceberg' maps to df.writeTo(...) on a cluster with
+        an Iceberg catalog; this sandbox has no catalog jars, so the
+        parquet path carries the same physical layout.
         """
         if self.workdir is None:
             return df_fn()
@@ -110,34 +108,20 @@ class StageIO:
             # never creates a _SUCCESS marker).
             ident = self._table_ident(name)
             if not self.table_done(name):
-                df = df_fn()
-                if partition_expr:
-                    df = df.withColumn("_p", F.expr(partition_expr))
-                    df.writeTo(ident).using("iceberg").partitionedBy(
-                        F.col("_p")).createOrReplace()
-                else:
-                    df.writeTo(ident).using("iceberg").createOrReplace()
+                df_fn().writeTo(ident).using("iceberg").createOrReplace()
             out = self.spark.read.table(ident)
-            if "_p" in out.columns:
-                out = out.drop("_p")
             self._lineage(name, out)
             return out
         path = self._path(name)
         reader = self.spark.read
         if not self.done(name):
             df = df_fn()
-            if partition_expr:
-                df = df.withColumn("_p", F.expr(partition_expr))
-                df.write.mode("overwrite").partitionBy("_p").parquet(path)
-            else:
-                df.write.mode("overwrite").parquet(path)
-            # read back with the schema just written (the _p partition
-            # column included): parquet schema inference is a footer-
-            # reading job of its own. A resumed stage still infers.
+            df.write.mode("overwrite").parquet(path)
+            # read back with the schema just written: parquet schema
+            # inference is a footer-reading job of its own. A resumed
+            # stage still infers.
             reader = reader.schema(df.schema)
         out = reader.parquet(path)
-        if "_p" in out.columns:
-            out = out.drop("_p")
         self._lineage(name, out)
         return out
 
@@ -234,15 +218,16 @@ def write_bucketed_graph(spark: SparkSession, triples: DataFrame,
     """S5 at READ time: persist the graph table BUCKETED by cause_id
     (hash-bucketed files + per-file sort by (cause_id, effect_id)).
 
-    Partitioned parquet (the checkpoint sink) prunes IO; bucketing goes
-    further: every downstream equi-join or aggregation on cause_id —
-    graph self-joins (2-hop paths), entity-expansion joins, evidence
-    re-aggregation — reads both sides already co-partitioned, so Spark
-    elides the shuffle exchange entirely (tests assert the plan). At
-    10^12 triples the repeated exchange of the graph table is the cost
-    that dominates iterative graph workloads; paying one bucketed write
-    amortizes it across every subsequent join. Bucket count is a
-    data-volume knob: 64 here, thousands on a real cluster.
+    The checkpoint sink's in-file sort lets a lookup skip row groups;
+    bucketing goes further: every downstream equi-join or aggregation
+    on cause_id — graph self-joins (2-hop paths), entity-expansion
+    joins, evidence re-aggregation — reads both sides already
+    co-partitioned, so Spark elides the shuffle exchange entirely
+    (tests assert the plan). At 10^12 triples the repeated exchange of
+    the graph table is the cost that dominates iterative graph
+    workloads; paying one bucketed write amortizes it across every
+    subsequent join. Bucket count is a data-volume knob: 64 here,
+    thousands on a real cluster.
 
     Uses saveAsTable (bucket metadata lives in the catalog — plain
     .parquet() files cannot carry it); same API against Iceberg, which
@@ -361,7 +346,7 @@ def _link_and_materialize(spark, io: StageIO, kept: DataFrame, rels: DataFrame,
                           ) -> tuple[DataFrame, DataFrame]:
     """Global tail shared by run_pipeline and run_incremental: entity
     linking over all kept mention surfaces + canonical triple
-    materialization (S5 partitioned sink).
+    materialization (S5 sink: one table sorted by cause_id, effect_id).
 
     early-exit: no extracted relations -> no triples, so the whole
     linking/canonicalization stage graph (LSH + jaccard verify + CC +
@@ -394,15 +379,15 @@ def _link_and_materialize(spark, io: StageIO, kept: DataFrame, rels: DataFrame,
             kept.select("text"), cfg, form_map=rawmap)
     ).persist()
 
-    # S5: the graph table is partitioned by a cause-id bucket so
-    # downstream graph queries (all-edges-of-entity) prune partitions;
-    # 64 buckets keeps files large at production scale while bounding
-    # per-partition size (hash of the canonical id is uniform)
+    # S5: the graph table is sorted by (cause_id, effect_id) inside each
+    # file, so a lookup of one entity's edges skips row groups through
+    # parquet min/max statistics. The sort lives here, not in
+    # canonical_triples, which the streaming bridge shares.
     triples = io.checkpoint(
         "triples",
         lambda: canonical_triples(kept, rels, entities, cleanup=_stage_caches,
-                                  form_map=rawmap),
-        partition_expr="pmod(cause_id, 64)",
+                                  form_map=rawmap)
+        .sortWithinPartitions("cause_id", "effect_id"),
         table_format=cfg.table_format)
     if workdir is not None:
         # triples materialized to the sink -> the broadcast dictionary's
@@ -480,8 +465,10 @@ def run_incremental(
     rels = prev_rels.unionByName(delta_rels).persist()
 
     entities, triples = _link_and_materialize(spark, io, kept, rels, cfg, workdir)
+    # the delta size is the docs sink's lineage, already collected
     io.metrics.append({"stage": "_delta", "partition": -1,
-                       "rows": int(delta_docs.count())})
+                       "rows": sum(m["rows"] for m in io.metrics
+                                   if m["stage"] == "docs")})
     io.write_metrics()
     return {
         "docs": docs,

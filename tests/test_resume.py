@@ -5,6 +5,8 @@ import os
 import shutil
 import time
 
+from pyspark.sql import functions as F
+
 from causalre_spark.pipeline import run_pipeline
 from causalre_spark.sources.corpus import synth_pages_df
 
@@ -39,23 +41,60 @@ def test_resume_identical_and_fast(spark):
         ("stage", "string"), ("partition", "int"), ("rows", "bigint")]
     stages = {r["stage"] for r in metrics.select("stage").distinct().collect()}
     assert {"docs", "spans", "relations", "entities", "triples"} <= stages
+    # lineage covers every row: per stage, its partition rows sum to the sink
+    lineage = {r["stage"]: r["rows"]
+               for r in metrics.groupBy("stage").agg(F.sum("rows").alias("rows"))
+               .collect()}
+    for stage in ("docs", "spans", "relations", "entities", "triples"):
+        sink = spark.read.parquet(os.path.join(WD, stage)).count()
+        assert lineage[stage] == sink, (stage, lineage[stage], sink)
 
 
 def test_partitioned_triple_sink_and_resume(spark):
-    """S5: the triples sink is directory-partitioned by a cause-id
-    bucket (`_p=<n>` dirs on disk), the partition column is NOT in the
-    returned DataFrame, and resume over the partitioned sink works."""
+    """S5: the triples sink is one unpartitioned parquet table (no `_p=`
+    bucket directories), sorted by (cause_id, effect_id) inside each
+    file, so an entity lookup pushes `cause_id = k` into the scan and
+    skips row groups by their min/max statistics; resume reads it back."""
     import glob
+    import io as _io
+    from contextlib import redirect_stdout
+
+    import pyarrow.parquet as pq
 
     wd = "/tmp/causalre_test_wd_part"
     shutil.rmtree(wd, ignore_errors=True)
     pages = synth_pages_df(spark, 30, partitions=4)
     first = _triples_set(run_pipeline(spark, pages, workdir=wd))
-    part_dirs = glob.glob(os.path.join(wd, "triples", "_p=*"))
-    assert len(part_dirs) > 1, "triples sink is not partitioned"
+    assert first, "synthetic corpus should produce triples"
+    sink = os.path.join(wd, "triples")
+    assert not glob.glob(os.path.join(sink, "_p=*"))
+
+    parts = glob.glob(os.path.join(sink, "part-*.parquet"))
+    assert parts
+    n_rows = 0
+    for part in parts:
+        t = pq.read_table(part, columns=["cause_id", "effect_id"])
+        keys = list(zip(t.column("cause_id").to_pylist(),
+                        t.column("effect_id").to_pylist()))
+        assert keys == sorted(keys), part
+        n_rows += len(keys)
+    assert n_rows == len(first) > 1
+
     res2 = run_pipeline(spark, pages, workdir=wd, resume=True)
     assert "_p" not in res2["triples"].columns
     assert _triples_set(res2) == first
+
+    k = min(c for c, _, _ in first)
+    lookup = res2["triples"].filter(F.col("cause_id") == k)
+    buf = _io.StringIO()
+    with redirect_stdout(buf):
+        lookup.explain("formatted")
+    plan = buf.getvalue()
+    pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
+    assert any(f"EqualTo(cause_id,{k})" in ln for ln in pushed), plan
+    assert {(r.cause_id, r.effect_id, r.n_evidence) for r in lookup.collect()} \
+        == {t for t in first if t[0] == k}
+    shutil.rmtree(wd, ignore_errors=True)
 
 
 def test_length_bucketing_same_results(spark):
@@ -82,11 +121,13 @@ def test_iceberg_branch_write_read_resume(spark, monkeypatch, tmp_path):
 
     store: dict[str, object] = {}     # table ident -> pandas snapshot
     calls = {"write": 0, "read": 0}
+    writers: list = []
 
     class FakeWriterV2:
         def __init__(self, df, ident):
             self.df, self.ident = df, ident
             self.fmt, self.parts = None, None
+            writers.append(self)
 
         def using(self, fmt):
             self.fmt = fmt
@@ -121,22 +162,21 @@ def test_iceberg_branch_write_read_resume(spark, monkeypatch, tmp_path):
         built["n"] += 1
         return df_in
 
-    out = io.checkpoint("triples", _stage, partition_expr="pmod(cause_id, 4)",
-                        table_format="iceberg")
+    out = io.checkpoint("triples", _stage, table_format="iceberg")
     assert "graph.ns.triples" in store          # qualified identifier used
     assert calls["write"] == 1 and built["n"] == 1
     assert "_p" not in out.columns and out.count() == 10
 
     # resume: table exists in the catalog -> stage fn NOT rebuilt, no rewrite
-    out2 = io.checkpoint("triples", _stage, partition_expr="pmod(cause_id, 4)",
-                         table_format="iceberg")
+    out2 = io.checkpoint("triples", _stage, table_format="iceberg")
     assert built["n"] == 1 and calls["write"] == 1
     assert out2.count() == 10
     # resume=False forces a rebuild
     io2 = StageIO(spark, str(tmp_path), resume=False, table_namespace="graph.ns")
-    io2.checkpoint("triples", _stage, partition_expr="pmod(cause_id, 4)",
-                   table_format="iceberg")
+    io2.checkpoint("triples", _stage, table_format="iceberg")
     assert built["n"] == 2 and calls["write"] == 2
+    # one sink layout for both branches: the iceberg table is unpartitioned
+    assert len(writers) == 2 and all(w.parts is None for w in writers)
 
 
 def test_bucketed_graph_join_has_no_exchange(spark):
