@@ -20,9 +20,8 @@ Scale design (local[32] here; reasoning at 1000 executors):
     component labels) — uniform by construction.
   - checkpointed stage boundaries (parquet + _SUCCESS) give resume;
     per-stage, per-partition lineage rows go to a metrics table
-    (north_rule). Each sink is one unpartitioned table; the triples
-    sink is sorted by (cause_id, effect_id) inside each file, so an
-    entity lookup skips row groups by their min/max statistics.
+    (north_rule). Each sink is one unpartitioned table; reads keyed
+    on cause_id go through write_bucketed_graph.
 """
 
 from __future__ import annotations
@@ -92,8 +91,7 @@ class StageIO:
         """Materialize a stage boundary; skip if already done (resume).
 
         Every sink is one unpartitioned table whose files AQE sizes to
-        the data; a stage that wants an order inside each file (the
-        triples sink) sorts in df_fn.
+        the data.
 
         table_format 'iceberg' maps to df.writeTo(...) on a cluster with
         an Iceberg catalog; this sandbox has no catalog jars, so the
@@ -218,11 +216,11 @@ def write_bucketed_graph(spark: SparkSession, triples: DataFrame,
     """S5 at READ time: persist the graph table BUCKETED by cause_id
     (hash-bucketed files + per-file sort by (cause_id, effect_id)).
 
-    The checkpoint sink's in-file sort lets a lookup skip row groups;
-    bucketing goes further: every downstream equi-join or aggregation
-    on cause_id — graph self-joins (2-hop paths), entity-expansion
-    joins, evidence re-aggregation — reads both sides already
-    co-partitioned, so Spark elides the shuffle exchange entirely
+    The checkpoint sink is one unpartitioned table with no key layout;
+    this is the cause_id-keyed read path: every downstream equi-join
+    or aggregation on cause_id — graph self-joins (2-hop paths),
+    entity-expansion joins, evidence re-aggregation — reads both sides
+    already co-partitioned, so Spark elides the shuffle exchange entirely
     (tests assert the plan). At 10^12 triples the repeated exchange of
     the graph table is the cost that dominates iterative graph
     workloads; paying one bucketed write amortizes it across every
@@ -346,7 +344,7 @@ def _link_and_materialize(spark, io: StageIO, kept: DataFrame, rels: DataFrame,
                           ) -> tuple[DataFrame, DataFrame]:
     """Global tail shared by run_pipeline and run_incremental: entity
     linking over all kept mention surfaces + canonical triple
-    materialization (S5 sink: one table sorted by cause_id, effect_id).
+    materialization (S5 sink: one unpartitioned table).
 
     early-exit: no extracted relations -> no triples, so the whole
     linking/canonicalization stage graph (LSH + jaccard verify + CC +
@@ -379,15 +377,10 @@ def _link_and_materialize(spark, io: StageIO, kept: DataFrame, rels: DataFrame,
             kept.select("text"), cfg, form_map=rawmap)
     ).persist()
 
-    # S5: the graph table is sorted by (cause_id, effect_id) inside each
-    # file, so a lookup of one entity's edges skips row groups through
-    # parquet min/max statistics. The sort lives here, not in
-    # canonical_triples, which the streaming bridge shares.
     triples = io.checkpoint(
         "triples",
         lambda: canonical_triples(kept, rels, entities, cleanup=_stage_caches,
-                                  form_map=rawmap)
-        .sortWithinPartitions("cause_id", "effect_id"),
+                                  form_map=rawmap),
         table_format=cfg.table_format)
     if workdir is not None:
         # triples materialized to the sink -> the broadcast dictionary's
