@@ -9,7 +9,7 @@ queries()      — the registry (plans/entry_queries.py): the two
                  benchmarked curation operators (dedup_minhash_lsh,
                  curation_verdict), the operator queries with an
                  oracle-parity gate in tests/test_entry_contract.py
-                 (span/metric algebra, dedup, sampling and corpus
+                 (span/metric algebra, sampling, layout and corpus
                  weighting; each reads only the sf `documents` table),
                  the gold-split quality families (gold_eval_*, gazetteer_*,
                  fitted_*, ptron_*) and the flagship causal_triples /

@@ -2,8 +2,8 @@
 
 Semantic knobs mirror the reference's ``CRE Model/config.yaml`` (cited
 per-field) so parity tests exercise the same thresholds; execution knobs
-(partitions, Arrow batch caps, salting) are ours — the reference is a
-single-process GPU stack with no distribution surface.
+(partitions, Arrow batch caps, length bucketing) are ours — the
+reference is a single-process GPU stack with no distribution surface.
 """
 
 from __future__ import annotations
@@ -75,8 +75,6 @@ class PipelineConfig:
                                     # identical either way (pytest-gated).
     shuffle_partitions: int = 32
     arrow_max_records: int = 512    # size-capped Arrow batches (input_hint)
-    salt_buckets: int = 8           # hot-domain salting
-    salt_input: bool = False        # opt-in salted repartition before the UDF stage
     length_bucket: bool = False     # opt-in repartitionByRange(length(text)) before
                                     # the encoder UDF (S4 batching discipline: dense
                                     # same-length Arrow batches; costs one shuffle)

@@ -1,7 +1,7 @@
 """Portable deterministic hashing.
 
 Every hash that crosses the Spark <-> DuckDB oracle boundary (minhash,
-simhash, dedup keys, deterministic tie-break scores) is derived from
+LSH band keys, gram keys, deterministic tie-break scores) is derived from
 ``md5()`` hex digits through SQL that evaluates identically in Spark SQL
 and DuckDB: ``md5`` returns the same lowercase hex in both engines, and
 the hex->bigint conversion is spelled with ``instr``/``substring``

@@ -1,4 +1,5 @@
-"""Frozen text normalization / shingling / fingerprint helpers.
+"""Frozen text normalization, shingling and MinHash helpers, and the
+curation-gate twin.
 
 Pure-Python twins of the SQL used in the Spark operators; the oracle and
 the Spark side must agree exactly, so everything here is defined to be
@@ -86,29 +87,6 @@ def jaccard(a: set, b: set) -> float:
         return 1.0
     u = len(a | b)
     return len(a & b) / u if u else 0.0
-
-
-def simhash64(tokens: list[str]) -> int:
-    """64-bit SimHash over token md5 hashes (16 hex chars = 64 bits)."""
-    if not tokens:
-        return 0
-    counts = [0] * 64
-    for t in tokens:
-        h = md5_long(t, nhex=16)
-        for b in range(64):
-            counts[b] += 1 if (h >> b) & 1 else -1
-    out = 0
-    for b in range(64):
-        if counts[b] > 0:
-            out |= 1 << b
-    return out
-
-
-def fingerprint(text: str) -> int:
-    """Order-insensitive document fingerprint: md5_long of the sorted
-    distinct normalized tokens joined by a single space."""
-    toks = sorted(set(normalize(text).split()))
-    return md5_long(" ".join(toks))
 
 
 # ---------------------------------------------------------------------------

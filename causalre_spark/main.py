@@ -45,7 +45,16 @@ def main(argv: list[str] | None = None) -> int:
     from causalre_spark.session import get_spark
     from causalre_spark.sources.corpus import synth_pages_df
 
-    spark = get_spark(app="causalre_kg", cores=args.cores)
+    if args.config:
+        from causalre_spark.config import config_from_yaml
+
+        cfg = config_from_yaml(args.config)
+    else:
+        from causalre_spark.config import DEFAULT_CONFIG as cfg
+
+    # the config sizes the session (shuffle partitions, Arrow batch cap),
+    # so it is loaded first
+    spark = get_spark(app="causalre_kg", cores=args.cores, cfg=cfg)
     if args.compact:
         from causalre_spark.operators.maintenance import compact_parquet
 
@@ -72,13 +81,6 @@ def main(argv: list[str] | None = None) -> int:
         pages = spark.read.parquet(args.pages)
     else:
         ap.error("one of --pages / --synthetic is required")
-
-    if args.config:
-        from causalre_spark.config import config_from_yaml
-
-        cfg = config_from_yaml(args.config)
-    else:
-        from causalre_spark.config import DEFAULT_CONFIG as cfg
 
     t0 = time.time()
     res = run_pipeline(spark, pages, cfg=cfg, workdir=args.out,

@@ -256,10 +256,9 @@ def connected_components(
     ids.
 
     Returns (form, component) where component = min node id over the
-    component. Callers key nodes by an id whose order is the canonical
-    one: link_mentions' star path passes md5_long(form), so the
-    component is the min md5_long over the component;
-    dedup_near_clusters passes doc ids, so it is the min doc id.
+    component. link_mentions, the only caller, keys nodes by an id whose
+    order is the canonical one: its star path passes md5_long(form), so
+    the component is the min md5_long over the component.
 
     Adaptive physical strategy (same spirit as Catalyst's broadcast-vs-
     shuffle join selection): a graph within the driver caps

@@ -1,6 +1,7 @@
 """Text analysis operators (training-data pipeline ops): quality
-scoring and Gopher-style repetition signals, fingerprinting and
-token-window chunking. Pure DataFrame algebra with portable SQL twins.
+scoring and Gopher-style repetition signals, the per-doc projections of
+the curation verdict and the streaming curation gate. Pure DataFrame
+algebra with portable SQL twins.
 """
 
 from __future__ import annotations
@@ -8,7 +9,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from causalre_spark.functions.hashing import md5_long_sql_spark
 from causalre_spark.functions.text import NORMALIZE_SQL
 
 
@@ -71,20 +71,6 @@ def quality_scores(docs: DataFrame, id_col: str = "doc_id",
             F.when(F.col("n_tokens") >= 10, 0.4).otherwise(0.0)
             + (1 - F.col("punct_ratio")) * 0.3
             + F.least(F.col("stopword_ratio") * 3, F.lit(1.0)) * 0.3, 5),
-    )
-
-
-def fingerprints(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
-    """Order-insensitive content fingerprint: md5_long over the sorted
-    distinct normalized tokens (functions.text.fingerprint twin)."""
-    joined = (
-        f"array_join(array_sort(array_distinct(split("
-        f"{NORMALIZE_SQL.format(x=text_col)}, ' '))), ' ')"
-    )
-    return docs.select(
-        F.col(id_col),
-        F.expr(md5_long_sql_spark(joined)).alias("fingerprint"),
     )
 
 
@@ -197,52 +183,3 @@ def repetition_row_signals(docs: DataFrame, id_col: str = "doc_id",
     which the gate (streaming.curation_gate_stream) does not read."""
     return repetition_stats(docs, id_col, text_col, extra_cols).select(
         id_col, *extra_cols, "n_words", "dup_word_frac", "dup_trigram_frac")
-
-
-def chunk_documents(docs: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text", size: int = 64,
-                    stride: int = 48) -> DataFrame:
-    """Overlapping token-window chunking — the doc -> training-sample /
-    RAG-passage splitter every LLM data pipeline runs between curation
-    and tokenization (fixed window `size`, stride `stride` < size for
-    overlap, final partial window kept).
-
-    Scale shape: MAP-ONLY. Chunk starts come from sequence(0, n-1,
-    stride) and the chunk text from slice() on the per-row token array
-    — no shuffle, no window function, no UDF; chunking 10^12 docs is
-    exactly one pass over the scan with predicate/column pruning
-    intact. chunk_uid is the portable md5 of (doc_id, chunk_idx) so
-    downstream dedup/shuffle keys are uniform by construction.
-    """
-    norm = NORMALIZE_SQL.format(x=text_col)
-    base = docs.select(
-        F.col(id_col),
-        F.expr(f"split({norm}, ' ')").alias("toks"),
-    )
-    # a start is kept only while the PREVIOUS window has not already
-    # reached the document end (s = 0 or s < n - size + stride):
-    # without the filter, any doc with n mod stride in 1..(size-stride)
-    # emits a final chunk that is a strict suffix of the previous one —
-    # duplicated training text from the very pipeline meant to dedup it
-    chunks = base.select(
-        id_col,
-        F.expr("size(toks)").cast("long").alias("n_doc_tokens"),
-        F.posexplode(F.expr(
-            f"transform("
-            f"  filter(sequence(0, greatest(size(toks) - 1, 0), {stride}),"
-            f"         s -> s = 0 OR s < size(toks) - {size} + {stride}),"
-            f" s -> array_join(slice(toks, s + 1, {size}), ' '))"
-        )).alias("chunk_idx", "chunk_text"),
-    )
-    return chunks.select(
-        id_col,
-        F.col("chunk_idx").cast("long").alias("chunk_idx"),
-        (F.col("chunk_idx") * stride).cast("long").alias("start_tok"),
-        F.least(F.lit(size),
-                F.col("n_doc_tokens") - F.col("chunk_idx") * stride)
-        .cast("long").alias("n_chunk_tokens"),
-        "chunk_text",
-        F.expr(md5_long_sql_spark(
-            f"concat(cast({id_col} as string), ':', cast(chunk_idx as string))"
-        )).alias("chunk_uid"),
-    )

@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from causalre_spark.config import DEFAULT_CONFIG, PipelineConfig
-from causalre_spark.functions.hashing import md5_long_sql_spark
 from causalre_spark.model.udfs import DOC_EXTRACT_SCHEMA, make_doc_extract_udf
 from causalre_spark.operators import linking
 from causalre_spark.session import driver_frame
@@ -240,17 +239,7 @@ def extract_docs(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Per-document extraction stage (the expensive Arrow-UDF crossing),
     shared by the full and incremental pipelines."""
     eng = pages.filter(F.col("lang") == "en")
-    if cfg.salt_input:
-        # salted repartition for pathological input layouts (e.g. one
-        # giant file per hot domain). Deliberate tradeoff: an explicit
-        # repartition is user-specified partitioning, which AQE will
-        # NOT coalesce — so this is opt-in; by default the parquet
-        # scan's size-based splits (maxPartitionBytes) balance the
-        # UDF stage with zero shuffle.
-        eng = eng.repartition(
-            cfg.shuffle_partitions,
-            F.expr(f"pmod({md5_long_sql_spark('url')}, {cfg.salt_buckets * cfg.shuffle_partitions})"))
-    elif cfg.length_bucket:
+    if cfg.length_bucket:
         # S4 UDF batching discipline (SURVEY §4): range-partition by
         # document length so each Arrow batch holds similar-length
         # docs — dense padded batches in the encoder UDF instead of

@@ -1,13 +1,12 @@
 """AQE skew-join splitting — the runtime half of the skew story.
 
-The pipeline's compile-time skew defenses are LSH bucket caps and
-opt-in salting (COVERAGE.md §2.11); this test proves the RUNTIME
-defense the session enables (spark.sql.adaptive.skewJoin.enabled)
-actually fires: a hot join key whose partition dwarfs the others is
-split by AQE into multiple tasks (the executed plan marks the join
-`skew=true`), and the join result is unchanged. At web scale this is
-what absorbs residual hot-domain skew that salting was not configured
-for.
+The pipeline's compile-time skew defense is the LSH bucket cap
+(COVERAGE.md §2.11); this test proves the RUNTIME defense the session
+enables (spark.sql.adaptive.skewJoin.enabled) actually fires: a hot
+join key whose partition dwarfs the others is split by AQE into
+multiple tasks (the executed plan marks the join `skew=true`), and the
+join result is unchanged. At web scale this is what absorbs hot-domain
+skew in a join.
 """
 
 from pyspark.sql import functions as F

@@ -178,6 +178,32 @@ def test_config_from_yaml_round_trip(tmp_path):
         config_from_dict({"max_tagger_candidates": 0})
 
 
+def test_main_config_sizes_the_session(spark, tmp_path, monkeypatch, capsys):
+    """`main --config` loads the YAML before it builds the session, so
+    its execution knobs (shuffle partitions, Arrow batch cap) reach
+    get_spark instead of the defaults."""
+    import json
+
+    from causalre_spark import main as main_mod
+    from causalre_spark import session
+    from causalre_spark.config import DEFAULT_CONFIG
+
+    seen = []
+
+    def recording_get_spark(*args, **kwargs):
+        seen.append(kwargs.get("cfg", DEFAULT_CONFIG))
+        return spark
+
+    monkeypatch.setattr(session, "get_spark", recording_get_spark)
+    yml = tmp_path / "run.yaml"
+    yml.write_text("shuffle_partitions: 7\narrow_max_records: 64\n")
+    assert main_mod.main(["--synthetic", "3", "--out", str(tmp_path / "wd"),
+                          "--config", str(yml)]) == 0
+    assert [(c.shuffle_partitions, c.arrow_max_records) for c in seen] == [(7, 64)]
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["workdir"] == str(tmp_path / "wd")
+
+
 def test_config_value_type_validation():
     """A YAML value typo (quoted number, scalar for a mapping) fails at
     load time, not deep inside run_pipeline."""

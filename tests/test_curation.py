@@ -1,6 +1,7 @@
-"""Unit tests for the round-3 corpus-curation operators: cross-doc
-duplicated-ngram stats, benchmark decontamination, exact-quota
-stratified sampling and hot-group skew profiling. Hand-built inputs with hand-computed expectations (the
+"""Unit tests for the corpus-curation operators: exact-quota
+stratified sampling, hot-group skew profiling, corpus weighting,
+sequence packing, the curation gate and verdict, and the MinHash-LSH
+dedup plan. Hand-built inputs with hand-computed expectations (the
 sf-scale oracle gates live in test_entry_contract / check_entry)."""
 
 import pytest
@@ -8,31 +9,6 @@ from pyspark.sql import functions as F
 
 from causalre_spark.functions.hashing import md5_long
 from causalre_spark.operators import dedup, sampling
-
-
-def _shingles(spark, rows):
-    return spark.createDataFrame(rows, "id long, shingle string")
-
-
-def test_crossdoc_ngram_stats(spark):
-    sh = _shingles(spark, [
-        (1, "a"), (1, "b"),
-        (2, "b"), (2, "c"),
-        (3, "c"),
-    ])
-    got = {r["doc_id"]: (r["n_grams"], r["n_dup"], r["dup_frac"])
-           for r in dedup.crossdoc_ngram_stats(sh, min_docs=2).collect()}
-    assert got == {1: (2, 1, 0.5), 2: (2, 2, 1.0), 3: (1, 1, 1.0)}
-
-
-def test_contamination_stats_threshold_is_strict(spark):
-    ev = _shingles(spark, [(1, "a"), (1, "b"), (2, "c")])
-    bench = _shingles(spark, [(9, "b"), (9, "c")])
-    got = {r["doc_id"]: (r["n_grams"], r["n_overlap"], r["overlap_frac"],
-                         r["contaminated"])
-           for r in dedup.contamination_stats(ev, bench, 0.5).collect()}
-    # doc 1 overlaps exactly at the threshold -> NOT contaminated (strict >)
-    assert got == {1: (2, 1, 0.5, False), 2: (1, 1, 1.0, True)}
 
 
 def test_stratified_sample_exact_quota_and_determinism(spark):
@@ -256,47 +232,6 @@ def test_zorder_layout_locality(spark):
     # the x-range files (every x stripe contains all y values)
     assert zorder_files < linear_files
     assert zorder_files <= files // 4
-
-
-def test_remove_dup_substrings(spark):
-    """Crafted corpus vs a hand-rolled python twin: a 4-gram shared by
-    two docs is cut from BOTH, a 4-gram repeated twice inside one doc
-    is cut (total-occurrence semantics), short docs pass through, and
-    unique text survives verbatim."""
-    k = 4
-    dup = "alpha beta gamma delta"
-    docs = [
-        (1, f"one two {dup} three four"),
-        (2, f"{dup} five six seven eight"),
-        (3, f"{dup} nine ten {dup}"),          # twice in one doc
-        (4, "unique words only here today"),
-        (5, "tiny doc"),                        # shorter than k
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {r["doc_id"]: (r["n_tokens"], r["n_removed"], r["clean_text"])
-           for r in dedup.remove_dup_substrings(df, k=k, min_count=2)
-           .collect()}
-
-    # python twin: corpus k-gram counts -> covered positions -> rewrite
-    toks = {i: t.split(" ") for i, t in docs}
-    from collections import Counter
-    cnt = Counter()
-    for ts in toks.values():
-        for p in range(len(ts) - k + 1):
-            cnt[" ".join(ts[p:p + k])] += 1
-    want = {}
-    for i, ts in toks.items():
-        covered = set()
-        for p in range(len(ts) - k + 1):
-            if cnt[" ".join(ts[p:p + k])] >= 2:
-                covered.update(range(p, p + k))
-        kept = [t for j, t in enumerate(ts) if j not in covered]
-        want[i] = (len(ts), len(ts) - len(kept), " ".join(kept))
-    assert got == want
-    # the shared 4-gram is gone everywhere, unique text untouched
-    assert "alpha" not in got[1][2] and "alpha" not in got[3][2]
-    assert got[4] == (5, 0, "unique words only here today")
-    assert got[5] == (2, 0, "tiny doc")
 
 
 def _near_dup_docs():

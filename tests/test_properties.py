@@ -8,7 +8,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from causalre_spark.config import DEFAULT_CONFIG
-from causalre_spark.functions.text import fingerprint, normalize, simhash64
+from causalre_spark.functions.text import normalize
 from causalre_spark.oracle.pipeline import iou
 
 TEXT = st.text(alphabet=st.characters(blacklist_categories=("Cs",)), max_size=80)
@@ -25,25 +25,6 @@ def test_normalize_idempotent(s):
     assert "  " not in n
     assert not n.startswith(" ") and not n.endswith(" ")
     assert n == n.lower()
-
-
-@given(st.lists(st.text(alphabet="abcdef ", min_size=1, max_size=8),
-                min_size=1, max_size=20))
-@settings(max_examples=100, deadline=None)
-def test_fingerprint_order_insensitive(tokens):
-    a = fingerprint(" ".join(tokens))
-    b = fingerprint(" ".join(reversed(tokens)))
-    assert a == b                       # order-insensitive by construction
-    assert fingerprint(" ".join(tokens + tokens)) == a   # multiplicity-insensitive
-
-
-@given(st.lists(st.text(alphabet="abcdef", min_size=1, max_size=6),
-                min_size=1, max_size=30))
-@settings(max_examples=100, deadline=None)
-def test_simhash64_deterministic_and_bounded(tokens):
-    h = simhash64(tokens)
-    assert h == simhash64(list(tokens))
-    assert 0 <= h < (1 << 64)
 
 
 SPANS = st.lists(
@@ -121,46 +102,6 @@ def test_dedup_max_idempotent(rows):
         want = max(float(x) for (a, b, x) in zip(s.tolist(), e.tolist(), sc.tolist())
                    if (a, b) == (ks, ke))
         assert abs(kc - want) < 1e-6
-
-
-@given(st.integers(min_value=1, max_value=40),
-       st.integers(min_value=1, max_value=12),
-       st.integers(min_value=1, max_value=12))
-@settings(max_examples=100, deadline=None)
-def test_chunk_algebra_python_twin(n_toks, size, stride):
-    """Pure-python twin of chunk_documents' window algebra (the Spark
-    expression is sequence(0, n-1, stride) + slice): starts cover every
-    token, overlap = size - stride where applicable, final partial
-    window kept."""
-    toks = [f"t{i}" for i in range(n_toks)]
-    # a start survives only while the previous window has not reached
-    # the end (the duplicate-suffix guard in chunk_documents)
-    starts = [s for s in range(0, n_toks, stride)
-              if s == 0 or s < n_toks - size + stride]
-    chunks = [toks[s:s + size] for s in starts]
-    # no chunk is a suffix of its predecessor
-    for a, b in zip(chunks, chunks[1:]):
-        assert not (len(b) <= len(a) and a[-len(b):] == b)
-    # coverage: every token index appears in at least one chunk — holds
-    # exactly when stride <= size (stride > size skips tokens by design)
-    covered = set()
-    for s, c in zip(starts, chunks):
-        covered.update(range(s, s + len(c)))
-    if stride <= size:
-        assert covered == set(range(n_toks))
-    else:
-        assert covered < set(range(n_toks)) or n_toks <= size
-    # chunk lengths: all == size except possibly trailing ones
-    for s, c in zip(starts, chunks):
-        assert len(c) == min(size, n_toks - s)
-    # reconstruction when stride <= size: stride-prefixes of the
-    # leading chunks + the final chunk in full
-    if stride <= size:
-        rebuilt = []
-        for c in chunks[:-1]:
-            rebuilt.extend(c[:stride])
-        rebuilt.extend(chunks[-1])
-        assert rebuilt == toks
 
 
 @given(st.lists(st.integers(min_value=0, max_value=255), min_size=2,
