@@ -7,13 +7,10 @@ entry(spark)   — flagship: the production pages -> triples pipeline
                  (non-empty by construction).
 queries()      — the registry (plans/entry_queries.py): the two
                  benchmarked curation operators (dedup_minhash_lsh,
-                 curation_verdict), the operator queries with an
-                 oracle-parity gate in tests/test_entry_contract.py
-                 (span/metric algebra, sampling, layout and corpus
-                 weighting; each reads only the sf `documents` table),
-                 the gold-split quality families (gold_eval_*, gazetteer_*,
-                 fitted_*, ptron_*) and the flagship causal_triples /
-                 causal_triples_seeded.
+                 curation_verdict; each reads only the sf `documents`
+                 table), the gold-split quality families (gold_eval_*,
+                 gazetteer_*, fitted_*, ptron_*) and the flagship
+                 causal_triples / causal_triples_seeded.
 oracle_sql()   — exact DuckDB twins for every query except causal_triples,
                  which is rows-only by design: its golden correctness gate
                  is tests/test_pipeline_parity.py (exact triple-set
@@ -36,22 +33,32 @@ from pyspark.sql import functions as F  # noqa: E402
 
 
 def _ensure_importable(spark: SparkSession) -> None:
-    """Ship the package to Python workers regardless of driver cwd
-    (spark-submit --py-files equivalent for the sandbox)."""
-    import shutil
+    """Ship the checkout's package to the Python workers (the
+    spark-submit --py-files equivalent when the driver runs from a
+    checkout). addPyFile puts the zip ahead of PYTHONPATH on every
+    worker, so the zip is named by a hash of the package sources: a zip
+    built from other sources is never shipped, and the same sources
+    reuse their zip. A repeated addPyFile of one path is ignored."""
+    import hashlib
     import tempfile
+    import zipfile
+    from pathlib import Path
 
-    pkg_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "causalre_spark")
-    zip_base = os.path.join(tempfile.gettempdir(), "causalre_spark_pkg")
-    zip_path = zip_base + ".zip"
+    root = Path(__file__).resolve().parent
+    srcs = {p.relative_to(root).as_posix(): p.read_bytes()
+            for p in sorted((root / "causalre_spark").rglob("*.py"))}
+    digest = hashlib.sha256()
+    for rel, data in srcs.items():
+        digest.update(f"{rel}\0{len(data)}\0".encode() + data)
+    zip_path = os.path.join(tempfile.gettempdir(),
+                            f"causalre_spark_pkg-{digest.hexdigest()[:16]}.zip")
     if not os.path.exists(zip_path):
-        shutil.make_archive(zip_base, "zip",
-                            root_dir=os.path.dirname(pkg_dir),
-                            base_dir="causalre_spark")
-    try:
-        spark.sparkContext.addPyFile(zip_path)
-    except Exception:
-        pass  # already added in this context
+        tmp = f"{zip_path}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as z:
+            for rel, data in srcs.items():
+                z.writestr(rel, data)
+        os.replace(tmp, zip_path)
+    spark.sparkContext.addPyFile(zip_path)
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -176,37 +176,3 @@ def evaluate_triples(pred: DataFrame, gold: DataFrame) -> DataFrame:
     """Triple-level P/R/F1 on canonical (cause_id, effect_id) keys —
     the north_rule acceptance metric."""
     return strict_prf(gold, pred, ["cause_id", "effect_id"])
-
-
-def running_mean(values: list[float]) -> list[float]:
-    """A5: running mean of step losses (train.py:229) — driver-side
-    scalars in the reference; here a pure helper the metrics table can
-    aggregate with `avg` over a window at any scale."""
-    out, total = [], 0.0
-    for i, v in enumerate(values, 1):
-        total += v
-        out.append(total / i)
-    return out
-
-
-def ema(values: list[float], alpha: float) -> list[float]:
-    """A5: exponential moving average of the model-save score
-    (train.py:252-266): ema_t = alpha*x_t + (1-alpha)*ema_{t-1},
-    seeded with the first raw value."""
-    out: list[float] = []
-    for v in values:
-        out.append(v if not out else alpha * v + (1 - alpha) * out[-1])
-    return out
-
-
-def balanced_save_score(span_prf: tuple[float, float, float],
-                        rel_prf: tuple[float, float, float],
-                        balance_reduction_factor: float = 2.0) -> float:
-    """The reference's balance-weighted model-save score
-    (train.py:334-361): per task, f1 * (min(p,r)/max(p,r))**k, averaged
-    over the span and rel tasks."""
-    def score(p, r, f1):
-        balance = min(p, r) / max(p, r) if max(p, r) > 0 else 0.0
-        return f1 * balance ** balance_reduction_factor
-
-    return (score(*span_prf) + score(*rel_prf)) / 2.0

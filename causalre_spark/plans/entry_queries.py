@@ -1,8 +1,8 @@
-"""Query registry: the curation operators, the relational operator
-queries (span/metric algebra, dedup, sampling and corpus weighting),
-the flagship pages->triples queries and the gold-split quality
-families, each as a (Spark query function, DuckDB oracle SQL) pair.
-Every query that reads the testdata reads only its `documents` table.
+"""Query registry: the two curation operators (MinHash-LSH near-dup
+pairs and the per-doc curation verdict), the flagship pages->triples
+queries and the gold-split quality families, each as a (Spark query
+function, DuckDB oracle SQL) pair. Every query that reads the testdata
+reads only its `documents` table.
 
 Design rules that make the value-hash comparison exact:
   - every cross-engine hash is the portable md5-derived bigint
@@ -25,304 +25,19 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from causalre_spark import FIXTURES_DIR
-from causalre_spark.functions.hashing import md5_long_sql, md5_long_sql_spark
+from causalre_spark.functions.hashing import md5_long_sql
 from causalre_spark.functions.partitions import spread
-from causalre_spark.functions.text import NORMALIZE_SQL
 from causalre_spark.functions.text_duck import NORMALIZE_SQL_DUCK
-from causalre_spark.operators import dedup, sampling, textstats
+from causalre_spark.operators import dedup, textstats
 
 
 # --------------------------------------------------------------------------
 # shared fragments
 # --------------------------------------------------------------------------
 
-# portable deterministic per-span score — equal VALUES in both engines;
-# the Spark spelling uses conv() (one md5), the DuckDB oracle spelling
-# expands hex digits via instr (DuckDB lacks conv)
-SCORE = md5_long_sql("concat_ws(':', doc_id, s, e)")          # duck oracle
-SCORE_SPARK = md5_long_sql_spark("concat_ws(':', doc_id, s, e)")
-
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _lattice(spark: SparkSession, sf_dir: str, L: int, W: int) -> DataFrame:
-    """P4: the dense span lattice, relationally (explode x explode), with
-    P1 validity as a WHERE clause (masks become filters, SURVEY §2.2).
-    The scan is spread first: the lattice multiplies each doc ~L·W/2-fold
-    and the driver table is one unsplittable row group
-    (functions.partitions rationale)."""
-    return (
-        spread(_t(spark, sf_dir, "documents"))
-        .select("doc_id", F.split("text", " ").alias("toks"))
-        .withColumn("len", F.least(F.size("toks"), F.lit(L)))
-        .filter(F.col("len") > 0)
-        .withColumn("s", F.explode(F.expr("sequence(0, len - 1)")))
-        .withColumn("w", F.explode(F.expr(f"sequence(1, {W})")))
-        .filter(F.col("s") + F.col("w") <= F.col("len"))
-        .select(
-            "doc_id",
-            F.col("s").cast("long").alias("s"),
-            (F.col("s") + F.col("w")).cast("long").alias("e"),
-        )
-    )
-
-
-def _duck_lattice(L: int, W: int) -> str:
-    return f"""
-toks AS (SELECT doc_id, least(len(string_split(text, ' ')), {L}) AS len
-         FROM documents WHERE len(string_split(text, ' ')) > 0),
-starts AS (SELECT doc_id, len, unnest(generate_series(0, len - 1)) AS s FROM toks),
-lat AS (SELECT doc_id, CAST(s AS BIGINT) AS s, CAST(s + w AS BIGINT) AS e
-        FROM (SELECT doc_id, len, s, unnest(generate_series(1, {W})) AS w
-              FROM starts) q
-        WHERE s + w <= len)
-"""
-
-
-def _scored_lattice(spark, sf_dir, L, W) -> DataFrame:
-    return _lattice(spark, sf_dir, L, W).withColumn("score", F.expr(SCORE_SPARK))
-
-
-def _duck_scored(L, W) -> str:
-    return (
-        _duck_lattice(L, W)
-        + f", scored AS (SELECT doc_id, s, e, {SCORE} AS score FROM lat)"
-    )
-
-
-# --------------------------------------------------------------------------
-# §2.5 top-k / dedup-max  (T1, T3)
-# --------------------------------------------------------------------------
-
-
-def q_t1_topk_spans(spark, sf_dir):
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("score").desc(), F.col("s").asc(), F.col("e").asc())
-    return (
-        _scored_lattice(spark, sf_dir, 40, 6)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("doc_id", F.col("s").alias("start"), F.col("e").alias("end"), "score")
-    )
-
-
-SQL_T1 = f"""
-WITH {_duck_scored(40, 6)}
-SELECT doc_id, s AS start, e AS "end", score
-FROM (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, s, e) AS rn
-      FROM scored) q
-WHERE rn <= 5
-"""
-
-
-# --------------------------------------------------------------------------
-# §2.3 joins (J1 pair-gen, T5 hanging prune)
-# --------------------------------------------------------------------------
-
-
-def _top3(spark, sf_dir) -> DataFrame:
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("score").desc(), F.col("s").asc(), F.col("e").asc())
-    return (
-        _scored_lattice(spark, sf_dir, 30, 5)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("doc_id", "s", "e", "score")
-    )
-
-
-DUCK_TOP3 = f"""
-{_duck_scored(30, 5)},
-top3 AS (SELECT doc_id, s, e, score
-         FROM (SELECT *, row_number() OVER (PARTITION BY doc_id
-                       ORDER BY score DESC, s, e) AS rn FROM scored) q
-         WHERE rn <= 3)
-"""
-
-
-def q_j1_pair_gen(spark, sf_dir):
-    sp = _top3(spark, sf_dir)
-    h = sp.select("doc_id", F.col("s").alias("h_start"), F.col("e").alias("h_end"))
-    t = sp.select("doc_id", F.col("s").alias("t_start"), F.col("e").alias("t_end"))
-    return h.join(t, "doc_id").filter(
-        (F.col("h_start") != F.col("t_start")) | (F.col("h_end") != F.col("t_end"))
-    )
-
-
-SQL_J1 = f"""
-WITH {DUCK_TOP3}
-SELECT a.doc_id, a.s AS h_start, a.e AS h_end, b.s AS t_start, b.e AS t_end
-FROM top3 a JOIN top3 b ON a.doc_id = b.doc_id
-WHERE a.s != b.s OR a.e != b.e
-"""
-
-
-# --------------------------------------------------------------------------
-# §2.4 aggregations / metrics (A1 strict micro-PRF, A2 loose, A6 stats)
-# --------------------------------------------------------------------------
-
-
-def q_a1_micro_prf(spark, sf_dir):
-    lat = _scored_lattice(spark, sf_dir, 30, 4)
-    gold = lat.filter(F.col("score") % 3 == 0).select("doc_id", "s", "e")
-    pred = lat.filter(F.col("score") % 2 == 0).select("doc_id", "s", "e")
-    tp = gold.join(pred, ["doc_id", "s", "e"]).count()
-    fp = pred.join(gold, ["doc_id", "s", "e"], "left_anti").count()
-    fn = gold.join(pred, ["doc_id", "s", "e"], "left_anti").count()
-    prec = tp / max(tp + fp, 1)
-    rec = tp / max(tp + fn, 1)
-    f1 = 2 * prec * rec / max(prec + rec, 1e-12)
-    return spark.createDataFrame(
-        [(tp, fp, fn, round(prec, 6), round(rec, 6), round(f1, 6))],
-        "tp long, fp long, fn long, precision double, recall double, f1 double",
-    )
-
-
-SQL_A1 = f"""
-WITH {_duck_scored(30, 4)},
-gold AS (SELECT doc_id, s, e FROM scored WHERE score % 3 = 0),
-pred AS (SELECT doc_id, s, e FROM scored WHERE score % 2 = 0),
-c AS (SELECT
-  (SELECT count(*) FROM gold JOIN pred USING (doc_id, s, e)) AS tp,
-  (SELECT count(*) FROM pred WHERE NOT EXISTS
-     (SELECT 1 FROM gold g WHERE g.doc_id = pred.doc_id AND g.s = pred.s AND g.e = pred.e)) AS fp,
-  (SELECT count(*) FROM gold WHERE NOT EXISTS
-     (SELECT 1 FROM pred p WHERE p.doc_id = gold.doc_id AND p.s = gold.s AND p.e = gold.e)) AS fn)
-SELECT tp, fp, fn,
-       round(tp / greatest(tp + fp, 1), 6) AS precision,
-       round(tp / greatest(tp + fn, 1), 6) AS recall,
-       round(2.0 * (tp / greatest(tp + fp, 1)) * (tp / greatest(tp + fn, 1))
-             / greatest(tp / greatest(tp + fp, 1) + tp / greatest(tp + fn, 1), 1e-12), 6) AS f1
-FROM c
-"""
-
-
-_RSCORE_SPARK = md5_long_sql_spark("concat_ws(':', doc_id, hs, he, ts, te)")
-_RSCORE_DUCK = md5_long_sql("concat_ws(':', doc_id, hs, he, ts, te)")
-
-
-def q_a2_loose_rels(spark, sf_dir):
-    """A2 rel-tuple loose matching (reference metrics.py:49-92), set
-    semantics: a gold rel matches iff ANY in-doc pred of the same
-    rel_type has all four endpoints within tolerance — exact always, or
-    |Δ| <= 1 when BOTH endpoint spans have width >= 2 (absolute tol=1,
-    the reference's `tolerance >= 1` branch). Rels are adjacent span
-    pairs from the lattice; preds are gold-like rels with deterministic
-    hash-derived ±1 jitter on head and tail, so both the exact and the
-    loose branch are exercised. The greedy 1-to-1 variant is
-    operators/metrics.loose_match_rels (pytest-gated, order-dependent)."""
-    lat = _scored_lattice(spark, sf_dir, 16, 3)
-    heads = lat.select("doc_id", F.col("s").alias("hs"), F.col("e").alias("he"))
-    tails = lat.select("doc_id", F.col("s").alias("ts"), F.col("e").alias("te"))
-    rels = (
-        heads.join(tails, "doc_id").filter(F.col("ts") == F.col("he"))
-        .withColumn("rscore", F.expr(_RSCORE_SPARK))
-        .withColumn("rel_type", F.when(F.col("rscore") % 2 == 0, "causal")
-                    .otherwise("enable"))
-    )
-    gold = rels.filter(F.col("rscore") % 5 == 0).select(
-        "doc_id", "hs", "he", "ts", "te", "rel_type")
-    pred = rels.filter(F.col("rscore") % 4 == 0).select(
-        "doc_id",
-        (F.col("hs") + F.col("rscore") % 3 - 1).alias("phs"),
-        (F.col("he") + F.col("rscore") % 3 - 1).alias("phe"),
-        (F.col("ts") + (F.expr("rscore div 3") % 3) - 1).alias("pts"),
-        (F.col("te") + (F.expr("rscore div 3") % 3) - 1).alias("pte"),
-        "rel_type")
-    d_hs = F.abs(F.col("hs") - F.col("phs"))
-    d_he = F.abs(F.col("he") - F.col("phe"))
-    d_ts = F.abs(F.col("ts") - F.col("pts"))
-    d_te = F.abs(F.col("te") - F.col("pte"))
-    exact = (d_hs == 0) & (d_he == 0) & (d_ts == 0) & (d_te == 0)
-    loose = ((F.col("he") - F.col("hs") >= 2) & (F.col("te") - F.col("ts") >= 2)
-             & (d_hs <= 1) & (d_he <= 1) & (d_ts <= 1) & (d_te <= 1))
-    matched = (
-        gold.join(pred, ["doc_id", "rel_type"])
-        .filter(exact | loose)
-        .select("doc_id", "hs", "he", "ts", "te").distinct()
-    )
-    n_gold = gold.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_gold"))
-    n_tp = matched.groupBy("doc_id").agg(F.count(F.lit(1)).alias("loose_tp"))
-    return n_gold.join(n_tp, "doc_id", "left").select(
-        "doc_id", "n_gold", F.coalesce("loose_tp", F.lit(0)).alias("loose_tp"))
-
-
-SQL_A2_RELS = f"""
-WITH {_duck_scored(16, 3)},
-rels0 AS (SELECT h.doc_id, h.s AS hs, h.e AS he, t.s AS ts, t.e AS te
-          FROM scored h JOIN scored t ON h.doc_id = t.doc_id AND t.s = h.e),
-rels AS (SELECT doc_id, hs, he, ts, te, {_RSCORE_DUCK} AS rscore,
-                CASE WHEN {_RSCORE_DUCK} % 2 = 0 THEN 'causal' ELSE 'enable' END AS rel_type
-         FROM rels0),
-gold AS (SELECT doc_id, hs, he, ts, te, rel_type FROM rels WHERE rscore % 5 = 0),
-pred AS (SELECT doc_id,
-                hs + rscore % 3 - 1 AS phs, he + rscore % 3 - 1 AS phe,
-                ts + (rscore // 3) % 3 - 1 AS pts, te + (rscore // 3) % 3 - 1 AS pte,
-                rel_type
-         FROM rels WHERE rscore % 4 = 0),
-matched AS (SELECT DISTINCT g.doc_id, g.hs, g.he, g.ts, g.te
-            FROM gold g JOIN pred p ON g.doc_id = p.doc_id AND g.rel_type = p.rel_type
-            WHERE (abs(g.hs - p.phs) = 0 AND abs(g.he - p.phe) = 0
-                   AND abs(g.ts - p.pts) = 0 AND abs(g.te - p.pte) = 0)
-               OR (g.he - g.hs >= 2 AND g.te - g.ts >= 2
-                   AND abs(g.hs - p.phs) <= 1 AND abs(g.he - p.phe) <= 1
-                   AND abs(g.ts - p.pts) <= 1 AND abs(g.te - p.pte) <= 1))
-SELECT g.doc_id, count(*) AS n_gold,
-       coalesce(max(m.loose_tp), 0) AS loose_tp
-FROM gold g LEFT JOIN (SELECT doc_id, count(*) AS loose_tp
-                       FROM matched GROUP BY doc_id) m USING (doc_id)
-GROUP BY g.doc_id
-"""
-
-
-def q_a3_lost_rels(spark, sf_dir):
-    """A3: per-doc count of gold relations whose endpoints were pruned
-    (rel_processor.py:96-114). Gold rels = consecutive gold spans."""
-    lat = _scored_lattice(spark, sf_dir, 20, 3)
-    gold = lat.filter(F.col("score") % 3 == 0)
-    w = Window.partitionBy("doc_id").orderBy("s", "e")
-    rels = (
-        gold.withColumn("t_s", F.lead("s").over(w))
-        .withColumn("t_e", F.lead("e").over(w))
-        .filter(F.col("t_s").isNotNull())
-        .select("doc_id", F.col("s").alias("h_s"), F.col("e").alias("h_e"),
-                "t_s", "t_e")
-    )
-    kept = lat.filter(F.col("score") % 2 == 0).select("doc_id", "s", "e")
-    h_ok = rels.join(
-        kept.withColumnRenamed("s", "h_s").withColumnRenamed("e", "h_e"),
-        ["doc_id", "h_s", "h_e"], "left_semi")
-    both_ok = h_ok.join(
-        kept.withColumnRenamed("s", "t_s").withColumnRenamed("e", "t_e"),
-        ["doc_id", "t_s", "t_e"], "left_semi")
-    n_all = rels.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_rels"))
-    n_ok = both_ok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_ok"))
-    return n_all.join(n_ok, "doc_id", "left").select(
-        "doc_id", "n_rels",
-        (F.col("n_rels") - F.coalesce(F.col("n_ok"), F.lit(0))).alias("n_lost"))
-
-
-SQL_A3 = f"""
-WITH {_duck_scored(20, 3)},
-gold AS (SELECT doc_id, s, e FROM scored WHERE score % 3 = 0),
-kept AS (SELECT doc_id, s, e FROM scored WHERE score % 2 = 0),
-rels AS (SELECT doc_id, s AS h_s, e AS h_e,
-                lead(s) OVER (PARTITION BY doc_id ORDER BY s, e) AS t_s,
-                lead(e) OVER (PARTITION BY doc_id ORDER BY s, e) AS t_e
-         FROM gold),
-r2 AS (SELECT * FROM rels WHERE t_s IS NOT NULL),
-ok AS (SELECT r.* FROM r2 r
-       WHERE EXISTS (SELECT 1 FROM kept k WHERE k.doc_id = r.doc_id
-                     AND k.s = r.h_s AND k.e = r.h_e)
-         AND EXISTS (SELECT 1 FROM kept k WHERE k.doc_id = r.doc_id
-                     AND k.s = r.t_s AND k.e = r.t_e))
-SELECT a.doc_id, a.n_rels, a.n_rels - coalesce(o.n_ok, 0) AS n_lost
-FROM (SELECT doc_id, count(*) AS n_rels FROM r2 GROUP BY doc_id) a
-LEFT JOIN (SELECT doc_id, count(*) AS n_ok FROM ok GROUP BY doc_id) o
-USING (doc_id)
-"""
 
 
 # --------------------------------------------------------------------------
@@ -476,75 +191,6 @@ merged AS (
   LEFT JOIN top p USING (doc_id))
 SELECT *, (top_bigram_frac <= 0.20 AND dup_trigram_frac <= 0.60) AS keep
 FROM merged
-"""
-
-
-# --------------------------------------------------------------------------
-# sampling, layout and corpus weighting (scale patterns a training-data
-# pipeline needs beyond the reference's own operators)
-# --------------------------------------------------------------------------
-
-
-def _zorder_interleave_sql(x: str, y: str, bits: int = 8) -> str:
-    """Portable 2-D Morton (Z-order) interleave: bit i of `x` lands at
-    output bit 2i, bit i of `y` at 2i+1. Spelled as pure integer
-    arithmetic (floor-div, mod, multiply) so Spark SQL and DuckDB
-    compute the identical BIGINT — no engine-specific bit operators."""
-    terms = []
-    for i in range(bits):
-        terms.append(f"(CAST(floor(({x}) / {1 << i}) AS BIGINT) % 2) * {1 << (2 * i)}")
-        terms.append(f"(CAST(floor(({y}) / {1 << i}) AS BIGINT) % 2) * {1 << (2 * i + 1)}")
-    return "(" + " + ".join(terms) + ")"
-
-
-def q_zorder_key(spark, sf_dir):
-    """Z-order (Morton) layout key over two quantized document
-    dimensions (n_chars, n_tokens — each mapped to 8-bit levels via
-    fixed divisors). The data-layout operator behind multi-dimensional
-    data skipping: sorting/range-partitioning a 10^12-row table by this
-    key clusters rows that are close in BOTH dimensions into the same
-    parquet row groups / Iceberg files, so min-max statistics prune 2-D
-    range predicates — a linear sort on either single column can only
-    prune that one column. Map-only, pure integer arithmetic
-    (whole-stage codegen); the locality payoff is proven in
-    tests/test_curation.py::test_zorder_layout_locality."""
-    docs = _t(spark, sf_dir, "documents")
-    x = "least(cast(n_chars / 8 as bigint), 255)"
-    y = f"least(cast(size(split({NORMALIZE_SQL.format(x='text')}, ' ')) / 2 as bigint), 255)"
-    return docs.select(
-        "doc_id",
-        F.expr(x).alias("qx"),
-        F.expr(y).alias("qy"),
-        F.expr(_zorder_interleave_sql(x, y)).alias("zkey"),
-    )
-
-
-SQL_ZORDER_KEY = f"""
-SELECT doc_id,
-       least(CAST(n_chars // 8 AS BIGINT), 255) AS qx,
-       least(CAST(len(string_split({NORMALIZE_SQL_DUCK.format(x="text")}, ' ')) // 2 AS BIGINT), 255) AS qy,
-       {_zorder_interleave_sql("least(CAST(n_chars // 8 AS BIGINT), 255)", "least(CAST(len(string_split(" + NORMALIZE_SQL_DUCK.format(x="text") + ", ' ')) // 2 AS BIGINT), 255)")} AS zkey
-FROM documents
-"""
-
-
-def q_sample_hash(spark, sf_dir):
-    """Deterministic Bernoulli sampling by content-key hash — THE
-    reproducible way to downsample a 10^12-doc corpus: no RNG state,
-    no shuffle, pushdown-friendly, and the same rows come back on
-    every engine and every rerun (rand()-based sampling is none of
-    those). Rate 25% = first 4 hex chars of md5 below '4000'."""
-    return (
-        _t(spark, sf_dir, "documents")
-        .filter(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4)
-                < "4000")
-        .select("doc_id", "lang", "n_chars")
-    )
-
-
-SQL_SAMPLE_HASH = """
-SELECT doc_id, lang, n_chars FROM documents
-WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '4000'
 """
 
 
@@ -1758,50 +1404,6 @@ FROM per
 """
 
 
-def q_sample_stratified(spark, sf_dir):
-    """Exact per-language quota sample (40 docs/lang) keyed on md5 of
-    the doc id — deterministic stratified downsampling; see
-    sampling.stratified_sample for the WindowGroupLimit scale shape."""
-    return sampling.stratified_sample(
-        _t(spark, sf_dir, "documents"), "lang", 40)
-
-
-SQL_SAMPLE_STRATIFIED = f"""
-SELECT doc_id, lang, samp_rank FROM (
-  SELECT doc_id, lang,
-         row_number() OVER (
-           PARTITION BY lang
-           ORDER BY {md5_long_sql("CAST(doc_id AS VARCHAR)")}, doc_id
-         ) AS samp_rank
-  FROM documents) q
-WHERE samp_rank <= 40
-"""
-
-
-def q_domain_skew_stats(spark, sf_dir):
-    """Hot-group skew profile over the source column (the 'hot domain'
-    detector that drives salted repartitioning): per group, count,
-    corpus share, hot flag, and the salt factor a two-phase salted
-    aggregation should use. One partial hash agg over the corpus;
-    everything downstream runs on the n_groups-row aggregate."""
-    return sampling.group_skew_stats(
-        _t(spark, sf_dir, "documents"), "source", n_target_partitions=20)
-
-
-SQL_DOMAIN_SKEW_STATS = """
-WITH c AS (SELECT source, count(*) AS n_rows FROM documents GROUP BY source),
-t AS (SELECT source, n_rows,
-             sum(n_rows) OVER () AS total,
-             count(*) OVER () AS ngroups
-      FROM c)
-SELECT source, n_rows,
-       round(n_rows / total, 4) AS share,
-       (n_rows * ngroups > 2 * total) AS is_hot,
-       greatest(1, CAST(ceil(n_rows * 20.0 / total) AS BIGINT)) AS salt_factor
-FROM t
-"""
-
-
 def curation_verdict(docs: DataFrame) -> DataFrame:
     """The composite per-doc curation decision a production corpus
     pipeline materializes before training: quality gate (5dp composite
@@ -1893,92 +1495,14 @@ WHERE q.doc_id % 97 <> 0
 """
 
 
-def q_lang_mixing_weights(spark, sf_dir):
-    """Temperature-sampling mixing weights per language (alpha=0.7,
-    the XLM-R/mT5 multilingual rule) — see sampling.mixing_weights for
-    the one-agg scale shape."""
-    return sampling.mixing_weights(
-        _t(spark, sf_dir, "documents"), "lang", alpha=0.7)
-
-
-SQL_LANG_MIXING_WEIGHTS = """
-WITH c AS (SELECT lang, count(*) AS n_docs FROM documents GROUP BY lang),
-t AS (SELECT lang, n_docs,
-             n_docs / sum(n_docs) OVER () AS p_raw,
-             pow(n_docs, 0.7) / sum(pow(n_docs, 0.7)) OVER () AS p_temp
-      FROM c)
-SELECT lang, n_docs,
-       round(p_raw, 4) AS p_raw,
-       round(p_temp, 4) AS p_temp,
-       round(p_temp / p_raw, 4) AS boost
-FROM t
-"""
-
-
-def q_dsir_weights(spark, sf_dir):
-    """DSIR importance weights of every source doc against the held-out
-    benchmark slice (doc_id % 97 == 0 — the same target split
-    curation_verdict uses), hashed-unigram bucket models with 64 buckets,
-    Laplace alpha=1. See sampling.dsir_log_weights for the
-    one-corpus-shuffle scale shape."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.col("doc_id").alias("id"),
-        F.explode(
-            F.expr(f"split({NORMALIZE_SQL.format(x='text')}, ' ')")
-        ).alias("tok"),
-    )
-    return sampling.dsir_log_weights(
-        toks.filter(F.col("id") % 97 != 0),
-        toks.filter(F.col("id") % 97 == 0),
-        n_buckets=64, alpha=1.0,
-    )
-
-
-SQL_DSIR_WEIGHTS = f"""
-WITH toks AS (SELECT doc_id AS id,
-                     unnest(string_split({NORMALIZE_SQL_DUCK.format(x="text")}, ' ')) AS tok
-              FROM documents),
-bk AS (SELECT id, ({md5_long_sql("tok")}) % 64 AS b FROM toks),
-allb AS (SELECT unnest(generate_series(0, 63)) AS b),
-cs AS (SELECT b, count(*) AS c_s FROM bk WHERE id % 97 <> 0 GROUP BY b),
-ct AS (SELECT b, count(*) AS c_t FROM bk WHERE id % 97 = 0 GROUP BY b),
-model0 AS (SELECT a.b, coalesce(cs.c_s, 0) AS c_s, coalesce(ct.c_t, 0) AS c_t
-           FROM allb a LEFT JOIN cs ON a.b = cs.b LEFT JOIN ct ON a.b = ct.b),
-model AS (SELECT b,
-                 ln((c_t + 1.0) / (sum(c_t) OVER () + 64.0))
-               - ln((c_s + 1.0) / (sum(c_s) OVER () + 64.0)) AS log_ratio
-          FROM model0),
-pb AS (SELECT id, b, count(*) AS n_b FROM bk WHERE id % 97 <> 0 GROUP BY id, b)
-SELECT pb.id AS doc_id, CAST(sum(n_b) AS BIGINT) AS n_toks,
-       round(sum(n_b * log_ratio), 4) AS log_weight
-FROM pb JOIN model m ON pb.b = m.b
-GROUP BY pb.id
-"""
-
-
 # --------------------------------------------------------------------------
 # registry
 # --------------------------------------------------------------------------
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # span algebra (SURVEY §2.2/2.3/2.5)
-    "t1_topk_spans": q_t1_topk_spans,
-    "j1_pair_gen": q_j1_pair_gen,
-    # metrics / aggs (§2.4, §2.6)
-    "a1_micro_prf": q_a1_micro_prf,
-    "a2_loose_rels": q_a2_loose_rels,
-    "a3_lost_rels": q_a3_lost_rels,
     # curation operators (the two perfbench curation_ops queries)
     "dedup_minhash_lsh": q_dedup_minhash_lsh,
     "curation_verdict": q_curation_verdict,
-    # sampling + layout + corpus weighting
-    "sample_hash": q_sample_hash,
-    "zorder_key": q_zorder_key,
-    "sample_stratified": q_sample_stratified,
-    "domain_skew_stats": q_domain_skew_stats,
-    "dsir_weights": q_dsir_weights,
-    "lang_mixing_weights": q_lang_mixing_weights,
     # gold-data eval on the reference's own test splits (ignores sf_dir)
     "gold_eval_custom": q_gold_eval_custom,
     "gold_eval_conll04": q_gold_eval_conll04,
@@ -2008,18 +1532,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 }
 
 ORACLES: dict[str, str] = {
-    "t1_topk_spans": SQL_T1,
-    "j1_pair_gen": SQL_J1,
-    "a1_micro_prf": SQL_A1,
-    "a2_loose_rels": SQL_A2_RELS,
-    "a3_lost_rels": SQL_A3,
     "dedup_minhash_lsh": SQL_DEDUP_MINHASH,
-    "sample_hash": SQL_SAMPLE_HASH,
-    "zorder_key": SQL_ZORDER_KEY,
-    "sample_stratified": SQL_SAMPLE_STRATIFIED,
-    "domain_skew_stats": SQL_DOMAIN_SKEW_STATS,
-    "dsir_weights": SQL_DSIR_WEIGHTS,
-    "lang_mixing_weights": SQL_LANG_MIXING_WEIGHTS,
     "curation_verdict": SQL_CURATION_VERDICT,
     "gold_eval_custom": SQL_GOLD_EVAL_CUSTOM,
     "gold_eval_conll04": SQL_GOLD_EVAL_CONLL04,

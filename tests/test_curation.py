@@ -1,99 +1,9 @@
-"""Unit tests for the corpus-curation operators: exact-quota
-stratified sampling, hot-group skew profiling, corpus weighting,
-sequence packing, the curation gate and verdict, and the MinHash-LSH
-dedup plan. Hand-built inputs with hand-computed expectations (the
-sf-scale oracle gates live in test_entry_contract / check_entry)."""
+"""Unit tests for the corpus-curation operators: the curation gate
+and its Python twin, the curation verdict, and the MinHash-LSH dedup
+plan. Hand-built inputs with hand-computed expectations (the sf-scale
+oracle gates live in test_entry_contract / check_entry)."""
 
-import pytest
-from pyspark.sql import functions as F
-
-from causalre_spark.functions.hashing import md5_long
-from causalre_spark.operators import dedup, sampling
-
-
-def test_stratified_sample_exact_quota_and_determinism(spark):
-    df = spark.createDataFrame(
-        [(i, "en" if i % 3 else "de") for i in range(30)],
-        "doc_id long, lang string")
-    out = sampling.stratified_sample(df, "lang", quota=4).collect()
-    by_lang = {}
-    for r in out:
-        by_lang.setdefault(r["lang"], []).append((r["samp_rank"], r["doc_id"]))
-    assert {lang: len(v) for lang, v in by_lang.items()} == {"en": 4, "de": 4}
-    # rank order == md5(doc_id) order, the reproducibility contract
-    for lang, picks in by_lang.items():
-        ids = [d for _, d in sorted(picks)]
-        pool = [i for i in range(30)
-                if ("en" if i % 3 else "de") == lang]
-        expect = sorted(pool, key=lambda i: (md5_long(str(i)), i))[:4]
-        assert ids == expect
-    # rerun returns the identical sample
-    again = sampling.stratified_sample(df, "lang", quota=4).collect()
-    assert sorted(map(tuple, out)) == sorted(map(tuple, again))
-
-
-def test_group_skew_stats(spark):
-    rows = [("A",)] * 8 + [("B",)] + [("C",)]
-    df = spark.createDataFrame(rows, "source string")
-    got = {r["source"]: (r["n_rows"], r["share"], r["is_hot"],
-                         r["salt_factor"])
-           for r in sampling.group_skew_stats(
-               df, "source", n_target_partitions=20).collect()}
-    assert got == {
-        "A": (8, 0.8, True, 16),   # ceil(8*20/10)
-        "B": (1, 0.1, False, 2),   # ceil(1*20/10)
-        "C": (1, 0.1, False, 2),
-    }
-
-
-
-def test_dsir_log_weights_vs_python_twin(spark):
-    import math
-    from collections import Counter
-
-    B, ALPHA = 64, 1.0
-    src = {1: ["alpha", "beta", "beta"], 2: ["gamma"], 3: ["beta", "delta"]}
-    tgt = ["beta", "beta", "gamma", "epsilon"]
-
-    def bucket(tok):
-        return md5_long(tok) % B
-
-    c_s = Counter(bucket(t) for toks in src.values() for t in toks)
-    c_t = Counter(bucket(t) for t in tgt)
-    ts, tt = sum(c_s.values()), sum(c_t.values())
-
-    def log_ratio(b):
-        return (math.log((c_t[b] + ALPHA) / (tt + ALPHA * B))
-                - math.log((c_s[b] + ALPHA) / (ts + ALPHA * B)))
-
-    expect = {
-        d: (len(toks), round(sum(log_ratio(bucket(t)) for t in toks), 4))
-        for d, toks in src.items()
-    }
-
-    src_df = spark.createDataFrame(
-        [(d, t) for d, toks in src.items() for t in toks],
-        "id long, tok string")
-    tgt_df = spark.createDataFrame([(9, t) for t in tgt], "id long, tok string")
-    got = {r["doc_id"]: (r["n_toks"], r["log_weight"])
-           for r in sampling.dsir_log_weights(src_df, tgt_df, B, ALPHA).collect()}
-    assert got == expect
-    # model property: a target-only token must score above a source-only
-    # token (epsilon: target-only; delta: source-only)
-    assert log_ratio(bucket("epsilon")) > log_ratio(bucket("delta"))
-
-
-def test_mixing_weights_upweights_low_resource(spark):
-    df = spark.createDataFrame(
-        [("en",)] * 4 + [("de",)], "lang string")
-    got = {r["lang"]: (r["n_docs"], r["p_raw"], r["p_temp"], r["boost"])
-           for r in sampling.mixing_weights(df, "lang", alpha=0.5).collect()}
-    # pw: en=2, de=1 -> p_temp en=2/3, de=1/3
-    assert got == {
-        "en": (4, 0.8, round(2 / 3, 4), round((2 / 3) / 0.8, 4)),
-        "de": (1, 0.2, round(1 / 3, 4), round((1 / 3) / 0.2, 4)),
-    }
-    assert got["de"][3] > 1.0 > got["en"][3]
+from causalre_spark.operators import dedup
 
 
 def test_curation_gate_python_twin_matches_sql(spark):
@@ -158,80 +68,6 @@ def test_curation_twin_parity_on_adversarial_texts(spark):
                         (r["n_tokens"], r["quality_score"],
                          r["dup_trigram_frac"], r["keep"])))
     assert not bad, bad[:5]
-
-
-def test_pack_sequences_invariants(spark):
-    """Packing algebra: per-shard offsets are a gapless prefix sum in
-    (doc_id) order, pack_id = start_off // L, straddle iff the doc
-    crosses an L boundary, and the layout is partitioning-invariant."""
-    from causalre_spark.operators.sampling import pack_sequences
-
-    texts = [(i, " ".join(f"t{j}" for j in range(3 + (i * 7) % 11)))
-             for i in range(60)]
-    docs = spark.createDataFrame(texts, "doc_id long, text string")
-    L = 16
-    rows = pack_sequences(docs, seq_len=L, n_shards=4).collect()
-    by_shard: dict = {}
-    for r in rows:
-        by_shard.setdefault(r["shard"], []).append(r)
-    assert len(rows) == 60
-    for shard, rs in by_shard.items():
-        rs.sort(key=lambda r: r["doc_id"])
-        off = 0
-        for r in rs:
-            assert r["start_off"] == off            # gapless stream
-            assert r["end_off"] == off + r["n_tokens"]
-            assert r["pack_id"] == r["start_off"] // L
-            assert r["straddle"] == (
-                r["start_off"] // L != (r["end_off"] - 1) // L)
-            off = r["end_off"]
-    # partitioning must not change the layout
-    again = pack_sequences(docs.repartition(13), seq_len=L, n_shards=4).collect()
-    assert {tuple(r) for r in again} == {tuple(r) for r in rows}
-
-
-def test_zorder_layout_locality(spark):
-    """The point of the Z-order key: range-partition a table by zkey
-    and rows matching a 2-D range predicate land in FEWER files than a
-    1-D (x-sorted) layout — the file-level locality that min-max
-    statistics turn into data skipping at scale. Also checks the
-    interleave against a python twin."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from causalre_spark.plans.entry_queries import _zorder_interleave_sql
-
-    n, files = 4096, 16
-    df = spark.range(n).select(
-        (F.col("id") % 64).alias("x"), (F.col("id") / 64).cast("long").alias("y"))
-    z = df.withColumn("zkey", F.expr(_zorder_interleave_sql("x", "y", bits=6)))
-
-    # python twin of the interleave
-    row = z.filter("x = 5 and y = 9").first()
-    twin = sum((((5 >> i) & 1) << (2 * i)) + (((9 >> i) & 1) << (2 * i + 1))
-               for i in range(6))
-    assert row["zkey"] == twin
-
-    pred = "x between 8 and 15 and y between 8 and 15"
-
-    def files_touched(frame, sort_col):
-        path = f"/tmp/causalre_zorder_{sort_col}"
-        shutil.rmtree(path, ignore_errors=True)
-        (frame.repartitionByRange(files, F.col(sort_col))
-         .sortWithinPartitions(sort_col)
-         .write.mode("overwrite").parquet(path))
-        got = spark.read.parquet(path).filter(pred)
-        assert got.count() == 64
-        return got.select(F.input_file_name()).distinct().count()
-
-    zorder_files = files_touched(z, "zkey")
-    linear_files = files_touched(z, "x")
-    # the 8x8 query square is 1/64 of the space: z-layout confines it to
-    # a handful of files; the x-sorted layout smears it across most of
-    # the x-range files (every x stripe contains all y values)
-    assert zorder_files < linear_files
-    assert zorder_files <= files // 4
 
 
 def _near_dup_docs():

@@ -80,3 +80,29 @@ def test_query_matches_oracle(spark, duck, name):
     assert len(sdf) == len(odf), (len(sdf), len(odf))
     assert sorted(sdf.columns) == sorted(odf.columns)
     assert _normalized(sdf) == _normalized(odf)
+
+
+def test_workers_get_the_checkouts_package(tmp_path, monkeypatch):
+    """_ensure_importable ships a zip of exactly the checkout's package
+    sources, never a zip that an older checkout left in the temp dir
+    (addPyFile puts the shipped zip ahead of PYTHONPATH on the workers)."""
+    import tempfile
+    import zipfile
+    from pathlib import Path
+    from types import SimpleNamespace
+
+    with zipfile.ZipFile(tmp_path / "causalre_spark_pkg.zip", "w") as z:
+        z.writestr("causalre_spark/__init__.py", "STALE = True\n")
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    shipped = []
+    stub = SimpleNamespace(sparkContext=SimpleNamespace(addPyFile=shipped.append))
+    entry_mod._ensure_importable(stub)
+    entry_mod._ensure_importable(stub)
+    assert len(shipped) == 2 and shipped[0] == shipped[1]
+
+    root = Path(entry_mod.__file__).resolve().parent
+    want = {str(p.relative_to(root)): p.read_bytes()
+            for p in (root / "causalre_spark").rglob("*.py")}
+    with zipfile.ZipFile(shipped[0]) as z:
+        got = {name: z.read(name) for name in z.namelist()}
+    assert got == want

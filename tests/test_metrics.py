@@ -57,31 +57,6 @@ def test_triple_prf_pipeline_vs_oracle(spark):
     assert r.precision == 1.0 and r.recall == 1.0
 
 
-def test_running_mean_ema_and_save_score():
-    """A5 (train.py:229, :252-266, :334-361) + N13-adjacent scalar
-    helpers: running mean, EMA seeding/recursion, balance-weighted
-    save score."""
-    from causalre_spark.operators.metrics import balanced_save_score, ema, running_mean
-
-    assert running_mean([2.0, 4.0, 6.0]) == [2.0, 3.0, 4.0]
-    e = ema([1.0, 2.0, 3.0], alpha=0.5)
-    assert e[0] == 1.0 and e[1] == 1.5 and e[2] == 2.25
-    # perfectly balanced: score = mean of f1s
-    assert balanced_save_score((0.8, 0.8, 0.8), (0.6, 0.6, 0.6)) == (0.8 + 0.6) / 2
-    # imbalance penalizes: balance (0.5/1.0)^2 = 0.25
-    s = balanced_save_score((1.0, 0.5, 2 / 3), (0.0, 0.0, 0.0))
-    assert abs(s - (2 / 3) * 0.25 / 2) < 1e-12
-
-
-def test_mark_spans_f5():
-    from causalre_spark.operators.spans import mark_spans
-
-    toks = ["a", "b", "c", "d"]
-    out = mark_spans(toks, [{"start": 0, "end": 2}, {"start": 3, "end": 4}])
-    assert out == ["<s0>a", "b</s0>", "c", "<s1>d</s1>"]
-    assert toks == ["a", "b", "c", "d"]  # input untouched
-
-
 def test_n13_losses():
     """N13/A4 masked loss reductions (loss_functions.py:10-103)."""
     import numpy as np

@@ -104,46 +104,6 @@ def test_dedup_max_idempotent(rows):
         assert abs(kc - want) < 1e-6
 
 
-@given(st.lists(st.integers(min_value=0, max_value=255), min_size=2,
-                max_size=6),
-       st.integers(min_value=0, max_value=255))
-@settings(max_examples=100, deadline=None)
-def test_zorder_monotone_per_dimension(xs, y):
-    """Morton interleave is order-preserving in each dimension when the
-    other is fixed — the property that makes zkey ranges prune 1-D
-    slices of a 2-D predicate."""
-    def z(x, yy, bits=8):
-        return sum((((x >> i) & 1) << (2 * i)) + (((yy >> i) & 1) << (2 * i + 1))
-                   for i in range(bits))
-
-    xs_sorted = sorted(set(xs))
-    zs = [z(x, y) for x in xs_sorted]
-    assert zs == sorted(zs)
-    ys_sorted = sorted(set(xs))  # reuse as y values, x fixed
-    zs2 = [z(y, v) for v in ys_sorted]
-    assert zs2 == sorted(zs2)
-
-
-@given(st.lists(st.integers(min_value=1, max_value=50), min_size=1,
-                max_size=30),
-       st.integers(min_value=4, max_value=64))
-@settings(max_examples=100, deadline=None)
-def test_packing_prefix_scan_invariants(lengths, L):
-    """Python twin of pack_sequences' per-shard algebra: offsets are a
-    gapless prefix sum, pack_id = start // L, straddle iff the doc
-    crosses a pack boundary, and total stream length is preserved."""
-    off = 0
-    for n in lengths:
-        start, end = off, off + n
-        pack = start // L
-        straddle = (start // L) != ((end - 1) // L)
-        assert straddle == (end - 1 >= (pack + 1) * L)
-        if not straddle:
-            assert end - 1 < (pack + 1) * L
-        off = end
-    assert off == sum(lengths)
-
-
 def test_grid_constant_lint():
     """Source linter for the irrational-offset grid policy: every
     occurrence of the grid constant in the package must use the exact
