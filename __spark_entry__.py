@@ -9,7 +9,7 @@ queries()      — the registry (plans/entry_queries.py): the two
                  benchmarked curation operators (dedup_minhash_lsh,
                  curation_verdict; each reads only the sf `documents`
                  table), the gold-split quality families (gold_eval_*,
-                 gazetteer_*, fitted_*, ptron_*) and the flagship
+                 ptron_full_eval_*) and the flagship
                  causal_triples / causal_triples_seeded.
 oracle_sql()   — exact DuckDB twins for every query except causal_triples,
                  which is rows-only by design: its golden correctness gate

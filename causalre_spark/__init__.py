@@ -13,7 +13,7 @@ dedup, graph materialization, checkpoint/resume, skew handling).
 Layout:
   functions/   portable scalar/hash expressions (identical in Spark & DuckDB)
   model/       frozen deterministic numeric model (NumPy; runs inside Arrow UDFs)
-  operators/   relational operators (dedup, linking, metrics, fitted taggers, ...)
+  operators/   relational operators (dedup, linking, metrics, perceptron taggers, ...)
   sources/     corpus generation + readers/writers (parquet now, Iceberg-shaped API)
   oracle/      single-process pure-Python golden pipeline for parity tests
   pipeline.py  end-to-end pages -> triples driver with checkpoint/resume

@@ -141,8 +141,8 @@ VAL_DOC_OFFSET = 1_000_000
 
 def load_gold_fit_split(spark: SparkSession, dataset: str,
                         cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """train ∪ val — the FINAL-model fit split for the fitted
-    extractors (operators/fitted.py). Protocol: hyperparameters are
+    """train ∪ val — the FINAL-model fit split for the perceptron
+    extractors (operators/perceptron.py). Protocol: hyperparameters are
     selected on val with train-only fits, then the shipped model is
     refit on train ∪ val (standard select-then-refit); the test split
     never enters any fit or selection."""

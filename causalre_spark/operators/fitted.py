@@ -1,57 +1,22 @@
-"""Gold-split-fitted span HMM + relation Naive-Bayes (VERDICT r03 #1).
+"""Relation candidate pairs, their features and the majority label
+types over the gold splits, shared by the relation perceptron
+(operators/perceptron.py fit_rel_ipm / predict_rels_ptron) and the
+ptron_full_eval_* queries.
 
-The reference's quality comes from trained torch checkpoints that are
-not portable (`CRE Model/config.yaml:47`; no .pt in the repo), so the
-frozen-weight profile scores near-zero on gold and the gazetteer
-(operators/gazetteer.py) only recovers spans whose surface form repeats
-verbatim between splits — which never happens for the custom corpus's
-clause-level event spans. This module is the next rung on the
-fit-by-aggregation ladder, and lifts gold-eval rel F1 off zero
-(GOLD_EVAL.md current numbers: conll04 rel F1 0.00 -> ~0.36,
-custom 0.00 -> ~0.23; spans 0.50 -> ~0.72 / 0.05 -> ~0.37).
-Protocol: every hyperparameter is selected on the VAL splits (never
-test), then the final model is refit on train ∪ val — the standard
-select-then-refit recipe:
-
-- **Span tagger**: a first-order HMM over BIES+O token states. The fit
-  is 100% DataFrame aggregation (emission counts per token, shape
-  backoff counts, context counts, transition / init / final counts) —
-  at 100 TB it is one groupBy over the exploded train split and the
-  model is a train-vocabulary-bounded dimension table. Decoding is
-  per-document Viterbi (max-product DP) — inherently sequential per
-  doc, so it runs as an Arrow-batched mapInPandas UDF with the fitted
-  counts carried in the closure: embarrassingly parallel, zero shuffle,
-  the same shape as the model-stage UDFs (SURVEY §2.10 contract).
-  Emissions are scaled likelihoods log P(s|w) - log P(s) (the
-  hybrid-HMM trick) with an m-estimate backoff to character-shape
-  classes for unseen tokens, PLUS naive-Bayes context terms for the
-  previous/next token and their shape classes, tempered by CTX_LAMBDA
-  (sum of per-feature scaled likelihoods — the same independence
-  approximation the relation NB makes). The context terms are what
-  lets the tagger place clause-level span boundaries: for the custom
-  (causal) corpus the boundary evidence is almost entirely in the
-  NEIGHBOR tokens (preceding punctuation / connectives, following
-  triggers), not the token itself — adding them roughly doubled custom
-  span F1 and, downstream, lifted custom rel F1 ~4x
-  (GOLD_EVAL.md has the current measured table).
-
-- **Relation classifier**: a 3-class (none / forward / backward) Naive
-  Bayes over ordered candidate span pairs with lexical-structural
-  features: between-text tokens and bigrams, quantized gap bucket,
-  first/last between-token, tokens adjacent to the pair (pre/post),
-  each span's last token (hl/tl), shape class (hlsh/tlsh) and width
-  bucket (hw/tw), with a val-split-selected decision margin (MARGIN)
-  and frequency floor (MIN_DF). Both
-  fit AND inference are pure DataFrame algebra: the fit is a groupBy
-  over exploded pair features; inference joins candidate features to
-  the broadcast weight table and sums per pair. Weights are
-  integer-grid-quantized log-likelihood ratios
-  (floor(1000*ln(r) + pi/10), the README cross-engine determinism
-  policy), so scores are exact BIGINT sums and the DuckDB oracle can
-  recompute fit + predict + eval end-to-end with zero float drift.
-  Backward pairs get their own class because ~30% of gold relations
-  point right-to-left (head after tail in text) — a single
-  earlier->later trigger rule caps recall at 0.7 before it starts.
+- **Candidate pairs**: position-ordered disjoint span pairs within the
+  reference's ±30-token relation window (candidate_pairs); on the gold
+  splits they are labeled none / forward / backward from the gold
+  relations (_labeled_train_pairs). Backward pairs get their own class
+  because ~30% of gold relations point right-to-left (head after tail
+  in text).
+- **Pair features**: between-text tokens and bigrams, quantized gap
+  bucket, first/last between-token, tokens adjacent to the pair
+  (pre/post), each span's last token (hl/tl), shape class (hlsh/tlsh)
+  and width bucket (hw/tw), plus the relation perceptron's
+  val-selected extra kinds. Pure DataFrame algebra, so the DuckDB
+  oracle (plans/entry_queries._duck_pair_feats) recomputes it exactly.
+- **Majority types**: the fit split's most frequent span and relation
+  type, attached to untyped predictions for strict typed matching.
 
 Reference parity targets: `CRE Model/modules/metrics.py:96-132` scoring
 over `data/Conll04/conll04_nathan_for_model_rs129.json` and the Custom
@@ -61,37 +26,9 @@ quality rows these fitted surfaces are measured against.
 
 from __future__ import annotations
 
-import math
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from causalre_spark.functions.grid import GRID_OFFSET
-
-STATES = ["O", "B", "I", "E", "S"]
-_SI = {s: i for i, s in enumerate(STATES)}
-# legal BIES+O transitions: a span is B I* E or S; O elsewhere
-LEGAL = {("O", "O"), ("O", "B"), ("O", "S"),
-         ("B", "I"), ("B", "E"),
-         ("I", "I"), ("I", "E"),
-         ("E", "O"), ("E", "B"), ("E", "S"),
-         ("S", "O"), ("S", "B"), ("S", "S")}
-START_OK = ("O", "B", "S")
-END_OK = ("O", "E", "S")
-
-# Span-decoder hyperparameters, selected on the reference VAL splits
-# (never test): one global (CTX_LAMBDA, HMM_M) pair, argmax of summed
-# val span F1 over {0.5..1.25} x {0.5..4.0}.
-# CTX_LAMBDA tempers the naive-Bayes context emission terms (prev/next
-# token and shape): 1.0 = full NB independence; <1 discounts the
-# double-counting between overlapping context windows of adjacent
-# positions. HMM_M is the m-estimate backoff mass pulling the token
-# emission posterior toward its shape class and the context posteriors
-# toward the state prior.
-CTX_LAMBDA = 0.75
-HMM_M = 3.0
 
 # token character-shape classes (precedence order). ASCII classes on
 # purpose: Java regex (Spark), RE2-ish DuckDB regexp and Python `re`
@@ -123,296 +60,12 @@ SHAPE_SQL_DUCK_FMT = """CASE
   WHEN regexp_matches({col}, '^[a-z]+$') THEN 'low'
   ELSE 'other' END"""
 
-SHAPE_SQL_DUCK = SHAPE_SQL_DUCK_FMT.format(col="token")
-
-
-def token_states(split_df: DataFrame) -> DataFrame:
-    """(url, pos, token, state): every train token labeled with its
-    BIES+O state. When gold spans overlap, the span LATEST in the
-    document's span array wins per position (deterministic, matches the
-    oracle's max-sidx rule)."""
-    toks = (split_df
-            .select(F.col("doc_id").cast("string").alias("url"),
-                    F.posexplode("tokens").alias("pos", "token")))
-    lab = (split_df
-           .select(F.col("doc_id").cast("string").alias("url"),
-                   F.posexplode("spans").alias("sidx", "sp"))
-           .select("url", "sidx", F.col("sp.start").alias("s"),
-                   F.col("sp.end").alias("e"))
-           .select("url", "sidx", "s", "e",
-                   F.explode(F.expr("sequence(s, e - 1)")).alias("pos"))
-           .withColumn(
-               "state",
-               F.when(F.col("e") - F.col("s") == 1, "S")
-               .when(F.col("pos") == F.col("s"), "B")
-               .when(F.col("pos") == F.col("e") - 1, "E")
-               .otherwise("I")))
-    w = Window.partitionBy("url", "pos").orderBy(F.col("sidx").desc())
-    best = (lab.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") == 1).select("url", "pos", "state"))
-    return (toks.join(best, ["url", "pos"], "left")
-            .fillna({"state": "O"})
-            .select("url", "pos", "token", "state"))
-
-
-def fit_hmm(split_df: DataFrame) -> DataFrame:
-    """Fitted HMM as ONE tall counts table (part, key, state, cnt):
-
-    - part='em':   key=token, per-state emission count
-    - part='emsh': key=shape class, per-state count (unseen-token backoff)
-    - part='emprev' / 'emnext': key=neighbor token ('<bos>'/'<eos>' at
-      document edges), per-state NB context count
-    - part='empsh' / 'emnsh':   key=neighbor shape class (same edge
-      sentinels), per-state NB context count
-    - part='tr':   key=previous state, state=current, bigram count
-    - part='init' / 'fin': key='', first/last-token state counts
-
-    Everything is groupBy aggregation — the whole model is a small
-    dimension table (train-vocab-bounded) and the fit plan has exactly
-    one shuffle per part over uniform keys."""
-    st = token_states(split_df)
-    em = (st.groupBy(F.col("token").alias("key"), "state")
-          .agg(F.count(F.lit(1)).alias("cnt"))
-          .select(F.lit("em").alias("part"), "key", "state", "cnt"))
-    emsh = (st.withColumn("sh", shape_col("token"))
-            .groupBy(F.col("sh").alias("key"), "state")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .select(F.lit("emsh").alias("part"), "key", "state", "cnt"))
-    w = Window.partitionBy("url").orderBy("pos")
-    ctx = (st
-           .withColumn("ptok", F.coalesce(F.lag("token").over(w),
-                                          F.lit("<bos>")))
-           .withColumn("ntok", F.coalesce(F.lead("token").over(w),
-                                          F.lit("<eos>"))))
-
-    def _ctx_part(part: str, col: str, shaped: bool) -> DataFrame:
-        sentinel = "<bos>" if col == "ptok" else "<eos>"
-        key = (F.when(F.col(col) == sentinel, sentinel)
-               .otherwise(shape_col(col)) if shaped else F.col(col))
-        return (ctx.groupBy(key.alias("key"), "state")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .select(F.lit(part).alias("part"), "key", "state", "cnt"))
-
-    emprev = _ctx_part("emprev", "ptok", False)
-    emnext = _ctx_part("emnext", "ntok", False)
-    empsh = _ctx_part("empsh", "ptok", True)
-    emnsh = _ctx_part("emnsh", "ntok", True)
-    tr = (st.withColumn("prev", F.lag("state").over(w))
-          .where(F.col("prev").isNotNull())
-          .groupBy(F.col("prev").alias("key"), "state")
-          .agg(F.count(F.lit(1)).alias("cnt"))
-          .select(F.lit("tr").alias("part"), "key", "state", "cnt"))
-    wn = Window.partitionBy("url")
-    edged = st.withColumn("mx", F.max("pos").over(wn))
-    init = (edged.where(F.col("pos") == 0)
-            .groupBy("state").agg(F.count(F.lit(1)).alias("cnt"))
-            .select(F.lit("init").alias("part"), F.lit("").alias("key"),
-                    "state", "cnt"))
-    fin = (edged.where(F.col("pos") == F.col("mx"))
-           .groupBy("state").agg(F.count(F.lit(1)).alias("cnt"))
-           .select(F.lit("fin").alias("part"), F.lit("").alias("key"),
-                   "state", "cnt"))
-    return em.unionByName(emsh).unionByName(emprev).unionByName(emnext) \
-             .unionByName(empsh).unionByName(emnsh).unionByName(tr) \
-             .unionByName(init).unionByName(fin)
-
-
-def collect_hmm_model(model_df: DataFrame) -> dict:
-    """Materialize the fitted counts table into the plain-dict model the
-    Viterbi UDF closes over. Driver-side by design: the model is a
-    train-vocabulary-bounded dimension (tens of k rows)."""
-    em: dict = {}
-    emsh: dict = {}
-    ctx: dict = {p: {} for p in ("emprev", "emnext", "empsh", "emnsh")}
-    tr: dict = {}
-    init: dict = {}
-    fin: dict = {}
-    for r in model_df.collect():
-        if r["part"] == "em":
-            em.setdefault(r["key"], [0] * 5)[_SI[r["state"]]] = r["cnt"]
-        elif r["part"] == "emsh":
-            emsh.setdefault(r["key"], [0] * 5)[_SI[r["state"]]] = r["cnt"]
-        elif r["part"] in ctx:
-            ctx[r["part"]].setdefault(
-                r["key"], [0] * 5)[_SI[r["state"]]] = r["cnt"]
-        elif r["part"] == "tr":
-            tr[(r["key"], r["state"])] = r["cnt"]
-        elif r["part"] == "init":
-            init[r["state"]] = r["cnt"]
-        elif r["part"] == "fin":
-            fin[r["state"]] = r["cnt"]
-    st = {s: 0 for s in STATES}
-    for counts in em.values():
-        for s, c in zip(STATES, counts):
-            st[s] += c
-    return {"em": em, "emsh": emsh, "tr": tr, "st": st,
-            "init": init, "fin": fin, "ntok": sum(st.values()),
-            "emprev": ctx["emprev"], "emnext": ctx["emnext"],
-            "empsh": ctx["empsh"], "emnsh": ctx["emnsh"]}
-
-
-def _shape_py(w: str) -> str:
-    """Python twin of shape_col/SHAPE_SQL_DUCK (used inside the decode
-    UDF; ASCII regex semantics match Java/DuckDB exactly)."""
-    import re
-    if re.search(r"[0-9]", w):
-        return "Num"
-    if re.match(r"^[A-Z][a-z]+$", w):
-        return "Cap"
-    if re.match(r"^[A-Z]{2,}$", w):
-        return "ALL"
-    if re.match(r"^[a-z]+$", w):
-        return "low"
-    return "other"
-
-
-def viterbi_spans(tokens: list, model: dict, m: float = HMM_M,
-                  alpha: float = 1.0) -> list:
-    """Per-document max-product Viterbi over BIES+O -> [(start, end)].
-
-    Emission score = log P(state|token) - log P(state) (scaled
-    likelihood): P(state|token) is the m-estimated posterior backing
-    off to the token's shape class — plus CTX_LAMBDA-tempered NB terms
-    for the previous/next token and shape (models fitted without the
-    context parts contribute exactly 0 there, so hand-built test
-    models stay valid). Deterministic: fixed iteration order,
-    first-max argmax."""
-    n = len(tokens)
-    if n == 0:
-        return []
-    em, emsh, tr = model["em"], model["emsh"], model["tr"]
-    st, init, fin, ntok = (model["st"], model["init"], model["fin"],
-                           model["ntok"])
-    ctx_tabs = [model.get(p, {}) for p in
-                ("emprev", "emnext", "empsh", "emnsh")]
-    shapes = [_shape_py(w) for w in tokens]
-    # per-position context keys, aligned with ctx_tabs order. The shape
-    # keys use the same STRING-equality sentinel rule the fit does (a
-    # literal '<bos>'/'<eos>' TOKEN buckets as the sentinel, not its
-    # shape class), so fit and decode read the same bucket even on a
-    # document that contains the sentinel strings as real tokens.
-    psh = ["<bos>" if (i == 0 or tokens[i - 1] == "<bos>")
-           else shapes[i - 1] for i in range(n)]
-    nsh = ["<eos>" if (i == n - 1 or tokens[i + 1] == "<eos>")
-           else shapes[i + 1] for i in range(n)]
-    ctx_keys = [(tokens[i - 1] if i > 0 else "<bos>",
-                 tokens[i + 1] if i < n - 1 else "<eos>",
-                 psh[i], nsh[i])
-                for i in range(n)]
-    if ntok == 0:
-        raise ValueError("viterbi_spans: model fitted on an empty train "
-                         "split (ntok=0) — nothing to decode with")
-    ninit = sum(init.values())
-    nfin = sum(fin.values())
-    NEG = -1e18
-
-    def emis(i: int, s: str) -> float:
-        # a state entirely absent from the train split (e.g. no
-        # width-1 gold span anywhere -> st['S']==0) has no usable
-        # scaled likelihood; mark it unusable instead of letting
-        # log(0) blow up the Arrow task
-        if st.get(s, 0) == 0:
-            return NEG
-        si = _SI[s]
-        sh = emsh.get(shapes[i], [0] * 5)
-        p_shape = (sh[si] + alpha) / (sum(sh) + 5 * alpha)
-        e = em.get(tokens[i], (0, 0, 0, 0, 0))
-        post = (e[si] + m * p_shape) / (sum(e) + m)
-        prior = st[s] / ntok
-        tot = math.log(post) - math.log(prior)
-        # NB context terms: an absent key/table yields p2 == prior
-        # (m-estimate pulls all the way to the prior), i.e. exactly 0
-        for tab, key in zip(ctx_tabs, ctx_keys[i]):
-            e2 = tab.get(key, (0, 0, 0, 0, 0))
-            p2 = (e2[si] + m * prior) / (sum(e2) + m)
-            tot += CTX_LAMBDA * (math.log(p2) - math.log(prior))
-        return tot
-
-    V = [[NEG] * 5 for _ in range(n)]
-    bp = [[0] * 5 for _ in range(n)]
-    for s in START_OK:
-        V[0][_SI[s]] = (math.log((init.get(s, 0) + alpha)
-                                 / (ninit + 5 * alpha)) + emis(0, s))
-    for i in range(1, n):
-        for s in STATES:
-            si = _SI[s]
-            best, arg = NEG, 0
-            for p in STATES:
-                if (p, s) not in LEGAL or V[i - 1][_SI[p]] <= NEG / 2:
-                    continue
-                v = V[i - 1][_SI[p]] + math.log(
-                    (tr.get((p, s), 0) + alpha) / (st[p] + 5 * alpha))
-                if v > best:
-                    best, arg = v, _SI[p]
-            if best > NEG / 2:
-                V[i][si] = best + emis(i, s)
-                bp[i][si] = arg
-    bestv, cur = NEG, 0
-    for s in END_OK:
-        if V[n - 1][_SI[s]] > NEG / 2:
-            v = V[n - 1][_SI[s]] + math.log(
-                (fin.get(s, 0) + alpha) / (nfin + 5 * alpha))
-            if v > bestv:
-                bestv, cur = v, _SI[s]
-    seq = [cur]
-    for i in range(n - 1, 0, -1):
-        cur = bp[i][cur]
-        seq.append(cur)
-    labels = [STATES[k] for k in reversed(seq)]
-    spans = []
-    a = None
-    for i, lbl in enumerate(labels):
-        if lbl == "S":
-            spans.append((i, i + 1))
-            a = None
-        elif lbl == "B":
-            a = i
-        elif lbl == "E" and a is not None:
-            spans.append((a, i + 1))
-            a = None
-        elif lbl == "O":
-            a = None
-    return spans
-
-
-def decode_spans(docs: DataFrame, model: dict) -> DataFrame:
-    """(url, start, end): Viterbi-decoded spans for every document.
-
-    mapInPandas with the fitted counts in the closure — one Arrow
-    crossing, zero shuffle, embarrassingly parallel (the 100 TB shape:
-    the model ships once per executor with the task closure)."""
-    if "url" not in docs.columns:
-        docs = docs.withColumn("url", F.col("doc_id").cast("string"))
-    src = docs.select("url", "tokens")
-
-    def udf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"url": [], "start": [], "end": []}
-            for url, toks in zip(pdf["url"], pdf["tokens"]):
-                for (a, b) in viterbi_spans([str(t) for t in toks], model):
-                    out["url"].append(str(url))
-                    out["start"].append(a)
-                    out["end"].append(b)
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(udf, schema="url string, start int, end int")
-
 
 # --------------------------------------------------------------------------
-# relation Naive Bayes
+# relation candidate pairs and their features
 # --------------------------------------------------------------------------
 
 MAX_GAP = 30        # reference's ±30-token rel context window
-W_SCALE = 1000      # integer grid for log weights
-# MIN_DF / MARGIN are selected on the reference VAL splits (88 custom /
-# 101 conll04 docs — never the test split): one global config, argmax
-# of summed val rel F1 over {MIN_DF 2,3} × {MARGIN 0..1500} × feature
-# sets. MARGIN is in W_SCALE grid units (1500 = 1.5 nats): fwd/bwd must
-# beat the neg score by this much, trading NB's overconfident recall
-# for precision (fp ≈ 3×tp at MARGIN=0).
-MIN_DF = 3          # feature pair-frequency floor
-MARGIN = 1500       # fwd/bwd-over-neg decision margin (grid units)
-_CLS = ["neg", "fwd", "bwd"]
 
 
 def _gap_bucket(gap) -> F.Column:
@@ -450,9 +103,8 @@ def pair_features(pairs: DataFrame, docs: DataFrame,
     per-kind projections, explode, distinct.
 
     ``extra_kinds`` appends val-split-selected extra kinds INSIDE the
-    same single docs join (used by the rel
-    perceptron via perceptron.REL_EXTRAS — the NB chain keeps the base
-    set): ``fl`` first|last between-token conjunction, ``hltl`` head|
+    same single docs join (the rel perceptron's perceptron.REL_EXTRAS):
+    ``fl`` first|last between-token conjunction, ``hltl`` head|
     tail last-token conjunction, ``hfsh``/``tfsh`` perceptron-shape of
     each span's FIRST token (perceptron.ptron_shape_col — deliberately
     the perceptron's shape classes, not SHAPE_RULES), ``hf``/``tf``
@@ -575,93 +227,25 @@ def _labeled_train_pairs(split_df: DataFrame) -> DataFrame:
             .fillna({"y": 0}))
 
 
-def fit_rel_nb(split_df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """-> (weights, priors).
-
-    weights: (kind, val, w_neg, w_fwd, w_bwd) — integer-grid log
-    likelihood ratios floor(W_SCALE*ln((n_y+1)/(cls_y+2)) + pi/10),
-    document frequency >= MIN_DF. priors: one row (c_neg, c_fwd, c_bwd,
-    p_neg, p_fwd, p_bwd) with the class counts and the grid-quantized
-    log priors. Both are train-bounded broadcast dimensions."""
-    lab = _labeled_train_pairs(split_df)
-    feats = pair_features(lab.select(*_PAIR_KEY), split_df) \
-        .join(lab, _PAIR_KEY)
-    counts = (feats.groupBy("kind", "val")
-              .agg(*[F.sum(F.when(F.col("y") == y, 1).otherwise(0))
-                     .alias(f"n_{c}") for y, c in enumerate(_CLS)]))
-    cls = lab.groupBy().agg(
-        *[F.sum(F.when(F.col("y") == y, 1).otherwise(0)).alias(f"c_{c}")
-          for y, c in enumerate(_CLS)])
-
-    def _w(n, c):
-        return F.floor(W_SCALE * F.log((n + 1.0) / (c + 2.0))
-                       + F.lit(GRID_OFFSET)).cast("long")
-
-    weights = (counts.crossJoin(F.broadcast(cls))
-               .where(sum(F.col(f"n_{c}") for c in _CLS) >= MIN_DF)
-               .select("kind", "val",
-                       *[_w(F.col(f"n_{c}"), F.col(f"c_{c}"))
-                         .alias(f"w_{c}") for c in _CLS]))
-    total = sum(F.col(f"c_{c}") for c in _CLS)
-    priors = cls.select(
-        *[F.col(f"c_{c}") for c in _CLS],
-        *[F.floor(W_SCALE * F.log((F.col(f"c_{c}") + 1.0) / (total + 3.0))
-                  + F.lit(GRID_OFFSET)).cast("long").alias(f"p_{c}")
-          for c in _CLS])
-    return weights, priors
-
-
-def predict_rels_nb(pred_spans: DataFrame, docs: DataFrame,
-                    weights: DataFrame, priors: DataFrame,
-                    rel_type: DataFrame) -> DataFrame:
-    """(url, h_start, h_end, t_start, t_end, rel_type): NB-decided
-    relations over predicted spans.
-
-    Scores are exact BIGINT sums: candidate features inner-join the
-    broadcast weight table (absent features contribute nothing — NB
-    semantics), per-pair per-class sums add the grid-quantized priors,
-    and the first-max argmax fires fwd (pair order) or bwd (reversed)
-    only when it clears the neg score by MARGIN grid units.
-    The corpus-side plan is join -> explode -> broadcast-join ->
-    partial-agg sum: no shuffle wider than the candidate-pair table."""
-    pairs = candidate_pairs(pred_spans.select("url", "start", "end"))
-    feats = pair_features(pairs, docs)
-    sums = (feats.join(F.broadcast(weights), ["kind", "val"])
-            .groupBy(*_PAIR_KEY)
-            .agg(*[F.sum(f"w_{c}").alias(f"s_{c}") for c in _CLS]))
-    scored = (pairs.join(sums, _PAIR_KEY, "left")
-              .fillna({f"s_{c}": 0 for c in _CLS})
-              .crossJoin(F.broadcast(priors))
-              .select(*_PAIR_KEY,
-                      *[(F.col(f"s_{c}") + F.col(f"p_{c}"))
-                        .alias(f"t_{c}") for c in _CLS]))
-    fwd = (F.col("t_fwd") > F.col("t_neg") + MARGIN) & \
-          (F.col("t_fwd") >= F.col("t_bwd"))
-    bwd = (F.col("t_bwd") > F.col("t_neg") + MARGIN) & \
-          (F.col("t_bwd") > F.col("t_fwd"))
-    out = (scored
-           .withColumn("dir", F.when(fwd, 1).when(bwd, 2))
-           .where(F.col("dir").isNotNull())
-           .select(
-               "url",
-               F.when(F.col("dir") == 1, F.col("h_start"))
-               .otherwise(F.col("t_start")).alias("h_start"),
-               F.when(F.col("dir") == 1, F.col("h_end"))
-               .otherwise(F.col("t_end")).alias("h_end"),
-               F.when(F.col("dir") == 1, F.col("t_start"))
-               .otherwise(F.col("h_start")).alias("t_start"),
-               F.when(F.col("dir") == 1, F.col("t_end"))
-               .otherwise(F.col("h_end")).alias("t_end")))
-    return out.crossJoin(F.broadcast(rel_type))
-
-
 def majority_span_type(split_df: DataFrame) -> DataFrame:
     """One-row (type): the train split's most frequent gold span type
-    (ties: type asc) — attached to untyped HMM spans for strict typed
-    matching (both reference corpora are single-type 'event')."""
+    (ties: type asc) — attached to untyped perceptron spans for strict
+    typed matching (both reference corpora are single-type 'event')."""
     w = Window.orderBy(F.col("c").desc(), F.col("type").asc())
     return (split_df.select(F.explode("spans").alias("sp"))
             .groupBy(F.col("sp.type").alias("type"))
             .agg(F.count(F.lit(1)).alias("c"))
             .withColumn("rk", F.row_number().over(w))
             .where(F.col("rk") == 1).select("type"))
+
+
+def majority_rel_type(split_df: DataFrame) -> DataFrame:
+    """One-row (rel_type): the train split's most frequent relation
+    type (ties: type asc) — the emitted label for predicted pairs on
+    single-relation corpora."""
+    w = Window.orderBy(F.col("c").desc(), F.col("rel_type").asc())
+    return (split_df.select(F.explode("relations").alias("r"))
+            .groupBy(F.col("r.type").alias("rel_type"))
+            .agg(F.count(F.lit(1)).alias("c"))
+            .withColumn("rk", F.row_number().over(w))
+            .where(F.col("rk") == 1).select("rel_type"))

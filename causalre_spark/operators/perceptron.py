@@ -1,10 +1,11 @@
 """Averaged structured perceptron span tagger (BIES+O) fitted with
-EXACT scaled-integer Iterative Parameter Mixing (VERDICT r03 #1 follow-on:
-the next rung above the HMM on the fit-by-aggregation ladder).
+EXACT scaled-integer Iterative Parameter Mixing, and the relation
+perceptron over fitted.pair_features fitted the same way.
 
-Why a perceptron: the fitted HMM (operators/fitted.py) is generative —
-its emission/context tables cannot weigh features against each other, so
-it plateaus at conll04 span F1 ~0.72. A structured perceptron trains the
+Why a perceptron: the HMM tagger this repo used to fit (retired;
+GOLD_EVAL.md keeps its frozen F1) is generative — its emission/context
+tables cannot weigh features against each other, so it plateaus at
+conll04 span F1 ~0.72. A structured perceptron trains the
 SAME feature families discriminatively (token, shape, prev/next token and
 shape, prefix/suffix, two conjunctions) and reaches ~0.79 on the conll04
 test split (GOLD_EVAL.md) with no external data — still far below
@@ -41,11 +42,10 @@ partitioning), docs are processed in doc_id order inside a shard, and
 Viterbi breaks ties first-max in fixed state order.
 
 The fit is iterative with a decode inside — NOT SQL-expressible — so the
-registered queries decode under weights frozen by
-tools/freeze_perceptron.py (fixtures/perceptron/), the oracle pins the
-frozen decode fixture (same discipline as fitted_spans), and the
-exactness gate is the scalar-twin pytest parity in
-tests/test_perceptron.py.
+registered ptron_full_eval_* queries decode under weights frozen by
+tools/freeze_perceptron.py (fixtures/perceptron/), their oracles read
+the frozen decode fixture, and the exactness gates are the scalar-twin
+pytest parity and the frozen-decode check in tests/test_perceptron.py.
 
 Reference parity target: `CRE Model/modules/metrics.py:96-132` scoring
 over the gold test splits; span semantics (BIES over token positions)
@@ -75,7 +75,8 @@ END_OK = ("O", "E", "S")
 P_SHARDS = 8
 
 # epochs are selected per dataset under the dual val+CV gate (the
-# select-then-refit protocol of operators/fitted.py; test never read):
+# select-then-refit protocol of gold_eval.load_gold_fit_split; test
+# never read):
 # conll04 moved 50 -> 70 jointly with the suf4+wl extras adoption
 # (the adopted arm's best checkpoint on BOTH signals); custom moved
 # 35 -> 70 in round 4 when BOTH signals agreed (val 0.4227 -> 0.4299, 5-fold CV micro-F1
@@ -366,7 +367,7 @@ def tags_to_spans(tags: list) -> list:
 
 def spans_to_tags(n: int, spans: list) -> list:
     """Gold spans -> BIES+O tags; on overlap the span latest in the
-    array wins per position (the fitted.token_states max-sidx rule)."""
+    array wins per position."""
     tags = ["O"] * n
     for s, e in spans:
         if e - s == 1:
@@ -622,16 +623,15 @@ def fit_rel_ipm(split_df: DataFrame, epochs: int,
     W[((kind, val), cls)] integer weights.
 
     Training items are the gold-span candidate pairs of
-    fitted._labeled_train_pairs (text-ordered, gap <= 30) with the SAME
-    distinct feature multiset the NB uses (fitted.pair_features) plus a
-    bias feature — so NB and perceptron differ ONLY in how the weights
-    are estimated, and the existing DuckDB feature CTE recomputes
-    inference end-to-end. Per epoch: one applyInPandas over doc_id % 8
+    fitted._labeled_train_pairs (text-ordered, gap <= 30) with the
+    distinct feature multiset of fitted.pair_features plus a bias
+    feature, so the DuckDB feature CTE recomputes inference
+    end-to-end. Per epoch: one applyInPandas over doc_id % 8
     shards (pairs of a doc stay together), local sequential multiclass
     epoch in (doc_id, pair-key) order, delta sum, exact //P mix,
-    running average. Replaces NB where val selects it: val rel F1 over
-    train-only-fit PREDICTED spans 0.361 vs 0.334 (conll04) and 0.222
-    vs 0.180 (custom) — see GOLD_EVAL.md."""
+    running average. Val selected it over the retired NB classifier:
+    val rel F1 over train-only-fit PREDICTED spans 0.361 vs 0.334
+    (conll04) and 0.222 vs 0.180 (custom) — see GOLD_EVAL.md."""
     from causalre_spark.operators import fitted as FT
 
     lab = FT._labeled_train_pairs(split_df)
@@ -709,8 +709,7 @@ def rel_pair_features(pairs: DataFrame, docs: DataFrame,
                       extras: tuple = ()) -> DataFrame:
     """fitted.pair_features (+ the dataset's val-selected REL_EXTRAS
     kinds, built inside the same single docs join) plus one bias
-    feature per pair (the perceptron's class-prior surface; NB carries
-    priors separately)."""
+    feature per pair (the perceptron's class-prior surface)."""
     from causalre_spark.operators import fitted as FT
 
     f = FT.pair_features(pairs, docs, extra_kinds=extras)
@@ -751,10 +750,10 @@ def predict_rels_ptron(pred_spans: DataFrame, docs: DataFrame,
     """(url, h_start, h_end, t_start, t_end, rel_type): perceptron-
     decided relations over predicted spans — pure DataFrame algebra
     (the fit is frozen; inference is feature join + BIGINT sums +
-    first-max argmax, exactly the NB inference shape with the bias
-    feature standing in for priors). fwd fires iff s_fwd > s_neg and
-    s_fwd >= s_bwd; bwd iff s_bwd > s_neg and s_bwd > s_fwd (ties
-    resolve toward the lower class index, matching _local_rel_epoch).
+    first-max argmax, with the bias feature as the class prior). fwd
+    fires iff s_fwd > s_neg and s_fwd >= s_bwd; bwd iff s_bwd > s_neg
+    and s_bwd > s_fwd (ties resolve toward the lower class index,
+    matching _local_rel_epoch).
     The corpus-side plan is join -> explode -> broadcast-join ->
     partial-agg sum: no shuffle wider than the candidate-pair table."""
     from causalre_spark.operators import fitted as FT
@@ -809,9 +808,9 @@ def decode_spans(docs: DataFrame, W: dict, Wt: dict,
                  gaz: dict = None, extras: tuple = ()) -> DataFrame:
     """(url, start, end): perceptron-decoded spans for every document —
     mapInPandas with the weights in the closure (one Arrow crossing,
-    zero shuffle, weights ship once per executor; the 100 TB shape,
-    same as fitted.decode_spans). ``gaz``: optional full-fit-split
-    :func:`gaz_index` lexicon for the stacked ("gz", flag) features —
+    zero shuffle, weights ship once per executor; the 100 TB shape).
+    ``gaz``: optional full-fit-split :func:`gaz_index` lexicon for the
+    stacked ("gz", flag) features —
     required iff the weights were fitted with gaz_folds (SPAN_GAZ);
     ships in the same closure as the weights. ``extras``: the
     SPAN_EXTRAS kinds the weights were fitted with."""

@@ -1,6 +1,7 @@
 """Query registry: the two curation operators (MinHash-LSH near-dup
 pairs and the per-doc curation verdict), the flagship pages->triples
-queries and the gold-split quality families, each as a (Spark query
+queries, and the two gold-split quality families (the frozen reference
+port and the all-perceptron extractor), each as a (Spark query
 function, DuckDB oracle SQL) pair. Every query that reads the testdata
 reads only its `documents` table.
 
@@ -348,371 +349,23 @@ SQL_GOLD_EVAL_CONLL04 = _sql_gold_eval("conll04")
 
 
 # --------------------------------------------------------------------------
-# gazetteer extraction fitted on the reference train split (VERDICT r02
-# missing #3: trained decision surfaces). Training is a groupBy on the
-# train split; inference is a broadcast map-join on the test split; the
-# whole fit+tag+eval chain is relational, so the DuckDB oracle recomputes
-# it END-TO-END from frozen raw-split fixtures (tools/freeze_gazetteer.py)
-# while Spark recomputes it live from the reference JSON.
+# all-perceptron extractor (operators/perceptron.py) on the same gold
+# splits: span and relation perceptrons fitted by exact scaled-integer
+# IPM on train ∪ val and frozen by tools/freeze_perceptron.py and
+# tools/freeze_rel_perceptron.py (the fits are iterative — not SQL).
+# Decode and relation inference run LIVE under the frozen weights; the
+# oracle recomputes relation inference + eval end-to-end in SQL from the
+# frozen spans and weights and the committed gold splits.
 # --------------------------------------------------------------------------
 
 _GAZ_FIX = os.path.join(FIXTURES_DIR, "gazetteer")
-
-
-def q_gazetteer_lexicon(spark, sf_dir):
-    """Span lexicon fitted on the custom train split: (form, width,
-    type, cnt), majority gold type per surface form (ties: type asc,
-    width asc). Ignores sf_dir — input is the reference dataset."""
-    from causalre_spark import gold_eval as G
-    from causalre_spark.operators import gazetteer as GZ
-
-    return GZ.fit_span_lexicon(G.load_gold_split(spark, "custom", "train"))
-
-
-def q_gazetteer_spans(spark, sf_dir):
-    """Gazetteer-tagged spans on the custom test split: candidates via
-    width-bounded n-gram windows (first-token broadcast semi-join
-    prune), broadcast lexicon match, one-shot dominance suppression."""
-    from causalre_spark import gold_eval as G
-    from causalre_spark.operators import gazetteer as GZ
-
-    lex = GZ.fit_span_lexicon(G.load_gold_split(spark, "custom", "train"))
-    return GZ.tag_spans(G.load_gold_split(spark, "custom", "test"), lex)
-
-
-def _q_gazetteer_eval(dataset: str):
-    def q(spark, sf_dir):
-        """Strict span/rel P/R/F1 of the train-split-fitted gazetteer +
-        rel-prior extractor on the gold test split (one row per task).
-        Fully relational: counts fall out of one full-outer join per
-        task (A1 single-action shape), metrics mirror strict_prf."""
-        from causalre_spark import gold_eval as G
-        from causalre_spark.operators import gazetteer as GZ
-
-        train = G.load_gold_split(spark, dataset, "train")
-        test = G.load_gold_split(spark, dataset, "test")
-        lex = GZ.fit_span_lexicon(train)
-        # 3 consumers (span eval + both rel-pair sides): materialize the
-        # tagged spans once as a local-rows frame (a few hundred rows) —
-        # persist() here would leak a cached frame per invocation since
-        # a returned-lazy-DataFrame query has nowhere to unpersist
-        tagged = GZ.tag_spans(test, lex)
-        pred_s = spark.createDataFrame(tagged.collect(), schema=tagged.schema)
-        pred_r = GZ.predict_rels_triggers(
-            pred_s, test, GZ.fit_rel_triggers(train),
-            GZ.majority_rel_type(train))
-        gold_s, gold_r = G.gold_span_table(test), G.gold_rel_table(test)
-
-        def _counts(gold, pred, keys, task):
-            g = gold.select(*keys).distinct().withColumn("_g", F.lit(1))
-            p = pred.select(*keys).distinct().withColumn("_p", F.lit(1))
-            return (
-                g.join(p, keys, "full_outer")
-                .agg(
-                    F.sum(F.when(F.col("_g").isNotNull()
-                                 & F.col("_p").isNotNull(), 1)
-                          .otherwise(0)).alias("tp"),
-                    F.sum(F.when(F.col("_g").isNull(), 1)
-                          .otherwise(0)).alias("fp"),
-                    F.sum(F.when(F.col("_p").isNull(), 1)
-                          .otherwise(0)).alias("fn"))
-                .select(F.lit(task).alias("task"), "tp", "fp", "fn"))
-
-        m = _counts(gold_s, pred_s, ["url", "start", "end", "type"],
-                    "span").unionByName(
-            _counts(gold_r, pred_r,
-                    ["url", "h_start", "h_end", "t_start", "t_end",
-                     "rel_type"], "rel"))
-        prec = F.col("tp") / F.greatest(F.col("tp") + F.col("fp"), F.lit(1))
-        rec = F.col("tp") / F.greatest(F.col("tp") + F.col("fn"), F.lit(1))
-        return m.select(
-            "task", "tp", "fp", "fn",
-            F.round(prec, 6).alias("precision"),
-            F.round(rec, 6).alias("recall"),
-            F.round(2 * prec * rec
-                    / F.greatest(prec + rec, F.lit(1e-12)), 6).alias("f1"))
-
-    return q
-
-
-q_gazetteer_eval_custom = _q_gazetteer_eval("custom")
-q_gazetteer_eval_conll04 = _q_gazetteer_eval("conll04")
-
-
-def _duck_gaz_chain(dataset: str) -> str:
-    """CTE chain shared by the gazetteer oracles: lexicon fit on the
-    frozen train split, candidate windows + dominance suppression on
-    the frozen test split. Mirrors operators/gazetteer.py rule-for-rule
-    (the Spark first-token prune is result-identical, so the oracle
-    skips it)."""
-    tr = f"{_GAZ_FIX}/{dataset}_train.parquet"
-    te = f"{_GAZ_FIX}/{dataset}_test.parquet"
-    return f"""
-tr_sp AS (SELECT tokens, unnest(spans) AS s FROM '{tr}'),
-forms AS (SELECT s."type" AS type,
-                 CAST(s."end" - s."start" AS INTEGER) AS width,
-                 array_to_string(tokens[s."start" + 1 : s."end"], ' ') AS form
-          FROM tr_sp),
-counts AS (SELECT form, width, type, count(*) AS cnt
-           FROM forms GROUP BY 1, 2, 3),
-lex AS (SELECT form, width, type, cnt FROM
-          (SELECT *, row_number() OVER (PARTITION BY form
-                     ORDER BY cnt DESC, type ASC, width ASC) AS rk
-           FROM counts)
-        WHERE rk = 1),
-widths AS (SELECT DISTINCT width FROM lex),
-te_docs AS (SELECT CAST(doc_id AS VARCHAR) AS url, tokens FROM '{te}'),
-cands AS (SELECT x.url, CAST(x.i AS INTEGER) AS start,
-                 CAST(x.i + x.width AS INTEGER) AS "end",
-                 x.width AS width,
-                 array_to_string(x.tokens[x.i + 1 : x.i + x.width],
-                                 ' ') AS form
-          FROM (SELECT d.url, d.tokens, w.width,
-                       unnest(generate_series(
-                           0, len(d.tokens) - w.width)) AS i
-                FROM te_docs d CROSS JOIN widths w) x),
-matched AS (SELECT c.url, c.start, c."end", c.width, l.type, l.cnt
-            FROM cands c JOIN lex l USING (form, width)),
-kept AS (SELECT m.url, m.start, m."end", m.type, m.cnt FROM matched m
-         WHERE NOT EXISTS (SELECT 1 FROM matched o
-            WHERE o.url = m.url AND m.start < o."end" AND o.start < m."end"
-              AND NOT (o.start = m.start AND o."end" = m."end")
-              AND (o.width > m.width
-                   OR (o.width = m.width AND o.cnt > m.cnt)
-                   OR (o.width = m.width AND o.cnt = m.cnt
-                       AND o.start < m.start))))"""
-
-
-SQL_GAZETTEER_LEXICON = f"""
-WITH {_duck_gaz_chain('custom')}
-SELECT form, width, type, cnt FROM lex
-"""
-
-SQL_GAZETTEER_SPANS = f"""
-WITH {_duck_gaz_chain('custom')}
-SELECT url, start, "end", type, cnt FROM kept
-"""
-
-
-def _sql_gaz_eval(dataset: str) -> str:
-    tr = f"{_GAZ_FIX}/{dataset}_train.parquet"
-    te = f"{_GAZ_FIX}/{dataset}_test.parquet"
-    return f"""
-WITH {_duck_gaz_chain(dataset)},
-tr_gsp AS (SELECT DISTINCT CAST(doc_id AS VARCHAR) AS url,
-                  s."start" AS start, s."end" AS "end", s."type" AS type
-           FROM (SELECT doc_id, unnest(spans) AS s FROM '{tr}')),
-tr_docs AS (SELECT CAST(doc_id AS VARCHAR) AS url, tokens FROM '{tr}'),
-tr_coords AS (SELECT DISTINCT url, start, "end" FROM tr_gsp),
-gpairs AS (SELECT h.url, h.start AS h_start, h."end" AS h_end,
-                  t.start AS t_start, t."end" AS t_end
-           FROM tr_coords h JOIN tr_coords t ON h.url = t.url
-             AND h."end" <= t.start),
-tr_rels AS (SELECT CAST(doc_id AS VARCHAR) AS url,
-                   spans[r.head + 1]."start" AS a_st,
-                   spans[r.head + 1]."end" AS a_en,
-                   spans[r.tail + 1]."start" AS b_st,
-                   spans[r.tail + 1]."end" AS b_en,
-                   r."type" AS rel_type
-            FROM (SELECT doc_id, spans, unnest(relations) AS r
-                  FROM '{tr}')),
-und AS (SELECT DISTINCT url,
-               CASE WHEN a_st <= b_st THEN a_st ELSE b_st END AS h_start,
-               CASE WHEN a_st <= b_st THEN a_en ELSE b_en END AS h_end,
-               CASE WHEN a_st <= b_st THEN b_st ELSE a_st END AS t_start,
-               CASE WHEN a_st <= b_st THEN b_en ELSE a_en END AS t_end
-        FROM tr_rels),
-lab AS (SELECT p.url, p.h_end, p.t_start,
-               CASE WHEN u.url IS NOT NULL THEN 1 ELSE 0 END AS label
-        FROM gpairs p LEFT JOIN und u
-          ON p.url = u.url AND p.h_start = u.h_start
-         AND p.h_end = u.h_end AND p.t_start = u.t_start
-         AND p.t_end = u.t_end),
-btw AS (SELECT l.label,
-               unnest(d.tokens[l.h_end + 1 : l.t_start]) AS w
-        FROM lab l JOIN tr_docs d USING (url)),
-trig AS (SELECT w FROM (SELECT w, count(*) AS n, sum(label) AS pos
-                        FROM btw GROUP BY w)
-         WHERE n >= 10 AND pos * 1.0 / n >= 0.3),
-rtype AS (SELECT rel_type FROM
-            (SELECT r."type" AS rel_type, count(*) AS c
-             FROM (SELECT unnest(relations) AS r FROM '{tr}')
-             GROUP BY 1 ORDER BY c DESC, rel_type ASC LIMIT 1)),
-te_docs2 AS (SELECT CAST(doc_id AS VARCHAR) AS url, tokens
-             FROM '{te}'),
-cpairs AS (SELECT h.url, h.start AS h_start, h."end" AS h_end,
-                  t.start AS t_start, t."end" AS t_end
-           FROM kept h JOIN kept t ON h.url = t.url
-             AND h."end" <= t.start AND t.start - h."end" <= 30),
-predr AS (SELECT DISTINCT f.url, f.h_start, f.h_end, f.t_start,
-                 f.t_end, (SELECT rel_type FROM rtype) AS rel_type
-          FROM (SELECT c.url, c.h_start, c.h_end, c.t_start, c.t_end,
-                       unnest(d.tokens[c.h_end + 1 : c.t_start]) AS w
-                FROM cpairs c JOIN te_docs2 d USING (url)) f
-          JOIN trig USING (w)),
-te_gsp AS (SELECT CAST(doc_id AS VARCHAR) AS url, s."start" AS start,
-                  s."end" AS "end", s."type" AS type
-           FROM (SELECT doc_id, unnest(spans) AS s FROM '{te}')),
-te_grel AS (SELECT CAST(doc_id AS VARCHAR) AS url,
-                   spans[r.head + 1]."start" AS h_start,
-                   spans[r.head + 1]."end" AS h_end,
-                   spans[r.tail + 1]."start" AS t_start,
-                   spans[r.tail + 1]."end" AS t_end,
-                   r."type" AS rel_type
-            FROM (SELECT doc_id, spans, unnest(relations) AS r
-                  FROM '{te}')),
-sg AS (SELECT DISTINCT url, start, "end", type FROM te_gsp),
-sp AS (SELECT DISTINCT url, start, "end", type FROM kept),
-rg AS (SELECT DISTINCT url, h_start, h_end, t_start, t_end, rel_type
-       FROM te_grel),
-rp AS (SELECT DISTINCT url, h_start, h_end, t_start, t_end, rel_type
-       FROM predr),
-sc AS (SELECT
-  (SELECT count(*) FROM sg JOIN sp USING (url, start, "end", type)) AS tp,
-  (SELECT count(*) FROM sp WHERE NOT EXISTS (SELECT 1 FROM sg
-     WHERE sg.url = sp.url AND sg.start = sp.start
-       AND sg."end" = sp."end" AND sg.type = sp.type)) AS fp,
-  (SELECT count(*) FROM sg WHERE NOT EXISTS (SELECT 1 FROM sp
-     WHERE sg.url = sp.url AND sg.start = sp.start
-       AND sg."end" = sp."end" AND sg.type = sp.type)) AS fn),
-rc AS (SELECT
-  (SELECT count(*) FROM rg JOIN rp
-     USING (url, h_start, h_end, t_start, t_end, rel_type)) AS tp,
-  (SELECT count(*) FROM rp WHERE NOT EXISTS (SELECT 1 FROM rg
-     WHERE rg.url = rp.url AND rg.h_start = rp.h_start
-       AND rg.h_end = rp.h_end AND rg.t_start = rp.t_start
-       AND rg.t_end = rp.t_end AND rg.rel_type = rp.rel_type)) AS fp,
-  (SELECT count(*) FROM rg WHERE NOT EXISTS (SELECT 1 FROM rp
-     WHERE rg.url = rp.url AND rg.h_start = rp.h_start
-       AND rg.h_end = rp.h_end AND rg.t_start = rp.t_start
-       AND rg.t_end = rp.t_end AND rg.rel_type = rp.rel_type)) AS fn),
-m AS (SELECT 'span' AS task, tp, fp, fn FROM sc
-      UNION ALL
-      SELECT 'rel' AS task, tp, fp, fn FROM rc)
-SELECT task, tp, fp, fn,
-       round(tp / greatest(tp + fp, 1), 6) AS precision,
-       round(tp / greatest(tp + fn, 1), 6) AS recall,
-       round(2.0 * (tp / greatest(tp + fp, 1)) * (tp / greatest(tp + fn, 1))
-             / greatest(tp / greatest(tp + fp, 1)
-                        + tp / greatest(tp + fn, 1), 1e-12), 6) AS f1
-FROM m
-"""
-
-
-SQL_GAZETTEER_EVAL_CUSTOM = _sql_gaz_eval("custom")
-SQL_GAZETTEER_EVAL_CONLL04 = _sql_gaz_eval("conll04")
-
-
-# --------------------------------------------------------------------------
-# fitted HMM span tagger + NB relation classifier (VERDICT r03 #1: lift
-# gold-eval rel F1 off zero). Fit is pure aggregation on the train split,
-# so the DuckDB oracles recompute the HMM counts table AND the whole NB
-# weight fit + pair scoring + eval END-TO-END from the frozen raw splits
-# (fixtures/gazetteer). The one non-relational step — per-doc Viterbi —
-# is frozen to fixtures/fitted by tools/freeze_fitted.py (read back as a
-# determinism pin; its independent correctness gate is the scalar-Python
-# twin in tests/test_fitted.py, exact span-set equality).
-# --------------------------------------------------------------------------
-
-_FIT_FIX = os.path.join(FIXTURES_DIR, "fitted")
-
-
-def _q_fitted_hmm_model(dataset: str):
-    def q(spark, sf_dir):
-        """Fitted HMM counts table (part, key, state, cnt) on the train
-        split — emissions, shape backoff, transitions, init/final. The
-        fit is one groupBy per part (operators/fitted.py fit_hmm); the
-        oracle recomputes every count from the frozen raw split."""
-        from causalre_spark import gold_eval as G
-        from causalre_spark.operators import fitted as FT
-
-        return FT.fit_hmm(G.load_gold_fit_split(spark, dataset))
-
-    return q
-
-
-def _q_fitted_spans(dataset: str):
-    def q(spark, sf_dir):
-        """Viterbi-decoded spans of the test split under the live
-        train-split fit (url, start, end). The oracle reads the frozen
-        decode fixture: a hash match pins loader + fit + Arrow decode
-        determinism; exactness of the decode itself is gated by the
-        independent twin in tests/test_fitted.py."""
-        from causalre_spark import gold_eval as G
-        from causalre_spark.operators import fitted as FT
-
-        model = FT.collect_hmm_model(
-            FT.fit_hmm(G.load_gold_fit_split(spark, dataset)))
-        return FT.decode_spans(
-            G.load_gold_split(spark, dataset, "test"), model)
-
-    return q
-
-
-def _q_fitted_rel_weights(dataset: str):
-    def q(spark, sf_dir):
-        """NB relation feature weights (kind, val, w_neg, w_fwd, w_bwd)
-        fitted on train ∪ val — integer-grid log likelihood ratios
-        (operators/fitted.py fit_rel_nb). Fully recomputed by the
-        oracle: gold-span pair generation, fwd/bwd labeling, feature
-        explosion, counting and quantization."""
-        from causalre_spark import gold_eval as G
-        from causalre_spark.operators import fitted as FT
-
-        w, _ = FT.fit_rel_nb(G.load_gold_fit_split(spark, dataset))
-        return w
-
-    return q
-
-
-def _q_fitted_eval(dataset: str, tagger: str = "hmm"):
-    def q(spark, sf_dir):
-        """Strict span/rel P/R/F1 of a fitted span tagger + the NB
-        relation classifier on the gold test split (one row per task) —
-        the GOLD_EVAL.md headline rows. tagger='hmm' refits the
-        HMM live (fit is pure aggregation); tagger='ptron' decodes under
-        the frozen averaged-perceptron weights (the IPM fit is iterative
-        — tools/freeze_perceptron.py). Spark recomputes decode + NB +
-        eval live; the oracle recomputes everything except the Viterbi
-        decode (frozen spans) in SQL."""
-        from causalre_spark import gold_eval as G
-        from causalre_spark.operators import fitted as FT
-        from causalre_spark.operators import gazetteer as GZ
-
-        train = G.load_gold_fit_split(spark, dataset)
-        test = G.load_gold_split(spark, dataset, "test")
-        span_type = FT.majority_span_type(train)
-        # materialize the decoded spans ONCE as a local-rows frame (a
-        # few hundred rows — the k-means-centroid class of collect)
-        # instead of persist(): three consumers follow and a persisted
-        # cache would leak for the session lifetime (bench reruns)
-        if tagger == "ptron":
-            from causalre_spark.operators import perceptron as PT
-
-            W, Wt = PT.load_frozen_weights(
-                f"{_PT_FIX}/{dataset}_weights.parquet")
-            decoded = PT.decode_spans(
-                test, W, Wt, gaz=PT.frozen_gaz_for(dataset, _PT_FIX),
-                extras=PT.SPAN_EXTRAS[dataset])
-        else:
-            model = FT.collect_hmm_model(FT.fit_hmm(train))
-            decoded = FT.decode_spans(test, model)
-        pred_u = spark.createDataFrame(
-            decoded.collect(), schema=decoded.schema)
-        pred_s = pred_u.crossJoin(F.broadcast(span_type))
-        weights, priors = FT.fit_rel_nb(train)
-        pred_r = FT.predict_rels_nb(pred_u, test, weights, priors,
-                                    GZ.majority_rel_type(train))
-        gold_s, gold_r = G.gold_span_table(test), G.gold_rel_table(test)
-        return _strict_eval_rows(pred_s, pred_r, gold_s, gold_r)
-
-    return q
+_PT_FIX = os.path.join(FIXTURES_DIR, "perceptron")
 
 
 def _strict_eval_rows(pred_s, pred_r, gold_s, gold_r) -> DataFrame:
     """(task, tp, fp, fn, precision, recall, f1) strict-match rows for a
-    span table and a rel table — the shared tail of every fitted-model
-    eval query (HMM+NB, perceptron+NB, all-perceptron)."""
+    span table and a rel table — the eval tail of the all-perceptron
+    query."""
 
     def _counts(gold, pred, keys, task):
         g = gold.select(*keys).distinct().withColumn("_g", F.lit(1))
@@ -744,61 +397,12 @@ def _strict_eval_rows(pred_s, pred_r, gold_s, gold_r) -> DataFrame:
                 / F.greatest(prec + rec, F.lit(1e-12)), 6).alias("f1"))
 
 
-q_fitted_hmm_model_custom = _q_fitted_hmm_model("custom")
-q_fitted_hmm_model_conll04 = _q_fitted_hmm_model("conll04")
-q_fitted_spans_custom = _q_fitted_spans("custom")
-q_fitted_spans_conll04 = _q_fitted_spans("conll04")
-q_fitted_rel_weights_custom = _q_fitted_rel_weights("custom")
-q_fitted_rel_weights_conll04 = _q_fitted_rel_weights("conll04")
-q_fitted_eval_custom = _q_fitted_eval("custom")
-q_fitted_eval_conll04 = _q_fitted_eval("conll04")
-
-
-# --------------------------------------------------------------------------
-# averaged-perceptron span tagger (operators/perceptron.py): the
-# discriminative rung above the HMM — same gold splits, same NB relation
-# chain, weights fitted by exact scaled-integer IPM and frozen by
-# tools/freeze_perceptron.py (the fit is iterative — not SQL). The
-# decode runs LIVE under the frozen weights; its oracle pins the frozen
-# decode fixture, and the eval oracle recomputes NB + eval end-to-end in
-# SQL from the frozen spans (the exact _sql_fitted_eval chain).
-# --------------------------------------------------------------------------
-
-_PT_FIX = os.path.join(FIXTURES_DIR, "perceptron")
-
-
-def _q_fitted_ptron_spans(dataset: str):
-    def q(spark, sf_dir):
-        """Perceptron-decoded spans of the gold test split under the
-        frozen train∪val-fitted weights (url, start, end) — live
-        mapInPandas Viterbi, zero shuffle. The oracle reads the frozen
-        decode fixture (determinism pin); exactness of fit and decode
-        is gated by the scalar twins in tests/test_perceptron.py."""
-        from causalre_spark import gold_eval as G
-        from causalre_spark.operators import perceptron as PT
-
-        W, Wt = PT.load_frozen_weights(
-            f"{_PT_FIX}/{dataset}_weights.parquet")
-        return PT.decode_spans(
-            G.load_gold_split(spark, dataset, "test"), W, Wt,
-            gaz=PT.frozen_gaz_for(dataset, _PT_FIX),
-            extras=PT.SPAN_EXTRAS[dataset])
-
-    return q
-
-
-q_fitted_ptron_spans_custom = _q_fitted_ptron_spans("custom")
-q_fitted_ptron_spans_conll04 = _q_fitted_ptron_spans("conll04")
-q_fitted_ptron_eval_custom = _q_fitted_eval("custom", tagger="ptron")
-q_fitted_ptron_eval_conll04 = _q_fitted_eval("conll04", tagger="ptron")
-
-
 def _q_ptron_full_eval(dataset: str):
     def q(spark, sf_dir):
         """Strict span/rel P/R/F1 of the ALL-perceptron extractor:
         spans decoded live under the frozen span-perceptron weights,
         relations predicted live under the frozen rel-perceptron
-        weights (multiclass averaged perceptron over the NB feature
+        weights (multiclass averaged perceptron over the pair feature
         kinds + bias — operators/perceptron.py predict_rels_ptron).
         The oracle recomputes the whole INFERENCE chain in SQL (pair
         gen, features, weight sums, first-max argmax, eval) from the
@@ -807,7 +411,6 @@ def _q_ptron_full_eval(dataset: str):
         (rel F1 over predicted val spans; GOLD_EVAL.md)."""
         from causalre_spark import gold_eval as G
         from causalre_spark.operators import fitted as FT
-        from causalre_spark.operators import gazetteer as GZ
         from causalre_spark.operators import perceptron as PT
 
         train = G.load_gold_fit_split(spark, dataset)
@@ -824,7 +427,7 @@ def _q_ptron_full_eval(dataset: str):
         rel_w = spark.read.parquet(
             f"{_PT_FIX}/{dataset}_rel_weights.parquet")
         pred_r = PT.predict_rels_ptron(pred_u, test, rel_w,
-                                       GZ.majority_rel_type(train),
+                                       FT.majority_rel_type(train),
                                        extras=PT.REL_EXTRAS[dataset])
         gold_s, gold_r = G.gold_span_table(test), G.gold_rel_table(test)
         return _strict_eval_rows(pred_s, pred_r, gold_s, gold_r)
@@ -835,12 +438,10 @@ def _q_ptron_full_eval(dataset: str):
 q_ptron_full_eval_custom = _q_ptron_full_eval("custom")
 q_ptron_full_eval_conll04 = _q_ptron_full_eval("conll04")
 
+
 # DuckDB twin of operators/fitted.py SHAPE_RULES — single source of
-# truth lives next to the rules themselves (fitted.SHAPE_SQL_DUCK)
-from causalre_spark.operators.fitted import SHAPE_SQL_DUCK as _DUCK_SHAPE  # noqa: E402
+# truth lives next to the rules themselves (fitted.SHAPE_SQL_DUCK_FMT)
 from causalre_spark.operators.fitted import SHAPE_SQL_DUCK_FMT as _DUCK_SHAPE_FMT  # noqa: E402
-from causalre_spark.operators.fitted import MARGIN as _FT_MARGIN  # noqa: E402
-from causalre_spark.operators.fitted import MIN_DF as _FT_MIN_DF  # noqa: E402
 from causalre_spark.gold_eval import VAL_DOC_OFFSET as _G_VAL_OFF  # noqa: E402
 
 
@@ -856,83 +457,8 @@ def _duck_fit_src(dataset: str) -> str:
             f"FROM '{va}')")
 
 
-def _sql_fitted_hmm_model(dataset: str) -> str:
-    tr = _duck_fit_src(dataset)
-    return f"""
-WITH pos AS (SELECT CAST(doc_id AS VARCHAR) AS url,
-                    CAST(i - 1 AS INTEGER) AS pos, tokens[i] AS token,
-                    len(tokens) AS n
-             FROM (SELECT doc_id, tokens,
-                          unnest(generate_series(1, len(tokens))) AS i
-                   FROM {tr})),
-slab AS (SELECT CAST(doc_id AS VARCHAR) AS url, sidx,
-                s."start" AS s, s."end" AS e
-         FROM (SELECT doc_id, unnest(spans) AS s,
-                      unnest(generate_series(1, len(spans))) AS sidx
-               FROM {tr})),
-pl0 AS (SELECT url, sidx, s, e,
-               unnest(generate_series(s, e - 1)) AS pos FROM slab),
-pl1 AS (SELECT url, CAST(pos AS INTEGER) AS pos, sidx,
-               CASE WHEN e - s = 1 THEN 'S'
-                    WHEN pos = s THEN 'B'
-                    WHEN pos = e - 1 THEN 'E'
-                    ELSE 'I' END AS state FROM pl0),
-best AS (SELECT url, pos, state FROM
-           (SELECT *, row_number() OVER (PARTITION BY url, pos
-                      ORDER BY sidx DESC) AS rk FROM pl1)
-         WHERE rk = 1),
-st AS (SELECT p.url, p.pos, p.token, coalesce(b.state, 'O') AS state, p.n
-       FROM pos p LEFT JOIN best b USING (url, pos)),
-em AS (SELECT 'em' AS part, token AS key, state, count(*) AS cnt
-       FROM st GROUP BY token, state),
-emsh AS (SELECT 'emsh' AS part, {_DUCK_SHAPE} AS key, state,
-                count(*) AS cnt
-         FROM st GROUP BY 2, state),
-ctx AS (SELECT state,
-               coalesce(lag(token) OVER (PARTITION BY url ORDER BY pos),
-                        '<bos>') AS ptok,
-               coalesce(lead(token) OVER (PARTITION BY url ORDER BY pos),
-                        '<eos>') AS ntok
-        FROM st),
-emprev AS (SELECT 'emprev' AS part, ptok AS key, state, count(*) AS cnt
-           FROM ctx GROUP BY ptok, state),
-emnext AS (SELECT 'emnext' AS part, ntok AS key, state, count(*) AS cnt
-           FROM ctx GROUP BY ntok, state),
-empsh AS (SELECT 'empsh' AS part,
-                 CASE WHEN ptok = '<bos>' THEN '<bos>'
-                      ELSE {_DUCK_SHAPE_FMT.format(col="ptok")} END AS key,
-                 state, count(*) AS cnt
-          FROM ctx GROUP BY 2, state),
-emnsh AS (SELECT 'emnsh' AS part,
-                 CASE WHEN ntok = '<eos>' THEN '<eos>'
-                      ELSE {_DUCK_SHAPE_FMT.format(col="ntok")} END AS key,
-                 state, count(*) AS cnt
-          FROM ctx GROUP BY 2, state),
-trn AS (SELECT 'tr' AS part, prev AS key, state, count(*) AS cnt
-        FROM (SELECT state,
-                     lag(state) OVER (PARTITION BY url ORDER BY pos) AS prev
-              FROM st)
-        WHERE prev IS NOT NULL GROUP BY prev, state),
-ini AS (SELECT 'init' AS part, '' AS key, state, count(*) AS cnt
-        FROM st WHERE pos = 0 GROUP BY state),
-fn_ AS (SELECT 'fin' AS part, '' AS key, state, count(*) AS cnt
-        FROM st WHERE pos = n - 1 GROUP BY state)
-SELECT part, key, state, CAST(cnt AS BIGINT) AS cnt FROM
-  (SELECT * FROM em UNION ALL SELECT * FROM emsh
-   UNION ALL SELECT * FROM emprev UNION ALL SELECT * FROM emnext
-   UNION ALL SELECT * FROM empsh UNION ALL SELECT * FROM emnsh
-   UNION ALL SELECT * FROM trn UNION ALL SELECT * FROM ini
-   UNION ALL SELECT * FROM fn_)
-"""
-
-
-def _sql_fitted_spans(dataset: str) -> str:
-    return (f"SELECT url, start, \"end\" "
-            f"FROM '{_FIT_FIX}/{dataset}_pred_spans.parquet'")
-
-
 def _duck_pair_feats(pairs_cte: str, docs_cte: str, out: str) -> str:
-    """CTE block computing the distinct NB feature rows
+    """CTE block computing the distinct pair feature rows
     (url, h_start, h_end, t_start, t_end, kind, val) for a pair CTE —
     the DuckDB twin of operators/fitted.py pair_features (1-based
     indexing translated from the Python 0-based conventions)."""
@@ -1000,193 +526,6 @@ def _duck_pair_feats(pairs_cte: str, docs_cte: str, out: str) -> str:
            CAST(least(t_end - t_start, 8) AS VARCHAR)
     FROM {out}_j))"""
 
-
-def _duck_rel_nb_chain(dataset: str) -> str:
-    """CTE chain: NB relation fit on the frozen train ∪ val splits
-    (the final-model fit split; selection happened on val) — labeled
-    gold-span pairs, feature counts, integer-grid weights + priors.
-    Twin of operators/fitted.py fit_rel_nb."""
-    tr = _duck_fit_src(dataset)
-    g = "0.3141592653589793"
-    w = (lambda n, c: f"CAST(floor(1000.0 * ln(({n} + 1.0) / ({c} + 2.0))"
-         f" + {g}) AS BIGINT)")
-    return f"""
-ftr_docs AS (SELECT CAST(doc_id AS VARCHAR) AS url, tokens FROM {tr}),
-ftr_sp AS (SELECT DISTINCT CAST(doc_id AS VARCHAR) AS url,
-                  s."start" AS start, s."end" AS "end"
-           FROM (SELECT doc_id, unnest(spans) AS s FROM {tr})),
-ftr_pairs AS (SELECT h.url, h.start AS h_start, h."end" AS h_end,
-                     t.start AS t_start, t."end" AS t_end
-              FROM ftr_sp h JOIN ftr_sp t ON h.url = t.url
-                AND h."end" <= t.start AND t.start - h."end" <= 30),
-ftr_rels AS (SELECT CAST(doc_id AS VARCHAR) AS url,
-                    spans[r.head + 1]."start" AS a_st,
-                    spans[r.head + 1]."end" AS a_en,
-                    spans[r.tail + 1]."start" AS b_st,
-                    spans[r.tail + 1]."end" AS b_en
-             FROM (SELECT doc_id, spans, unnest(relations) AS r
-                   FROM {tr})),
-forient AS (SELECT url, h_start, h_end, t_start, t_end, min(y) AS y FROM
-              (SELECT url,
-                 CASE WHEN a_st <= b_st THEN a_st ELSE b_st END AS h_start,
-                 CASE WHEN a_st <= b_st THEN a_en ELSE b_en END AS h_end,
-                 CASE WHEN a_st <= b_st THEN b_st ELSE a_st END AS t_start,
-                 CASE WHEN a_st <= b_st THEN b_en ELSE a_en END AS t_end,
-                 CASE WHEN a_st <= b_st THEN 1 ELSE 2 END AS y
-               FROM ftr_rels)
-            GROUP BY 1, 2, 3, 4, 5),
-flab AS (SELECT p.*, coalesce(o.y, 0) AS y
-         FROM ftr_pairs p LEFT JOIN forient o
-         USING (url, h_start, h_end, t_start, t_end)),
-{_duck_pair_feats('ftr_pairs', 'ftr_docs', 'ffeat_tr')},
-fcounts AS (SELECT kind, val,
-                   sum(CASE WHEN y = 0 THEN 1 ELSE 0 END) AS n_neg,
-                   sum(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS n_fwd,
-                   sum(CASE WHEN y = 2 THEN 1 ELSE 0 END) AS n_bwd
-            FROM ffeat_tr f JOIN flab l
-            USING (url, h_start, h_end, t_start, t_end)
-            GROUP BY kind, val),
-fcls AS (SELECT sum(CASE WHEN y = 0 THEN 1 ELSE 0 END) AS c_neg,
-                sum(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS c_fwd,
-                sum(CASE WHEN y = 2 THEN 1 ELSE 0 END) AS c_bwd
-         FROM flab),
-fweights AS (SELECT kind, val,
-                    {w('n_neg', 'c_neg')} AS w_neg,
-                    {w('n_fwd', 'c_fwd')} AS w_fwd,
-                    {w('n_bwd', 'c_bwd')} AS w_bwd
-             FROM fcounts, fcls
-             WHERE n_neg + n_fwd + n_bwd >= {_FT_MIN_DF}),
-fpriors AS (SELECT
-    {w('c_neg', 'c_neg + c_fwd + c_bwd + 1.0')} AS p_neg,
-    {w('c_fwd', 'c_neg + c_fwd + c_bwd + 1.0')} AS p_fwd,
-    {w('c_bwd', 'c_neg + c_fwd + c_bwd + 1.0')} AS p_bwd
-  FROM fcls)"""
-
-
-def _sql_fitted_rel_weights(dataset: str) -> str:
-    return f"""
-WITH {_duck_rel_nb_chain(dataset)}
-SELECT kind, val, w_neg, w_fwd, w_bwd FROM fweights
-"""
-
-
-def _sql_fitted_eval(dataset: str, fix_dir: str = _FIT_FIX) -> str:
-    te = f"{_GAZ_FIX}/{dataset}_test.parquet"
-    tr = _duck_fit_src(dataset)
-    fx = f"{fix_dir}/{dataset}_pred_spans.parquet"
-    return f"""
-WITH {_duck_rel_nb_chain(dataset)},
-fte_docs AS (SELECT CAST(doc_id AS VARCHAR) AS url, tokens FROM '{te}'),
-fpx AS (SELECT url, start, "end" FROM '{fx}'),
-fcpairs AS (SELECT h.url, h.start AS h_start, h."end" AS h_end,
-                   t.start AS t_start, t."end" AS t_end
-            FROM fpx h JOIN fpx t ON h.url = t.url
-              AND h."end" <= t.start AND t.start - h."end" <= 30),
-{_duck_pair_feats('fcpairs', 'fte_docs', 'ffeat_te')},
-fsums AS (SELECT url, h_start, h_end, t_start, t_end,
-                 sum(w_neg) AS s_neg, sum(w_fwd) AS s_fwd,
-                 sum(w_bwd) AS s_bwd
-          FROM ffeat_te JOIN fweights USING (kind, val)
-          GROUP BY 1, 2, 3, 4, 5),
-fscored AS (SELECT c.url, c.h_start, c.h_end, c.t_start, c.t_end,
-                   coalesce(s.s_neg, 0) + p.p_neg AS t_neg,
-                   coalesce(s.s_fwd, 0) + p.p_fwd AS t_fwd,
-                   coalesce(s.s_bwd, 0) + p.p_bwd AS t_bwd
-            FROM fcpairs c LEFT JOIN fsums s
-            USING (url, h_start, h_end, t_start, t_end)
-            CROSS JOIN fpriors p),
-frtype AS (SELECT rel_type FROM
-             (SELECT r."type" AS rel_type, count(*) AS c
-              FROM (SELECT unnest(relations) AS r FROM {tr})
-              GROUP BY 1 ORDER BY c DESC, rel_type ASC LIMIT 1)),
-fstype AS (SELECT type FROM
-             (SELECT s."type" AS type, count(*) AS c
-              FROM (SELECT unnest(spans) AS s FROM {tr})
-              GROUP BY 1 ORDER BY c DESC, type ASC LIMIT 1)),
-fpredr AS (SELECT url,
-                  CASE WHEN t_fwd > t_neg + {_FT_MARGIN} AND t_fwd >= t_bwd
-                       THEN h_start ELSE t_start END AS h_start,
-                  CASE WHEN t_fwd > t_neg + {_FT_MARGIN} AND t_fwd >= t_bwd
-                       THEN h_end ELSE t_end END AS h_end,
-                  CASE WHEN t_fwd > t_neg + {_FT_MARGIN} AND t_fwd >= t_bwd
-                       THEN t_start ELSE h_start END AS t_start,
-                  CASE WHEN t_fwd > t_neg + {_FT_MARGIN} AND t_fwd >= t_bwd
-                       THEN t_end ELSE h_end END AS t_end,
-                  (SELECT rel_type FROM frtype) AS rel_type
-           FROM fscored
-           WHERE (t_fwd > t_neg + {_FT_MARGIN} AND t_fwd >= t_bwd)
-              OR (t_bwd > t_neg + {_FT_MARGIN} AND t_bwd > t_fwd)),
-fte_gsp AS (SELECT CAST(doc_id AS VARCHAR) AS url, s."start" AS start,
-                   s."end" AS "end", s."type" AS type
-            FROM (SELECT doc_id, unnest(spans) AS s FROM '{te}')),
-fte_grel AS (SELECT CAST(doc_id AS VARCHAR) AS url,
-                    spans[r.head + 1]."start" AS h_start,
-                    spans[r.head + 1]."end" AS h_end,
-                    spans[r.tail + 1]."start" AS t_start,
-                    spans[r.tail + 1]."end" AS t_end,
-                    r."type" AS rel_type
-             FROM (SELECT doc_id, spans, unnest(relations) AS r
-                   FROM '{te}')),
-fsg AS (SELECT DISTINCT url, start, "end", type FROM fte_gsp),
-fsp AS (SELECT DISTINCT url, start, "end",
-               (SELECT type FROM fstype) AS type FROM fpx),
-frg AS (SELECT DISTINCT url, h_start, h_end, t_start, t_end, rel_type
-        FROM fte_grel),
-frp AS (SELECT DISTINCT url, h_start, h_end, t_start, t_end, rel_type
-        FROM fpredr),
-fsc AS (SELECT
-  (SELECT count(*) FROM fsg JOIN fsp
-     USING (url, start, "end", type)) AS tp,
-  (SELECT count(*) FROM fsp WHERE NOT EXISTS (SELECT 1 FROM fsg
-     WHERE fsg.url = fsp.url AND fsg.start = fsp.start
-       AND fsg."end" = fsp."end" AND fsg.type = fsp.type)) AS fp,
-  (SELECT count(*) FROM fsg WHERE NOT EXISTS (SELECT 1 FROM fsp
-     WHERE fsg.url = fsp.url AND fsg.start = fsp.start
-       AND fsg."end" = fsp."end" AND fsg.type = fsp.type)) AS fn),
-frc AS (SELECT
-  (SELECT count(*) FROM frg JOIN frp
-     USING (url, h_start, h_end, t_start, t_end, rel_type)) AS tp,
-  (SELECT count(*) FROM frp WHERE NOT EXISTS (SELECT 1 FROM frg
-     WHERE frg.url = frp.url AND frg.h_start = frp.h_start
-       AND frg.h_end = frp.h_end AND frg.t_start = frp.t_start
-       AND frg.t_end = frp.t_end AND frg.rel_type = frp.rel_type)) AS fp,
-  (SELECT count(*) FROM frg WHERE NOT EXISTS (SELECT 1 FROM frp
-     WHERE frg.url = frp.url AND frg.h_start = frp.h_start
-       AND frg.h_end = frp.h_end AND frg.t_start = frp.t_start
-       AND frg.t_end = frp.t_end AND frg.rel_type = frp.rel_type)) AS fn),
-fm AS (SELECT 'span' AS task, tp, fp, fn FROM fsc
-       UNION ALL
-       SELECT 'rel' AS task, tp, fp, fn FROM frc)
-SELECT task, CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
-       CAST(fn AS BIGINT) AS fn,
-       round(tp / greatest(tp + fp, 1), 6) AS precision,
-       round(tp / greatest(tp + fn, 1), 6) AS recall,
-       round(2.0 * (tp / greatest(tp + fp, 1))
-             * (tp / greatest(tp + fn, 1))
-             / greatest(tp / greatest(tp + fp, 1)
-                        + tp / greatest(tp + fn, 1), 1e-12), 6) AS f1
-FROM fm
-"""
-
-
-SQL_FITTED_HMM_MODEL_CUSTOM = _sql_fitted_hmm_model("custom")
-SQL_FITTED_HMM_MODEL_CONLL04 = _sql_fitted_hmm_model("conll04")
-SQL_FITTED_SPANS_CUSTOM = _sql_fitted_spans("custom")
-SQL_FITTED_SPANS_CONLL04 = _sql_fitted_spans("conll04")
-SQL_FITTED_REL_WEIGHTS_CUSTOM = _sql_fitted_rel_weights("custom")
-SQL_FITTED_REL_WEIGHTS_CONLL04 = _sql_fitted_rel_weights("conll04")
-SQL_FITTED_EVAL_CUSTOM = _sql_fitted_eval("custom")
-SQL_FITTED_EVAL_CONLL04 = _sql_fitted_eval("conll04")
-SQL_FITTED_PTRON_SPANS_CUSTOM = (
-    f"SELECT url, start, \"end\" "
-    f"FROM '{_PT_FIX}/custom_pred_spans.parquet'")
-SQL_FITTED_PTRON_SPANS_CONLL04 = (
-    f"SELECT url, start, \"end\" "
-    f"FROM '{_PT_FIX}/conll04_pred_spans.parquet'")
-SQL_FITTED_PTRON_EVAL_CUSTOM = _sql_fitted_eval("custom", fix_dir=_PT_FIX)
-SQL_FITTED_PTRON_EVAL_CONLL04 = _sql_fitted_eval("conll04", fix_dir=_PT_FIX)
-
-
 def _duck_extra_feats(extras: tuple, j: str) -> str:
     """SQL UNION blocks for the rel-perceptron's val-selected extra
     feature kinds (perceptron.REL_EXTRAS) over a pairs-join-docs CTE
@@ -1248,8 +587,8 @@ def _sql_ptron_full_eval(dataset: str) -> str:
     relations recomputed END-TO-END in SQL from the frozen rel-weights
     parquet (pair gen -> _duck_pair_feats + the dataset's REL_EXTRAS
     kinds + bias -> weight sums -> first-max argmax with the
-    lower-class tie rule), then the strict span/rel eval — the same
-    tail as _sql_fitted_eval. Only the two iterative FITS are frozen;
+    lower-class tie rule), then the strict span/rel eval (the SQL twin
+    of _strict_eval_rows). Only the two iterative FITS are frozen;
     every inference step is recomputed."""
     from causalre_spark.operators.perceptron import REL_EXTRAS
 
@@ -1506,24 +845,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # gold-data eval on the reference's own test splits (ignores sf_dir)
     "gold_eval_custom": q_gold_eval_custom,
     "gold_eval_conll04": q_gold_eval_conll04,
-    # gazetteer extractor fitted on the reference train split
-    "gazetteer_lexicon": q_gazetteer_lexicon,
-    "gazetteer_spans": q_gazetteer_spans,
-    "gazetteer_eval_custom": q_gazetteer_eval_custom,
-    "gazetteer_eval_conll04": q_gazetteer_eval_conll04,
-    # fitted HMM span tagger + NB relation classifier (train-split fit)
-    "fitted_hmm_model_custom": q_fitted_hmm_model_custom,
-    "fitted_hmm_model_conll04": q_fitted_hmm_model_conll04,
-    "fitted_spans_custom": q_fitted_spans_custom,
-    "fitted_spans_conll04": q_fitted_spans_conll04,
-    "fitted_rel_weights_custom": q_fitted_rel_weights_custom,
-    "fitted_rel_weights_conll04": q_fitted_rel_weights_conll04,
-    "fitted_eval_custom": q_fitted_eval_custom,
-    "fitted_eval_conll04": q_fitted_eval_conll04,
-    "fitted_ptron_spans_custom": q_fitted_ptron_spans_custom,
-    "fitted_ptron_spans_conll04": q_fitted_ptron_spans_conll04,
-    "fitted_ptron_eval_custom": q_fitted_ptron_eval_custom,
-    "fitted_ptron_eval_conll04": q_fitted_ptron_eval_conll04,
+    # all-perceptron extractor on the same gold splits
     "ptron_full_eval_custom": q_ptron_full_eval_custom,
     "ptron_full_eval_conll04": q_ptron_full_eval_conll04,
     # flagship pages -> triples (causal_triples is rows-only)
@@ -1536,22 +858,6 @@ ORACLES: dict[str, str] = {
     "curation_verdict": SQL_CURATION_VERDICT,
     "gold_eval_custom": SQL_GOLD_EVAL_CUSTOM,
     "gold_eval_conll04": SQL_GOLD_EVAL_CONLL04,
-    "gazetteer_lexicon": SQL_GAZETTEER_LEXICON,
-    "gazetteer_spans": SQL_GAZETTEER_SPANS,
-    "gazetteer_eval_custom": SQL_GAZETTEER_EVAL_CUSTOM,
-    "gazetteer_eval_conll04": SQL_GAZETTEER_EVAL_CONLL04,
-    "fitted_hmm_model_custom": SQL_FITTED_HMM_MODEL_CUSTOM,
-    "fitted_hmm_model_conll04": SQL_FITTED_HMM_MODEL_CONLL04,
-    "fitted_spans_custom": SQL_FITTED_SPANS_CUSTOM,
-    "fitted_spans_conll04": SQL_FITTED_SPANS_CONLL04,
-    "fitted_rel_weights_custom": SQL_FITTED_REL_WEIGHTS_CUSTOM,
-    "fitted_rel_weights_conll04": SQL_FITTED_REL_WEIGHTS_CONLL04,
-    "fitted_eval_custom": SQL_FITTED_EVAL_CUSTOM,
-    "fitted_eval_conll04": SQL_FITTED_EVAL_CONLL04,
-    "fitted_ptron_spans_custom": SQL_FITTED_PTRON_SPANS_CUSTOM,
-    "fitted_ptron_spans_conll04": SQL_FITTED_PTRON_SPANS_CONLL04,
-    "fitted_ptron_eval_custom": SQL_FITTED_PTRON_EVAL_CUSTOM,
-    "fitted_ptron_eval_conll04": SQL_FITTED_PTRON_EVAL_CONLL04,
     "ptron_full_eval_custom": SQL_PTRON_FULL_EVAL_CUSTOM,
     "ptron_full_eval_conll04": SQL_PTRON_FULL_EVAL_CONLL04,
     "causal_triples_seeded": SQL_CAUSAL_TRIPLES_SEEDED,

@@ -1,9 +1,11 @@
 """SparkSession factory tuned for this pipeline.
 
-Local-mode defaults match the sandbox (local[32], 128 GiB); on a real
-cluster the same builder is driven by spark-submit confs instead. AQE is
-on for skew-join splitting and post-shuffle coalescing; Arrow batches
-are size-capped so encoder UDF inner loops stay dense (input_hint).
+Local mode is sized from the host unless told otherwise
+(default_sizing: every core this process may run on, an eighth of the
+RAM for the driver); on a real cluster the same builder is driven by
+spark-submit confs instead. AQE is on for skew-join splitting and
+post-shuffle coalescing; Arrow batches are size-capped so encoder UDF
+inner loops stay dense (input_hint).
 """
 
 from __future__ import annotations
@@ -15,13 +17,27 @@ from pyspark.sql import DataFrame, SparkSession
 from causalre_spark.config import DEFAULT_CONFIG, PipelineConfig
 
 
+def default_sizing() -> tuple[int, str]:
+    """(cores, spark.driver.memory) for a local session: SPARK_GRAFT_CPUS
+    and SPARK_DRIVER_MEM when set, else the cores this process may run
+    on and an eighth of the host's RAM, clamped to 1-8 GiB (the rest is
+    left to the Python workers, the page cache and other tenants)."""
+    cores = os.environ.get("SPARK_GRAFT_CPUS")
+    mem = os.environ.get("SPARK_DRIVER_MEM")
+    if not mem:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+        mem = f"{min(max(ram_mb // 8, 1024), 8192)}m"
+    return (int(cores) if cores else len(os.sched_getaffinity(0))), mem
+
+
 def get_spark(
     app: str = "causalre_spark",
     cores: int | None = None,
     cfg: PipelineConfig = DEFAULT_CONFIG,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    default_cores, driver_mem = default_sizing()
+    cores = cores or default_cores
     # One BLAS thread per Python worker: N workers x K BLAS threads
     # oversubscribes the executor (measured 27% per-doc slowdown in the
     # encoder UDF from OpenBLAS coordination alone on tiny matmuls —
@@ -103,7 +119,7 @@ def get_spark(
         .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(cfg.arrow_max_records))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.python.worker.reuse", "true")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")

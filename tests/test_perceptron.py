@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import collections
 import os
+import re
 from collections import defaultdict
 
 import duckdb
@@ -441,10 +442,71 @@ def test_tags_spans_roundtrip():
 
 
 # --------------------------------------------------------------------------
-# relation perceptron (fit_rel_ipm / predict_rels_ptron) vs scalar twins.
-# Pair generation + feature twins are reused from tests/test_fitted.py —
-# the established independent NB twins (no production code paths).
+# relation perceptron (fit_rel_ipm / predict_rels_ptron) vs scalar twins:
+# independent pair-generation and base-feature twins (no production code
+# paths; _twin_nb_shape is the fitted.SHAPE_RULES twin and
+# _twin_pair_feats the fitted.pair_features twin, not the span
+# perceptron's _twin_shape/_twin_feats).
 # --------------------------------------------------------------------------
+
+def _twin_nb_shape(w: str) -> str:
+    if re.search(r"[0-9]", w):
+        return "Num"
+    if re.match(r"^[A-Z][a-z]+$", w):
+        return "Cap"
+    if re.match(r"^[A-Z]{2,}$", w):
+        return "ALL"
+    if re.match(r"^[a-z]+$", w):
+        return "low"
+    return "other"
+
+
+def _twin_gold_rels(df):
+    out = set()
+    for _, r in df.iterrows():
+        sp = r.spans
+        for rel in r.relations:
+            h, t = sp[rel["head"]], sp[rel["tail"]]
+            out.add((str(r.doc_id), h["start"], h["end"],
+                     t["start"], t["end"]))
+    return out
+
+
+def _twin_pair_feats(toks, a, b):
+    gap = b[0] - a[1]
+    gb = str(gap) if gap < 6 else ("10" if gap <= 10
+                                   else ("20" if gap <= 20 else "30"))
+    fs = [("gap", gb)]
+    btw = toks[a[1]:b[0]]
+    for w in set(btw):
+        fs.append(("btw", w))
+    for i in range(len(btw) - 1):
+        fs.append(("btw2", btw[i] + " " + btw[i + 1]))
+    fs.append(("first", btw[0] if btw else "<adj>"))
+    fs.append(("last", btw[-1] if btw else "<adj>"))
+    fs.append(("pre", toks[a[0] - 1] if a[0] > 0 else "<bos>"))
+    fs.append(("post", toks[b[1]] if b[1] < len(toks) else "<eos>"))
+    fs.append(("hl", toks[a[1] - 1]))
+    fs.append(("tl", toks[b[1] - 1]))
+    fs.append(("hlsh", _twin_nb_shape(toks[a[1] - 1])))
+    fs.append(("tlsh", _twin_nb_shape(toks[b[1] - 1])))
+    fs.append(("hw", str(min(a[1] - a[0], 8))))
+    fs.append(("tw", str(min(b[1] - b[0], 8))))
+    return set(fs)
+
+
+def _twin_pairs(df, spans_by_doc):
+    rows = []
+    for _, r in df.iterrows():
+        url = str(r.doc_id)
+        toks = [str(t) for t in r.tokens]
+        sps = sorted(spans_by_doc.get(url, []))
+        for i, a in enumerate(sps):
+            for b in sps[i + 1:]:
+                if a[1] <= b[0] and b[0] - a[1] <= 30:
+                    rows.append((url, a, b, _twin_pair_feats(toks, a, b)))
+    return rows
+
 
 def _twin_extra_feats(toks, a, b, extras):
     """Independent twin of the REL_EXTRAS feature kinds
@@ -477,19 +539,17 @@ def _twin_rel_items(df, extras=()):
     """(url_int, a, b, y, feats+extras+bias) labeled gold-span candidate
     pairs, fwd-wins on a both-direction pair (the production min-y
     rule)."""
-    import test_fitted as TF
-
     sbd = collections.defaultdict(set)
     toks_by = {}
     for _, r in df.iterrows():
         toks_by[str(r.doc_id)] = [str(t) for t in r.tokens]
         for s in r.spans:
             sbd[str(r.doc_id)].add((s["start"], s["end"]))
-    gr = TF._twin_gold_rels(df)
+    gr = _twin_gold_rels(df)
     fwd = {(u, hs, he, ts, te) for (u, hs, he, ts, te) in gr if hs <= ts}
     bwd = {(u, ts, te, hs, he) for (u, hs, he, ts, te) in gr if hs > ts}
     items = []
-    for (u, a, b, fs) in TF._twin_pairs(df, sbd):
+    for (u, a, b, fs) in _twin_pairs(df, sbd):
         key = (u, a[0], a[1], b[0], b[1])
         y = 1 if key in fwd else (2 if key in bwd else 0)
         fs = fs | _twin_extra_feats(toks_by[u], a, b, extras)
@@ -551,8 +611,6 @@ def test_predict_rels_ptron_matches_twin(spark):
     frozen perceptron spans) — the same chain the ptron_full_eval
     oracle recomputes in SQL, gated here against an independent Python
     path too."""
-    import test_fitted as TF
-
     ds = "conll04"
     extras = PT.REL_EXTRAS[ds]
     rel_w = spark.read.parquet(f"{PT_FIX}/{ds}_rel_weights.parquet")
@@ -575,7 +633,7 @@ def test_predict_rels_ptron_matches_twin(spark):
     toks_by = {str(r.doc_id): [str(t) for t in r.tokens]
                for _, r in pdf.iterrows()}
     want = set()
-    for (u, a, b, fs) in TF._twin_pairs(pdf, sbd):
+    for (u, a, b, fs) in _twin_pairs(pdf, sbd):
         fs = (fs | _twin_extra_feats(toks_by[u], a, b, extras)
               | {("bias", "")})
         sc = [sum(W.get((f, c), 0) for f in fs) for c in range(3)]

@@ -102,38 +102,3 @@ def test_dedup_max_idempotent(rows):
         want = max(float(x) for (a, b, x) in zip(s.tolist(), e.tolist(), sc.tolist())
                    if (a, b) == (ks, ke))
         assert abs(kc - want) < 1e-6
-
-
-def test_grid_constant_lint():
-    """Source linter for the irrational-offset grid policy: every
-    occurrence of the grid constant in the package must use the exact
-    canonical digits (a transposed digit at one site would silently
-    reintroduce the cross-engine rounding-tie class), and every
-    occurrence must sit in a floor(x * 10^k + OFF) / 10^k form with a
-    power-of-ten scale."""
-    import pathlib
-    import re
-
-    from causalre_spark.functions.grid import GRID_OFFSET
-
-    assert repr(GRID_OFFSET) == "0.3141592653589793"
-    pkg = pathlib.Path(__file__).resolve().parent.parent / "causalre_spark"
-    approx = re.compile(r"0\.31415\d*")
-    canonical = "0.3141592653589793"
-    hits = 0
-    for py in pkg.rglob("*.py"):
-        src = py.read_text()
-        for m in approx.finditer(src):
-            assert m.group(0) == canonical, (py.name, m.group(0))
-            hits += 1
-            # where a scale multiplier precedes the constant on the same
-            # statement, it must be one of the two sanctioned powers of
-            # ten (constant DEFINITIONS like GRID_OFFSET have none)
-            window = src[max(0, m.start() - 200):m.start()]
-            scales = re.findall(r"\* (\d+)\.0", window)
-            if scales:
-                assert set(scales[-1:]) <= {"100", "10000"}, (py.name, scales)
-    # the policy is in force across the tree: the canonical definition
-    # in functions/grid.py and the NB-weight SQL twin in
-    # plans/entry_queries._duck_rel_nb_chain
-    assert hits >= 2

@@ -107,3 +107,24 @@ def test_spark_submit_keeps_submitted_java_options(tmp_path):
     driver, executor = got["driver"].split(), got["executor"].split()
     assert {"-Dsparkcre.probe=1", "-XX:-DontCompileHugeMethods"} <= set(driver), got
     assert {"-Dcausalre.exec=1", "-XX:-DontCompileHugeMethods"} <= set(executor), got
+
+
+def test_session_defaults_sized_from_the_host(monkeypatch):
+    """A session nobody sized takes the host's cores and an eighth of
+    its RAM, never more driver memory than the host has; the env vars
+    still win. Starts no JVM."""
+    from causalre_spark.session import default_sizing
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "5g")
+    assert default_sizing() == (3, "5g")
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    monkeypatch.delenv("SPARK_DRIVER_MEM")
+    cores, mem = default_sizing()
+    assert cores == len(os.sched_getaffinity(0))
+    with open("/proc/meminfo") as fh:
+        total_kb = next(int(line.split()[1]) for line in fh
+                        if line.startswith("MemTotal:"))
+    assert mem.endswith("m") and 1024 <= int(mem[:-1]) <= 8192
+    assert int(mem[:-1]) * 1024 <= total_kb

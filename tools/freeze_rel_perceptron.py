@@ -38,8 +38,8 @@ HEADER = [
     "relations) — the best fitted decision surfaces in this repo",
     "",
     "operators/perceptron.py fit_rel_ipm/predict_rels_ptron — a",
-    "multiclass (none/fwd/bwd) averaged perceptron over the NB pair",
-    "feature kinds (between-text unigrams/bigrams, gap bucket,",
+    "multiclass (none/fwd/bwd) averaged perceptron over the",
+    "fitted.pair_features kinds (between-text unigrams/bigrams, gap bucket,",
     "pair-adjacent and span-edge tokens/shapes/widths) plus a bias",
     "feature and the dataset's val-selected extra kinds",
     "(perceptron.REL_EXTRAS: conll04 tbow/hltl/hbow/tf, custom",
@@ -75,7 +75,6 @@ def main() -> None:
 
     from causalre_spark import gold_eval as G
     from causalre_spark.operators import fitted as FT
-    from causalre_spark.operators import gazetteer as GZ
     from causalre_spark.operators import metrics as M
     from causalre_spark.operators import perceptron as PT
     from causalre_spark.session import get_spark
@@ -118,7 +117,7 @@ def main() -> None:
             F.broadcast(FT.majority_span_type(train))).persist()
         rel_w = spark.read.parquet(wout)
         pred_r = PT.predict_rels_ptron(pred_u, test, rel_w,
-                                       GZ.majority_rel_type(train),
+                                       FT.majority_rel_type(train),
                                        extras=PT.REL_EXTRAS[ds])
         gold_s, gold_r = G.gold_span_table(test), G.gold_rel_table(test)
         for task, gold, pred, op in (
