@@ -75,9 +75,6 @@ class PipelineConfig:
                                     # identical either way (pytest-gated).
     shuffle_partitions: int = 32
     arrow_max_records: int = 512    # size-capped Arrow batches (input_hint)
-    length_bucket: bool = False     # opt-in repartitionByRange(length(text)) before
-                                    # the encoder UDF (S4 batching discipline: dense
-                                    # same-length Arrow batches; costs one shuffle)
     table_format: str = "parquet"   # 'iceberg' on a real cluster; parquet in sandbox
 
     extra: dict = field(default_factory=dict)

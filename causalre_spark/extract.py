@@ -17,8 +17,6 @@ from __future__ import annotations
 import html as _html
 import re
 
-EXTRACTOR_VERSION = "causalre-extract/1"
-
 _P_RE = re.compile(rb"<p(?:\s[^>]*)?>(.*?)</p>", re.DOTALL | re.IGNORECASE)
 _TAG_RE = re.compile(r"<[^>]+>")
 

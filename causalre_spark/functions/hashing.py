@@ -95,11 +95,6 @@ def minhash_sql(expr: str, seed: int, nhex: int = DEFAULT_NHEX) -> str:
     return cw_hash_sql(md5_long_sql(expr, nhex=nhex), seed)
 
 
-def minhash_sql_spark(expr: str, seed: int, nhex: int = DEFAULT_NHEX) -> str:
-    """Spark-only twin of :func:`minhash_sql` (single md5 via conv)."""
-    return cw_hash_sql(md5_long_sql_spark(expr, nhex=nhex), seed)
-
-
 def minhash_long(s: str, seed: int, nhex: int = DEFAULT_NHEX) -> int:
     """Python twin of :func:`minhash_sql`."""
     return cw_hash(md5_long(s, nhex=nhex), seed)

@@ -4,9 +4,9 @@ The driver's test tables are single-file, single-row-group parquet:
 parquet splits only at row-group boundaries, so no matter the byte
 size the scan yields ONE input split and every downstream map-heavy
 stage (explode fan-out, md5 chains, Arrow UDF crossings, quadratic
-in-bucket pair loops) runs on one core of the 32-core box. This is the
-optimization guide's §2.5 "input skew: one huge unsplittable file →
-repartition immediately after the read" case.
+in-bucket pair loops) runs on one core. This is the optimization
+guide's §2.5 "input skew: one huge unsplittable file → repartition
+immediately after the read" case.
 
 `spread()` widens such a frame to the session's default parallelism
 with one round-robin exchange of the narrow scan columns. It is
@@ -25,13 +25,10 @@ from pyspark.sql import DataFrame
 
 def spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition `df` up to defaultParallelism; no-op for
-    frames that are already at least that wide or are streaming (the
-    partition probe is unavailable there). Row-level results are
+    frames that are already at least that wide. Row-level results are
     partitioning-independent for every consumer in this repo
     (aggregations, equi-joins, per-doc windows), so outputs are
     byte-identical; only task fan-out changes."""
-    if df.isStreaming:
-        return df
     sess = df.sparkSession
     target = sess.sparkContext.defaultParallelism
     try:

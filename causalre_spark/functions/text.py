@@ -1,5 +1,4 @@
-"""Frozen text normalization, shingling and MinHash helpers, and the
-curation-gate twin.
+"""Frozen text normalization, shingling and MinHash helpers.
 
 Pure-Python twins of the SQL used in the Spark operators; the oracle and
 the Spark side must agree exactly, so everything here is defined to be
@@ -87,62 +86,3 @@ def jaccard(a: set, b: set) -> float:
         return 1.0
     u = len(a | b)
     return len(a & b) / u if u else 0.0
-
-
-# ---------------------------------------------------------------------------
-# Curation-gate twin: EXACT python mirror of the SQL gate signals used
-# by streaming.curation_gate_stream (operators/textstats.quality_scores
-# + repetition_row_signals), so the fused in-UDF gate (model/udfs.py)
-# and the relational gate agree bit-for-bit. Thresholds live here as
-# the single source of truth for both sides.
-
-CURATION_MIN_TOKENS = 10
-CURATION_MIN_QUALITY = 0.72
-CURATION_MAX_DUP_TRIGRAM = 0.60
-
-_QUALITY_STOPWORDS = ("the", "a", "of", "to", "and", "in", "is", "was")
-_PUNCT_KEEP = set(
-    "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789 ")
-
-
-def round_half_up(x: float, n: int) -> float:
-    """Twin of Spark's round() on DOUBLE: BigDecimal.valueOf(x) (=
-    shortest decimal repr, same as python repr) quantized HALF_UP."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    q = Decimal(1).scaleb(-n)
-    return float(Decimal(repr(x)).quantize(q, rounding=ROUND_HALF_UP))
-
-
-def curation_signals(text: str) -> tuple[int, float, float]:
-    """(n_tokens, quality_score, dup_trigram_frac) — value-identical to
-    the SQL columns of the relational gate (asserted over the driver
-    testdata in tests/test_streaming.py)."""
-    import math
-
-    toks = normalize(text).split(" ")  # SQL split('', ' ') is [''] too
-    n_tokens = len(toks)
-    n_punct = sum(1 for ch in text if ch not in _PUNCT_KEEP)
-    punct_ratio = round_half_up(n_punct / max(len(text), 1), 4)
-    stop_ratio = round_half_up(
-        sum(1 for t in toks if t in _QUALITY_STOPWORDS) / max(n_tokens, 1), 4)
-    quality = round_half_up(
-        (0.4 if n_tokens >= 10 else 0.0)
-        + (1.0 - punct_ratio) * 0.3
-        + min(stop_ratio * 3, 1.0) * 0.3, 5)
-    if n_tokens < 3:
-        dup_tri = 0.0
-    else:
-        tris = [" ".join(toks[i:i + 3]) for i in range(n_tokens - 2)]
-        dup_tri = math.floor(
-            (1.0 - len(set(tris)) / len(tris)) * 100000) / 100000
-    return n_tokens, quality, dup_tri
-
-
-def curation_keep(text: str) -> bool:
-    """The gate decision (single source of truth for both the fused
-    in-UDF gate and the relational/streaming gate thresholds)."""
-    n_tokens, quality, dup_tri = curation_signals(text)
-    return (n_tokens >= CURATION_MIN_TOKENS
-            and quality >= CURATION_MIN_QUALITY
-            and dup_tri <= CURATION_MAX_DUP_TRIGRAM)

@@ -34,11 +34,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--config", metavar="YAML",
                     help="PipelineConfig overrides from a YAML file "
                          "(the reference's start.py --config surface)")
-    ap.add_argument("--compact", metavar="SRC_PATH",
-                    help="maintenance mode: compact SRC_PATH's small "
-                         "parquet files into --out (no pipeline run)")
-    ap.add_argument("--target-bytes", type=int, default=128 * 1024 * 1024,
-                    help="compaction bin size (default 128 MiB)")
     args = ap.parse_args(argv)
 
     from causalre_spark.pipeline import run_pipeline
@@ -55,26 +50,6 @@ def main(argv: list[str] | None = None) -> int:
     # the config sizes the session (shuffle partitions, Arrow batch cap),
     # so it is loaded first
     spark = get_spark(app="causalre_kg", cores=args.cores, cfg=cfg)
-    if args.compact:
-        from causalre_spark.operators.maintenance import compact_parquet
-
-        t0 = time.time()
-        plan = compact_parquet(spark, args.compact, args.out,
-                               args.target_bytes)
-        import pyspark.sql.functions as F  # noqa: N812
-
-        # compact_parquet returns a local-rows frame (plan already
-        # collect()ed), so one cheap agg covers both counts
-        row = plan.agg(F.count(F.lit(1)).alias("n_in"),
-                       F.countDistinct("bin").alias("n_bins")).collect()[0]
-        print(json.dumps({
-            "compacted_files_in": int(row["n_in"]),
-            "files_out": int(row["n_bins"]),
-            "out": args.out,
-            "secs": round(time.time() - t0, 2),
-            "master": spark.sparkContext.master,
-        }))
-        return 0
     if args.synthetic:
         pages = synth_pages_df(spark, args.synthetic)
     elif args.pages:

@@ -15,7 +15,7 @@ per-document and bounded by k = max_top_k_spans, so shuffling the
 operators (linking, dedup, triple aggregation) remain DataFrame algebra.
 
 In production the frozen NumPy model is swapped for a broadcast torch
-model loaded once per Python worker (import-gated); interfaces unchanged.
+model loaded once per Python worker; interfaces unchanged.
 """
 
 from __future__ import annotations
@@ -27,13 +27,6 @@ import pandas as pd
 from causalre_spark.config import DEFAULT_CONFIG, PipelineConfig
 from causalre_spark.extract import extract_text, tokenize
 from causalre_spark.model import batch
-
-try:  # pragma: no cover - production path, torch not in sandbox
-    import torch  # noqa: F401
-
-    HAS_TORCH = True
-except Exception:  # pragma: no cover
-    HAS_TORCH = False
 
 DOC_EXTRACT_SCHEMA = (
     "url string, n_tokens int, text_ok boolean, "
@@ -50,16 +43,6 @@ def make_doc_extract_udf(cfg: PipelineConfig = DEFAULT_CONFIG):
     the caller). text is re-extracted from html; text_ok carries the
     byte-identical invariant."""
 
-    # fused pre-encode curation gate (cfg.extra['curation_gate']): the
-    # cheap row-local quality/repetition decision runs INSIDE the Arrow
-    # crossing, before the encoder — the same fusion rationale as the
-    # reference's in-model pruning cascade (see pipeline.py run_pipeline
-    # for why a relational pre-filter is NOT the right shape here). The
-    # python twin is value-identical to the relational gate column.
-    gate = None
-    if cfg.extra.get("curation_gate"):
-        from causalre_spark.functions.text import curation_keep as gate
-
     def udf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {k: [] for k in ("url", "n_tokens", "text_ok", "spans", "rels")}
@@ -67,8 +50,6 @@ def make_doc_extract_udf(cfg: PipelineConfig = DEFAULT_CONFIG):
                 pdf["url"], pdf["html"], pdf["expected_text"]
             ):
                 text = extract_text(bytes(html))
-                if gate is not None and not gate(text):
-                    continue
                 toks = tokenize(text)
                 r = batch.doc_extract(toks, cfg)
                 span_rows = [

@@ -1,7 +1,6 @@
 """Text analysis operators (training-data pipeline ops): quality
 scoring and Gopher-style repetition signals, the per-doc projections of
-the curation verdict and the streaming curation gate. Pure DataFrame
-algebra with portable SQL twins.
+the curation verdict. Pure DataFrame algebra with portable SQL twins.
 """
 
 from __future__ import annotations
@@ -12,24 +11,20 @@ from pyspark.sql import functions as F
 from causalre_spark.functions.text import NORMALIZE_SQL
 
 
-def _norm_sql(text_col: str) -> str:
-    """normalize(text) with a NULL text spelled '' — the DuckDB twin's
-    spelling (functions.text_duck), so a NULL text yields the same
-    single empty token, and the same signals, on both engines."""
-    return f"coalesce({NORMALIZE_SQL.format(x=text_col)}, '')"
+# normalize(text) with a NULL text spelled '' — the DuckDB twin's
+# spelling (functions.text_duck), so a NULL text yields the same single
+# empty token, and the same signals, on both engines.
+_NORM_SQL = f"coalesce({NORMALIZE_SQL.format(x='text')}, '')"
 
 
-def quality_scores(docs: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text",
-                   extra_cols: tuple = ()) -> DataFrame:
+def quality_scores(docs: DataFrame, extra_cols: tuple = ()) -> DataFrame:
     """Per-doc quality features: token count, mean token length,
     punctuation ratio, stopword ratio, and a combined score.
 
     All expressions stay in whole-stage codegen (no UDFs). A pure
-    projection, so it applies unchanged to a STREAMING frame
-    (streaming.curation_gate_stream); `extra_cols` passes additional
-    input columns through unchanged (e.g. upstream signal columns when
-    composing projections without a join)."""
+    projection; `extra_cols` passes additional input columns through
+    unchanged (e.g. upstream signal columns when composing projections
+    without a join)."""
     stop = "array('the','a','of','to','and','in','is','was')"
     # The token array is materialized once per row in its own
     # projection (the repetition_stats discipline) — the previous
@@ -41,22 +36,22 @@ def quality_scores(docs: DataFrame, id_col: str = "doc_id",
     # (no fan-out), and an added exchange defeats count()-style column
     # pruning for consumers that never read the features.
     base = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.col(c) for c in extra_cols],
-        F.col(text_col),
-        F.expr(f"split({_norm_sql(text_col)}, ' ')").alias("_toks"),
+        F.col("text"),
+        F.expr(f"split({_NORM_SQL}, ' ')").alias("_toks"),
     )
     return base.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.col(c) for c in extra_cols],
         F.expr("size(_toks)").cast("long").alias("n_tokens"),
         F.round(F.expr(
             "aggregate(_toks, 0L, (a, t) -> a + length(t)) / greatest(size(_toks), 1)"
         ), 4).alias("avg_token_len"),
         F.round(
-            (F.length(text_col)
-             - F.length(F.expr(f"regexp_replace({text_col}, '[^a-zA-Z0-9 ]', '')")))
-            / F.greatest(F.length(text_col), F.lit(1)), 4
+            (F.length("text")
+             - F.length(F.expr("regexp_replace(text, '[^a-zA-Z0-9 ]', '')")))
+            / F.greatest(F.length("text"), F.lit(1)), 4
         ).alias("punct_ratio"),
         F.round(F.expr(
             f"size(filter(_toks, t -> array_contains({stop}, t))) / greatest(size(_toks), 1)"
@@ -74,9 +69,7 @@ def quality_scores(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text",
-                     extra_cols: tuple = ()) -> DataFrame:
+def repetition_stats(docs: DataFrame, extra_cols: tuple = ()) -> DataFrame:
     """Gopher/MassiveText-style intra-document repetition signals
     (Rae et al. 2021, table A1 — public paper), adapted to word
     structure since the corpus text carries no line breaks:
@@ -90,11 +83,10 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
                           top-2-gram rule; dup_trigram_frac <= 0.60)
 
     A pure projection: every signal is a per-row array expression, so
-    it applies unchanged to a streaming frame and composes with the
-    other per-doc projections through `extra_cols` (passed through
-    unchanged) instead of a join. The top bigram is a fold over
-    array_sort(bigrams): equal bigrams are adjacent, the fold counts
-    each run and keeps the longest, and a tie goes to the later —
+    it composes with the other per-doc projections through `extra_cols`
+    (passed through unchanged) instead of a join. The top bigram is a
+    fold over array_sort(bigrams): equal bigrams are adjacent, the fold
+    counts each run and keeps the longest, and a tie goes to the later —
     lexicographically larger — bigram, i.e. (count desc, bigram desc),
     total-order deterministic and the DuckDB twin's tie-break. The
     fold is a higher-order function (no codegen); it costs one sort of
@@ -106,8 +98,8 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
     # normalize runs once: its alias feeds both the split and the char
     # count, so CollapseProject keeps it in its own projection
     normed = docs.select(
-        F.col(id_col), *[F.col(c) for c in extra_cols],
-        F.expr(_norm_sql(text_col)).alias("_norm"),
+        F.col("doc_id"), *[F.col(c) for c in extra_cols],
+        F.expr(_NORM_SQL).alias("_norm"),
     )
     # toks is materialized as its own projection step: the alias is
     # non-cheap and multiply referenced, so CollapseProject will NOT
@@ -116,12 +108,12 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
     # +1.6 ms/page, 8x the whole ungated extract stage at the fast
     # profile).
     base = normed.select(
-        id_col, *extra_cols,
+        "doc_id", *extra_cols,
         F.expr("split(_norm, ' ')").alias("toks"),
         F.length("_norm").alias("n_norm_chars"),
     )
     grams = base.select(
-        id_col, *extra_cols, "n_norm_chars",
+        "doc_id", *extra_cols, "n_norm_chars",
         F.expr("size(toks)").cast("long").alias("n_words"),
         F.expr("size(array_distinct(toks))").cast("long").alias("n_distinct_words"),
         # sequence(1, n) is DESCENDING when n < 1, so guard short docs
@@ -144,7 +136,7 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
     # .xxxxx5 tie against DuckDB's C round (same trap quality_score's
     # 5dp comment documents — truncation removes the tie entirely).
     per_doc = grams.select(
-        id_col, *extra_cols, "n_norm_chars", "n_words",
+        "doc_id", *extra_cols, "n_norm_chars", "n_words",
         F.expr(trunc5.format(
             x="1.0 - n_distinct_words / greatest(n_words, 1)"))
         .alias("dup_word_frac"),
@@ -162,7 +154,7 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
         ).alias("t"),
     )
     return per_doc.select(
-        id_col, *extra_cols, "n_words", "dup_word_frac", "dup_trigram_frac",
+        "doc_id", *extra_cols, "n_words", "dup_word_frac", "dup_trigram_frac",
         F.col("t.bigram").alias("top_bigram"),
         F.when(F.col("t.bigram").isNull(), F.lit(0.0))
         .otherwise(F.expr(trunc5.format(
@@ -172,14 +164,3 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
         "keep",
         (F.col("top_bigram_frac") <= 0.20) & (F.col("dup_trigram_frac") <= 0.60),
     )
-
-
-def repetition_row_signals(docs: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text",
-                           extra_cols: tuple = ()) -> DataFrame:
-    """The streaming gate's subset of repetition_stats: n_words,
-    dup_word_frac and dup_trigram_frac, the same values from the same
-    projection. Column pruning drops the top-bigram sort and fold,
-    which the gate (streaming.curation_gate_stream) does not read."""
-    return repetition_stats(docs, id_col, text_col, extra_cols).select(
-        id_col, *extra_cols, "n_words", "dup_word_frac", "dup_trigram_frac")

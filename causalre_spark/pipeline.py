@@ -10,7 +10,7 @@ cross-document work as DataFrame algebra:
         --> entity linking (MinHash-LSH + CC)   [relational]
         --> canonical triple aggregation        [relational]
 
-Scale design (local[32] here; reasoning at 1000 executors):
+Scale design (reasoning at 1000 executors):
   - repartition by md5(url): hot Zipf domains spread evenly because the
     unit of work is the document; residual join skew is AQE's job.
   - the fused UDF bounds per-doc output by k/k² (top-k inside), so the
@@ -153,9 +153,7 @@ def canonical_triples(kept: DataFrame, rels: DataFrame, entities: DataFrame,
                       form_map: DataFrame | None = None) -> DataFrame:
     """(kept spans, relations, entities) -> deduped canonical triples.
 
-    Shared by the batch pipeline and the streaming->batch bridge
-    (streaming.ingest.link_streamed_batch) so both produce identical
-    graph rows. One broadcast dictionary: DISTINCT raw mention surface
+    One broadcast dictionary: DISTINCT raw mention surface
     -> (canonical_id, canonical_form); the relation stream joins it
     map-side twice (head/tail) and never shuffles or re-normalizes.
     The dictionary is persisted (two broadcast consumers); the handle is
@@ -239,14 +237,6 @@ def extract_docs(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Per-document extraction stage (the expensive Arrow-UDF crossing),
     shared by the full and incremental pipelines."""
     eng = pages.filter(F.col("lang") == "en")
-    if cfg.length_bucket:
-        # S4 UDF batching discipline (SURVEY §4): range-partition by
-        # document length so each Arrow batch holds similar-length
-        # docs — dense padded batches in the encoder UDF instead of
-        # worst-case padding. Opt-in: it shuffles the html payload,
-        # which only pays off when the encoder is the bottleneck
-        # (real transformer weights), not for the fast profile.
-        eng = eng.repartitionByRange(cfg.shuffle_partitions, F.length("text"))
     return eng.select("url", "html", F.col("text").alias("expected_text")) \
         .mapInPandas(make_doc_extract_udf(cfg), schema=DOC_EXTRACT_SCHEMA)
 
@@ -281,17 +271,6 @@ def run_pipeline(
     io = StageIO(spark, workdir, resume,
                  table_namespace=cfg.extra.get("table_namespace"))
 
-    # Opt-in curation gate (cfg.extra['curation_gate']): fused INTO the
-    # extraction UDF (model/udfs.py), not a relational pre-filter. A
-    # relational filter on the gate signals gets re-inlined by Catalyst
-    # into the pushed-down condition — split(normalize(text)) ends up
-    # INSIDE the trigram lambda, re-evaluated per element (measured
-    # 2.8 ms/page, 6x the whole fast-profile extract stage). Inside the
-    # Arrow crossing the tokens are at hand and the gate costs ~free,
-    # exactly like the reference's fused in-model pruning cascade. The
-    # python twin (functions/text.curation_keep) is value-identical to
-    # the relational gate column (tests assert bit-for-bit agreement),
-    # so streamed flagging and batch gating never drift.
     docs = io.checkpoint("docs", lambda: extract_docs(pages, cfg))
     if verify_extraction:
         bad = docs.filter(~F.col("text_ok")).count()
@@ -459,63 +438,3 @@ def run_incremental(
         "entities": entities,
         "triples": triples,
     }
-
-
-def write_predictions_json(docs: DataFrame, path: str) -> None:
-    """S5 alternate sink: reference-shaped JSON-lines predictions.
-
-    The reference's predict run emits a JSON file of per-document
-    predictions with nested span/relation objects (process_preds.py:9
-    load_predictions; spans carry {start, end}, relations carry
-    {head, tail} span objects). This writes the same PER-OBJECT nesting
-    straight from the docs frame — one JSON object per document, spans
-    as {start, end, type, text, score}, relations as {head: {...},
-    tail: {...}, type, score}. File-level format differs by design:
-    this is a distributed JSON-lines directory of part files, while the
-    reference's process_preds.load_predictions json.load()s ONE JSON
-    document — use :func:`predictions_json_to_reference_file` to
-    concatenate the sink into that single-file shape for reference-tool
-    consumption. No driver-side serialization on the write path.
-    """
-    out = docs.select(
-        "url",
-        F.expr(
-            "transform(spans, s -> named_struct("
-            "'start', s.start, 'end', s.end, 'type', s.span_type, "
-            "'text', s.text, 'score', s.filter_score))"
-        ).alias("spans"),
-        F.expr(
-            "transform(rels, r -> named_struct("
-            "'head', named_struct('start', r.h_start, 'end', r.h_end, 'text', r.h_text), "
-            "'tail', named_struct('start', r.t_start, 'end', r.t_end, 'text', r.t_text), "
-            "'type', r.rel_type, 'score', r.rel_score))"
-        ).alias("relations"),
-    )
-    out.write.mode("overwrite").json(path)
-
-
-def predictions_json_to_reference_file(sink_dir: str, out_path: str) -> int:
-    """Concatenate a write_predictions_json sink directory into the ONE
-    JSON-array file the reference's process_preds.load_predictions
-    json.load()s (reference process_preds.py:9). Driver-side by design —
-    a single reference-shaped file is inherently non-distributed, so
-    this is a small post-step for reference-tool interop, not a Spark
-    sink. Returns the number of documents written."""
-    import glob
-    import json as _json
-
-    n = 0
-    with open(out_path, "w", encoding="utf-8") as out:
-        out.write("[")
-        for part in sorted(glob.glob(os.path.join(sink_dir, "part-*"))):
-            with open(part, "r", encoding="utf-8") as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    if n:
-                        out.write(",\n")
-                    out.write(line)
-                    n += 1
-        out.write("]")
-    return n

@@ -113,9 +113,9 @@ def get_spark(
         # Thread dumps of the scaling leg showed a single cache-build
         # task burning 25+ min in exactly these frames on the persisted
         # linking intermediates (high-cardinality short strings), made
-        # worse by this VM's ~60-100 MB/s page-population rate. Our
-        # caches are short-lived working sets on a 128 GiB box — build
-        # speed matters, the ~2x size saving does not.
+        # worse on VMs that populate fresh memory at ~60-100 MB/s. Our
+        # caches are short-lived working sets — build speed matters,
+        # the ~2x size saving does not.
         .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(cfg.arrow_max_records))

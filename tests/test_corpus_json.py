@@ -163,16 +163,19 @@ def test_config_from_yaml_round_trip(tmp_path):
         "max_top_k_spans: 12\n"
         "predict_thd: 0.4\n"
         "tagging_mode: BECO\n"
-        "extra:\n  curation_gate: true\n")
+        "extra:\n  table_namespace: kg\n")
     cfg = config_from_yaml(str(p))
     assert (cfg.max_top_k_spans, cfg.predict_thd, cfg.tagging_mode) \
         == (12, 0.4, "BECO")
-    assert cfg.extra == {"curation_gate": True}
+    assert cfg.extra == {"table_namespace": "kg"}
     # untouched knobs keep defaults
     assert cfg.max_seq_len == PipelineConfig().max_seq_len
     # typo'd knob fails loudly (the reference's validation contract)
     with _pytest.raises(ValueError, match="unknown config keys"):
         config_from_dict({"max_topk_spans": 12})
+    # a retired knob is an unknown key too
+    with _pytest.raises(ValueError, match="unknown config keys"):
+        config_from_dict({"length_bucket": True})
     # dataclass validation still applies through the loader
     with _pytest.raises(ValueError, match="max_tagger_candidates"):
         config_from_dict({"max_tagger_candidates": 0})

@@ -1,73 +1,9 @@
-"""Unit tests for the corpus-curation operators: the curation gate
-and its Python twin, the curation verdict, and the MinHash-LSH dedup
-plan. Hand-built inputs with hand-computed expectations (the sf-scale
-oracle gates live in test_entry_contract / check_entry)."""
+"""Unit tests for the corpus-curation operators: the curation verdict
+and the MinHash-LSH dedup plan. Hand-built inputs with hand-computed
+expectations (the sf-scale oracle gates live in test_entry_contract /
+check_entry)."""
 
 from causalre_spark.operators import dedup
-
-
-def test_curation_gate_python_twin_matches_sql(spark):
-    """functions/text.curation_keep (the fused in-UDF gate) is
-    value-identical to the relational gate column of
-    curation_gate_stream — signals AND decision — over the synthetic
-    page corpus, so batch gating and streamed flagging cannot drift."""
-    from causalre_spark.functions.text import curation_keep, curation_signals
-    from causalre_spark.sources.corpus import synth_pages_df
-    from causalre_spark.streaming.ingest import curation_gate_stream
-
-    pages = synth_pages_df(spark, 120, partitions=4).select("url", "text")
-    rows = curation_gate_stream(pages).collect()
-    assert len(rows) == 120
-    texts = {r["url"]: r["text"] for r in pages.collect()}
-    mismatches = []
-    for r in rows:
-        n, q, d = curation_signals(texts[r["url"]])
-        if (n, q, d, curation_keep(texts[r["url"]])) != (
-                r["n_tokens"], r["quality_score"], r["dup_trigram_frac"],
-                r["keep"]):
-            mismatches.append((r["url"], (n, q, d),
-                               (r["n_tokens"], r["quality_score"],
-                                r["dup_trigram_frac"]), r["keep"]))
-    assert not mismatches, mismatches[:5]
-    # both outcomes occur (non-vacuous gate on this corpus)
-    kept = {r["keep"] for r in rows}
-    assert kept == {True, False}
-
-
-def test_curation_twin_parity_on_adversarial_texts(spark):
-    """Twin parity beyond the synthetic corpus: empty strings,
-    punctuation-only, unicode, whitespace runs, exact trigram
-    repetition, and seeded random ASCII — one DataFrame, exact
-    signal-for-signal agreement."""
-    import random
-
-    from causalre_spark.functions.text import curation_keep, curation_signals
-    from causalre_spark.streaming.ingest import curation_gate_stream
-
-    rng = random.Random(129)
-    vocab = ["the", "cat", "dog!", "a", "of", "x1", "Zq", "ab-cd", "..."]
-    texts = [
-        "", " ", "!!!", "...,,,;;;", "a", "the the the",
-        "one two three one two three one two three one two three",
-        "Tabs\tand\nnewlines  and   runs",
-        "café naïve über alles",
-        "UPPER lower MiXeD 123 456",
-    ] + [" ".join(rng.choices(vocab, k=rng.randint(0, 40))) for _ in range(90)]
-    df = spark.createDataFrame(
-        [(f"u{i}", t) for i, t in enumerate(texts)], "url string, text string")
-    rows = curation_gate_stream(df).collect()
-    assert len(rows) == len(texts)
-    bad = []
-    for r in rows:
-        t = texts[int(r["url"][1:])]
-        n, q, d = curation_signals(t)
-        if (n, q, d, curation_keep(t)) != (
-                r["n_tokens"], r["quality_score"], r["dup_trigram_frac"],
-                r["keep"]):
-            bad.append((repr(t), (n, q, d),
-                        (r["n_tokens"], r["quality_score"],
-                         r["dup_trigram_frac"], r["keep"])))
-    assert not bad, bad[:5]
 
 
 def _near_dup_docs():

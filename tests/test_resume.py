@@ -71,18 +71,6 @@ def test_partitioned_triple_sink_and_resume(spark):
     shutil.rmtree(wd, ignore_errors=True)
 
 
-def test_length_bucketing_same_results(spark):
-    """S4: repartitionByRange(length(text)) before the encoder UDF is a
-    physical-layout change only — identical results."""
-    from causalre_spark.config import PipelineConfig
-
-    pages = synth_pages_df(spark, 30, partitions=4)
-    plain = _triples_set(run_pipeline(spark, pages))
-    bucketed = _triples_set(
-        run_pipeline(spark, pages, cfg=PipelineConfig(length_bucket=True)))
-    assert bucketed == plain
-
-
 def test_iceberg_branch_write_read_resume(spark, monkeypatch, tmp_path):
     """The catalog-managed (iceberg) branch: writeTo(...).using('iceberg')
     with a qualified identifier, read-back via spark.read.table (NOT the
@@ -257,91 +245,3 @@ def test_incremental_requires_completed_prev(spark):
         run_incremental(spark, pages,
                         prev_workdir="/tmp/causalre_missing_prev_wd",
                         workdir="/tmp/causalre_test_wd_incr_err")
-import shutil
-
-from pyspark.sql import functions as F
-
-
-def test_compaction_plan_and_rewrite(spark):
-    """Small-file compaction: the plan packs files into ~target bins
-    (bin bytes <= target + one straddling file), the rewrite preserves
-    content row-for-row and collapses the file count to the bin count."""
-    from causalre_spark.operators.maintenance import (
-        compact_parquet,
-        compaction_plan,
-        file_inventory,
-    )
-
-    src = "/tmp/causalre_compact_src"
-    dst = "/tmp/causalre_compact_dst"
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(dst, ignore_errors=True)
-    # 24 tiny files (one per partition)
-    spark.range(2400).repartition(24).write.mode("overwrite").parquet(src)
-    inv = file_inventory(spark.read.parquet(src))
-    n_files = inv.count()
-    assert n_files == 24
-    sizes = {r["file"]: r["bytes"] for r in inv.collect()}
-    target = 4 * max(sizes.values())
-    plan = {r["file"]: (r["bytes"], r["bin"])
-            for r in compaction_plan(inv, target).collect()}
-    assert set(plan) == set(sizes)
-    # bins are contiguous in file order and size-bounded
-    per_bin: dict = {}
-    for f in sorted(plan):
-        b, bin_ = plan[f]
-        per_bin.setdefault(bin_, 0)
-        per_bin[bin_] += b
-    for bin_, total in per_bin.items():
-        assert total <= target + max(sizes.values())
-    assert 1 < len(per_bin) < n_files            # actually compacts
-
-    executed = compact_parquet(spark, src, dst, target)
-    assert executed.count() == n_files
-    out = spark.read.parquet(dst)  # bin shows up as the partition col
-    assert sorted(r["id"] for r in out.collect()) == list(range(2400))
-    n_out = out.select(F.col("_metadata.file_path")).distinct().count()
-    assert n_out == len(per_bin)
-    assert {r["bin"] for r in out.select("bin").distinct().collect()} \
-        == set(per_bin)
-    # the schema-preserving reader: original columns only
-    from causalre_spark.operators.maintenance import read_compacted
-    clean = read_compacted(spark, dst)
-    assert clean.columns == spark.read.parquet(src).columns
-
-
-def test_predictions_json_sink_round_trip(spark):
-    """Reference-shaped JSON predictions sink: nested span/relation
-    objects survive a write+read round trip and match the docs frame
-    content (S5 alternate sink; format per process_preds.load_predictions)."""
-    import json
-    import shutil
-
-    from causalre_spark.pipeline import extract_docs, write_predictions_json
-    from causalre_spark.config import DEFAULT_CONFIG
-    from causalre_spark.sources.corpus import synth_pages_df
-
-    path = "/tmp/causalre_pred_json"
-    shutil.rmtree(path, ignore_errors=True)
-    docs = extract_docs(synth_pages_df(spark, 30, partitions=2),
-                        DEFAULT_CONFIG).cache()
-    write_predictions_json(docs, path)
-    back = spark.read.json(path)
-    assert back.count() == docs.count()
-    # per-url span sets survive the nesting change
-    want = {r["url"]: {(s["start"], s["end"], s["span_type"])
-                       for s in (r["spans"] or [])}
-            for r in docs.collect()}
-    got = {r["url"]: {(s["start"], s["end"], s["type"])
-                      for s in (r["spans"] or [])}
-           for r in back.collect()}
-    assert got == want
-    # the physical files are plain JSON lines with the reference nesting
-    import glob
-    line = next(ln for f in glob.glob(path + "/part-*")
-                for ln in open(f) if ln.strip())
-    obj = json.loads(line)
-    assert set(obj) <= {"url", "spans", "relations"}
-    if obj.get("relations"):
-        assert {"head", "tail", "type", "score"} <= set(obj["relations"][0])
-    docs.unpersist()
